@@ -79,10 +79,12 @@ def build():
     os.makedirs(BUILD, exist_ok=True)
     env = dict(os.environ)
     env.setdefault("COURSIER_MODE", "offline")
+    tmp = os.path.join(BUILD, "tmp")  # sbt's own scratch files stay in the checkout
+    os.makedirs(tmp, exist_ok=True)
     with open(os.path.join(BUILD, "build.log"), "w") as log:
         r = subprocess.run(
-            ["sbt", "--batch", "-Dsbt.log.noformat=true",
-             "-Dsbt.server.autostart=false", "Compile/products"],
+            ["sbt", "--batch", "-Dsbt.log.noformat=true", "-Dsbt.server.autostart=false",
+             f"-Djava.io.tmpdir={tmp}", "-J-XX:-UsePerfData", "Compile/products"],
             cwd=HERE, env=env, stdout=log, stderr=subprocess.STDOUT,
             stdin=subprocess.DEVNULL, timeout=BUILD_LIMIT_S)
     if r.returncode != 0:
