@@ -12,6 +12,7 @@ import math
 import os
 
 import duckdb
+import pyarrow.parquet as pq
 
 from gen import TABLES
 
@@ -91,3 +92,16 @@ def check(data_dir, check_dir, statements, oracle_sql, errors):
             failures[s] = why
     con.close()
     return failures
+
+
+def table_rows(data_dir):
+    """Rows of each input table."""
+    return {t: pq.read_metadata(os.path.join(data_dir, t + ".parquet")).num_rows
+            for t in TABLES}
+
+
+def result_rows(check_dir, statements):
+    """Rows of each statement's result, as the warm-up pass wrote it."""
+    return {s: sum(pq.read_metadata(f).num_rows for f in
+                   glob.glob(os.path.join(check_dir, "0", s, "*.parquet")))
+            for s in statements}

@@ -2,9 +2,10 @@
 
 Writes the ten tables graft's queries read (region, nation, customer,
 supplier, part, orders, lineitem, events, documents, embeddings), one
-parquet file each, with the schema, key ranges and value distributions of
-the TPC-H-ish star schema graft is tested on. The same (sf, seed) always
-gives byte-identical tables.
+parquet file each, with the schema, row counts, key ranges and value
+distributions of graft's test data (a TPC-H-ish star schema with events,
+documents and embeddings); perfbench/compare_inputs.py measures the two
+side by side. The same (sf, seed) always gives byte-identical tables.
 
     python3 perfbench/gen.py <out_dir> <sf> <seed>
 """
@@ -130,18 +131,17 @@ def generate(sf, seed):
         "value": np.maximum(np.round(rng.exponential(50.0, ne), 2), 0.01),
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, ne)]})
     nd = n["documents"]
-    # a fixed 5% of the documents (never among the first 20) are near
-    # duplicates: an original document plus a marker token
-    dups = set(rng.choice(np.arange(20, nd), size=nd // 20, replace=False).tolist())
-    texts, originals = [], []
-    for i in range(nd):
-        if i in dups:
-            texts.append(texts[originals[int(rng.integers(0, len(originals)))]] + " dup")
-        else:
-            k = int(rng.integers(10, 90))
-            texts.append(" ".join(
-                np.asarray(WORDS, dtype=object)[rng.integers(0, len(WORDS), k)]))
-            originals.append(i)
+    # 10-98 words each, drawn uniformly from a 30-word vocabulary; then
+    # 5% of the documents, at random positions, become a near duplicate
+    # of another one: its text plus a marker token. A copy of a document
+    # that was itself replaced before makes a chain (x, x dup, x dup dup),
+    # and a document replaced after it was copied leaves its copy without
+    # a partner, as in the test data
+    texts = [" ".join(np.asarray(WORDS, dtype=object)[rng.integers(0, len(WORDS), k)])
+             for k in rng.integers(10, 99, nd)]
+    for i in rng.choice(nd, size=nd // 20, replace=False).tolist():
+        j = int(rng.integers(0, nd - 1))
+        texts[i] = texts[j + (j >= i)] + " dup"
     t["documents"] = pa.table({
         "doc_id": pa.array(np.arange(nd), pa.int64()),
         "text": texts,

@@ -1,10 +1,15 @@
 """Metrics and spans from the run record that perfbench.Main writes.
 
 End-to-end metrics come from the untraced passes, per-layer metrics from
-the traced ones. A per-pass figure is summed over the pass's statements;
-the metric is its median over passes. Maxima are taken over every traced
+the traced ones. A per-pass figure is summed over the pass's statements.
+wall_s and cpu_s are the median of their per-pass figures, and
+stmt_p50_s and stmt_p90_s the median and 90th percentile of every
+measured statement execution of the run, pooled over its statements; all
+four by the Harrell-Davis estimator (percentile()). A per-layer figure is
+the median over the traced passes; maxima are taken over every traced
 statement.
 """
+import math
 import os
 import re
 import statistics
@@ -46,15 +51,46 @@ PER_LAYER = (
        ("trace.overhead_frac", "ratio")])
 
 
+def _betainc(a, b, x):
+    """Regularized incomplete beta function I_x(a, b), by its continued
+    fraction (modified Lentz)."""
+    if x <= 0.0 or x >= 1.0:
+        return max(0.0, min(1.0, x))
+    if x > (a + 1) / (a + b + 2):
+        return 1.0 - _betainc(b, a, 1.0 - x)
+    tiny = 1e-300
+    c, d = 1.0, 1.0 - (a + b) * x / (a + 1)
+    d = 1.0 / (d if abs(d) > tiny else tiny)
+    h = d
+    for m in range(1, 300):
+        for num in (m * (b - m) * x / ((a + 2 * m - 1) * (a + 2 * m)),
+                    -(a + m) * (a + b + m) * x / ((a + 2 * m) * (a + 2 * m + 1))):
+            d = 1.0 + num * d
+            d = 1.0 / (d if abs(d) > tiny else tiny)
+            c = 1.0 + num / c
+            c = c if abs(c) > tiny else tiny
+            h *= d * c
+        if abs(d * c - 1.0) < 1e-12:
+            break
+    front = math.exp(math.lgamma(a + b) - math.lgamma(a) - math.lgamma(b)
+                     + a * math.log(x) + b * math.log(1.0 - x))
+    return front * h / a
+
+
 def percentile(xs, q):
-    """Linear-interpolated percentile, q in [0, 1]."""
+    """The q-quantile (q in (0, 1)) of the samples, by the Harrell-Davis
+    estimator: a weighted mean of every order statistic, with weights
+    from the Beta(q(n+1), (1-q)(n+1)) distribution. A statement latency
+    percentile over a few passes of a few statements then moves with the
+    executions around it, not with the single execution that happens to
+    sit at that rank."""
     xs = sorted(xs)
-    if not xs:
+    n = len(xs)
+    if n == 0:
         return 0.0
-    pos = (len(xs) - 1) * q
-    lo = int(pos)
-    hi = min(lo + 1, len(xs) - 1)
-    return xs[lo] + (xs[hi] - xs[lo]) * (pos - lo)
+    a, b = q * (n + 1), (1 - q) * (n + 1)
+    cdf = [_betainc(a, b, i / n) for i in range(n + 1)]
+    return sum((cdf[i + 1] - cdf[i]) * x for i, x in enumerate(xs))
 
 
 def union_s(intervals):
@@ -104,11 +140,11 @@ def end_to_end(rec):
     ok = [_lat(e) for e in execs if e["error"] is None]
     walls = [sum(_lat(e) for e in p["statements"]) for p in passes]
     return {
-        "setup_s": statistics.median(rec["setup_s"]),
-        "wall_s": statistics.median(walls),
+        "setup_s": rec["setup_s"],
+        "wall_s": percentile(walls, 0.5),
         "stmt_p50_s": percentile(ok, 0.5),
         "stmt_p90_s": percentile(ok, 0.9),
-        "cpu_s": statistics.median(p["cpu_s"] for p in passes),
+        "cpu_s": percentile([p["cpu_s"] for p in passes], 0.5),
     }, {"passes": len(passes), "stmt_samples": len(ok),
         "samples_beyond_p90": sum(1 for x in ok if x > percentile(ok, 0.9)),
         "pass_wall_s": walls}
@@ -198,6 +234,11 @@ def per_layer(rec, modules, workload):
         rows.append(r)
     out = {k: statistics.median(r[k] for r in rows) for k in rows[0]}
     na = {}
+    for m in MODULES:
+        if out[f"{m}.jobs"] == 0:
+            for k in ("jobs", "job_s"):
+                na[f"{m}.{k}"] = (f"no job of {workload} has its call site in {m}'s "
+                                  "files: see perfbench/workloads.json, job_attribution")
 
     prog = [s for s in rec["stream_progress"]
             if any(s["exec"] == e["exec"] for p in traced for e in p["statements"])]

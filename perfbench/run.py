@@ -14,7 +14,9 @@ prints them, one line each, with the JSON record as the last line. With
 per-layer ones. The full record, including the spans of a traced run,
 goes to .bench_build/results/. The workloads are defined in
 perfbench/workloads.json; --sf overrides their scale factor (the
-self-test, perfbench/selftest.py, runs them on tiny inputs).
+self-test, perfbench/selftest.py, runs them on tiny inputs), and --data
+runs them on existing inputs, such as graft's test data, instead of
+generated ones.
 """
 import argparse
 import hashlib
@@ -40,8 +42,8 @@ SRC = os.path.join(ROOT, "src", "main", "scala")
 CLASSES = os.path.join(BUILD, "sbt-target", "scala-2.13", "classes")
 RUN_LIMIT_S = 170          # a run (after any build) ends within this
 BUILD_LIMIT_S = 800
-SETUPS = 3                 # set-ups per untraced run; setup_s is their median
-GATE_WAIT_S = 10           # longest wait of the quiet-box gate
+MAX_LOAD = 3.0             # graft.Bench's quiet-box threshold
+GATE_WAIT_S = 5            # longest wait of the quiet-box gate
 # the module opens Spark needs on JDK 17 outside spark-submit (the same
 # list as the root build.sbt)
 JDK_OPENS = ["java.base/" + p for p in (
@@ -101,14 +103,16 @@ def loadavg():
 
 
 def quiet_gate():
-    """Wait (bounded) for the 1-minute load average to fall below
-    PERFBENCH_MAX_LOAD (default: twice the core count), then record it, so
-    that runs made on a busy box can be told apart. Never aborts."""
-    limit = float(os.environ.get("PERFBENCH_MAX_LOAD", 2 * os.cpu_count()))
+    """graft.Bench's quiet-box gate, with a shorter wait: wait for the
+    1-minute load average to fall to SPARK_GRAFT_MAX_LOAD (default 3.0),
+    at most GATE_WAIT_S seconds, then record it, so that runs made on a
+    busy box can be told apart. Never aborts."""
+    limit = float(os.environ.get("SPARK_GRAFT_MAX_LOAD", MAX_LOAD))
     t0 = time.time()
     while loadavg() > limit and time.time() - t0 < GATE_WAIT_S:
         time.sleep(1)
-    return {"loadavg_start": loadavg(), "max_load": limit,
+    load = loadavg()
+    return {"loadavg_start": load, "max_load": limit, "quiet": load <= limit,
             "gate_wait_s": round(time.time() - t0, 1)}
 
 
@@ -142,7 +146,6 @@ def run_jvm(out, data, stmts, args, micro_rows, deadline, log_path):
               "perfbench.Main", "--data", data, "--out", out,
               "--statements", ",".join(stmts), "--seed", str(args.seed),
               "--seconds", str(args.seconds), "--trace", str(args.trace),
-              "--setups", "1" if args.trace else str(SETUPS),
               "--micro-rows", str(micro_rows)])
     with open(log_path, "w") as log:
         proc = subprocess.Popen(cmd, cwd=ROOT, stdout=log, stderr=subprocess.STDOUT,
@@ -170,6 +173,8 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--sf", type=float, help="scale factor (default: workloads.json)")
+    ap.add_argument("--data", help="read the inputs from this directory (the ten "
+                    "parquet tables) instead of generating them")
     args = ap.parse_args()
 
     spec = json.load(open(os.path.join(HERE, "workloads.json")))
@@ -184,13 +189,16 @@ def main():
     build()
     deadline = time.time() + RUN_LIMIT_S
     t = time.time()
-    with open(gen.__file__, "rb") as f:
-        gen_id = hashlib.sha256(f.read()).hexdigest()[:8]
-    data = os.path.join(BUILD, "data", f"sf{sf}-seed{args.seed}-{gen_id}")
-    sizes = gen.write(data, sf, args.seed)
+    if args.data:
+        data = os.path.abspath(args.data)
+    else:
+        with open(gen.__file__, "rb") as f:
+            gen_id = hashlib.sha256(f.read()).hexdigest()[:8]
+        data = os.path.join(BUILD, "data", f"sf{sf}-seed{args.seed}-{gen_id}")
+        gen.write(data, sf, args.seed)
     gen_s = time.time() - t
     box = quiet_gate()
-    name = f"{args.workload}-seed{args.seed}-trace{args.trace}"
+    name = f"{args.workload}-seed{args.seed}-trace{args.trace}" + ("-data" if args.data else "")
     os.makedirs(os.path.join(BUILD, "results"), exist_ok=True)
     out = os.path.join(BUILD, "runs", f"{name}-{os.getpid()}")
     shutil.rmtree(out, ignore_errors=True)
@@ -202,6 +210,7 @@ def main():
         rec = json.load(open(os.path.join(out, "record.json")))
         failures = check.check(data, os.path.join(out, "check"), stmts,
                                rec["oracle_sql"], rec["check_errors"])
+        result_rows = check.result_rows(os.path.join(out, "check"), stmts)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -214,15 +223,16 @@ def main():
     attempted = len(runs)
     failed = sum(1 for e in runs if e["error"] is not None or e["id"] in failures)
     result = {"workload": args.workload, "seed": args.seed, "trace": args.trace,
-              "statements": stmts, "rows": dict(sizes),
-              "sf": sf, "input_gen_s": gen_s, "nproc": os.cpu_count(),
+              "statements": stmts, "rows": check.table_rows(data),
+              "data": args.data or "generated", "sf": sf, "input_gen_s": gen_s,
+              "nproc": os.cpu_count(),
               "driver_heap": heap, "spark_conf": rec["spark_conf"], **box,
               "attempted": attempted, "failed": failed,
               "failed_frac": failed / attempted, "check_failures": failures,
-              "setup_runs_s": rec["setup_s"],
-              "stmt_median_s": {s: statistics.median(
-                  (e["t1_us"] - e["t0_us"]) / 1e6 for e in runs if e["id"] == s)
-                  for s in stmts}}
+              "result_rows": result_rows,
+              "stmt_s": {s: [(e["t1_us"] - e["t0_us"]) / 1e6 for e in runs if e["id"] == s]
+                         for s in stmts}}
+    result["stmt_median_s"] = {s: statistics.median(v) for s, v in result["stmt_s"].items()}
     if args.trace:
         vals, na = metrics.per_layer(rec, modules, args.workload)
         units = dict(metrics.PER_LAYER)

@@ -18,13 +18,15 @@ import graft.SparkEntry
   * turns its record into metrics). One driver thread issues the
   * workload's statements in sequence: a closed loop with one client.
   *
-  *  1. Set-up, `--setups` times, each timed whole: a fresh session with
-  *     graft's SQL functions registered, then a warm-up pass over the
-  *     statements, which also loads the input tables they read (graft
-  *     keeps each table's plan per session). The first warm-up pass
-  *     writes each statement's result to parquet for the oracle check,
-  *     so the check never touches a measured pass.
-  *  2. Measured passes until `--seconds` have gone by, at least five
+  *  1. Set-up, timed whole: a session with graft's SQL functions
+  *     registered, then two warm-up passes over the statements. The
+  *     first also loads the input tables they read (graft keeps each
+  *     table's plan per session) and writes each statement's result to
+  *     parquet for the oracle check, so the check never touches a
+  *     measured pass. The second runs them as a measured pass does: the
+  *     passes right after a cold start still speed up steeply, and a
+  *     median taken on that slope moves with how fast the JIT warms.
+  *  2. Measured passes until `--seconds` have gone by, at least three
   *     (four in a traced run). Each statement is timed as build (the
   *     `SparkEntry.queries` call) plus run (the frame's noop-sink
   *     write); the statement order of each pass comes from the seed. In
@@ -50,7 +52,6 @@ object Main {
     val seed = a("seed").toLong
     val seconds = a("seconds").toDouble
     val traced = a("trace") == "1"
-    val setups = a("setups").toInt
     val microRows = a("micro-rows").toInt
     val cores = Runtime.getRuntime.availableProcessors()
     Files.createDirectories(Paths.get(out))
@@ -60,26 +61,11 @@ object Main {
     val rec = scala.collection.mutable.LinkedHashMap[String, Any]("cores" -> cores)
 
     // 1. set-up
-    var spark: SparkSession = null
-    val setupS = ArrayBuffer[Double]()
-    for (k <- 0 until setups) {
-      if (spark != null) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-      val t = System.nanoTime()
-      spark = session(cores, out, traced)
-      // the first set-up's warm-up pass also writes each statement's
-      // result for the check; the others run the statements as the
-      // measured passes do
-      shuffled(stmts, seed, -1 - k).foreach { s =>
-        if (k == 0) writeResult(spark, data, s, s"$out/check/0/$s")
-        else runStatement(spark, data, s, s"setup$k:$s")
-      }
-      setupS += (System.nanoTime() - t) / 1e9
-    }
-    rec("setup_s") = setupS
+    val t = System.nanoTime()
+    val spark = session(cores, out, traced)
+    shuffled(stmts, seed, -1).foreach(s => writeResult(spark, data, s, s"$out/check/0/$s"))
+    shuffled(stmts, seed, -2).foreach(s => runStatement(spark, data, s, s"warmup:$s"))
+    rec("setup_s") = (System.nanoTime() - t) / 1e9
     rec("spark_conf") = spark.conf.getAll.filter { case (k, _) =>
       k.startsWith("spark.sql.shuffle") || k.startsWith("spark.sql.adaptive") ||
         k == "spark.master" || k == "spark.hadoop.fs.file.impl" || k == "spark.sql.session.timeZone"
@@ -91,10 +77,10 @@ object Main {
     val passes = ArrayBuffer[Map[String, Any]]()
     val start = System.nanoTime()
     var p = 0
-    // five, so that a pass slowed by a burst of load elsewhere on the
+    // three, so that one pass slowed by a burst of load elsewhere on the
     // machine does not move the median; a traced run needs two untraced
     // and two traced passes
-    val minPasses = if (traced) 4 else 5
+    val minPasses = if (traced) 4 else 3
     while (p < minPasses || System.nanoTime() - start < seconds * 1e9) {
       // untraced and traced passes in the order U T T U, repeated, so a
       // warming trend over the run favours neither side
