@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, fully materialized through the noop datasource
@@ -46,14 +45,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.r)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cpus.toInt)
     // quiet-box discipline (r10 verdict ask #8): the last two rounds'
     // shared-surface drift tracked BOX LOAD, not code. Wait (bounded,
     // 10 min) for the 1-min loadavg to fall below SPARK_GRAFT_MAX_LOAD
@@ -113,11 +105,9 @@ object Bench {
             Some(Option(e.getMessage).getOrElse(e.getClass.getName))
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        // isolation, outside the timing: queries that Eager-cache an
-        // intermediate (dedup/ANN) must not leave it resident to distort
-        // their neighbors' memory/GC profile (a query still pays its OWN
-        // cache materialization inside its timing).
-        spark.catalog.clearCache()
+        // isolation, outside the timing: collect so the ContextCleaner
+        // frees this query's escaped pins now, not in a neighbor's timing
+        System.gc()
         (name, dt, err)
       }
     }

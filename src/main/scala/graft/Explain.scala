@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `explain("formatted")` for every query so the physical
   * plans can be audited — broadcasts where expected, PushedFilters /
@@ -10,13 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "/tmp/graft_plans.txt"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4)
     val sb = new StringBuilder
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       sb.append(s"\n===================== $name =====================\n")

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (guide §1.1): run selected queries and print a per-JOB
   * wall-time breakdown (job id, seconds, #tasks, first line of the
@@ -15,14 +14,7 @@ object Profile {
     val rx = (if (args.length > 1) args(1) else "q1_agg").r
     val reps = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cpus.toInt)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String, Int)]()
     val taskCounts = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
@@ -48,7 +40,6 @@ object Profile {
       .filter { case (n, _) => rx.pattern.matcher(n).matches() }
     for ((name, fn) <- picked; r <- 1 to reps) {
       done.clear()
-      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9

@@ -168,14 +168,7 @@ object ScaleExperiment {
       "q_sql_ctas|q_sql_timestamp_travel|q_sql_merge_multi|" +
       "q_sql_lifecycle|q_sql_replace_where|q_sql_cdf|" +
       "q_optimize_zorder|q_stream_format").r
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32)
     gen(spark)
     val embedTables = graft.sim.Similarity.lshTablesFor(0.8, 12, 0.01)
     val embed08: (SparkSession, String) => DataFrame = (s, dir) =>
@@ -209,9 +202,9 @@ object ScaleExperiment {
       val t0 = System.nanoTime()
       fn(spark, dir)
       val dt = (System.nanoTime() - t0) / 1e9
-      // OUTSIDE the timing (like Bench): the 10x run tears down a 10x
-      // larger cache — billing that would skew the published factors
-      spark.catalog.clearCache()
+      // OUTSIDE the timing (like Bench): freeing the 10x run's escaped
+      // pins inside the next timing would skew the published factors
+      System.gc()
       dt
     }
     // warm codegen on the small scale first
@@ -260,8 +253,7 @@ object ScaleExperiment {
         .as("text"))
     def timed(f: => Long): (Double, Long) = {
       val t0 = System.nanoTime(); val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache(); (dt, r)
+      ((System.nanoTime() - t0) / 1e9, r)
     }
     val (tClean, cCnt) = timed(
       graft.dedup.Dedup.jaccardJoin(corpus(flood = false), 0.8).count())
@@ -282,7 +274,6 @@ object ScaleExperiment {
           "s -> xxhash64(s))) AS g")
       .groupBy("g").agg(count(lit(1)).as("df"))
       .agg(max("df")).head.getLong(0)
-    spark.catalog.clearCache()
     val expectPure = nPure.toLong * (nPure - 1) / 2
     assert(fCnt == expectPure && cCnt == 0,
       s"flood output wrong: got $fCnt want $expectPure (clean $cCnt)")
@@ -308,8 +299,7 @@ object ScaleExperiment {
     val R = graft.ops.Relational
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache(); dt
+      (System.nanoTime() - t0) / 1e9
     }
     def sink(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -1,17 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev smoke: what the driver's t1 check does — run the flagship entry
   * on sf0.001 and require rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"ENTRY_ROWS=$n")

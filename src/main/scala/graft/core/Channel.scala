@@ -103,10 +103,9 @@ object Channel {
     * sink observes them. The upstream is cached only for the duration of
     * the sink's action and unpersisted before returning — repeated `tee`
     * use must not accrete cached partitions for the session lifetime.
-    * The downstream consumer therefore recomputes the upstream; when the
-    * observation is a metric, prefer [[observe]] (zero extra passes, no
-    * cache at all), and callers who want the downstream to share the
-    * sink's pass should manage their own persist/unpersist scope. */
+    * The downstream consumer therefore recomputes the upstream; for a
+    * metric prefer [[observe]] (no extra pass, no cache), and to share
+    * one pass between sink and downstream, [[Pin]] the upstream. */
   def tee(sink: Sink[Row]): Channel[Row, Row] =
     Channel { ds =>
       val df = ds.toDF().persist()

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Bounded distributed fixpoint — the TOTAL form of the reference's
   * `fix` (Tubes/Core.hs:264, `fix f = f (fix f)` over coroutines).
@@ -13,17 +13,14 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   * convergence measure stops changing.
   *
   * Mechanics, each learned the hard way elsewhere in this repo:
-  *  - `localCheckpoint` EVERY iteration: a lazily-stacked lineage of
+  *  - every round is a [[Pin]]: a lazily-stacked lineage of
   *    self-referential steps re-derives the whole chain per iteration
   *    and was measured exponential past ~12 levels (graft.text.Bpe);
-  *    truncation is load-bearing. Reliable `checkpoint` on real
-  *    clusters with lossy executors.
-  *  - the convergence measure rides the checkpoint job itself via
-  *    `Dataset.observe` (r12 verdict ask #3 — it asked for stride-2
-  *    convergence checks; piggybacking the aggregate on the
-  *    materialization does strictly better: ONE job per round instead
-  *    of two, the measure still checked EVERY round, no extra
-  *    iteration of work, no second pass over the frame).
+  *    truncation is load-bearing ([[Pin.advance]] releases each
+  *    round once the next is materialized).
+  *  - the convergence measure rides the pinning job itself via
+  *    `Dataset.observe`: ONE job per round, the measure still checked
+  *    EVERY round, no second pass over the frame.
   *  - `maxIter` RAISES instead of returning the unconverged frame: a
   *    silently truncated fixpoint is a wrong answer, not a slow one.
   *  - The measure must be an AGGREGATE expression over the frame's
@@ -32,34 +29,25 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   *    measure-equal ⇒ fixed.
   */
 object Fixpoint {
-  /** Checkpoint `df` and return it with the observed measure value —
-    * one Spark job for both (the observe metric is collected by the
-    * checkpoint materialization's own tasks). */
-  private def ckpt(df: DataFrame, measure: Column): (DataFrame, Any) = {
-    val obs = Observation()
-    val out = df.observe(obs, measure.as("m")).localCheckpoint()
-    (out, obs.get("m"))
-  }
-
   /** `measure` is any deterministic aggregate Column whose value is
     * equality-comparable — `sum(cast(... as decimal(38,0)))` when
     * labels are wide hashes whose long sum overflows (q_er_cluster's
-    * 60-bit name ids). */
+    * 60-bit name ids). Returns the converged round's pin: the caller
+    * owns it (close it, or let its frame escape — see [[Pin]]). */
   def iterate(seed: DataFrame, maxIter: Int, measure: Column)(
-      step: DataFrame => DataFrame): DataFrame = {
-    var (cur, m) = ckpt(seed, measure)
-    var i = 0
-    while (i < maxIter) {
-      val (next, m2) = ckpt(step(cur), measure)
-      cur.unpersist()
-      cur = next
-      if (m2 == m) return cur
-      m = m2
-      i += 1
-    }
-    cur.unpersist()
-    throw new IllegalStateException(
-      s"Fixpoint.iterate: no convergence within $maxIter iterations " +
-        "(raise maxIter, or check the measure is fixpoint-faithful)")
+      step: DataFrame => DataFrame): Pin = {
+    var cur = Pin(seed, measure.as("m"))
+    var fixed = false
+    try {
+      for (_ <- 1 to maxIter if !fixed) {
+        val next = cur.advance(step(cur.df), measure.as("m"))
+        fixed = next.metric("m") == cur.metric("m")
+        cur = next
+      }
+      if (!fixed) throw new IllegalStateException(
+        s"Fixpoint.iterate: no convergence within $maxIter iterations " +
+          "(raise maxIter, or check the measure is fixpoint-faithful)")
+    } catch { case e: Throwable => cur.close(); throw e }
+    cur
   }
 }

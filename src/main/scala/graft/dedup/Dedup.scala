@@ -90,7 +90,7 @@ object Dedup {
     * (same pattern as [[ngramJaccardPairs]], measured ~8× faster than
     * string array_intersect). */
   /** Shared signature/banding stage of the minhash family: per-doc
-    * (native k=64 sig, sorted hashed shingles) — Eager'd, every caller
+    * (native k=64 sig, sorted hashed shingles) — pinned, every caller
     * joins it at least twice — plus the per-band bucket rows. The
     * bucket value is a pure function of the signature slice, so two
     * frames built at different times (a persisted index vs a fresh
@@ -106,13 +106,13 @@ object Dedup {
     // an explode + k min-aggregates rewrite were both measured and lost.
     graft.functions.MinHashSig.register(docs.sparkSession)
     graft.functions.SortedIntersectCount.register(docs.sparkSession)
-    // Persisted: consumed by both sides of the bucket self-join AND both
+    // Pinned: consumed by both sides of the bucket self-join AND both
     // sides of the verify re-join — without the cache each consumer
     // recomputes the whole shingle+signature pipeline.
-    val perDoc = graft.core.Eager(shingled(docs).select(
+    val perDoc = graft.core.Pin(shingled(docs).select(
       col("doc_id"),
       expr("minhash_sig(sh)").as("sig"),
-      expr("array_sort(transform(sh, s -> xxhash64(s)))").as("shh")))
+      expr("array_sort(transform(sh, s -> xxhash64(s)))").as("shh"))).df
     val bucketed = perDoc.select(col("doc_id"),
         explode(expr(
           s"""transform(sequence(0, ${bands - 1}), b ->
@@ -269,9 +269,9 @@ object Dedup {
       .select(col("doc_id"),
         col("bk.band").as("band"), col("bk.bucket").as("bucket"))
     // train spread before the per-row shingle work (single-partition
-    // pitfall) and Eager'd: it feeds banding AND the verify re-join
-    val t = graft.core.Eager(prep(train.repartition(graft.core.Fanout.n(train), col("doc_id"))))
-    val e = graft.core.Eager(prep(eval))
+    // pitfall) and pinned: it feeds banding AND the verify re-join
+    val t = graft.core.Pin(prep(train.repartition(graft.core.Fanout.n(train), col("doc_id")))).df
+    val e = graft.core.Pin(prep(eval)).df
     val cands = banded(t)
       .join(broadcast(banded(e)
         .select(col("band"), col("bucket"), col("doc_id").as("e_id"))),
@@ -323,7 +323,7 @@ object Dedup {
       .selectExpr("doc_id", block,
         s"array_sort(transform($shinglesExpr, s -> xxhash64(s))) AS sh")
     graft.functions.SortedIntersectCount.register(docs.sparkSession)
-    val sc = graft.core.Eager(s) // both sides of the pair join
+    val sc = graft.core.Pin(s).df // both sides of the pair join
     val a = sc.select(col(block), col("doc_id").as("doc_a"),
       col("sh").as("sh_a"))
     val b = sc.select(col(block), col("doc_id").as("doc_b"),
@@ -394,15 +394,15 @@ object Dedup {
   def jaccardPrefixPostings(docs: DataFrame, tau: Double): DataFrame = {
     require(tau > 0 && tau < 1, s"tau must be in (0,1), got $tau")
     prefixPostings(
-      graft.core.Eager(shingled(docs).select(col("doc_id"),
-        expr("array_sort(transform(sh, s -> xxhash64(s)))").as("shh"))),
+      graft.core.Pin(shingled(docs).select(col("doc_id"),
+        expr("array_sort(transform(sh, s -> xxhash64(s)))").as("shh"))).df,
       tau)
   }
 
   def jaccardJoin(docs: DataFrame, tau: Double): DataFrame = {
     require(tau > 0 && tau < 1, s"tau must be in (0,1), got $tau")
-    jaccardJoinOn(graft.core.Eager(shingled(docs).select(col("doc_id"),
-      expr("array_sort(transform(sh, s -> xxhash64(s)))").as("shh"))),
+    jaccardJoinOn(graft.core.Pin(shingled(docs).select(col("doc_id"),
+      expr("array_sort(transform(sh, s -> xxhash64(s)))").as("shh"))).df,
       tau)
   }
 
@@ -456,11 +456,11 @@ object Dedup {
                       tau: Double): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0,1], got $tau")
     graft.functions.SortedIntersectCount.register(eval.sparkSession)
-    val se = graft.core.Eager(shingled(eval)
+    val se = graft.core.Pin(shingled(eval)
       .select(col("doc_id").as("eval_id"),
-        expr("array_sort(transform(sh, s -> xxhash64(s)))").as("she")))
-    val sc = graft.core.Eager(shingled(corpus).select(col("doc_id"),
-      expr("array_sort(transform(sh, s -> xxhash64(s)))").as("shc")))
+        expr("array_sort(transform(sh, s -> xxhash64(s)))").as("she"))).df
+    val sc = graft.core.Pin(shingled(corpus).select(col("doc_id"),
+      expr("array_sort(transform(sh, s -> xxhash64(s)))").as("shc"))).df
     val postC = sc.select(col("doc_id"), explode(col("shc")).as("g"))
     val dfTab = postC.groupBy("g").agg(count(lit(1)).as("df"))
     val postE = se.select(col("eval_id"), explode(col("she")).as("g"))
@@ -516,13 +516,13 @@ object Dedup {
     require(k >= 2, s"window must span >= 2 tokens, got $k")
     import org.apache.spark.sql.expressions.Window
     // fan out BEFORE tokenizing (guide §2.5, the shingled() pattern):
-    // the Eager'd token frame inherits the single-file scan's one
+    // the pinned token frame inherits the single-file scan's one
     // partition, which serializes the k-gram explode AND the
     // reassembly posexplode that both read this cache — AQE can't
     // widen either (byte-small, CPU-heavy)
-    val t = graft.core.Eager(docs
+    val t = graft.core.Pin(docs
       .repartition(graft.core.Fanout.n(docs), col("doc_id"))
-      .selectExpr("doc_id", s"$toksExpr AS toks"))
+      .selectExpr("doc_id", s"$toksExpr AS toks")).df
     val grams = t.where(size(col("toks")) >= k)
       .select(col("doc_id"), explode(expr(
         s"""transform(sequence(1, size(toks) - ${k - 1}),
@@ -643,10 +643,10 @@ object Dedup {
             .stripMargin)).as("ck"))
       .select(col("doc_id"), col("h"),
         col("ck.chunk").as("chunk"), col("ck.val").as("val"))
-    val cached = graft.core.Eager(chunked0)
-    val a = cached.select(col("chunk"), col("val"),
+    val pinned = graft.core.Pin(chunked0).df
+    val a = pinned.select(col("chunk"), col("val"),
       col("doc_id").as("doc_a"), col("h").as("h_a"))
-    val b = cached.select(col("chunk"), col("val"),
+    val b = pinned.select(col("chunk"), col("val"),
       col("doc_id").as("doc_b"), col("h").as("h_b"))
     a.join(b, Seq("chunk", "val")).where(col("doc_a") < col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
@@ -655,6 +655,14 @@ object Dedup {
       .where(col("dist") <= maxDist)
       .select("doc_a", "doc_b", "dist")
   }
+
+  /** The pairs as pinned (src, dst) edges both ways, from ONE pass over
+    * the pair plan (a union of two selects would run discovery twice). */
+  private def pinnedEdges(pairs: DataFrame): graft.core.Pin =
+    graft.core.Pin(pairs.select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
 
   /** Connected components over a near-dup pair list — what cluster-based
     * dedup actually keys on: near-duplication is transitive in practice
@@ -677,21 +685,16 @@ object Dedup {
     * 100 TB the pair graph is vastly smaller than the corpus — this
     * frame is cluster-sized, not corpus-sized). */
   def components(pairs: DataFrame, maxIter: Int = 24): DataFrame = {
-    // both directions from ONE pass over the pair plan (a union of two
-    // selects would evaluate the upstream pair discovery twice)
-    val edges = graft.core.Eager(pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    val seed = edges.select(col("src").as("doc_id")).distinct()
+    val edges = pinnedEdges(pairs)
+    val seed = edges.df.select(col("src").as("doc_id")).distinct()
       .withColumn("comp", col("doc_id"))
     // decimal-exact sum measure: label values may be 60-bit hash ids
     // whose long sum overflows (ANSI mode raises) — the measure just
     // needs exact equality across iterations, not a machine word
-    val out = graft.core.Fixpoint.iterate(seed, maxIter,
+    try graft.core.Fixpoint.iterate(seed, maxIter,
       sum(col("comp").cast(
         org.apache.spark.sql.types.DecimalType(38, 0)))) { labels =>
-      val nbrMin = edges
+      val nbrMin = edges.df
         .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
         .groupBy(col("dst").as("doc_id"))
         .agg(min("comp").as("nbr_comp"))
@@ -699,9 +702,8 @@ object Dedup {
         .select(col("doc_id"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
             .as("comp"))
-    }
-    edges.unpersist()
-    out
+    }.df
+    finally edges.close()
   }
 
   /** Multi-source BFS hop levels — "how far is everything from this
@@ -716,45 +718,31 @@ object Dedup {
     * anti-joins the visited set so every node is assigned exactly
     * once, at its first (= minimum) hop. Distance is
     * order-independent, so the result is engine-exact and
-    * hash-gateable. `localCheckpoint` per round truncates the
+    * hash-gateable. A [[graft.core.Pin]] per round truncates the
     * iterative lineage (the [[pageRank]] discipline); the loop exits
-    * early on an empty frontier — one cheap driver action per round
-    * on a frontier-sized frame. Rounds needed = seed-set
-    * eccentricity; near-dup clusters are shallow, so the default
-    * bound is generous. */
+    * early on an empty frontier, read from the pin's row count. Rounds
+    * needed = seed-set eccentricity; near-dup clusters are shallow,
+    * so the default bound is generous. */
   def bfs(pairs: DataFrame, seeds: DataFrame, maxHops: Int = 8)
       : DataFrame = {
-    val edges = graft.core.Eager(pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    // per-hop job economy (r12 verdict ask #3 discipline): the frontier
-    // row count rides the checkpoint job via observe (no separate
-    // isEmpty action), and `visited` stays a LAZY union of
-    // already-checkpointed frontiers — nothing recomputes (every input
-    // is a LogicalRDD) and the union-of-≤maxHops plan stays shallow,
-    // so the per-hop cost is ONE job instead of three
-    def ckptCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      (out, obs.get("n").asInstanceOf[Long])
-    }
-    var (visited, fn) = ckptCounted(seeds.select(col("doc_id")).distinct()
+    val edges = pinnedEdges(pairs)
+    // ONE job per hop: the frontier's row count rides its pin, and
+    // `visited` stays a LAZY, shallow union of the pinned frontiers
+    // (each pin escapes into it). The edges are released on return.
+    var frontier = graft.core.Pin(seeds.select(col("doc_id")).distinct()
       .withColumn("hop", lit(0L)))
-    var frontier = visited
-    var hop = 1L
-    while (hop <= maxHops && fn > 0) {
-      val (next, n) = ckptCounted(frontier
-        .join(edges, frontier("doc_id") === edges("src"))
-        .select(col("dst").as("doc_id")).distinct()
-        .join(visited.select("doc_id"), Seq("doc_id"), "left_anti")
-        .withColumn("hop", lit(hop)))
-      visited = visited.unionByName(next)
-      frontier = next
-      fn = n
-      hop += 1
-    }
-    edges.unpersist()
+    var visited = frontier.df
+    try {
+      for (hop <- 1L to maxHops if frontier.rows > 0) {
+        val f = frontier.df
+        frontier = graft.core.Pin(f
+          .join(edges.df, f("doc_id") === edges.df("src"))
+          .select(col("dst").as("doc_id")).distinct()
+          .join(visited.select("doc_id"), Seq("doc_id"), "left_anti")
+          .withColumn("hop", lit(hop)))
+        visited = visited.unionByName(frontier.df)
+      }
+    } finally edges.close()
     visited
   }
 
@@ -945,40 +933,45 @@ object Dedup {
     * Returns (doc_id, deg, pr) for every pair participant. */
   def pageRank(pairs: DataFrame, iters: Int = 8,
                scale: Long = 1000000L): DataFrame = {
-    val edges = graft.core.Eager(pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    val deg = graft.core.Eager(
-      edges.groupBy("src").agg(count(lit(1)).as("deg")))
-    val withDeg = graft.core.Eager(edges.join(deg, "src"))
+    val edges = pinnedEdges(pairs)
+    val (deg, withDeg) =
+      try {
+        val d = graft.core.Pin(
+          edges.df.groupBy("src").agg(count(lit(1)).as("deg"))).df
+        (d, graft.core.Pin(edges.df.join(d, "src")))
+      } finally edges.close()
     val base = scale * 15 / 100
-    // localCheckpoint, not persist: persist keeps the DATA hot but the
-    // LOGICAL plan still embeds the whole previous iteration, so
-    // analysis cost doubles per round (measured: iteration 8 spent
-    // ~70 s in Catalyst on a 256-pair graph). Truncating lineage each
-    // round keeps every iteration's plan one join + one agg deep —
-    // the Fixpoint/Bpe loop discipline.
-    var rank = deg.select(col("src").as("doc_id"), lit(scale).as("pr"))
-      .localCheckpoint()
-    // lineage truncation every SECOND round: one checkpoint job per
+    // A Pin, not persist: persist keeps the DATA hot but the LOGICAL
+    // plan still embeds the whole previous iteration, so analysis cost
+    // doubles per round (measured: iteration 8 spent ~70 s in Catalyst
+    // on a 256-pair graph). Truncating lineage keeps every iteration's
+    // plan shallow — the Fixpoint/Bpe loop discipline.
+    var pinned = graft.core.Pin(
+      deg.select(col("src").as("doc_id"), lit(scale).as("pr")))
+    var rank = pinned.df
+    // lineage truncation every SECOND round: one pinning job per
     // two iterations instead of one per iteration (the jobs are
     // scheduling-overhead-dominated at any scale — guide §1.2), while
-    // the un-truncated plan never exceeds two join+agg layers
-    for (i <- 1 to iters) {
-      val next = withDeg
-        .join(rank.withColumnRenamed("doc_id", "src"), Seq("src"))
-        .select(col("dst"), expr("pr div deg").as("share"))
-        .groupBy("dst").agg(sum("share").as("inflow"))
-        .select(col("dst").as("doc_id"),
-          (lit(base) + expr("(85 * inflow) div 100")).as("pr"))
-      rank = if (i % 2 == 0 || i == iters) next.localCheckpoint() else next
-    }
-    val out = rank
+    // the un-truncated plan never exceeds two join+agg layers. The
+    // last round is always pinned, so withDeg and every earlier rank
+    // pin are released before returning.
+    try {
+      for (i <- 1 to iters) {
+        val next = withDeg.df
+          .join(rank.withColumnRenamed("doc_id", "src"), Seq("src"))
+          .select(col("dst"), expr("pr div deg").as("share"))
+          .groupBy("dst").agg(sum("share").as("inflow"))
+          .select(col("dst").as("doc_id"),
+            (lit(base) + expr("(85 * inflow) div 100")).as("pr"))
+        if (i % 2 == 0 || i == iters) {
+          pinned = pinned.advance(next)
+          rank = pinned.df
+        } else rank = next
+      }
+    } finally withDeg.close()
+    rank
       .join(deg.select(col("src").as("doc_id"), col("deg")), "doc_id")
       .select("doc_id", "deg", "pr")
-    edges.unpersist(); withDeg.unpersist()
-    out
   }
 
   /** CONTENT-DEFINED CHUNKING (#57s) — storage-class dedup's boundary

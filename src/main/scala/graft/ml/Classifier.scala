@@ -78,28 +78,27 @@ object Classifier {
     * (last = bias). */
   def train(features: DataFrame, dim: Int, iters: Int = 15,
             lr: Double = 1.0): Array[Double] = {
-    // persist + count in ONE materialization (Eager would count once
-    // to fill the cache and this count would be a second job)
-    val cached = features.persist()
-    val nDocs = cached.count().toDouble
-    val w = Array.fill(dim + 1)(0.0)
-    for (_ <- 1 to iters) {
-      // e = sigma(margin) - y; per-bucket Q20 terms — long sums make
-      // the cross-partition reduction order-insensitive
-      val grad = cached
-        .withColumn("eq",
-          round((lit(1d) / (lit(1d) + exp(-margin(w))) - col("y")) * Q)
-            .cast("long"))
-        .select(explode(col("bs")).as("b"), col("eq"))
-        .groupBy("b").agg(sum("eq").as("g"))
-        .collect()
-      grad.foreach { r =>
-        val b = r.getInt(0)
-        w(b) -= lr * (r.getLong(1).toDouble / Q) / nDocs
+    // the pin's observed row count is the document count: one job
+    scala.util.Using.resource(graft.core.Pin(features)) { pinned =>
+      val nDocs = pinned.rows.toDouble
+      val w = Array.fill(dim + 1)(0.0)
+      for (_ <- 1 to iters) {
+        // e = sigma(margin) - y; per-bucket Q20 terms — long sums make
+        // the cross-partition reduction order-insensitive
+        val grad = pinned.df
+          .withColumn("eq",
+            round((lit(1d) / (lit(1d) + exp(-margin(w))) - col("y")) * Q)
+              .cast("long"))
+          .select(explode(col("bs")).as("b"), col("eq"))
+          .groupBy("b").agg(sum("eq").as("g"))
+          .collect()
+        grad.foreach { r =>
+          val b = r.getInt(0)
+          w(b) -= lr * (r.getLong(1).toDouble / Q) / nDocs
+        }
       }
+      w
     }
-    cached.unpersist()
-    w
   }
 
   /** Featurize → train on a bounded deterministic sample → score the
@@ -118,7 +117,7 @@ object Classifier {
                         lr: Double = 1.0, trainCap: Int = 4096): DataFrame = {
     // featurize ONCE: the sample pick and the corpus scoring join
     // otherwise both re-run the tokenize+explode+agg pipeline
-    val f = graft.core.Eager(featurize(docs, label, group, dim))
+    val f = graft.core.Pin(featurize(docs, label, group, dim)).df
     val ord = conv(substring(md5(concat(lit("cls#"),
       col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long")
     val sample = f.orderBy(ord, col("doc_id")).limit(trainCap)

@@ -43,11 +43,11 @@ object Queries {
   private def ts(s: String): Column = lit(s).cast(TimestampType)
   private def T(s: SparkSession, dir: String) = Tables(s, dir)
 
-  /** Pin `df`'s rows in Spark block storage (eager localCheckpoint),
-    * then recursively delete the per-run scratch `dirs` that produced
-    * it — the r8-advice fix for bench iterations leaking CDC / edge
-    * artifacts in tmp. Call BEFORE the final display sort; the
-    * checkpointed frame never re-reads the deleted files. */
+  /** Pin `df`'s rows ([[graft.core.Pin]]; the pin escapes into the
+    * returned frame), then recursively delete the per-run temp `dirs`
+    * that produced it, so bench iterations do not leak CDC / edge
+    * artifacts in tmp. Call BEFORE the final display sort; the pinned
+    * frame never re-reads the deleted files. */
   private def rm(f: java.io.File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(rm)
@@ -55,7 +55,7 @@ object Queries {
   }
 
   private def cleanupAfter(df: DataFrame, dirs: String*): DataFrame = {
-    val pinned = df.localCheckpoint(true)
+    val pinned = graft.core.Pin(df).df
     dirs.foreach(d => rm(new java.io.File(d)))
     pinned
   }
@@ -63,7 +63,7 @@ object Queries {
   /** The plan-preserving sibling of [[cleanupAfter]]: queries whose
     * RETURNED plan is itself graded (ScaleSpec asserts
     * PartitionFilters / scan shapes on them) cannot be pinned behind
-    * a localCheckpoint — that would swap the asserted FileSourceScan
+    * a Pin — that would swap the asserted FileSourceScan
     * for a checkpoint-RDD scan. Their per-run scratch dirs are
     * instead deleted by one JVM shutdown hook: bounded by the run,
     * never accumulating across bench sessions in /tmp. */
@@ -3256,14 +3256,14 @@ object Queries {
         .cast(DecimalType(20, 0)).as("c2"))
     val k1 = Relational.cumsumExact(t, Seq("p"), "c1")
       .withColumnRenamed("cum", "k1")
-    // cache the double-cumsum ONCE: the n1/n2 head() and the gap scan
+    // pin the double-cumsum ONCE: the n1/n2 head() and the gap scan
     // each re-ran the whole two-pass cumulative chain otherwise
     // (guide §1.2 — don't compute things twice); `gap` itself is a
-    // cheap projection over the cached frame, not worth re-caching
-    val g0 = graft.core.Eager(Relational.cumsumExact(k1, Seq("p"), "c2")
+    // cheap projection over the pinned frame, not worth re-pinning
+    val g0 = graft.core.Pin(Relational.cumsumExact(k1, Seq("p"), "c2")
       .withColumnRenamed("cum", "k2")
       .select(col("p"), col("k1").cast("long").as("k1"),
-        col("k2").cast("long").as("k2")))
+        col("k2").cast("long").as("k2"))).df
     val nr = g0.agg(max("k1"), max("k2")).head()
     val (n1, n2) = (nr.getLong(0), nr.getLong(1))
     val g = g0.withColumn("gap",
@@ -4579,9 +4579,9 @@ object Queries {
     * Rows-only by design (DuckDB's approx_count_distinct is a
     * different estimator). */
   def qHllMerge(s: SparkSession, dir: String): DataFrame = {
-    val perType = graft.core.Eager(T(s, dir).events
+    val perType = graft.core.Pin(T(s, dir).events
       .groupBy("event_type")
-      .agg(hll_sketch_agg(col("user_id")).as("sk")))
+      .agg(hll_sketch_agg(col("user_id")).as("sk"))).df
     perType
       .select(col("event_type"), hll_sketch_estimate(col("sk")).as("est_users"))
       .unionByName(perType
@@ -4801,9 +4801,9 @@ object Queries {
     * sketches merge associatively, so the cutoff aggregation is fully
     * data-parallel regardless of stratum count, then a broadcast join
     * (cutoff table = one row per language) feeds the identical
-    * filter+rollup. Two scans of the scored frame (Eager'd here — at
+    * filter+rollup. Two scans of the scored frame (pinned here — at
     * cluster scale you would recompute the cheap column math rather
-    * than cache 100 TB; either way both passes are scan-parallel).
+    * than pin 100 TB; either way both passes are scan-parallel).
     * accuracy=10000 bounds the cutoff's rank error at n/10000 per
     * stratum. Rows-only gate (a GK sketch's chosen element is
     * algorithm-specific across engines); QueriesSpec asserts the
@@ -4822,10 +4822,10 @@ object Queries {
     * the same run. */
   def qQualityFilterApprox(s: SparkSession, dir: String): DataFrame = {
     graft.functions.ArrayCountIn.register(s)
-    val scored = graft.core.Eager(T(s, dir).documents
+    val scored = graft.core.Pin(T(s, dir).documents
       .select(col("doc_id"), col("lang"),
         qualityScore(col("text")).as("q"))
-      .where(col("q").isNotNull && !isnan(col("q"))))
+      .where(col("q").isNotNull && !isnan(col("q")))).df
     val cuts = scored.groupBy("lang")
       .agg(approx_percentile(col("q"), lit(0.25), lit(10000)).as("cut"))
     scored.join(broadcast(cuts), Seq("lang"))
@@ -4841,10 +4841,9 @@ object Queries {
     * are small exact integers whose single division is IEEE-correctly
     * rounded in both Spark and DuckDB, so the scores — and the ranking
     * — are bit-stable. Shape: explode → (doc,term) partial-agg counts
-    * → vocab-sized df agg → per-doc top-3 window; the tf frame is
-    * Eager'd because both the df aggregation and the final join
-    * consume it. Every stage is a keyed shuffle or broadcastable
-    * vocab join — the 100 TB shape. */
+    * → df as a window count over the term partition → per-doc top-3
+    * window; tf has one consumer, so nothing is pinned. Every stage is
+    * a keyed shuffle or broadcastable vocab join — the 100 TB shape. */
   def qDistinctiveTerms(s: SparkSession, dir: String): DataFrame = {
     val d = graft.dedup.Dedup
     val tf = T(s, dir).documents
@@ -4895,16 +4894,16 @@ object Queries {
     * contribution signal: late boilerplate scores ≈ 0 (every gram seen
     * before), genuinely new material scores high — the relational form
     * of "how much does this doc add to the corpus". Shape: one gram
-    * explode (Eager'd — the first-occurrence agg and the rejoin both
+    * explode (pinned — the first-occurrence agg and the rejoin both
     * consume it), one gram-keyed partial-agg min, one doc-keyed
     * rollup; division in the same form both sides. */
   def qNovelty(s: SparkSession, dir: String): DataFrame = {
     val d = graft.dedup.Dedup
-    val grams = graft.core.Eager(T(s, dir).documents
+    val grams = graft.core.Pin(T(s, dir).documents
       .repartition(graft.core.Fanout.n, col("doc_id"))
       .selectExpr("doc_id", s"${d.toksExpr} AS toks")
       .selectExpr("doc_id",
-        s"explode(array_distinct(${d.bigramsExpr})) AS g"))
+        s"explode(array_distinct(${d.bigramsExpr})) AS g")).df
     val first = grams.groupBy("g").agg(min("doc_id").as("first_doc"))
     grams.join(first, "g")
       .groupBy("doc_id")
@@ -5211,10 +5210,10 @@ object Queries {
     * mergeable-sketch path instead ([[qQualityFilterApprox]]'s
     * approx_percentile idiom — same contract, stratum-parallel). */
   def qLmScore(s: SparkSession, dir: String): DataFrame = {
-    val tok = graft.core.Eager(T(s, dir).documents
+    val tok = graft.core.Pin(T(s, dir).documents
       .withColumn("toks", wsTokens(col("text")))
       .where(size(col("toks")) >= 1)
-      .select(col("doc_id"), col("lang"), explode(col("toks")).as("tok")))
+      .select(col("doc_id"), col("lang"), explode(col("toks")).as("tok"))).df
     val tf = tok.groupBy("lang", "tok").agg(count(lit(1)).as("tf"))
     val byLang = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(desc("avg_tf"), col("doc_id"))
@@ -5575,12 +5574,12 @@ object Queries {
     val segArr = expr(
       """transform(sequence(0, (size(toks) + 9) div 10 - 1),
         |  i -> array_join(slice(toks, i * 10 + 1, 10), ' '))""".stripMargin)
-    val segs = graft.core.Eager(
+    val segs = graft.core.Pin(
       docs
         .repartition(graft.core.Fanout.n, col("doc_id"))
         .selectExpr("doc_id", s"${d.toksExpr} AS toks")
         .where(size(col("toks")) >= 1)
-        .select(col("doc_id"), posexplode(segArr).as(Seq("i", "seg"))))
+        .select(col("doc_id"), posexplode(segArr).as(Seq("i", "seg")))).df
     val df = segs.select("seg", "doc_id").distinct()
       .groupBy("seg").agg(count(lit(1)).as("df"))
     segs.join(df, "seg")
@@ -5655,17 +5654,18 @@ object Queries {
   def qNgramFreqCms(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.util.sketch.CountMinSketch
     val d = graft.dedup.Dedup
-    val bigrams = graft.core.Eager(T(s, dir).documents
-      .selectExpr(s"${d.toksExpr} AS toks")
-      .where(size(col("toks")) >= 2)
-      .selectExpr(s"explode(${d.bigramsExpr}) AS bigram"))
-    val skBytes = bigrams
-      .agg(expr("count_min_sketch(bigram, 0.001d, 0.99d, 42)").as("sk"))
-      .head.getAs[Array[Byte]]("sk")
-    val cms = CountMinSketch.readFrom(
-      new java.io.ByteArrayInputStream(skBytes))
-    val top = bigrams.groupBy("bigram").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("bigram")).limit(20).collect()
+    val (cms, top) = scala.util.Using.resource(graft.core.Pin(
+        T(s, dir).documents
+          .selectExpr(s"${d.toksExpr} AS toks")
+          .where(size(col("toks")) >= 2)
+          .selectExpr(s"explode(${d.bigramsExpr}) AS bigram"))) { p =>
+      val skBytes = p.df
+        .agg(expr("count_min_sketch(bigram, 0.001d, 0.99d, 42)").as("sk"))
+        .head.getAs[Array[Byte]]("sk")
+      (CountMinSketch.readFrom(new java.io.ByteArrayInputStream(skBytes)),
+        p.df.groupBy("bigram").agg(count(lit(1)).as("n"))
+          .orderBy(col("n").desc, col("bigram")).limit(20).collect())
+    }
     val out = top.toSeq.map(r =>
       (r.getString(0), r.getLong(1), cms.estimateCount(r.getString(0))))
     s.createDataFrame(out).toDF("bigram", "n_exact", "n_est")
@@ -5686,12 +5686,12 @@ object Queries {
     * and is exactly the shape that survives 100 TB (partial aggregates
     * absorb the ×n_tokens row inflation map-side). */
   def qRepetition(s: SparkSession, dir: String): DataFrame = {
-    val base = graft.core.Eager(T(s, dir).documents
+    val base = graft.core.Pin(T(s, dir).documents
       .repartition(graft.core.Fanout.n, col("doc_id"))
       .selectExpr("doc_id", s"${graft.dedup.Dedup.toksExpr} AS toks")
       .where(size(col("toks")) >= 2)
       .selectExpr("doc_id", "toks",
-        s"${graft.dedup.Dedup.bigramsExpr} AS bg"))
+        s"${graft.dedup.Dedup.bigramsExpr} AS bg")).df
     val counts = base.select(col("doc_id"),
       size(col("toks")).as("n_toks"),
       size(array_distinct(col("toks"))).as("n_dist"),
@@ -5930,7 +5930,7 @@ object Queries {
   def qJaccardEst(s: SparkSession, dir: String): DataFrame = {
     val d = graft.dedup.Dedup
     val sigExpr = d.portableSigExpr
-    val pairs = graft.core.Eager(d.jaccardJoin(T(s, dir).documents, 0.8))
+    val pairs = graft.core.Pin(d.jaccardJoin(T(s, dir).documents, 0.8)).df
     // portable sigs ONLY for pair participants (a semi join keyed on
     // doc_id): the k·|shingles| md5 stage is the expensive per-row
     // work, and the pair set is tiny relative to the corpus — the
@@ -5938,9 +5938,9 @@ object Queries {
     val ids = pairs.select(col("doc_a").as("doc_id"))
       .unionByName(pairs.select(col("doc_b").as("doc_id")))
       .distinct()
-    val sigs = graft.core.Eager(d.shingled(T(s, dir).documents)
+    val sigs = graft.core.Pin(d.shingled(T(s, dir).documents)
       .join(ids, Seq("doc_id"), "left_semi")
-      .selectExpr("doc_id", s"$sigExpr AS sig"))
+      .selectExpr("doc_id", s"$sigExpr AS sig")).df
     pairs
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")),
         "doc_a")
@@ -6062,14 +6062,14 @@ object Queries {
     * shifted slices over the live expression, ~1 s materialized). */
   def qWinnow(s: SparkSession, dir: String): DataFrame = {
     val w = 4
-    val hs = graft.core.Eager(T(s, dir).documents
+    val hs = graft.core.Pin(T(s, dir).documents
       .repartition(graft.core.Fanout.n, col("doc_id"))
       .selectExpr("doc_id", s"${graft.dedup.Dedup.toksExpr} AS toks")
       .where(size(col("toks")) >= w)
       .selectExpr("doc_id",
         """transform(toks, t ->
           |  cast(conv(substr(md5(concat('0#', t)), 1, 15), 16, 10)
-          |    as bigint)) AS hs""".stripMargin))
+          |    as bigint)) AS hs""".stripMargin)).df
     hs.selectExpr("doc_id",
         """array_distinct(zip_with(
           |  zip_with(slice(hs, 1, size(hs) - 3), slice(hs, 2, size(hs) - 3),
@@ -6117,9 +6117,9 @@ object Queries {
     // and the final rejoin, and an un-cached projection would be
     // INLINED past the broadcast join — re-evaluating the shingle
     // expression once per (train, eval) pair (measured 15 s vs 1.3 s)
-    val train = graft.core.Eager(withSh(docs
+    val train = graft.core.Pin(withSh(docs
       .where(col("source") =!= "src0")
-      .repartition(graft.core.Fanout.n, col("doc_id"))).select("doc_id", "lang", "sh"))
+      .repartition(graft.core.Fanout.n, col("doc_id"))).select("doc_id", "lang", "sh")).df
     val scored = train.where(col("sh").isNotNull).select("doc_id", "sh")
       .crossJoin(broadcast(evalSh))
       .withColumn("inter", expr("sorted_intersect_count(sh, esh)"))
@@ -6180,15 +6180,15 @@ object Queries {
         |                element_at(toks, i+3), ' ',
         |                element_at(toks, i+4)))),
         |  array())""".stripMargin
-    // Eager'd: three consumers (eval grams, train explode, final
+    // pinned: three consumers (eval grams, train explode, final
     // rejoin) would each re-run the tokenizer + gram builder per row
     // when the projection inlines (the q_decontam lesson — measured
     // there at ~10×); repartition first so gram construction spreads
     // across all cores/executors
-    val g = graft.core.Eager(T(s, dir).documents
+    val g = graft.core.Pin(T(s, dir).documents
       .repartition(graft.core.Fanout.n, col("doc_id"))
       .selectExpr("doc_id", "lang", "source", s"${d.toksExpr} AS toks")
-      .selectExpr("doc_id", "lang", "source", s"$gramsExpr AS gs"))
+      .selectExpr("doc_id", "lang", "source", s"$gramsExpr AS gs")).df
     val evalGrams = g.where(col("source") === "src0")
       .select(explode(col("gs")).as("gram")).distinct()
     val hits = g.where(col("source") =!= "src0")
@@ -6235,7 +6235,7 @@ object Queries {
     * join, so the result is EXACT — the oracle is the plain anti join.
     * This is the one join family AQE's runtime filters can't cover
     * (they prune probe sides of inner/semi joins, never the keep-side
-    * of an anti join). Corpus Eager'd here for the two branches; at
+    * of an anti join). Corpus pinned here for the two branches; at
     * 100 TB recompute the scan instead of caching. */
   def qBlocklist(s: SparkSession, dir: String): DataFrame = {
     graft.functions.BloomFunctions.register(s)
@@ -6243,8 +6243,8 @@ object Queries {
       .withColumn("fp", fingerprint(col("text")))
     val block = withFp.where(col("source") === "src0")
       .select(col("fp").as("bfp"))
-    val corpus = graft.core.Eager(withFp.where(col("source") =!= "src0")
-      .select("doc_id", "lang", "n_chars", "fp"))
+    val corpus = graft.core.Pin(withFp.where(col("source") =!= "src0")
+      .select("doc_id", "lang", "n_chars", "fp")).df
     // the sketch AGGREGATES distributed (map-side-merged bitsets); only
     // the finished ~KB sketch lands on the driver and is re-planted as
     // a binary literal — might_contain requires a constant bloom, and
@@ -6355,10 +6355,10 @@ object Queries {
     val rk = conv(substring(
       md5(concat(lit("t#"), col("doc_id").cast("string"))), 1, 15), 16, 10)
       .cast("long")
-    val docs = graft.core.Eager(T(s, dir).documents
+    val docs = graft.core.Pin(T(s, dir).documents
       .selectExpr("doc_id", "lang", s"${d.toksExpr} AS toks")
       .select(col("doc_id"), col("lang"),
-        size(col("toks")).cast("long").as("ntok"), rk.as("rk")))
+        size(col("toks")).cast("long").as("ntok"), rk.as("rk"))).df
     val wOrd = Window.orderBy("lang")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy().rowsBetween(
@@ -6418,13 +6418,13 @@ object Queries {
   def qDsir(s: SparkSession, dir: String): DataFrame = {
     val d = graft.dedup.Dedup
     val B = 64
-    val keyed = graft.core.Eager(T(s, dir).documents
+    val keyed = graft.core.Pin(T(s, dir).documents
       .repartition(graft.core.Fanout.n, col("doc_id"))
       .selectExpr("doc_id", "lang", "source", s"${d.toksExpr} AS toks")
       .selectExpr("doc_id", "lang", "source",
         s"explode(${d.bigramsExpr}) AS g")
       .withColumn("k", d.md5Hash60(col("g"), lit("dsir")) % B)
-      .drop("g"))
+      .drop("g")).df
     val raw = keyed.groupBy("k").agg(count(lit(1)).as("r"))
     val tgt = keyed.where(col("source") === "src0")
       .groupBy("k").agg(count(lit(1)).as("t"))
@@ -6696,7 +6696,7 @@ object Queries {
     * materializes between them, Catalyst fuses the maps. */
   def qPipelineWeb(s: SparkSession, dir: String): DataFrame = {
     graft.functions.UrlCanon.register(s)
-    // Eager'd: every downstream reference (policy filter, canon
+    // pinned: every downstream reference (policy filter, canon
     // window, fingerprint, host aggs) would otherwise INLINE the full
     // extraction+canonicalization expression tree — the optimizer's
     // multiply-referenced-projection inlining (the qQuality note) here
@@ -6704,17 +6704,18 @@ object Queries {
     // limit and drops the whole stage to interpreted (observed in the
     // r6d bench). Materializing the per-row stage once keeps each
     // stage's codegen small AND evaluates the regex chain once.
-    val extracted = graft.core.Eager(T(s, dir).documents
-      .select(col("doc_id"), synthUrl.as("url"),
-        htmlClean(synthHtml).as("clean")))
-    val allowed = graft.core.Eager(extracted
-      .withColumn("canon", canonicalizeUrl(col("url")))
-      .withColumn("host", urlHost(col("url")))
-      .where(!(col("host") === "src7.example.com" ||
-        col("host").endsWith(".src7.example.com") ||
-        col("host") === "src1.example.com" ||
-        col("host").endsWith(".src1.example.com")))
-      .drop("url"))
+    val allowed = scala.util.Using.resource(graft.core.Pin(T(s, dir).documents
+        .select(col("doc_id"), synthUrl.as("url"),
+          htmlClean(synthHtml).as("clean")))) { extracted =>
+      graft.core.Pin(extracted.df
+        .withColumn("canon", canonicalizeUrl(col("url")))
+        .withColumn("host", urlHost(col("url")))
+        .where(!(col("host") === "src7.example.com" ||
+          col("host").endsWith(".src7.example.com") ||
+          col("host") === "src1.example.com" ||
+          col("host").endsWith(".src1.example.com")))
+        .drop("url")).df
+    }
     val urlKept = allowed
       .withColumn("rn", row_number().over(
         Window.partitionBy("canon").orderBy("doc_id")))
@@ -6884,8 +6885,8 @@ object Queries {
     * one string — `groupByKey`-ready). One row per (doc, band). */
   def neardupBands(docs: DataFrame): DataFrame = {
     val d = graft.dedup.Dedup
-    graft.core.Eager(d.shingled(docs)
-      .selectExpr("doc_id", s"${d.portableSigExpr} AS sig"))
+    graft.core.Pin(d.shingled(docs)
+      .selectExpr("doc_id", s"${d.portableSigExpr} AS sig")).df
       .select(col("doc_id"), col("sig"), explode(expr(
         """transform(sequence(0, 7), b -> concat_ws(',',
           |  cast(b AS string),
@@ -7666,12 +7667,13 @@ object Queries {
       col("tsec") >= lo + span * i / 4 &&
       col("tsec") < lo + span * (i + 1) / 4)
     val key = Seq("user_id"); val ord = Seq("tsec", "event_id")
-    var hist = Relational.scd2(chunk(0), key, ord, "value")
-      .localCheckpoint() // fold discipline: one merge plan per step
+    // fold discipline: one merge plan per step, each step pinned and
+    // the step before it released
+    var hist = graft.core.Pin(Relational.scd2(chunk(0), key, ord, "value"))
     for (i <- 1L until 4L)
-      hist = Relational.scd2Merge(hist, chunk(i), key, ord, "value")
-        .localCheckpoint()
-    hist
+      hist = hist.advance(
+        Relational.scd2Merge(hist.df, chunk(i), key, ord, "value"))
+    hist.df
       .select(col("user_id"), col("version"), col("value"),
         col("valid_from"), col("valid_to"), col("is_current"))
       .orderBy("user_id", "version")
@@ -7745,11 +7747,11 @@ object Queries {
     * coefficient; a true dup clique sits at 1.0). Triangle counts come
     * from the degree-oriented [[Relational.triangles]]; the one
     * division is a single correctly-rounded IEEE op, so the whole row
-    * is hash-comparable. Edge discovery is shared and Eager'd once. */
+    * is hash-comparable. Edge discovery is shared and pinned once. */
   def qClusteringCoef(s: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.core.Eager(
+    val pairs = graft.core.Pin(
       graft.dedup.Dedup.jaccardJoin(T(s, dir).documents, 0.8)
-        .select("doc_a", "doc_b"))
+        .select("doc_a", "doc_b")).df
     val deg = pairs.select(col("doc_a").as("v"))
       .unionAll(pairs.select(col("doc_b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -7801,33 +7803,36 @@ object Queries {
     val path = java.nio.file.Files
       .createTempDirectory("graft_edge_artifact_").toString
     d.edgeTable(docs, 0.8, path)
-    val edges = graft.core.Eager(
+    val edges = graft.core.Pin(
       d.readEdgeTable(s, path).edges.select("doc_a", "doc_b"))
     // NOTE (r12): building the four consumers from a thread pool
     // (guide §2.6) was tried and REVERTED — on a saturated local[32]
     // the overlapped tiny jobs only contended (per-job times doubled,
     // wall unchanged to worse); the sequential build measures best.
-    val comps = d.components(edges)
-    val keep = d.keepBestFrom(comps, docs)
-    val pr = d.pageRank(edges)
-    val tri = Relational.triangles(edges, "doc_a", "doc_b")
-    val core = Relational.kcore(edges, "doc_a", "doc_b", k = 2, rounds = 8)
-    val prC = pr.join(comps, "doc_id").groupBy("comp")
-      .agg(sum("pr").as("sum_pr"))
-    val triC = tri.join(comps.select(col("doc_id").as("a"), col("comp")),
-        Seq("a"))
-      .groupBy("comp").agg(count(lit(1)).as("n_tri"))
-    val coreC = core.join(comps, "doc_id").groupBy("comp")
-      .agg(count(lit(1)).as("n_core2"))
-    cleanupAfter(keep.join(prC, "comp")
-      .join(triC, Seq("comp"), "left")
-      .join(coreC, Seq("comp"), "left")
-      .select(col("comp"), col("n_members"), col("keep_id"),
-        col("keep_chars"),
-        coalesce(col("n_tri"), lit(0L)).as("n_tri"),
-        coalesce(col("n_core2"), lit(0L)).as("n_core2"),
-        col("sum_pr")), path)
-      .orderBy("comp")
+    // cleanupAfter pins the rollup, so the edges are released after it
+    val rollup = try {
+      val comps = d.components(edges.df)
+      val keep = d.keepBestFrom(comps, docs)
+      val pr = d.pageRank(edges.df)
+      val tri = Relational.triangles(edges.df, "doc_a", "doc_b")
+      val core = Relational.kcore(edges.df, "doc_a", "doc_b", k = 2, rounds = 8)
+      val prC = pr.join(comps, "doc_id").groupBy("comp")
+        .agg(sum("pr").as("sum_pr"))
+      val triC = tri.join(comps.select(col("doc_id").as("a"), col("comp")),
+          Seq("a"))
+        .groupBy("comp").agg(count(lit(1)).as("n_tri"))
+      val coreC = core.join(comps, "doc_id").groupBy("comp")
+        .agg(count(lit(1)).as("n_core2"))
+      cleanupAfter(keep.join(prC, "comp")
+        .join(triC, Seq("comp"), "left")
+        .join(coreC, Seq("comp"), "left")
+        .select(col("comp"), col("n_members"), col("keep_id"),
+          col("keep_chars"),
+          coalesce(col("n_tri"), lit(0L)).as("n_tri"),
+          coalesce(col("n_core2"), lit(0L)).as("n_core2"),
+          col("sum_pr")), path)
+    } finally edges.close()
+    rollup.orderBy("comp")
   }
 
   /** #62e PORTABLE signed random projection of the embedding corpus —

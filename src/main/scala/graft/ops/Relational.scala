@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Reusable relational operators that compose from the DataFrame API
   * but deserve a named entry point — the queries in [[Queries]] are
@@ -48,9 +49,9 @@ object Relational {
     // width (the offsets make the prefix sums partition-independent)
     val np = if (partitions > 0) partitions else graft.core.Fanout.n(df)
     val oc = order.map(col)
-    val sorted = graft.core.Eager(
+    val sorted = graft.core.Pin(
       df.repartitionByRange(np, oc: _*)
-        .withColumn("__pid", spark_partition_id()))
+        .withColumn("__pid", spark_partition_id())).df
     val parts = sorted.groupBy("__pid")
       .agg(sum(col(value)).as("__s"))
       .collect().map(r => (r.getInt(0),
@@ -96,9 +97,9 @@ object Relational {
     // ranks come from the driver offsets, so any width is bit-equal
     val np = if (partitions > 0) partitions else graft.core.Fanout.n(df)
     val oc = order.map(col)
-    val sorted = graft.core.Eager(
+    val sorted = graft.core.Pin(
       df.repartitionByRange(np, oc: _*)
-        .withColumn("__pid", spark_partition_id()))
+        .withColumn("__pid", spark_partition_id())).df
     val cnts = sorted.groupBy("__pid").count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val n = cnts.map(_._2).sum
@@ -144,28 +145,30 @@ object Relational {
       col(weight).cast("long").as("w"))
     val parents = base.select(col("id").as("p_id"),
       col("pid").as("p_pid"), col("w").as("p_w"))
-    var done = base.where(col("pid").isNull)
+    // the active pin's row count is the loop test: no isEmpty job
+    var done = graft.core.Pin(base.where(col("pid").isNull)
       .select(col("id"), lit(0L).as("depth"), col("id").as("root_id"),
-        col("w").as("path_sum")).localCheckpoint()
-    var active = base.where(col("pid").isNotNull)
+        col("w").as("path_sum")))
+    var active = graft.core.Pin(base.where(col("pid").isNotNull)
       .select(col("id"), col("pid").as("cur"), lit(0L).as("depth"),
-        col("w").as("path_sum")).localCheckpoint()
-    var i = 0
-    while (i < maxDepth && !active.isEmpty) {
-      val stepped = active
-        .join(parents, active("cur") === parents("p_id"))
-        .select(col("id"), col("p_pid").as("cur"),
-          (col("depth") + 1L).as("depth"),
-          (col("path_sum") + col("p_w")).as("path_sum"),
-          col("p_id"))
-      done = done.unionByName(stepped.where(col("cur").isNull)
-        .select(col("id"), col("depth"), col("p_id").as("root_id"),
-          col("path_sum"))).localCheckpoint()
-      active = stepped.where(col("cur").isNotNull)
-        .select("id", "cur", "depth", "path_sum").localCheckpoint()
-      i += 1
-    }
-    done
+        col("w").as("path_sum")))
+    try {
+      for (_ <- 1 to maxDepth if active.rows > 0) {
+        val a = active.df
+        val stepped = a
+          .join(parents, a("cur") === parents("p_id"))
+          .select(col("id"), col("p_pid").as("cur"),
+            (col("depth") + 1L).as("depth"),
+            (col("path_sum") + col("p_w")).as("path_sum"),
+            col("p_id"))
+        done = done.advance(done.df.unionByName(
+          stepped.where(col("cur").isNull).select(col("id"), col("depth"),
+            col("p_id").as("root_id"), col("path_sum"))))
+        active = active.advance(stepped.where(col("cur").isNotNull)
+          .select("id", "cur", "depth", "path_sum"))
+      }
+    } finally active.close()
+    done.df
   }
 
   /** GRID-bucketed spatial RADIUS self-join: all unordered point
@@ -767,16 +770,17 @@ object Relational {
     * normalized (self-loops dropped, (min,max) + distinct), so
     * multi-edges and either orientation are accepted. */
   def triangles(edges: DataFrame, src: String, dst: String): DataFrame = {
-    // Eager the normalized edge set: the oriented frame references it
+    // Pin the normalized edge set: the oriented frame references it
     // five times (degree union ×2, rank attach ×2, and transitively
     // the wedge/closure self-joins) — uncached, every reference
     // re-runs the caller's whole edge-discovery pipeline (measured
     // 22 s for a 25-edge similarity graph whose exact-Jaccard
     // discovery costs ~2.5 s once).
-    val e = graft.core.Eager(edges
+    val ep = graft.core.Pin(edges
       .select(least(col(src), col(dst)).as("a"),
         greatest(col(src), col(dst)).as("b"))
       .where(col("a") =!= col("b")).distinct())
+    val e = ep.df
     val deg = e.select(col("a").as("v"))
       .unionAll(e.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
@@ -787,11 +791,11 @@ object Relational {
       .join(deg.select(col("v").as("b"), struct(col("d"), col("v")).as("rb")), "b")
     // oriented edges feed three plan arms (two wedge sides + closure):
     // materialize once; e is consumed building it and can be released
-    val o = graft.core.Eager(withR.select(
+    val o = try graft.core.Pin(withR.select(
       when(col("ra") < col("rb"), col("a")).otherwise(col("b")).as("u"),
       when(col("ra") < col("rb"), col("b")).otherwise(col("a")).as("v"),
-      when(col("ra") < col("rb"), col("rb")).otherwise(col("ra")).as("rv")))
-    e.unpersist()
+      when(col("ra") < col("rb"), col("rb")).otherwise(col("ra")).as("rv"))).df
+    finally ep.close()
     val wedge = o.select(col("u"), col("v").as("x"), col("rv").as("rx"))
       .join(o.select(col("u"), col("v").as("y"), col("rv").as("ry")), "u")
       .where(col("rx") < col("ry"))
@@ -827,8 +831,8 @@ object Relational {
     * VALUE domain, not the row count. */
   def editDistanceJoin(df: DataFrame, field: String, k: Int,
                        q: Int = 2): DataFrame = {
-    val names = graft.core.Eager(
-      df.select(col(field).as("s")).where(col("s").isNotNull).distinct())
+    val names = graft.core.Pin(
+      df.select(col(field).as("s")).where(col("s").isNotNull).distinct()).df
     val minLen = q * (k + 1)
     val long = names.where(length(col("s")) >= minLen)
     val short = names.where(length(col("s")) < minLen)
@@ -863,7 +867,7 @@ object Relational {
     * Contract: `rounds` FIXED peeling rounds (each = one degree
     * partial-agg + two semi-joins over the surviving edge set, all
     * keyed — the `components`/`pageRank` per-iteration shape), with
-    * `localCheckpoint` per round (the Fixpoint loop discipline — a
+    * a [[graft.core.Pin]] per round (the Fixpoint loop discipline — a
     * stacked lazy lineage is exponential in rounds). Fixed rounds keep
     * the operator oracle-comparable with no convergence tolerance; the
     * spec asserts an extra round is a no-op at the graded SFs, i.e.
@@ -872,39 +876,33 @@ object Relational {
     * graphs; raise `rounds` for adversarial chains. */
   def kcore(edges: DataFrame, src: String, dst: String, k: Int = 2,
             rounds: Int = 8): DataFrame = {
-    // NOTE checkpoint stays per-round here (unlike pageRank's
+    // NOTE the pin stays per-round here (unlike pageRank's
     // stride-2): each round references `e` three times (degree union
     // + both semi-joins), so leaving a round lazy would re-evaluate
-    // its whole subtree three times in the next job. The edge COUNT
-    // rides each checkpoint job via observe — peeling is monotone
+    // its whole subtree three times in the next job. The edge count
+    // the pin observes decides the exit — peeling is monotone
     // (rounds only remove edges), so an unchanged count means the
     // fixpoint is reached and every remaining round would be an
     // identity pass: exit early, result identical (the fixpoint-
     // within-bound law RelationalSpec asserts).
-    def ckptCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      (out, obs.get("n").asInstanceOf[Long])
-    }
-    var (e, en) = ckptCounted(edges
+    var p = graft.core.Pin(edges
       .select(least(col(src), col(dst)).as("a"),
         greatest(col(src), col(dst)).as("b"))
       .where(col("a") =!= col("b")).distinct())
-    var r = 0
     var stable = false
-    while (r < rounds && !stable) {
+    for (_ <- 1 to rounds if !stable) {
+      val e = p.df
       val keep = e.select(col("a").as("v"))
         .unionAll(e.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select("v")
-      val (e2, n2) = ckptCounted(
+      val next = p.advance(
         e.join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi"))
-      stable = n2 == en
-      e = e2
-      en = n2
-      r += 1
+      stable = next.rows == p.rows
+      p = next
     }
+    val e = p.df
     e.select(col("a").as("doc_id"))
       .unionAll(e.select(col("b").as("doc_id")))
       .distinct()
@@ -1008,19 +1006,19 @@ object Relational {
     // pin the window's partition count WHEN THE INPUT IS BIG ENOUGH TO
     // CARE: the union can be byte-light relative to its running-struct
     // scan (a generated probe grid multiplies rows, not input bytes)
-    // and AQE coalesces the keyed exchange by bytes — measured r12 as
-    // a 3-task 2 s window stage that the explicit width pin took to
-    // 2.66× (q_pit_join). But on a genuinely SMALL union the pin only
-    // buys full-width task overhead (r12 verdict: q_asof 0.44→0.56 s
-    // at sf0.1), so it is GATED on the optimizer's size estimate —
-    // ≥1 MiB per session core (scale-adaptive: any real history at
-    // cluster scale clears it; a byte-small frame stays on the
-    // AQE-coalesced path, which is optimal for it). The pinned
-    // window reuses the explicit partitioning — no extra shuffle.
+    // and AQE coalesces the keyed exchange by bytes (a 3-task 2 s
+    // window stage on q_pit_join, 2.66× faster pinned). On a SMALL
+    // union the pin only buys full-width task overhead (q_asof
+    // 0.44→0.56 s at sf0.1), so it is GATED on the optimizer's
+    // estimate: ≥1 MiB per session core, and below
+    // spark.sql.defaultSizeInBytes, which means UNKNOWN (an RDD-backed
+    // input) — unknown fails safe to AQE's width. The pinned window
+    // reuses the explicit partitioning — no extra shuffle.
     val unioned = lSide.unionByName(rSide)
     val estBytes = unioned.queryExecution.optimizedPlan.stats.sizeInBytes
     val wide = estBytes >=
-      BigInt(graft.core.Fanout.n(unioned).toLong * (1L << 20))
+      BigInt(graft.core.Fanout.n(unioned).toLong * (1L << 20)) &&
+      estBytes < BigInt(SQLConf.get.defaultSizeInBytes)
     val spread =
       if (wide) unioned.repartition(graft.core.Fanout.n(unioned),
         key.map(col): _*)

@@ -599,6 +599,15 @@ object Scale {
         .getOrElse(col(c))): _*)
   }
 
+  /** A MERGE `body` over its source pinned once (changelog-sized by
+    * contract), which hit detection, the insert anti-join, the per-file
+    * semi-joins and the staged writes all read. A pinned source (a
+    * streaming batch) is used as-is. */
+  private def withPinnedSource[A](source: DataFrame)(
+      body: DataFrame => A): A =
+    if (graft.core.Pin.isPinned(source)) body(source)
+    else scala.util.Using.resource(graft.core.Pin(source))(p => body(p.df))
+
   /** MERGE INTO on the COW chain — the upsert (SCD-1) MERGE as
     * file-granular DML: `source` rows whose `key` matches an
     * existing row UPDATE it in place (non-null source columns win,
@@ -631,19 +640,7 @@ object Scale {
       val raw = readMerged(spark, files, footers)
       schema.map(alignTo(raw, _, renames)).getOrElse(raw)
     }
-    // MATERIALIZE the merge source once (changelog-sized by the
-    // stated contract — the same discipline Delta's MERGE applies):
-    // hit detection, the insert anti-join, the per-hit-file key
-    // semi-joins and the staged writes each re-executed the full
-    // source plan otherwise (guide §1.2: don't compute things twice).
-    // A source that IS already a checkpoint (streaming batches arrive
-    // pinned) is used as-is — re-checkpointing would materialize the
-    // batch a second time (r12 advice); checkpoint blocks we created
-    // are released once the publish completes (finally below).
-    val preCkpt = source.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-    val src = if (preCkpt) source else source.localCheckpoint()
-    try {
+    withPinnedSource(source) { src =>
     // empty-manifest base (a just-CREATEd table): declared-schema
     // empty frame, bootstrap MERGE = pure insert (r12 review)
     val df =
@@ -746,7 +743,7 @@ object Scale {
     }
     RewriteStats(baseFiles.size.toLong, hitFiles.size.toLong,
       rowsBefore, rowsBefore - hitBefore + stagedAfter)
-    } finally if (!preCkpt) src.unpersist()
+    }
   }
 
   /** MULTI-CLAUSE MERGE on the COW chain (r11 verdict ask #4's
@@ -783,12 +780,7 @@ object Scale {
       val raw = readMerged(spark, files, footers)
       schema.map(alignTo(raw, _, renames)).getOrElse(raw)
     }
-    // MATERIALIZE the source once — same rationale (and the same
-    // pre-checkpointed-source + release discipline) as [[mergeInto]]
-    val preCkpt = source.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-    val src = if (preCkpt) source else source.localCheckpoint()
-    try {
+    withPinnedSource(source) { src =>
     // an EMPTY base manifest (a just-CREATEd table) serves the
     // declared schema's empty frame — the bootstrap MERGE is then a
     // pure insert (r12 review: an unguarded zero-path parquet read
@@ -886,7 +878,7 @@ object Scale {
     }
     RewriteStats(baseFiles.size.toLong, hitFiles.size.toLong,
       rowsBefore, rowsBefore - hitBefore + stagedAfter)
-    } finally if (!preCkpt) src.unpersist()
+    }
   }
 
   /** APPEND `df` as the next committed version: every base file rides
@@ -959,23 +951,23 @@ object Scale {
     val headV = VersionStore.head(spark, tableDir)
       .getOrElse(throw new IllegalArgumentException(
         s"no committed versions under $tableDir"))
-    // replacement data materialized once (replacement-sized): the
-    // escapee validation and the staged append otherwise both
-    // executed the full replacement plan (guide §1.2)
-    val out = castToTable(spark, tableDir, headV, df).localCheckpoint()
+    // replacement data pinned once (replacement-sized), the escapee
+    // count observed on the same job: validation and the staged append
+    // would each execute the replacement plan (guide §1.2)
     val cond = expr(condSql)
-    val escapees = out.where(!coalesce(cond, lit(false))).count()
-    require(escapees == 0L,
-      s"REPLACE WHERE: $escapees replacement row(s) do not satisfy " +
-        s"($condSql) — they would land outside the replaced slice")
-    val cons = VersionStore.constraintsOf(spark, tableDir, headV)
-    if (cons.nonEmpty) enforce(out, cons)
-    // release the replacement checkpoint once the publish completes
-    // (r12 advice: checkpoint blocks accumulated across commits)
-    try cowRewrite(spark, tableDir, tableDir, cond,
-      _.where(!coalesce(cond, lit(false))), "REPLACE_WHERE",
-      condSql = Some(condSql), appendDf = Some(out))
-    finally out.unpersist()
+    val out = graft.core.Pin(castToTable(spark, tableDir, headV, df),
+      count_if(!coalesce(cond, lit(false))).as("escapees"))
+    try {
+      val escapees = out.metric("escapees")
+      require(escapees == 0L,
+        s"REPLACE WHERE: $escapees replacement row(s) do not satisfy " +
+          s"($condSql) — they would land outside the replaced slice")
+      val cons = VersionStore.constraintsOf(spark, tableDir, headV)
+      if (cons.nonEmpty) enforce(out.df, cons)
+      cowRewrite(spark, tableDir, tableDir, cond,
+        _.where(!coalesce(cond, lit(false))), "REPLACE_WHERE",
+        condSql = Some(condSql), appendDf = Some(out.df))
+    } finally out.close()
   }
 
   /** INSERT OVERWRITE (whole table) as ONE commit: the next version's
@@ -1975,18 +1967,18 @@ object Scale {
     require(unknown.isEmpty,
       s"ANALYZE of column(s) ${unknown.mkString(", ")} the table does " +
         s"not serve (declared: ${servable.toSeq.sorted.mkString(", ")})")
-    val stats = fileStatsFor(spark, baseFiles, cols, identity,
-      schema, renames).localCheckpoint()
+    val stats = graft.core.Pin(fileStatsFor(spark, baseFiles, cols,
+      identity, schema, renames))
     val id = headV.map(_ + 1).getOrElse(0L)
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
+    try VersionStore.publishExclusive(spark, tableDir, id) { stage =>
       VersionStore.fsOf(spark, tableDir)
         .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
       VersionStore.writeManifest(spark, stage, baseFiles)
       carryMeta(spark, stage, schema, cons, renames, parts)
       stampOp(spark, tableDir, headV, stage, "ANALYZE",
         cols.mkString(","))
-      writeStats(spark, stage, stats)
-    }
+      writeStats(spark, stage, stats.df)
+    } finally stats.close()
     val n = graft.tables.Footers.rowCount(spark, baseFiles)
     RewriteStats(baseFiles.size.toLong, 0L, n, n)
   }
@@ -2039,7 +2031,8 @@ object Scale {
               .unionByName(fresh.select(keep.map(col): _*)))
           }
         }
-      all.foreach(a => writeStats(spark, stage, a.localCheckpoint()))
+      all.foreach(a => scala.util.Using.resource(graft.core.Pin(a))(p =>
+        writeStats(spark, stage, p.df)))
     }
 
   /** The manifest files of committed version `v` that MAY hold a row

@@ -47,8 +47,8 @@ object Similarity {
   private def perVec(emb: DataFrame, tables: Int, bits: Int): DataFrame = {
     graft.functions.HyperplaneLsh.register(emb.sparkSession)
     graft.functions.VectorDot.register(emb.sparkSession)
-    graft.core.Eager(normalized(emb).select(col("vec_id"), col("ne"),
-      expr(s"hyperplane_lsh(ne, $tables, $bits)").as("bks")))
+    graft.core.Pin(normalized(emb).select(col("vec_id"), col("ne"),
+      expr(s"hyperplane_lsh(ne, $tables, $bits)").as("bks"))).df
   }
 
   /** Tables needed for a per-pair miss probability ≤ `eps` at cosine
@@ -107,9 +107,9 @@ object Similarity {
   def embedPairsBlocked(emb: DataFrame, tau: Double,
                         blocks: Int = 16): DataFrame = {
     graft.functions.VectorDot.register(emb.sparkSession)
-    val pv = graft.core.Eager(normalized(emb)
+    val pv = graft.core.Pin(normalized(emb)
       .select(col("vec_id"), col("ne"))
-      .withColumn("blk", pmod(xxhash64(col("vec_id")), lit(blocks)).cast("int")))
+      .withColumn("blk", pmod(xxhash64(col("vec_id")), lit(blocks)).cast("int"))).df
     val a = pv.select(col("blk").as("ci"),
       explode(sequence(col("blk"), lit(blocks - 1))).as("cj"),
       col("vec_id").as("vec_a"), col("ne").as("ea"))
@@ -145,7 +145,7 @@ object Similarity {
     * against in SimilaritySpec — never the graded plan. */
   def embedPairs(emb: DataFrame, tau: Double): DataFrame = {
     graft.functions.VectorDot.register(emb.sparkSession)
-    val n = graft.core.Eager(normalized(emb)) // both join sides read the cache
+    val n = graft.core.Pin(normalized(emb)).df // both join sides read the pin
     val a = n.select(col("vec_id").as("vec_a"), col("ne").as("ea"))
     val b = n.select(col("vec_id").as("vec_b"), col("ne").as("eb"))
     a.crossJoin(b).where(col("vec_a") < col("vec_b"))
@@ -202,7 +202,7 @@ object Similarity {
     * queries, scan the corpus once — the classic 100 TB shape). */
   def knnBrute(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
     graft.functions.VectorDot.register(emb.sparkSession)
-    val n = graft.core.Eager(normalized(emb)) // queries and corpus share the cache
+    val n = graft.core.Pin(normalized(emb)).df // queries and corpus share the pin
     val q = n.where(queryPred)
       .select(col("vec_id").as("qid"), col("ne").as("qe"))
     val c = n.select(col("vec_id").as("vid"), col("ne").as("ce"))
@@ -288,8 +288,9 @@ object Similarity {
   def trainCentroids(emb: DataFrame, k: Int, iters: Int = 2,
                      sampleN: Int = 2048): DataFrame = {
     graft.functions.VectorDot.register(emb.sparkSession)
-    kmeansOnPv(graft.core.Eager(normalized(emb)
-      .select(col("vec_id"), col("ne"))), k, iters, sampleN)
+    scala.util.Using.resource(graft.core.Pin(normalized(emb)
+      .select(col("vec_id"), col("ne"))))(pv =>
+      kmeansOnPv(pv.df, k, iters, sampleN))
   }
 
   /** IVF (inverted-file) assignment: each vector keyed to its nearest
@@ -300,21 +301,28 @@ object Similarity {
     * vec_id, unit-normalized). The assignment shape is identical
     * either way: one linear scan with a per-row argmax over the
     * driver-held centroids ([[assignTo]]) — zero shuffles of the
-    * corpus. Returns (assigned(vec_id, ne, cid) — cached — and
+    * corpus. Returns (assigned(vec_id, ne, cid) — pinned — and
     * centroids(cid, ce) as a local relation). */
   def ivfAssign(emb: DataFrame, k: Int,
-                trainIters: Int = 2): (DataFrame, DataFrame) = {
+                trainIters: Int = 2): (DataFrame, DataFrame) =
+    ivfPinned(emb, k, trainIters) match { case (p, c) => (p.df, c) }
+
+  private def ivfPinned(emb: DataFrame, k: Int,
+                        trainIters: Int): (graft.core.Pin, DataFrame) = {
     graft.functions.VectorDot.register(emb.sparkSession)
-    val pv = graft.core.Eager(normalized(emb).select(col("vec_id"), col("ne")))
-    val centArr =
-      if (trainIters > 0) kmeansArr(pv, k, trainIters, 2048)
-      else pv.orderBy("vec_id").limit(k)
-        .select(col("vec_id"), col("ne")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    // the centroid frame is a LOCAL RELATION (driver data): no cache
-    // job needed, and broadcast consumers ship it directly
-    (graft.core.Eager(assignTo(pv, centArr)),
-      centsDf(pv.sparkSession, centArr))
+    scala.util.Using.resource(graft.core.Pin(
+        normalized(emb).select(col("vec_id"), col("ne")))) { p =>
+      val pv = p.df
+      val centArr =
+        if (trainIters > 0) kmeansArr(pv, k, trainIters, 2048)
+        else pv.orderBy("vec_id").limit(k)
+          .select(col("vec_id"), col("ne")).collect()
+          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      // the centroid frame is a LOCAL RELATION: no pin job needed, and
+      // broadcast consumers ship it directly
+      (graft.core.Pin(assignTo(pv, centArr)),
+        centsDf(pv.sparkSession, centArr))
+    }
   }
 
   /** Nearest-centroid assignment of unit vectors `pv` (vec_id, ne) to
@@ -648,10 +656,11 @@ object Similarity {
                     trainIters: Int = 2,
                     pq: Option[(Int, Int)] = None): Long = {
     val spark = emb.sparkSession
-    val (assigned, cents) = ivfAssign(emb, centroids, trainIters)
+    val (pinned, cents) = ivfPinned(emb, centroids, trainIters)
+    val assigned = pinned.df
     val id = graft.tables.VersionStore.head(spark, path)
       .map(_ + 1).getOrElse(0L)
-    graft.tables.VersionStore.publish(spark, path, id) { stage =>
+    try graft.tables.VersionStore.publish(spark, path, id) { stage =>
       cents.write.mode("overwrite").parquet(s"$stage/centroids")
       // cell-clustered layout: a probe reads co-located cells
       assigned.repartition(col("cid"))
@@ -662,7 +671,7 @@ object Similarity {
         pqEncode(assigned, cents, cb, m).repartition(col("cid"))
           .write.mode("overwrite").parquet(s"$stage/codes")
       }
-    }
+    } finally pinned.close()
     graft.tables.VersionStore.retain(spark, path, keepLast = 2): Unit
     id
   }
@@ -695,14 +704,15 @@ object Similarity {
     val spark = fresh.sparkSession
     graft.functions.VectorDot.register(spark)
     val idx = readAnnIndex(spark, path)
-    // no Eager: assignTo collects the ≤k centroid rows itself, and the
+    // centroids unpinned: assignTo collects the ≤k rows itself, and the
     // re-publish below re-reads the (tiny) centroid parquet directly
     val cents = idx.centroids
     val pv = normalized(fresh).select(col("vec_id"), col("ne"))
-    val freshAssigned = graft.core.Eager(assignTo(pv, cents))
+    val pinned = graft.core.Pin(assignTo(pv, cents))
+    val freshAssigned = pinned.df
     val merged = idx.assigned.unionByName(freshAssigned)
     val id = graft.tables.VersionStore.head(spark, path).get + 1
-    graft.tables.VersionStore.publish(spark, path, id) { stage =>
+    try graft.tables.VersionStore.publish(spark, path, id) { stage =>
       cents.write.mode("overwrite").parquet(s"$stage/centroids")
       merged.repartition(col("cid"))
         .write.mode("overwrite").parquet(s"$stage/assigned")
@@ -715,7 +725,7 @@ object Similarity {
             .write.mode("overwrite").parquet(s"$stage/codes")
         case _ => ()
       }
-    }
+    } finally pinned.close()
     graft.tables.VersionStore.retain(spark, path, keepLast = 2): Unit
     id
   }
@@ -789,8 +799,8 @@ object Similarity {
     * speed; argmax by per-vec window. Deterministic: ties break to the
     * smaller class label. */
   def labelErrors(emb: DataFrame): DataFrame = {
-    val ne = graft.core.Eager(normalized(emb)
-      .select(col("vec_id"), col("label"), col("ne")))
+    val ne = graft.core.Pin(normalized(emb)
+      .select(col("vec_id"), col("label"), col("ne"))).df
     val cents = ne
       .select(col("label"), posexplode(col("ne")).as(Seq("i", "x")))
       .groupBy("label", "i")

@@ -239,22 +239,15 @@ object Streams {
     if (!applied.exists(id <= _)) {
       val w = Window.partitionBy(key.map(col): _*)
         .orderBy(order.map(col(_).desc): _*)
-      // pin the deduped batch once (batch-sized): the emptiness gate
-      // and the merge's own source materialization otherwise both
-      // re-ran the window dedup over the raw batch
-      // the emptiness gate rides the checkpoint job via observe (no
-      // separate isEmpty action); mergeInto detects the
-      // pre-checkpointed source and does NOT re-pin it (r12 advice:
-      // the batch used to materialize twice); the one checkpoint is
-      // released when the batch commit is done
-      val obs = org.apache.spark.sql.Observation()
-      val latest = batch.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1).drop("__rn")
-        .observe(obs, count(lit(1)).as("n")).localCheckpoint()
+      // pin the deduped batch once: the emptiness gate reads its row
+      // count, and mergeInto uses a pinned source as-is (no second pin)
+      val latest = graft.core.Pin(
+        batch.withColumn("__rn", row_number().over(w))
+          .where(col("__rn") === 1).drop("__rn"))
       try {
-        if (obs.get("n").asInstanceOf[Long] > 0L)
-          graft.ops.Scale.mergeInto(s, srcDir, tableDir, latest, key): Unit
-      } finally latest.unpersist()
+        if (latest.rows > 0L)
+          graft.ops.Scale.mergeInto(s, srcDir, tableDir, latest.df, key): Unit
+      } finally latest.close()
       graft.tables.VersionStore.recordAppliedId(s, tableDir, id)
     }
   }

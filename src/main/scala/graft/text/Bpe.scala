@@ -22,10 +22,9 @@ import org.apache.spark.sql.functions._
   *    cardinality ≤ |alive vocab|², tiny — and (b) one narrow map
   *    applying the winning merge to the symbol arrays via a
   *    higher-order `aggregate` fold (no UDF, no object serialization).
-  *    `localCheckpoint` truncates the per-iteration lineage so plan
+  *    A [[graft.core.Pin]] truncates the per-iteration lineage so plan
   *    analysis stays O(1) per merge instead of O(r) (the standard
-  *    iterative-algorithm pattern; on a real cluster with unreliable
-  *    executors use `checkpoint` to reliable storage instead).
+  *    iterative-algorithm pattern).
   *  - The driver holds only the argmax pair per iteration (one small
   *    `head`) and the final merge table — `numMerges` rows.
   *
@@ -170,37 +169,33 @@ object Bpe {
   /** The merge loop on a cluster-resident vocabulary (beyond
     * `driverVocabLimit`): per iteration one partial-agg pair-count
     * shuffle + argmax `head`, then one narrow HOF-fold map applying the
-    * merge, `localCheckpoint`ed to truncate lineage. The truncation is
+    * merge, pinned to truncate lineage. The truncation is
     * load-bearing: a stacked-cache variant (one lazy fold per level)
     * was measured EXPONENTIAL past ~12 levels — Catalyst re-derives the
-    * full nested-lambda tree per iteration — where checkpointing keeps
-    * every iteration O(vocab). On a cluster with lossy executors use
-    * reliable `checkpoint` instead. */
+    * full nested-lambda tree per iteration — where pinning keeps every
+    * iteration O(vocab). Every pin is closed before returning. */
   def trainDistributed(wc: DataFrame, numMerges: Int,
                        minPairFreq: Long = 2L): Seq[Merge] = {
-    var words = wc
-      .select(chars(col("w")).as("syms"), col("freq"))
-      .localCheckpoint()
+    var words = graft.core.Pin(wc
+      .select(chars(col("w")).as("syms"), col("freq")))
     val learned = Vector.newBuilder[Merge]
     var rank = 0
     var exhausted = false
-    while (rank < numMerges && !exhausted) {
-      val top = pairCounts(words)
-        .orderBy(desc("cnt"), asc("a"), asc("b")).head(1)
-      if (top.isEmpty || top(0).getLong(2) < minPairFreq) exhausted = true
-      else {
-        val (a, b, n) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        learned += Merge(rank, a, b, n)
-        val next = words
-          .select(applyMerge(col("syms"), a, b).as("syms"), col("freq"))
-          .localCheckpoint()
-        words.unpersist()
-        words = next
-        rank += 1
+    try {
+      while (rank < numMerges && !exhausted) {
+        val top = pairCounts(words.df)
+          .orderBy(desc("cnt"), asc("a"), asc("b")).head(1)
+        if (top.isEmpty || top(0).getLong(2) < minPairFreq) exhausted = true
+        else {
+          val (a, b, n) =
+            (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          learned += Merge(rank, a, b, n)
+          words = words.advance(words.df
+            .select(applyMerge(col("syms"), a, b).as("syms"), col("freq")))
+          rank += 1
+        }
       }
-    }
-    words.unpersist()
+    } finally words.close()
     learned.result()
   }
 

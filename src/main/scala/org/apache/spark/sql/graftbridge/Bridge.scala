@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 
 /** The one `private[sql]` seam graft's SQL surface needs: turning an
   * already-analyzed [[LogicalPlan]] (the MERGE statement's source
@@ -13,9 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * copied, only the accessibility boundary is crossed. */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      plan)
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** This predicate as the v1 [[org.apache.spark.sql.sources.Filter]]
     * core Spark would hand a `SupportsDelete` connector, if it
@@ -36,17 +36,20 @@ object Bridge {
     * `isStreaming`; the file source marks its relation the same way).
     * The plan stays fully distributed — `toRdd` is the lazily-
     * executed physical plan, pinned into a streaming-tagged
-    * [[org.apache.spark.sql.execution.LogicalRDD]]. */
-  def asStreamingBatch(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val plan = org.apache.spark.sql.execution.LogicalRDD.apply(
-      df.queryExecution.analyzed.output.asInstanceOf[
-        scala.collection.immutable.Seq[
-          org.apache.spark.sql.catalyst.expressions.Attribute]],
-      df.queryExecution.toRdd,
-      isStreaming = true)(spark)
-    org.apache.spark.sql.classic.Dataset.ofRows(spark, plan)
+    * [[LogicalRDD]]. */
+  def asStreamingBatch(df: DataFrame): DataFrame =
+    ofRows(df.sparkSession, LogicalRDD(df.queryExecution.analyzed.output,
+      df.queryExecution.toRdd, isStreaming = true)(
+      df.sparkSession.asInstanceOf[classic.SparkSession]))
+
+  /** A checkpointed frame re-planned with its observed row count. */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame = {
+    val r = df.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val stats = Statistics(rowCount = Some(BigInt(rows)),
+      sizeInBytes = (EstimationUtils.getSizePerRow(r.output) * rows).max(1))
+    ofRows(df.sparkSession, LogicalRDD(r.output, r.rdd,
+      r.outputPartitioning, r.outputOrdering, r.isStreaming)(
+      df.sparkSession.asInstanceOf[classic.SparkSession], Some(stats), None))
   }
 
   /** `StructType.merge` is `private[sql]`; chain reads merge per-file

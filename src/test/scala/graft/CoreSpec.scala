@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Channel, Fold, Pump, Sink, Source, StatePump}
+import scala.jdk.CollectionConverters._
+
+import graft.core.{Channel, Fixpoint, Fold, Pin, Pump, Sink, Source, StatePump}
 
 /** Semantics of the tubes surface (SURVEY §2.1–§2.3) on driver-sized
   * streams — mirrors the reference's own doc examples. */
@@ -256,5 +258,75 @@ class CoreSpec extends AnyFunSuite {
     assert(drain.recv()._2.state == 0)
     val (frozen, dupAfter) = drain.duplicate.recv()
     assert(frozen.state == 5 && dupAfter.state == 0)
+  }
+
+  test("Pin carries its observed rowCount; large x pinned-small plans a broadcast") {
+    // an RDD-backed frame has no size estimate (defaultSizeInBytes): a
+    // bare checkpoint of it would keep that and plan a sort-merge join
+    val small = spark.createDataFrame(
+      spark.sparkContext.parallelize(0L until 100L, 4)
+        .map(org.apache.spark.sql.Row(_)),
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
+    val big = spark.range(0L, 100000000L).toDF("k") // planned, never run
+    scala.util.Using.resource(Pin(small, max("k").as("hi"))) { p =>
+      assert(p.rows == 100L && p.metric("hi") == 99L)
+      assert(p.df.queryExecution.optimizedPlan.stats.rowCount
+        .contains(BigInt(100)))
+      val plan = big.join(p.df, "k").queryExecution.sparkPlan
+      assert(plan.collect {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+      }.nonEmpty, plan.treeString)
+      assert(Pin.isPinned(p.df) && !Pin.isPinned(small))
+      assert(p.df.count() == 100L)
+    }
+    // no partitions at all: the observation still completes
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
+    scala.util.Using.resource(Pin(empty))(p => assert(p.rows == 0L))
+  }
+
+  test("Pin releases: Fixpoint over >=10 rounds and Bpe.trainDistributed free every block") {
+    import spark.implicits._
+    val before = Residency.ids(spark)
+    var rounds = 0
+    val got = scala.util.Using.resource(
+        Fixpoint.iterate(Seq(0L, 3L).toDF("x"), 20, sum("x")) { df =>
+          rounds += 1
+          df.select(least(col("x") + 1L, lit(12L)).as("x"))
+        })(_.df.as[Long].collect().toSeq.sorted)
+    assert(got == Seq(12L, 12L) && rounds >= 10, s"rounds=$rounds")
+    Residency.assertReleased(spark, before)
+    val wc = Seq(("lower", 5L), ("lowest", 3L), ("newer", 6L),
+      ("wider", 2L)).toDF("w", "freq")
+    assert(graft.text.Bpe.trainDistributed(wc, 8).nonEmpty)
+    Residency.assertReleased(spark, before)
+  }
+
+  test("guard: Pin is the only materialize-and-release idiom in src/main") {
+    // a fifth idiom must not creep back: every frame computed once and
+    // read many times goes through graft.core.Pin. The exceptions are
+    // the lazily filled, finally-released persists of Sink.divide,
+    // Sink.choose and Channel.tee.
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: $root")
+    val idiom = raw"localCheckpoint\(|\.persist\(|\.cache\(\)|Eager\(".r
+    val allowed = Map("graft/core/Sink.scala" -> 2,
+      "graft/core/Channel.scala" -> 1)
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val offenders = files(root).flatMap { f =>
+      val rel = root.toPath.relativize(f.toPath).toString
+      val hits = java.nio.file.Files.readAllLines(f.toPath,
+          java.nio.charset.StandardCharsets.UTF_8).asScala.zipWithIndex
+        .filter { case (l, _) => idiom.findFirstIn(l).nonEmpty }
+        .map { case (l, i) => s"$rel:${i + 1}: ${l.trim}" }.toSeq
+      if (rel == "graft/core/Pin.scala" ||
+          hits.size <= allowed.getOrElse(rel, 0)) Nil
+      else hits
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -180,6 +180,32 @@ class CowDmlSpec extends AnyFunSuite {
     rm(base.toFile)
   }
 
+  test("mergeInto evaluates a lazy RDD-backed source exactly once") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_cow_lazy")
+    val src = base.resolve("src").toString
+    val tbl = base.resolve("tbl").toString
+    (1 to 400).map(i => (i.toLong, i.toLong % 4, i * 1.0))
+      .toDF("id", "k", "v").repartition(4, col("k")).write.parquet(src)
+    // an RDD-backed frame is a LogicalRDD but not a materialized one:
+    // MERGE must pin it, not read it once per use
+    val seen = spark.sparkContext.longAccumulator("merge_source_rows")
+    val rows = Seq((2L, 2L, -2.0), (6L, 2L, -6.0), (9001L, 7L, 91.0))
+    val source = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2).map { case (a, b, c) =>
+        seen.add(1L); org.apache.spark.sql.Row(a, b, c) },
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "id BIGINT, k BIGINT, v DOUBLE"))
+    val stats = Scale.mergeInto(spark, src, tbl, source, Seq("id"))
+    assert(stats.rowsAfter == 401L)
+    assert(seen.value == rows.size.toLong,
+      s"source rows evaluated ${seen.value} times for ${rows.size} rows")
+    val got = Scale.readTable(spark, tbl)
+      .collect().map(r => (r.getLong(0), r.getDouble(2))).toMap
+    assert(got(2L) == -2.0 && got(6L) == -6.0 && got(9001L) == 91.0)
+    rm(base.toFile)
+  }
+
   test("addColumn is metadata-only; reads align; DML fills in place") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_cow_ddl")

@@ -98,8 +98,8 @@ class GraphReuseSpec extends AnyFunSuite {
     val docs = graft.tables.Tables(spark, sf).documents
     val reuse = rows(graft.ops.Queries.qGraphReuse(spark, sf))
     // fresh, artifact-free composition of the five standalone answers
-    val pairs = graft.core.Eager(
-      Dedup.jaccardJoin(docs, 0.8).select("doc_a", "doc_b"))
+    val pairs = graft.core.Pin(
+      Dedup.jaccardJoin(docs, 0.8).select("doc_a", "doc_b")).df
     val comps = Dedup.components(pairs)
     val keep = Dedup.keepBest(pairs, docs)
     val prC = Dedup.pageRank(pairs).join(comps, "doc_id")

@@ -177,6 +177,31 @@ class RelationalSpec extends AnyFunSuite {
         .collect()(0).getString(4) == "x", s"$dir equality-inclusive")
   }
 
+  test("asofJoin width gate fails safe on unknown statistics") {
+    // an RDD-backed input has no size estimate (Spark reports
+    // spark.sql.defaultSizeInBytes): the gate must not read that as
+    // "big" and pin a Fanout-width repartition onto a few rows
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id BIGINT, k BIGINT, t BIGINT")
+    val left = Seq((1L, 1L, 10L), (2L, 1L, 30L), (3L, 2L, 5L))
+    val lRdd = spark.createDataFrame(spark.sparkContext.parallelize(
+      left.map { case (a, b, c) => org.apache.spark.sql.Row(a, b, c) }),
+      schema)
+    val rDf = Seq((1L, 20L, "a"), (2L, 1L, "b")).toDF("k", "t", "v")
+    assert(lRdd.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      BigInt(org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes))
+    val got = Relational.asofJoin(lRdd, rDf, Seq("k"), "t")
+    val repartitions = got.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression => r
+    }
+    assert(repartitions.isEmpty, got.queryExecution.optimizedPlan.treeString)
+    val want = Relational.asofJoin(left.toDF("id", "k", "t"), rDf, Seq("k"), "t")
+    assert(got.orderBy("id").collect().toSeq ==
+      want.orderBy("id").collect().toSeq)
+    assert(got.orderBy("id").collect().map(r => Option(r.getString(4))).toSeq ==
+      Seq(None, Some("a"), Some("b")))
+  }
+
   test("snapshotDiff: newer-side NULL wins by presence, not coalesce (r7 advice)") {
     val a = Seq((1L, "x", Some("old")), (2L, "y", Some("keep")))
       .toDF("k", "fp", "note")
@@ -437,12 +462,13 @@ class RelationalSpec extends AnyFunSuite {
   test("kcore: the 8-round contract reaches the fixpoint at sf0.001 (#57j)") {
     val pairs = graft.dedup.Dedup.jaccardJoin(
       graft.tables.Tables(spark, "/root/testdata/sf0.001").documents, 0.8)
-    val e = graft.core.Eager(pairs.select("doc_a", "doc_b"))
-    val r8 = Relational.kcore(e, "doc_a", "doc_b", 2, 8)
-      .collect().map(_.getLong(0)).toSet
-    val r9 = Relational.kcore(e, "doc_a", "doc_b", 2, 9)
-      .collect().map(_.getLong(0)).toSet
-    e.unpersist()
+    val (r8, r9) = scala.util.Using.resource(
+        graft.core.Pin(pairs.select("doc_a", "doc_b"))) { e =>
+      (Relational.kcore(e.df, "doc_a", "doc_b", 2, 8)
+        .collect().map(_.getLong(0)).toSet,
+       Relational.kcore(e.df, "doc_a", "doc_b", 2, 9)
+        .collect().map(_.getLong(0)).toSet)
+    }
     assert(r8.nonEmpty && r8 == r9)
   }
 

@@ -1160,6 +1160,55 @@ class StreamingSpec extends AnyFunSuite {
     rm(stage.toFile)
   }
 
+  test("COW merge sink: 50 micro-batches stay bounded; MERGE and REPLACE WHERE release their pins") {
+    import spark.implicits._
+    import graft.ops.Scale
+    implicit val sq = spark.sqlContext
+    val stage = java.nio.file.Files.createTempDirectory("graft_cowpins")
+    val src = stage.resolve("base").toString
+    val tbl = stage.resolve("tbl").toString
+    (1 to 400).map(i => (i.toLong, i.toLong % 4, i * 1.0, 0L))
+      .toDF("id", "k", "v", "ver").repartition(4, col("k"))
+      .write.parquet(src)
+    val before = Residency.ids(spark)
+    val ms = MemoryStream[(Long, Long, Double, Long)]
+    val q = Streams.cowMergeSink(ms.toDF().toDF("id", "k", "v", "ver"),
+        Seq("id"), Seq("ver"), src, tbl)
+      .option("checkpointLocation", stage.resolve("ckpt").toString)
+      .start()
+    // each batch updates one key and inserts one; the batch pin and
+    // the merge's own pins must be gone before the batches pile up
+    val held = (1 to 50).map { b =>
+      ms.addData((b.toLong, b.toLong % 4, -b.toDouble, 1L),
+        (1000L + b, 5L, b.toDouble, 1L))
+      q.processAllAvailable()
+      Residency.grown(spark, before).size
+    }
+    q.stop()
+    assert(held.max <= 4, s"resident RDDs per batch: $held")
+    Residency.assertReleased(spark, before)
+    val got = Scale.readTable(spark, tbl)
+      .collect().map(r => (r.getLong(0), r.getDouble(2))).toMap
+    assert(got.size == 450 && got(7L) == -7.0 && got(1050L) == 50.0)
+    // direct MERGE of a lazy source, then REPLACE WHERE: both pin their
+    // input for the commit and release it when the commit is done
+    Scale.mergeInto(spark, src, tbl,
+      Seq((8L, 0L, 8.5, 2L)).toDF("id", "k", "v", "ver"), Seq("id"))
+    Residency.assertReleased(spark, before)
+    Scale.overwriteWhere(spark, tbl,
+      Seq((2000L, 5L, 0.0, 3L)).toDF("id", "k", "v", "ver"), "k = 5")
+    Residency.assertReleased(spark, before)
+    val after = Scale.readTable(spark, tbl).where(col("k") === 5L)
+      .collect().map(_.getLong(0)).toSeq
+    assert(after == Seq(2000L))
+    def rm(f: java.io.File): Unit = {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(rm)
+      f.delete(): Unit
+    }
+    rm(stage.toFile)
+  }
+
   test("readChangesStream: per-commit deltas, restart emits only new versions (#81e)") {
     import spark.implicits._
     import graft.ops.Scale
