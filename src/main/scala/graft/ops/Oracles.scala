@@ -1882,7 +1882,7 @@ object Oracles {
       """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity
         |FROM lineitem
         |WHERE l_orderkey = (SELECT min(l_orderkey) FROM lineitem)
-        |ORDER BY l_linenumber""".stripMargin,
+        |ORDER BY l_linenumber, l_partkey""".stripMargin,
 
     // DESCRIBE HISTORY: the op log is a contract — literal oracle
     "q_history" ->

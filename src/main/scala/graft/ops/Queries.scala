@@ -2085,8 +2085,8 @@ object Queries {
 
   /** #42l metadata-only ADD COLUMN ([[Scale.addColumn]]) — schema
     * evolution with ZERO data rewrite: v=0 deletes, v=1 publishes
-    * the new `flag` column as two small metadata writes (same file
-    * manifest, a declared-schema file — no data file is touched;
+    * the new `flag` column as one small commit record (same file
+    * list, a declared schema — no data file is touched;
     * CowDmlSpec proves the version dir is empty), v=2's UPDATE
     * fills it in just the click files. The graded read exercises
     * the mixed physical layout: rewritten files carry the column,
@@ -2145,7 +2145,7 @@ object Queries {
       (big.length() - 1024).toDouble / (1024 * 1024))
     require(stats.filesAfter < stats.filesBefore,
       s"OPTIMIZE failed to shrink the layout: $stats")
-    require(graft.tables.VersionStore.manifest(s, tbl, 0L)
+    require(graft.tables.VersionStore.snapshot(s, tbl, Some(0L)).files
       .exists(_.endsWith(big.getName)),
       "the already-compact file must ride by pointer, not rewrite")
     val out = Scale.readTable(s, tbl)
@@ -2440,7 +2440,7 @@ object Queries {
     * ([[graft.sql.GraftTable]]'s `SupportsPushDownFilters` — r11):
     * Catalyst pushes the query's own WHERE clause into the scan
     * builder, which consults the chain's maintained stats/partition
-    * tuples ([[Scale.filesPrunedAt]]) and opens ONLY surviving
+    * tuples ([[Scale.filesPruned]]) and opens ONLY surviving
     * manifest files; filters are reported not-pushed so Spark still
     * row-filters (pruning can drop provably-matchless FILES, never
     * rows). A plain `spark.sql` range query over the range-clustered
@@ -2655,7 +2655,7 @@ object Queries {
     * extension-session SQL UPDATE that doubles click amounts across
     * the mixed physical layout, SQL DROP of `user_id` — then a hard
     * require on the evolved shape and the hash gate on the rollup.
-    * `ALTER TABLE` on a 100 TB chain stays two metadata writes. */
+    * `ALTER TABLE` on a 100 TB chain stays one metadata write. */
   def qSqlDdl(s: SparkSession, dir: String): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory("graft_sqldd_")
     val src = base.resolve("src").toString
@@ -2726,8 +2726,8 @@ object Queries {
 
   /** #42a' SQL CREATE TABLE AS SELECT ([[graft.sql.GraftCatalog]]'s
     * `createTable` — r11): the LAST SQL gap — a chain born purely
-    * from statements. CTAS commits v=0 (empty manifest + declared
-    * schema, two metadata writes) and the select's rows land as the
+    * from statements. CTAS commits v=0 (one record: no files, the
+    * declared schema) and the select's rows land as the
     * v=1 append through the normal write path; the new chain is a
     * full citizen (the graded flow INSERTs and DELETEs into it by
     * statement before the hash-gated rollup, with a hard require on
@@ -2892,9 +2892,10 @@ object Queries {
     require(pre.filesRead == pre.filesTotal,
       s"pre-zorder layout must NOT prune the second dimension: $pre")
     // target ~12 z-files regardless of scale factor (file-size-derived)
-    val bytes = graft.tables.VersionStore.manifest(s, tbl, 0L).map(f =>
-      graft.tables.VersionStore.fsOf(s, tbl)
-        .getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
+    val fs = graft.tables.VersionStore.fsOf(s, tbl)
+    val bytes = graft.tables.VersionStore.snapshot(s, tbl, Some(0L)).files
+      .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)
+      .sum
     val targetMB = math.max(0.005, bytes / 12.0 / 1048576.0)
     val ms = graft.sql.GraftSql.mergeSession(s)
     val st = ms.sql(f"OPTIMIZE graft.`$tbl` TARGET $targetMB%.4f MB " +
@@ -2981,7 +2982,7 @@ object Queries {
       s"bloom index failed to skip any file: $ps")
     val out = pruned
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-    cleanupAfter(out, base.toString).orderBy("l_linenumber")
+    cleanupAfter(out, base.toString).orderBy("l_linenumber", "l_partkey")
   }
 
   /** #42o DESCRIBE HISTORY ([[Scale.history]]): the chain's audit

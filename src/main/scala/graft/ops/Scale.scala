@@ -3,7 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.tables.Tables
+import org.apache.hadoop.fs.Path
+
+import graft.tables.{Footers, Snapshot, Tables, VersionStore}
 
 /** Scale mechanics that don't change query semantics (SURVEY §5):
   * SQL-surface registration, skew-salted joins, bucketed co-located
@@ -219,19 +221,19 @@ object Scale {
     staged
   }
 
-  /** The optimistic-concurrency commit loop: `body` reads the head,
-    * stages its output and calls
-    * [[graft.tables.VersionStore.publishExclusive]]; a conflict (a
-    * concurrent writer committed the id first) re-runs the WHOLE
-    * body so hit detection re-resolves against the new head — the
-    * Delta/Iceberg retry, bounded so a livelock surfaces as the last
-    * conflict instead of spinning. */
+  /** The optimistic-concurrency commit loop: `body` resolves the head,
+    * stages its output and commits through
+    * [[graft.tables.VersionStore.commit]]; a conflict (a concurrent
+    * writer committed the id first) re-runs the WHOLE body so hit
+    * detection re-resolves against the new head — the Delta/Iceberg
+    * retry, bounded so a livelock surfaces as the last conflict
+    * instead of spinning. */
   private def withCommitRetry[A](attempts: Int = 5)(body: => A): A = {
     var left = attempts
     while (true) {
       try return body
       catch {
-        case e: graft.tables.VersionStore.VersionConflictException =>
+        case e: VersionStore.VersionConflictException =>
           left -= 1
           if (left <= 0) throw e
           // linear backoff: a conflict can also mean YOUNG crash
@@ -251,36 +253,45 @@ object Scale {
   final class ConstraintViolationException(msg: String)
     extends RuntimeException(msg)
 
-  /** Resolve a chain's current base: the head manifest when the chain
-    * has versions, else the raw parquet files of the source dir the
-    * chain will point into. Returns (head id, files, declared schema,
-    * declared CHECK constraints). */
-  private def resolveBase(spark: SparkSession, srcDir: String,
-                          tableDir: String)
-      : (Option[Long], Seq[String],
-         Option[org.apache.spark.sql.types.StructType],
-         Seq[(String, String)], Map[String, Seq[String]],
-         Map[String, Map[String, String]]) = {
-    import graft.tables.VersionStore
-    val fs = VersionStore.fsOf(spark, tableDir)
-    val headV = VersionStore.head(spark, tableDir)
-    val baseFiles: Seq[String] = headV match {
-      case Some(v) => VersionStore.manifest(spark, tableDir, v)
-      case None =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(srcDir))
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.toString).toSeq
+  private def parquetIn(fs: org.apache.hadoop.fs.FileSystem,
+                        dir: String): Seq[String] =
+    fs.listStatus(new Path(dir)).toSeq
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath.toString)
+
+  /** The snapshot a statement on `tableDir` builds on, resolved once:
+    * (the chain's head, the base). Before the chain's first commit the
+    * base is an uncommitted snapshot (version -1) over the raw
+    * parquet files of `srcDir`, which the first version then points
+    * INTO — retention never touches them (the chain owns only what
+    * lives under `tableDir`). */
+  private def baseOf(spark: SparkSession, srcDir: String,
+                     tableDir: String): (Option[Snapshot], Snapshot) = {
+    val head = VersionStore.latest(spark, tableDir)
+    (head, head.getOrElse(Snapshot(tableDir, -1L,
+      parquetIn(VersionStore.fsOf(spark, srcDir), srcDir))))
+  }
+
+  /** Commit the next version of `tableDir` after `head`
+    * ([[VersionStore.commit]]) as operation `op`: `write` stages data
+    * and returns the next record. The chain's maintained stats carry
+    * into it — those of `statsFrom` (default: the head), adjusted by
+    * `carry`, keep their rows for the files the record still points
+    * at, and the files `write` staged are profiled fresh. */
+  private def commitVersion(spark: SparkSession, tableDir: String,
+                            head: Option[Snapshot], op: String,
+                            detail: String = "",
+                            statsFrom: Option[Snapshot] = None,
+                            carry: DataFrame => DataFrame = identity)
+                           (write: VersionStore.Stage => Snapshot)
+      : Snapshot = {
+    val parentStats = statsFrom.orElse(head).flatMap(statsOf(spark, _))
+      .map(carry)
+    VersionStore.commit(spark, tableDir, head) { stage =>
+      val next = write(stage).copy(op = op, detail = detail)
+      maintainStats(spark, parentStats, stage, next)
+      next
     }
-    val schema = headV.flatMap(v =>
-      VersionStore.schemaOf(spark, tableDir, v))
-    val cons = headV.map(v =>
-      graft.tables.VersionStore.constraintsOf(spark, tableDir, v))
-      .getOrElse(Seq.empty)
-    val renames = headV.map(v =>
-      VersionStore.renamesOf(spark, tableDir, v)).getOrElse(Map.empty)
-    val parts = headV.map(v =>
-      VersionStore.partitionsOf(spark, tableDir, v)).getOrElse(Map.empty)
-    (headV, baseFiles, schema, cons, renames, parts)
   }
 
   /** ENFORCE the chain's CHECK constraints on the rows a DML is about
@@ -300,34 +311,45 @@ object Scale {
             "nothing published")
     }
 
-  /** Carry the chain's declared metadata (schema + constraints) into
-    * the next version's staging dir. */
-  private def carryMeta(spark: SparkSession, stage: String,
-                        schema: Option[org.apache.spark.sql.types.StructType],
-                        cons: Seq[(String, String)],
-                        renames: Map[String, Seq[String]] = Map.empty,
-                        parts: Map[String, Map[String, String]] = Map.empty)
-      : Unit = {
-    import graft.tables.VersionStore
-    schema.foreach(VersionStore.writeSchema(spark, stage, _))
-    if (cons.nonEmpty) VersionStore.writeConstraints(spark, stage, cons)
-    if (renames.nonEmpty) VersionStore.writeRenames(spark, stage, renames)
-    if (parts.nonEmpty) VersionStore.writePartitions(spark, stage, parts)
-  }
+  /** Rewrite each of `files` 1:1 into `stage` under its own name, all
+    * concurrently: a bounded driver thread pool submits independent
+    * single-file Spark jobs (the scheduler interleaves them; at 100 TB
+    * each file job is executor-sized and the pool keeps the cluster
+    * fed), each `coalesce(1)` so the file granularity — and any
+    * clustering ([[compact]]'s Z-order) — survives the DML. */
+  private def rewriteEach(fs: org.apache.hadoop.fs.FileSystem,
+                          stage: String, files: Seq[String])
+                         (rewrite: String => DataFrame): Unit =
+    if (files.nonEmpty) {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(8, files.size))
+      try files.map { f =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          override def call(): Unit =
+            writeSingleFile(rewrite(f), fs, stage, new Path(f).getName)
+        })
+      }.foreach(_.get())
+      finally pool.shutdown()
+    }
 
-  /** Stamp a staging dir's op note with a MONOTONIC commit timestamp
-    * — `max(now, predecessor's stamp + 1)` (Delta's in-commit-
-    * timestamp discipline): two commits inside one clock tick still
-    * resolve distinctly under `TIMESTAMP AS OF`, and history's `when`
-    * column never runs backwards. One tiny metadata read per commit. */
-  private def stampOp(spark: SparkSession, tableDir: String,
-                      headV: Option[Long], stage: String, op: String,
-                      detail: String = ""): Unit = {
-    val floor = headV.flatMap(v =>
-      graft.tables.VersionStore.commitTsOf(spark, tableDir, v))
-      .getOrElse(Long.MinValue)
-    graft.tables.VersionStore.writeOp(spark, stage, op, detail,
-      math.max(System.currentTimeMillis(), floor + 1))
+  /** Partition tuples after a 1:1 rewrite: untouched pointers keep
+    * their entries; a rewritten hit file inherits its source file's
+    * tuple restricted to the columns `keeps` (those the DML provably
+    * left unchanged — an UPDATE that SETs a partition column
+    * invalidates that key, a DELETE never does); new files without
+    * provenance stay untupled (sound). */
+  private def carriedParts(base: Snapshot, untouched: Seq[String],
+                           hitFiles: Seq[String],
+                           stage: VersionStore.Stage,
+                           keeps: String => Boolean)
+      : Map[String, Map[String, String]] = {
+    val untouchedSet = untouched.toSet
+    base.partitions.filter { case (f, _) => untouchedSet(f) } ++
+      hitFiles.flatMap { f =>
+        base.partitions.get(f).map(_.filter { case (k, _) => keeps(k) })
+          .filter(_.nonEmpty)
+          .map(kv => s"${stage.vdir}/${new Path(f).getName}" -> kv)
+      }
   }
 
   /** Copy-on-write DML core, MANIFEST-POINTER edition (r9-verdict
@@ -336,7 +358,7 @@ object Scale {
     * `tableDir`, where ONLY the files containing a row matching
     * `cond` are rewritten (1:1, preserving file granularity and any
     * clustering) — every untouched file is carried into the new
-    * version's manifest BY POINTER, exactly as Delta/Iceberg COW
+    * version's record BY POINTER, exactly as Delta/Iceberg COW
     * references unchanged data files across versions. Nothing is
     * byte-copied, ever: the r9 shape streamed every untouched byte
     * through a driver-serial copy loop, which at 100 TB turns a
@@ -345,22 +367,13 @@ object Scale {
     * files are neither rewritten nor copied; ScaleExperiment's 10×
     * row scales with hit data only).
     *
-    * Base resolution: the newest committed version under `tableDir`
-    * when one exists (chained DML), else the parquet files of
-    * `srcDir` — so the first DML's manifest points INTO the original
-    * table directory, which retention never touches (the chain owns
-    * only what lives under `tableDir`).
+    * Base resolution ([[baseOf]]): the chain's head when one exists
+    * (chained DML), else the parquet files of `srcDir`.
     *
     * Hit detection is file-granular: `input_file_name()` on the
     * filtered scan, a collect bounded by FILE COUNT, never rows. Hit
-    * files rewrite concurrently (a bounded driver thread pool
-    * submitting independent single-file Spark jobs — the scheduler
-    * interleaves them; at 100 TB each file job is executor-sized and
-    * the pool keeps the cluster fed), each `coalesce(1)` so the
-    * file granularity — and any clustering ([[compact]]'s Z-order) —
-    * survives the DML. Readers resolve the manifest via
-    * [[readTable]]; time travel via
-    * [[graft.tables.VersionStore.read]] with an explicit version. */
+    * files rewrite concurrently ([[rewriteEach]]). Readers resolve the
+    * record via [[readTable]]; time travel via [[readTableAt]]. */
   private def cowRewrite(spark: SparkSession, srcDir: String,
                          tableDir: String, cond: Column,
                          rewrite: DataFrame => DataFrame,
@@ -369,27 +382,24 @@ object Scale {
                          tupleBreakers: Set[String] = Set.empty,
                          appendDf: Option[DataFrame] = None)
       : RewriteStats = withCommitRetry() {
-    import graft.tables.VersionStore
     val fs = VersionStore.fsOf(spark, tableDir)
-    val (headV, baseFiles, schema, cons, renames, parts) =
-      resolveBase(spark, srcDir, tableDir)
+    val (head, base) = baseOf(spark, srcDir, tableDir)
+    val baseFiles = base.files
     val byNorm = baseFiles.map(f => normalize(f) -> f).toMap
-    val footers = graft.tables.Footers.read(spark, baseFiles)
-    def readBase(files: Seq[String]) = {
-      val raw = readMerged(spark, files, footers)
-      schema.map(alignTo(raw, _, renames)).getOrElse(raw)
-    }
+    val footers = Footers.read(spark, baseFiles)
+    def readBase(files: Seq[String]) =
+      aligned(base, readMerged(spark, files, footers))
     // row accounting straight from the already-read footers (guide
     // §1.2): the sums are exactly what count() over the same files
     // returns, with zero Spark jobs per commit
     val rowsBefore = baseFiles.iterator.map(footers(_).rows).sum
     // hit-detection PRE-FILTER (r10 verdict ask #5): when the caller
-    // hands the predicate as SQL text, consult the chain's partition
-    // map and maintained stats BEFORE opening any data file — a
-    // partition-targeted DML scans its partition, not the table
+    // hands the predicate as SQL text, prune by the head's partition
+    // tuples and maintained stats BEFORE opening any data file — a
+    // partition-targeted DML scans its partition, not the table (a
+    // chainless base has no metadata to prune with)
     val candidates = condSql match {
-      case Some(sql) =>
-        dmlCandidates(spark, tableDir, headV, baseFiles, sql)
+      case Some(sql) => head.fold(baseFiles)(filesPruned(spark, _, sql)._1)
       case None => baseFiles
     }
     // file-granular hit detection: rows where cond IS TRUE name their
@@ -401,72 +411,35 @@ object Scale {
         .where(cond).select("__f").distinct()
         .collect().map(r => resolveHit(byNorm, r.getString(0))).toSeq
     val untouched = baseFiles.filterNot(hitFiles.toSet)
-    if (cons.nonEmpty && hitFiles.nonEmpty)
-      enforce(rewrite(readBase(hitFiles)), cons)
-    val id = headV.map(_ + 1).getOrElse(0L)
+    if (base.constraints.nonEmpty && hitFiles.nonEmpty)
+      enforce(rewrite(readBase(hitFiles)), base.constraints)
     // rows-delta accounting is HIT-FILE-priced: counting the whole
     // post-DML table would defeat the hit-priced contract (the r10
     // review nit) — the untouched pointers contribute unchanged rows
     val hitBefore = hitFiles.iterator.map(footers(_).rows).sum
     var hitAfter = 0L
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      if (hitFiles.nonEmpty) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, hitFiles.size))
-        try {
-          val tasks = hitFiles.map { f =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = {
-                val name = new org.apache.hadoop.fs.Path(f).getName
-                writeSingleFile(rewrite(readBase(Seq(f))), fs, stage, name)
-              }
-            })
-          }
-          tasks.foreach(_.get())
-        } finally pool.shutdown()
-      }
-      // manifest names the FINAL paths: rewritten files under the
+    commitVersion(spark, tableDir, head, opName) { stage =>
+      rewriteEach(fs, stage.path, hitFiles)(f => rewrite(readBase(Seq(f))))
+      // the record names the FINAL paths: rewritten files under the
       // version dir the stage is about to become, untouched files by
       // pointer wherever they already live
-      val rewritten = hitFiles.map(f =>
-        s"$tableDir/v=$id/" + new org.apache.hadoop.fs.Path(f).getName)
-      if (hitFiles.nonEmpty)
-        hitAfter = graft.tables.Footers.rowCount(spark,
-          rewritten.map(r => s"$stage/" + new org.apache.hadoop.fs.Path(r)
-            .getName))
+      val names = hitFiles.map(new Path(_).getName)
+      hitAfter = Footers.rowCount(spark, names.map(n => s"${stage.path}/$n"))
       // REPLACE-WHERE append arm (r11 verdict ask #7): the
-      // replacement rows land in the SAME publish as the predicate's
+      // replacement rows land in the SAME commit as the predicate's
       // delete, so a reader never observes the in-between state the
       // two-commit DELETE+INSERT workaround exposed
       val appended = appendDf.map { adf =>
-        val names = stageParquet(adf, fs, stage, "__replace",
-          i => s"replace-$id-$i.parquet")
-        if (names.nonEmpty)
-          hitAfter += graft.tables.Footers.rowCount(spark,
-            names.map(n => s"$stage/$n"))
-        names.map(n => s"$tableDir/v=$id/$n")
+        val staged = stageParquet(adf, fs, stage.path, "__replace",
+          i => s"replace-${stage.version}-$i.parquet")
+        hitAfter += Footers.rowCount(spark,
+          staged.map(n => s"${stage.path}/$n"))
+        staged
       }.getOrElse(Seq.empty)
-      VersionStore.writeManifest(spark, stage,
-        untouched ++ rewritten ++ appended)
-      // partition-tuple upkeep: untouched pointers keep their entries;
-      // a 1:1 rewrite inherits its source file's tuple MINUS any
-      // column this DML may have changed (`tupleBreakers` — an UPDATE
-      // that SETs a partition column invalidates that key, a DELETE
-      // never does); new files without provenance stay untupled (sound)
-      val untouchedSet = untouched.toSet
-      val nextParts =
-        parts.filter { case (f, _) => untouchedSet(f) } ++
-          hitFiles.flatMap { f =>
-            parts.get(f).map(_ -- tupleBreakers).filter(_.nonEmpty)
-              .map(kv => (s"$tableDir/v=$id/" +
-                new org.apache.hadoop.fs.Path(f).getName) -> kv)
-          }
-      carryMeta(spark, stage, schema, cons, renames, nextParts)
-      stampOp(spark, tableDir, headV, stage, opName)
-      maintainStats(spark, tableDir,
-        headV.flatMap(statsOf(spark, tableDir, _)), stage, id, untouched,
-        schema, renames)
+      base.copy(
+        files = untouched ++ (names ++ appended).map(n => s"${stage.vdir}/$n"),
+        partitions = carriedParts(base, untouched, hitFiles, stage,
+          k => !tupleBreakers(k)))
     }
     RewriteStats(baseFiles.size.toLong, hitFiles.size.toLong,
       rowsBefore, rowsBefore - hitBefore + hitAfter,
@@ -496,48 +469,40 @@ object Scale {
     } ++ keep.map(col): _*)
   }
 
-  /** Read the files of committed version `v`, honoring its declared
-    * schema: `mergeSchema` unions footers written before and after a
-    * metadata-only DDL, then [[alignTo]] supplies columns no file
-    * carries yet. */
-  private def alignedRead(spark: SparkSession, tableDir: String,
-                          v: Long): DataFrame = {
-    import graft.tables.VersionStore
-    val files = VersionStore.manifest(spark, tableDir, v)
-    // an EMPTY manifest is a legal version (a just-created table, a
-    // DELETE that emptied everything): serve the declared schema's
-    // empty frame — there is no file to infer from
-    if (files.isEmpty) {
-      val schema = VersionStore.schemaOf(spark, tableDir, v)
-        .getOrElse(throw new IllegalStateException(
-          s"version $v of $tableDir has no files AND no declared " +
-            "schema — nothing to serve"))
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    }
-    val raw = readMerged(spark, files)
-    val renames = VersionStore.renamesOf(spark, tableDir, v)
-    VersionStore.schemaOf(spark, tableDir, v)
-      .map(alignTo(raw, _, renames)).getOrElse(raw)
-  }
+  /** `raw` rows of `snap`'s files as its readers see them: aligned to
+    * the declared schema and column mapping, when it declares one. */
+  private def aligned(snap: Snapshot, raw: DataFrame): DataFrame =
+    snap.schema.map(alignTo(raw, _, snap.renames)).getOrElse(raw)
 
-  /** The current table a COW chain serves: newest committed
-    * manifest, pointers resolved, declared schema applied. */
-  def readTable(spark: SparkSession, tableDir: String): DataFrame = {
-    val vs = graft.tables.VersionStore.committed(spark, tableDir)
-    require(vs.nonEmpty, s"no committed versions under $tableDir")
-    alignedRead(spark, tableDir, vs.max)
-  }
+  /** The table as `snap` serves it: `mergeSchema` unions footers
+    * written before and after a metadata-only DDL, then [[alignTo]]
+    * supplies columns no file carries yet. */
+  def readSnapshot(spark: SparkSession, snap: Snapshot): DataFrame =
+    // an EMPTY version is legal (a just-created table, a DELETE that
+    // emptied everything): serve the declared schema's empty frame —
+    // there is no file to infer from
+    if (snap.files.isEmpty)
+      spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        snap.schema.getOrElse(throw new IllegalStateException(
+          s"version ${snap.version} of ${snap.dir} has no files AND no " +
+            "declared schema — nothing to serve")))
+    else aligned(snap, readMerged(spark, snap.files))
+
+  /** The current table a COW chain serves: the head's files, pointers
+    * resolved, declared schema applied. */
+  def readTable(spark: SparkSession, tableDir: String): DataFrame =
+    readSnapshot(spark, VersionStore.snapshot(spark, tableDir))
 
   /** Time travel: the table as committed version `v` served it. */
   def readTableAt(spark: SparkSession, tableDir: String, v: Long)
       : DataFrame =
-    alignedRead(spark, tableDir, v)
+    readSnapshot(spark, VersionStore.snapshot(spark, tableDir, Some(v)))
 
   /** Copy-on-write DELETE: publish (as the next version under
     * `tableDir`) the table minus rows where `cond` IS TRUE; only
     * files containing a match are rewritten, everything else rides
-    * by manifest pointer. SQL DELETE semantics: a NULL predicate
+    * by pointer. SQL DELETE semantics: a NULL predicate
     * keeps the row, exactly as in unrewritten files (the r9 advice
     * defect: `!cond` is NULL for NULL rows, so they were dropped or
     * kept depending on file co-location with a TRUE hit). A hit file
@@ -548,8 +513,8 @@ object Scale {
       _.where(!coalesce(cond, lit(false))), "DELETE")
 
   /** [[deleteWhere]] with the predicate as SQL TEXT: hit detection
-    * consults the chain's partition map and maintained stats first
-    * ([[dmlCandidates]]) and scans only surviving candidate files —
+    * consults the chain's partition tuples and maintained stats first
+    * ([[filesPruned]]) and scans only surviving candidate files —
     * a partition-/band-targeted DELETE reads its slice, not the
     * table (`RewriteStats.filesScanned` records the scan set).
     * Semantics identical to the Column form. */
@@ -614,137 +579,19 @@ object Scale {
     * [[Relational.upsert]] semantics) inside a 1:1 rewrite of ONLY
     * the files holding matched keys; source rows matching nothing
     * APPEND as a new data file; every untouched file rides into the
-    * new version's manifest by pointer. This is `MERGE INTO t USING
+    * new version's record by pointer. This is `MERGE INTO t USING
     * s ON t.k = s.k WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN
     * INSERT` on the pointer-manifest table — at 100 TB a
     * changelog-sized MERGE touches the files its keys live in plus
-    * one append, never the table.
-    *
-    * Hit detection: one broadcast semi-join of the base scan against
-    * the source keys, collecting FILE NAMES (file-count-bounded).
-    * Each hit file rewrites as `upsert(file, source ⋉ file.keys)` —
-    * restricting changes to the file's own keys keeps a key that
-    * appears in several base files updating ALL its copies while
-    * inserts land exactly once. Contract (inherited from upsert):
+    * one append, never the table. Contract (inherited from upsert):
     * `source` unique per `key`. */
   def mergeInto(spark: SparkSession, srcDir: String, tableDir: String,
                 source: DataFrame, key: Seq[String]): RewriteStats =
-      withCommitRetry() {
-    import graft.tables.VersionStore
-    val fs = VersionStore.fsOf(spark, tableDir)
-    val (headV, baseFiles, schema, cons, renames, parts) =
-      resolveBase(spark, srcDir, tableDir)
-    val byNorm = baseFiles.map(f => normalize(f) -> f).toMap
-    val footers = graft.tables.Footers.read(spark, baseFiles)
-    def readBase(files: Seq[String]) = {
-      val raw = readMerged(spark, files, footers)
-      schema.map(alignTo(raw, _, renames)).getOrElse(raw)
-    }
-    withPinnedSource(source) { src =>
-    // empty-manifest base (a just-CREATEd table): declared-schema
-    // empty frame, bootstrap MERGE = pure insert (r12 review)
-    val df =
-      if (baseFiles.isEmpty && headV.isDefined)
-        alignedRead(spark, tableDir, headV.get)
-      else readBase(baseFiles)
-    // row accounting from footers (guide §1.2) — no count() jobs
-    val rowsBefore = baseFiles.iterator.map(footers(_).rows).sum
-    val srcKeys = src.select(key.map(col): _*).distinct()
-    val hitFiles: Seq[String] =
-      if (baseFiles.isEmpty) Seq.empty
-      else df
-        .withColumn("__f", input_file_name())
-        .join(broadcast(srcKeys), key, "left_semi")
-        .select("__f").distinct()
-        .collect().map(r => resolveHit(byNorm, r.getString(0))).toSeq
-    val untouched = baseFiles.filterNot(hitFiles.toSet)
-    val id = headV.map(_ + 1).getOrElse(0L)
-    val inserts = src.join(df.select(key.map(col): _*),
-      key, "left_anti")
-    if (cons.nonEmpty) {
-      // validate what the MERGE makes visible: the post-upsert state
-      // of the hit files plus the inserts — changed data only. This
-      // recomputes the hit-file upsert once more than the publish
-      // body does (both hit-file-sized); trading that for caching the
-      // merged frames would pin changelog-sized state per file
-      val changedBase =
-        if (hitFiles.nonEmpty)
-          Relational.upsert(readBase(hitFiles),
-            src.join(readBase(hitFiles).select(key.map(col): _*)
-              .distinct(), key, "left_semi"), key).drop("action")
-        else df.limit(0)
-      enforce(changedBase.unionByName(
-        inserts.select(df.columns.map(col).toIndexedSeq: _*)), cons)
-    }
-    val hitBefore = hitFiles.iterator.map(footers(_).rows).sum
-    var stagedAfter = 0L
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      if (hitFiles.nonEmpty) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, hitFiles.size))
-        try {
-          val tasks = hitFiles.map { f =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = {
-                val name = new org.apache.hadoop.fs.Path(f).getName
-                val fileDf = readBase(Seq(f))
-                val changes = src.join(
-                  fileDf.select(key.map(col): _*).distinct(),
-                  key, "left_semi")
-                writeSingleFile(
-                  Relational.upsert(fileDf, changes, key).drop("action"),
-                  fs, stage, name)
-              }
-            })
-          }
-          tasks.foreach(_.get())
-        } finally pool.shutdown()
-      }
-      // NOT MATCHED → INSERT: one appended file (changelog-sized
-      // here; at scale repartition to the target file size), in the
-      // base table's column order/shape; an update-only MERGE (the
-      // common streaming batch) appends nothing. Written FIRST, then
-      // dropped if empty (footer count): one execution of the
-      // anti-join plan instead of two — the old isEmpty gate ran the
-      // whole join before the write re-ran it (guide §1.2)
-      writeSingleFile(
-        inserts.select(df.columns.map(col).toIndexedSeq: _*),
-        fs, stage, s"merge-insert-$id.parquet")
-      val insPath = new org.apache.hadoop.fs.Path(stage,
-        s"merge-insert-$id.parquet")
-      if (graft.tables.Footers.rowCount(spark,
-          Seq(insPath.toString)) == 0L)
-        fs.delete(insPath, false): Unit
-      val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).toSeq
-      val written = staged.map(f =>
-        s"$tableDir/v=$id/" + new org.apache.hadoop.fs.Path(f).getName)
-      stagedAfter = graft.tables.Footers.rowCount(spark, staged)
-      VersionStore.writeManifest(spark, stage, untouched ++ written)
-      // tuple upkeep: a MERGE may overwrite any non-key column, so a
-      // rewritten hit file keeps only the tuple keys that are JOIN
-      // keys (provably unchanged); the insert file has no provenance
-      val untouchedSet = untouched.toSet
-      val nextParts =
-        parts.filter { case (f, _) => untouchedSet(f) } ++
-          hitFiles.flatMap { f =>
-            parts.get(f).map(_.filter { case (k, _) => key.contains(k) })
-              .filter(_.nonEmpty)
-              .map(kv => (s"$tableDir/v=$id/" +
-                new org.apache.hadoop.fs.Path(f).getName) -> kv)
-          }
-      carryMeta(spark, stage, schema, cons, renames, nextParts)
-      stampOp(spark, tableDir, headV, stage, "MERGE")
-      maintainStats(spark, tableDir,
-        headV.flatMap(statsOf(spark, tableDir, _)), stage, id, untouched,
-        schema, renames)
-    }
-    RewriteStats(baseFiles.size.toLong, hitFiles.size.toLong,
-      rowsBefore, rowsBefore - hitBefore + stagedAfter)
-    }
-  }
+    cowMerge(spark, srcDir, tableDir, source, key, "")(
+      (base, changes) => Relational.upsert(base, changes, key)
+        .drop("action"),
+      (df, src) => src.join(df.select(key.map(col): _*), key, "left_anti")
+        .select(df.columns.map(col).toIndexedSeq: _*))
 
   /** MULTI-CLAUSE MERGE on the COW chain (r11 verdict ask #4's
     * engine half): the full clause algebra [[Relational.mergeInto]]
@@ -752,12 +599,8 @@ object Scale {
     * DELETE`, conditional `WHEN MATCHED [AND c] THEN UPDATE SET
     * expr…`, conditional `WHEN NOT MATCHED [AND c] THEN INSERT
     * (cols) VALUES (exprs)` — lowered onto the file-granular
-    * copy-on-write path: hit files (those holding any source key — a
-    * sound superset of the rows any clause touches) rewrite 1:1
-    * through the clause algebra restricted to their own keys,
-    * condition-filtered inserts land as one appended file, everything
-    * else rides by pointer. Matched-clause conditions and SET values
-    * see the join under aliases `t`/`s` (the SQL rule hands
+    * copy-on-write path of [[cowMerge]]. Matched-clause conditions and
+    * SET values see the join under aliases `t`/`s` (the SQL rule hands
     * expressions qualified that way); insert values see the bare
     * source frame. DELETE-beats-UPDATE on a both-true row is the
     * algebra's law — the SQL layer composes statement clause ORDER
@@ -769,25 +612,54 @@ object Scale {
                        matchedDelete: Option[Column],
                        matchedUpdate: Option[(Column, Seq[(String, Column)])],
                        notMatchedInsert: Option[(Column, Seq[(String, Column)])])
+      : RewriteStats =
+    cowMerge(spark, srcDir, tableDir, source, key, "multi-clause")(
+      (base, changes) => Relational.mergeInto(base, changes, key,
+        whenMatchedDelete = matchedDelete,
+        whenMatchedUpdate =
+          matchedUpdate.map { case (c, s) => (c, s.toMap) })
+        .drop("action"),
+      (df, src) => notMatchedInsert match {
+        case None => df.limit(0)
+        case Some((c, values)) =>
+          val vmap = values.toMap
+          src.join(df.select(key.map(col): _*), key, "left_anti")
+            .where(coalesce(c, lit(false)))
+            .select(df.schema.fields.toIndexedSeq.map(f =>
+              vmap.get(f.name).map(_.cast(f.dataType))
+                .getOrElse(lit(null).cast(f.dataType)).as(f.name)): _*)
+      })
+
+  /** The shared COW MERGE: hit files (those holding any source key — a
+    * sound superset of the rows any clause touches) rewrite 1:1 as
+    * `rewriteOf(file rows, source rows with the file's keys)` —
+    * restricting changes to the file's own keys keeps a key that
+    * appears in several base files updating ALL its copies while
+    * inserts land exactly once. `insertsOf(base, source)` gives the
+    * NOT MATCHED rows in the base's shape; they land as one appended
+    * file. Everything else rides by pointer. Hit detection is one
+    * broadcast semi-join of the base scan against the source keys,
+    * collecting FILE NAMES (file-count-bounded). */
+  private def cowMerge(spark: SparkSession, srcDir: String,
+                       tableDir: String, source: DataFrame,
+                       key: Seq[String], detail: String)
+                      (rewriteOf: (DataFrame, DataFrame) => DataFrame,
+                       insertsOf: (DataFrame, DataFrame) => DataFrame)
       : RewriteStats = withCommitRetry() {
-    import graft.tables.VersionStore
     val fs = VersionStore.fsOf(spark, tableDir)
-    val (headV, baseFiles, schema, cons, renames, parts) =
-      resolveBase(spark, srcDir, tableDir)
+    val (head, base) = baseOf(spark, srcDir, tableDir)
+    val baseFiles = base.files
     val byNorm = baseFiles.map(f => normalize(f) -> f).toMap
-    val footers = graft.tables.Footers.read(spark, baseFiles)
-    def readBase(files: Seq[String]) = {
-      val raw = readMerged(spark, files, footers)
-      schema.map(alignTo(raw, _, renames)).getOrElse(raw)
-    }
+    val footers = Footers.read(spark, baseFiles)
+    def readBase(files: Seq[String]) =
+      aligned(base, readMerged(spark, files, footers))
     withPinnedSource(source) { src =>
-    // an EMPTY base manifest (a just-CREATEd table) serves the
-    // declared schema's empty frame — the bootstrap MERGE is then a
-    // pure insert (r12 review: an unguarded zero-path parquet read
-    // throws before any clause runs)
+    // an EMPTY base (a just-CREATEd table) serves the declared
+    // schema's empty frame — the bootstrap MERGE is then a pure insert
+    // (r12 review: an unguarded zero-path parquet read throws before
+    // any clause runs)
     val df =
-      if (baseFiles.isEmpty && headV.isDefined)
-        alignedRead(spark, tableDir, headV.get)
+      if (baseFiles.isEmpty && head.isDefined) readSnapshot(spark, base)
       else readBase(baseFiles)
     // row accounting from footers (guide §1.2) — no count() jobs
     val rowsBefore = baseFiles.iterator.map(footers(_).rows).sum
@@ -800,81 +672,45 @@ object Scale {
         .select("__f").distinct()
         .collect().map(r => resolveHit(byNorm, r.getString(0))).toSeq
     val untouched = baseFiles.filterNot(hitFiles.toSet)
-    val id = headV.map(_ + 1).getOrElse(0L)
-    def rewriteOf(base: DataFrame): DataFrame = {
-      val changes = src.join(
-        base.select(key.map(col): _*).distinct(), key, "left_semi")
-      Relational.mergeInto(base, changes, key,
-        whenMatchedDelete = matchedDelete,
-        whenMatchedUpdate =
-          matchedUpdate.map { case (c, s) => (c, s.toMap) })
-        .drop("action")
-    }
-    val inserts: DataFrame = notMatchedInsert match {
-      case None => df.limit(0)
-      case Some((c, values)) =>
-        val vmap = values.toMap
-        src.join(df.select(key.map(col): _*), key, "left_anti")
-          .where(coalesce(c, lit(false)))
-          .select(df.schema.fields.toIndexedSeq.map(f =>
-            vmap.get(f.name).map(_.cast(f.dataType))
-              .getOrElse(lit(null).cast(f.dataType)).as(f.name)): _*)
-    }
-    if (cons.nonEmpty) {
+    def rewrite(files: DataFrame): DataFrame = rewriteOf(files,
+      src.join(files.select(key.map(col): _*).distinct(), key, "left_semi"))
+    val inserts = insertsOf(df, src)
+    if (base.constraints.nonEmpty) {
+      // validate what the MERGE makes visible: the post-merge state of
+      // the hit files plus the inserts — changed data only. This
+      // recomputes the hit-file rewrite once more than the commit
+      // does (both hit-file-sized); trading that for caching the
+      // merged frames would pin changelog-sized state per file
       val changedBase =
-        if (hitFiles.nonEmpty) rewriteOf(readBase(hitFiles))
+        if (hitFiles.nonEmpty) rewrite(readBase(hitFiles))
         else df.limit(0)
-      enforce(changedBase.unionByName(inserts), cons)
+      enforce(changedBase.unionByName(inserts), base.constraints)
     }
     val hitBefore = hitFiles.iterator.map(footers(_).rows).sum
     var stagedAfter = 0L
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      if (hitFiles.nonEmpty) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, hitFiles.size))
-        try {
-          val tasks = hitFiles.map { f =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = {
-                val name = new org.apache.hadoop.fs.Path(f).getName
-                writeSingleFile(rewriteOf(readBase(Seq(f))), fs, stage,
-                  name)
-              }
-            })
-          }
-          tasks.foreach(_.get())
-        } finally pool.shutdown()
-      }
-      // write-then-drop-if-empty: one execution of the insert plan
-      // instead of isEmpty + write (guide §1.2)
-      writeSingleFile(inserts, fs, stage, s"merge-insert-$id.parquet")
-      val insPath = new org.apache.hadoop.fs.Path(stage,
-        s"merge-insert-$id.parquet")
-      if (graft.tables.Footers.rowCount(spark,
-          Seq(insPath.toString)) == 0L)
-        fs.delete(insPath, false): Unit
-      val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).toSeq
-      val written = staged.map(f =>
-        s"$tableDir/v=$id/" + new org.apache.hadoop.fs.Path(f).getName)
-      stagedAfter = graft.tables.Footers.rowCount(spark, staged)
-      VersionStore.writeManifest(spark, stage, untouched ++ written)
-      val untouchedSet = untouched.toSet
-      val nextParts =
-        parts.filter { case (f, _) => untouchedSet(f) } ++
-          hitFiles.flatMap { f =>
-            parts.get(f).map(_.filter { case (k, _) => key.contains(k) })
-              .filter(_.nonEmpty)
-              .map(kv => (s"$tableDir/v=$id/" +
-                new org.apache.hadoop.fs.Path(f).getName) -> kv)
-          }
-      carryMeta(spark, stage, schema, cons, renames, nextParts)
-      stampOp(spark, tableDir, headV, stage, "MERGE", "multi-clause")
-      maintainStats(spark, tableDir,
-        headV.flatMap(statsOf(spark, tableDir, _)), stage, id, untouched,
-        schema, renames)
+    commitVersion(spark, tableDir, head, "MERGE", detail) { stage =>
+      rewriteEach(fs, stage.path, hitFiles)(f => rewrite(readBase(Seq(f))))
+      // NOT MATCHED → INSERT: one appended file (changelog-sized
+      // here; at scale repartition to the target file size); an
+      // update-only MERGE (the common streaming batch) appends
+      // nothing. Written FIRST, then dropped if empty (footer count):
+      // one execution of the anti-join plan instead of two — an
+      // isEmpty gate runs the whole join before the write re-runs it
+      // (guide §1.2)
+      val ins = new Path(stage.path, s"merge-insert-${stage.version}.parquet")
+      writeSingleFile(inserts, fs, stage.path, ins.getName)
+      if (Footers.rowCount(spark, Seq(ins.toString)) == 0L)
+        fs.delete(ins, false): Unit
+      val staged = parquetIn(fs, stage.path)
+      stagedAfter = Footers.rowCount(spark, staged)
+      // tuple upkeep: a MERGE may overwrite any non-key column, so a
+      // rewritten hit file keeps only the tuple keys that are JOIN
+      // keys (provably unchanged); the insert file has no provenance
+      base.copy(
+        files = untouched ++ staged.map(f =>
+          s"${stage.vdir}/${new Path(f).getName}"),
+        partitions = carriedParts(base, untouched, hitFiles, stage,
+          key.contains))
     }
     RewriteStats(baseFiles.size.toLong, hitFiles.size.toLong,
       rowsBefore, rowsBefore - hitBefore + stagedAfter)
@@ -892,42 +728,30 @@ object Scale {
     * publish. At 100 TB an append costs the new data alone. */
   def appendTable(spark: SparkSession, tableDir: String, df: DataFrame)
       : RewriteStats = withCommitRetry() {
-    import graft.tables.VersionStore
     val fs = VersionStore.fsOf(spark, tableDir)
-    val (headV, baseFiles, schema, cons, renames, parts) =
-      resolveBase(spark, tableDir, tableDir)
-    require(headV.nonEmpty, s"no committed versions under $tableDir")
-    val out = castToTable(spark, tableDir, headV.get, df)
-    if (cons.nonEmpty) enforce(out, cons)
-    val rowsBefore = graft.tables.Footers.rowCount(spark, baseFiles)
+    val head = VersionStore.snapshot(spark, tableDir)
+    val out = castToTable(spark, head, df)
+    if (head.constraints.nonEmpty) enforce(out, head.constraints)
+    val rowsBefore = Footers.rowCount(spark, head.files)
     var appended = 0L
-    val id = headV.get + 1
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      val staged = stageParquet(out, fs, stage, "__append",
-        i => s"append-$id-$i.parquet")
-      appended = graft.tables.Footers.rowCount(spark,
-        staged.map(n => s"$stage/$n"))
-      VersionStore.writeManifest(spark, stage,
-        baseFiles ++ staged.map(n => s"$tableDir/v=$id/$n"))
-      carryMeta(spark, stage, schema, cons, renames, parts)
-      stampOp(spark, tableDir, headV, stage, "APPEND")
-      maintainStats(spark, tableDir,
-        headV.flatMap(statsOf(spark, tableDir, _)), stage, id, baseFiles,
-        schema, renames)
+    commitVersion(spark, tableDir, Some(head), "APPEND") { stage =>
+      val staged = stageParquet(out, fs, stage.path, "__append",
+        i => s"append-${stage.version}-$i.parquet")
+      appended = Footers.rowCount(spark,
+        staged.map(n => s"${stage.path}/$n"))
+      head.copy(files = head.files ++ staged.map(n => s"${stage.vdir}/$n"))
     }
-    RewriteStats(baseFiles.size.toLong, 0L, rowsBefore,
+    RewriteStats(head.files.size.toLong, 0L, rowsBefore,
       rowsBefore + appended, 0L)
   }
 
   /** Cast `df` onto the chain's declared column set/types (the shared
     * write-side alignment of [[appendTable]]/[[overwriteWhere]]/
     * [[overwriteTable]]). */
-  private def castToTable(spark: SparkSession, tableDir: String,
-                          headV: Long, df: DataFrame): DataFrame = {
-    import graft.tables.VersionStore
-    val tableSchema = VersionStore.schemaOf(spark, tableDir, headV)
-      .getOrElse(alignedRead(spark, tableDir, headV).schema)
+  private def castToTable(spark: SparkSession, head: Snapshot,
+                          df: DataFrame): DataFrame = {
+    val tableSchema =
+      head.schema.getOrElse(readSnapshot(spark, head).schema)
     val missing = tableSchema.fieldNames.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"write is missing column(s): ${missing.mkString(", ")}")
@@ -947,23 +771,19 @@ object Scale {
     * else rides by pointer. */
   def overwriteWhere(spark: SparkSession, tableDir: String,
                      df: DataFrame, condSql: String): RewriteStats = {
-    import graft.tables.VersionStore
-    val headV = VersionStore.head(spark, tableDir)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed versions under $tableDir"))
+    val head = VersionStore.snapshot(spark, tableDir)
     // replacement data pinned once (replacement-sized), the escapee
     // count observed on the same job: validation and the staged append
     // would each execute the replacement plan (guide §1.2)
     val cond = expr(condSql)
-    val out = graft.core.Pin(castToTable(spark, tableDir, headV, df),
+    val out = graft.core.Pin(castToTable(spark, head, df),
       count_if(!coalesce(cond, lit(false))).as("escapees"))
     try {
       val escapees = out.metric("escapees")
       require(escapees == 0L,
         s"REPLACE WHERE: $escapees replacement row(s) do not satisfy " +
           s"($condSql) — they would land outside the replaced slice")
-      val cons = VersionStore.constraintsOf(spark, tableDir, headV)
-      if (cons.nonEmpty) enforce(out.df, cons)
+      if (head.constraints.nonEmpty) enforce(out.df, head.constraints)
       cowRewrite(spark, tableDir, tableDir, cond,
         _.where(!coalesce(cond, lit(false))), "REPLACE_WHERE",
         condSql = Some(condSql), appendDf = Some(out.df))
@@ -971,64 +791,48 @@ object Scale {
   }
 
   /** INSERT OVERWRITE (whole table) as ONE commit: the next version's
-    * manifest names ONLY the new data files — old files simply stop
+    * record names ONLY the new data files — old files simply stop
     * being referenced (still time-travelable until retention).
     * Constraints validate the replacement; schema/metadata carry. */
   def overwriteTable(spark: SparkSession, tableDir: String,
                      df: DataFrame): RewriteStats = withCommitRetry() {
-    import graft.tables.VersionStore
     val fs = VersionStore.fsOf(spark, tableDir)
-    val (headV, baseFiles, schema, cons, renames, _) =
-      resolveBase(spark, tableDir, tableDir)
-    require(headV.nonEmpty, s"no committed versions under $tableDir")
-    val out = castToTable(spark, tableDir, headV.get, df)
-    if (cons.nonEmpty) enforce(out, cons)
-    val rowsBefore = graft.tables.Footers.rowCount(spark, baseFiles)
+    val head = VersionStore.snapshot(spark, tableDir)
+    val out = castToTable(spark, head, df)
+    if (head.constraints.nonEmpty) enforce(out, head.constraints)
+    val rowsBefore = Footers.rowCount(spark, head.files)
     var rowsAfter = 0L
-    val id = headV.get + 1
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      val staged = stageParquet(out, fs, stage, "__overwrite",
-        i => s"overwrite-$id-$i.parquet")
-      rowsAfter = graft.tables.Footers.rowCount(spark,
-        staged.map(n => s"$stage/$n"))
-      VersionStore.writeManifest(spark, stage,
-        staged.map(n => s"$tableDir/v=$id/$n"))
-      carryMeta(spark, stage, schema, cons, renames, Map.empty)
-      stampOp(spark, tableDir, headV, stage, "OVERWRITE")
-      maintainStats(spark, tableDir,
-        headV.flatMap(statsOf(spark, tableDir, _)), stage, id,
-        Seq.empty, schema, renames)
+    commitVersion(spark, tableDir, Some(head), "OVERWRITE") { stage =>
+      val staged = stageParquet(out, fs, stage.path, "__overwrite",
+        i => s"overwrite-${stage.version}-$i.parquet")
+      rowsAfter = Footers.rowCount(spark,
+        staged.map(n => s"${stage.path}/$n"))
+      head.copy(files = staged.map(n => s"${stage.vdir}/$n"),
+        partitions = Map.empty)
     }
-    RewriteStats(baseFiles.size.toLong, baseFiles.size.toLong,
+    RewriteStats(head.files.size.toLong, head.files.size.toLong,
       rowsBefore, rowsAfter, 0L)
   }
 
   /** CREATE an empty chain with a declared schema (the SQL
-    * `CREATE TABLE graft.\`p\`` / CTAS entry point): v=0 carries an
-    * EMPTY manifest plus the schema — two metadata writes; the first
+    * `CREATE TABLE graft.\`p\`` / CTAS entry point): v=0 is one
+    * record with no files and the schema; the first
     * [[appendTable]] (CTAS's data write, `INSERT INTO`) lands the
     * rows as v=1. Refuses when the chain already exists. */
   def createEmptyTable(spark: SparkSession, tableDir: String,
                        schema: org.apache.spark.sql.types.StructType)
       : Unit = {
-    import graft.tables.VersionStore
     require(VersionStore.head(spark, tableDir).isEmpty,
       s"table already exists under $tableDir")
-    VersionStore.publishExclusive(spark, tableDir, 0L) { stage =>
-      VersionStore.fsOf(spark, tableDir)
-        .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      VersionStore.writeManifest(spark, stage, Seq.empty)
-      VersionStore.writeSchema(spark, stage, schema)
-      stampOp(spark, tableDir, None, stage, "CREATE")
-    }: Unit
+    VersionStore.commit(spark, tableDir, None)(_ =>
+      Snapshot(tableDir, 0L, Seq.empty, Some(schema), op = "CREATE")): Unit
   }
 
   /** Metadata-only ADD COLUMN — schema evolution with ZERO data
     * rewrite (the Delta/Iceberg `ALTER TABLE ADD COLUMN`): publish
-    * the next version with the SAME file manifest (every file rides
-    * by pointer — at 100 TB the DDL costs two small metadata writes)
-    * plus a declared-schema file appending the new nullable column.
+    * the next version with the SAME files (every file rides by
+    * pointer — at 100 TB the DDL costs one small record) and a
+    * declared schema appending the new nullable column.
     * Readers [[alignTo]] it: rows in files that physically predate
     * the DDL read as typed NULL; later DML ([[updateWhere]],
     * [[mergeInto]]) rewrites carry the column physically in just the
@@ -1039,11 +843,9 @@ object Scale {
                 name: String,
                 dataType: org.apache.spark.sql.types.DataType)
       : RewriteStats = withCommitRetry() {
-    import graft.tables.VersionStore
-    val (headV, baseFiles, declared, cons, renames, parts) =
-      resolveBase(spark, srcDir, tableDir)
-    val physical = readMerged(spark, baseFiles).schema
-    val current = declared.getOrElse(physical)
+    val (head, base) = baseOf(spark, srcDir, tableDir)
+    val physical = readMerged(spark, base.files).schema
+    val current = base.schema.getOrElse(physical)
     require(!current.fieldNames.contains(name),
       s"column $name already exists")
     // resurrection guard: a DROPPED column's bytes still live in
@@ -1056,19 +858,17 @@ object Scale {
     val next = org.apache.spark.sql.types.StructType(current.fields :+
       org.apache.spark.sql.types.StructField(name, dataType,
         nullable = true))
-    val id = headV.map(_ + 1).getOrElse(0L)
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      VersionStore.fsOf(spark, tableDir)
-        .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      VersionStore.writeManifest(spark, stage, baseFiles)
-      carryMeta(spark, stage, Some(next), cons, renames, parts)
-      stampOp(spark, tableDir, headV, stage, "ADD_COLUMN", name)
-      maintainStats(spark, tableDir,
-        headV.flatMap(statsOf(spark, tableDir, _)), stage, id, baseFiles,
-        Some(next), renames)
-    }
-    val n = graft.tables.Footers.rowCount(spark, baseFiles)
-    RewriteStats(baseFiles.size.toLong, 0L, n, n)
+    commitVersion(spark, tableDir, head, "ADD_COLUMN", name)(_ =>
+      base.copy(schema = Some(next)))
+    metadataOnly(spark, base)
+  }
+
+  /** What a metadata-only commit over `base` did: every file rides by
+    * pointer, the row count (from footers) is unchanged. */
+  private def metadataOnly(spark: SparkSession, base: Snapshot)
+      : RewriteStats = {
+    val n = Footers.rowCount(spark, base.files)
+    RewriteStats(base.files.size.toLong, 0L, n, n)
   }
 
   /** ADD a CHECK CONSTRAINT — metadata-only DDL like [[addColumn]]:
@@ -1080,32 +880,18 @@ object Scale {
   def addConstraint(spark: SparkSession, srcDir: String,
                     tableDir: String, name: String, condSql: String)
       : RewriteStats = withCommitRetry() {
-    import graft.tables.VersionStore
-    val (headV, baseFiles, schema, cons, renames, parts) =
-      resolveBase(spark, srcDir, tableDir)
-    require(!cons.exists(_._1 == name),
+    val (head, base) = baseOf(spark, srcDir, tableDir)
+    require(!base.constraints.exists(_._1 == name),
       s"constraint $name already exists")
-    val raw = readMerged(spark, baseFiles)
-    enforce(schema.map(alignTo(raw, _, renames)).getOrElse(raw),
+    enforce(aligned(base, readMerged(spark, base.files)),
       Seq(name -> condSql))
-    val id = headV.map(_ + 1).getOrElse(0L)
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      VersionStore.fsOf(spark, tableDir)
-        .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      VersionStore.writeManifest(spark, stage, baseFiles)
-      carryMeta(spark, stage, schema, cons :+ (name -> condSql),
-        renames, parts)
-      stampOp(spark, tableDir, headV, stage, "ADD_CONSTRAINT", name)
-      maintainStats(spark, tableDir,
-        headV.flatMap(statsOf(spark, tableDir, _)), stage, id, baseFiles,
-        schema, renames)
-    }
-    val n = graft.tables.Footers.rowCount(spark, baseFiles)
-    RewriteStats(baseFiles.size.toLong, 0L, n, n)
+    commitVersion(spark, tableDir, head, "ADD_CONSTRAINT", name)(_ =>
+      base.copy(constraints = base.constraints :+ (name -> condSql)))
+    metadataOnly(spark, base)
   }
 
   /** OPTIMIZE on the version chain — [[compact]] lifted to the
-    * manifest-pointer table: bin-pack the head's files SMALLER than
+    * pointer table: bin-pack the head's files SMALLER than
     * `targetMB` into ~target-sized rewrites (first-fit decreasing on
     * on-disk bytes, PARTITION-AWARE: bins never cross partition-tuple
     * groups, and a packed output inherits its group's tuple) and
@@ -1130,7 +916,7 @@ object Scale {
   /** `OPTIMIZE … ZORDER BY (x, y)` ON THE CHAIN (r11 verdict ask #5):
     * re-cluster the head on the Morton interleave of two columns and
     * publish the layout as ONE new version — [[compact]]'s Z-order
-    * lifted onto the manifest, so re-clustering no longer abandons
+    * lifted onto the record, so re-clustering no longer abandons
     * the chain's history/time-travel/metadata. PARTITION-AWARE like
     * the bin-packing arm: each partition-tuple group re-clusters
     * separately (its outputs inherit the tuple); within a group every
@@ -1146,16 +932,14 @@ object Scale {
                           tableDir: String, targetMB: Double,
                           zx: Column, zy: Column): CompactStats =
       withCommitRetry() {
-    import graft.tables.VersionStore
     val fs = VersionStore.fsOf(spark, tableDir)
-    val (headV, baseFiles, schema, cons, renames, parts) =
-      resolveBase(spark, srcDir, tableDir)
+    val (head, base) = baseOf(spark, srcDir, tableDir)
     val targetBytes = (targetMB * 1024 * 1024).toLong
-    val sized = baseFiles.map { f =>
-      f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen
+    val sized = base.files.map { f =>
+      f -> fs.getFileStatus(new Path(f)).getLen
     }
     val totalBytes = sized.map(_._2).sum
-    val grouped = sized.groupBy { case (f, _) => parts.get(f) }
+    val grouped = sized.groupBy { case (f, _) => base.partitions.get(f) }
       .toSeq.sortBy(_._1.map(_.toSeq.sorted.mkString(";"))
         .getOrElse(""))
     // serve the normalization bounds from the MAINTAINED stats when
@@ -1171,22 +955,19 @@ object Scale {
       Some(c.toString).filter(_.matches("[A-Za-z_][A-Za-z0-9_]*"))
     val statsMM: Option[(DataFrame, String, String)] = for {
       nx <- attrName(zx); ny <- attrName(zy)
-      v <- headV
-      st <- statsOf(spark, tableDir, v)
+      st <- head.flatMap(statsOf(spark, _))
       names = st.columns.toSet
       if Seq(nx, ny).forall(n => names(s"min_$n") && names(s"max_$n"))
     } yield (st, nx, ny)
-    val id = headV.map(_ + 1).getOrElse(0L)
-    val outParts =
-      scala.collection.mutable.Map.empty[String, Map[String, String]]
-    var written = Seq.empty[String]
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      written = grouped.zipWithIndex.flatMap { case ((tuple, fl), g) =>
+    val next = commitVersion(spark, tableDir, head, "OPTIMIZE_ZORDER") {
+        stage =>
+      val outParts =
+        scala.collection.mutable.Map.empty[String, Map[String, String]]
+      val written = grouped.zipWithIndex.flatMap { case ((tuple, fl), g) =>
         val n = math.max(1, math.ceil(
           fl.map(_._2).sum.toDouble / targetBytes).toInt)
-        val raw = readMerged(spark, fl.map(_._1))
-        val df = schema.map(alignTo(raw, _, renames)).getOrElse(raw)
+        val groupFiles = fl.map(_._1)
+        val df = aligned(base, readMerged(spark, groupFiles))
         // NORMALIZE each dimension onto the full 16-bit range before
         // interleaving (Delta z-orders on range-IDs for the same
         // reason): raw values of unequal width hand the curve's high
@@ -1195,7 +976,6 @@ object Scale {
         // from the maintained stats when available (`statsMM` above),
         // else one min/max agg per group; NULLs sort into one slice
         // (zval of NULL is NULL — ordered first, still a tight file).
-        val groupFiles = fl.map(_._1)
         val mm: org.apache.spark.sql.Row = statsMM.flatMap {
           case (st, nx, ny) =>
             import spark.implicits._
@@ -1228,35 +1008,28 @@ object Scale {
           .repartitionByRange(n, col("__z"))
           .sortWithinPartitions("__z")
           .drop("__z")
-        val names = stageParquet(clustered, fs, stage, s"__z_$g",
-          i => s"zopt-$id-$g-$i.parquet")
-        val finals = names.map(nm => s"$tableDir/v=$id/$nm")
+        val finals = stageParquet(clustered, fs, stage.path, s"__z_$g",
+          i => s"zopt-${stage.version}-$g-$i.parquet")
+          .map(nm => s"${stage.vdir}/$nm")
         tuple.foreach(kv => finals.foreach(f => outParts(f) = kv))
         finals
       }
-      VersionStore.writeManifest(spark, stage, written)
-      carryMeta(spark, stage, schema, cons, renames, outParts.toMap)
-      stampOp(spark, tableDir, headV, stage, "OPTIMIZE_ZORDER")
-      maintainStats(spark, tableDir,
-        headV.flatMap(statsOf(spark, tableDir, _)), stage, id,
-        Seq.empty, schema, renames)
+      base.copy(files = written, partitions = outParts.toMap)
     }
-    val afterBytes = written.map(f =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
-    CompactStats(baseFiles.size.toLong, totalBytes,
-      written.size.toLong, afterBytes)
+    val afterBytes = next.files.map(f =>
+      fs.getFileStatus(new Path(f)).getLen).sum
+    CompactStats(base.files.size.toLong, totalBytes,
+      next.files.size.toLong, afterBytes)
   }
 
   private def optimizeBinPack(spark: SparkSession, srcDir: String,
                               tableDir: String, targetMB: Double)
       : CompactStats = withCommitRetry() {
-    import graft.tables.VersionStore
     val fs = VersionStore.fsOf(spark, tableDir)
-    val (headV, baseFiles, schema, cons, renames, parts) =
-      resolveBase(spark, srcDir, tableDir)
+    val (head, base) = baseOf(spark, srcDir, tableDir)
     val targetBytes = (targetMB * 1024 * 1024).toLong
-    val sized = baseFiles.map { f =>
-      f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen
+    val sized = base.files.map { f =>
+      f -> fs.getFileStatus(new Path(f)).getLen
     }
     val (small, large) = sized.partition(_._2 < targetBytes)
     val totalBytes = sized.map(_._2).sum
@@ -1266,7 +1039,7 @@ object Scale {
     // group's tuple — OPTIMIZE no longer costs the table its
     // metadata-only DROP PARTITION / DML pre-pruning. First-fit
     // decreasing per group, bins bounded by targetBytes.
-    val grouped = small.groupBy { case (f, _) => parts.get(f) }
+    val grouped = small.groupBy { case (f, _) => base.partitions.get(f) }
     val bins = scala.collection.mutable.ArrayBuffer
       .empty[(scala.collection.mutable.ArrayBuffer[String], Long,
         Option[Map[String, String]])]
@@ -1287,45 +1060,34 @@ object Scale {
     // idempotence gate: publish only when packing actually shrinks the
     // layout — a head whose small files can't share bins (the state
     // every OPTIMIZE leaves behind) is already optimal, no-op
+    val filesBefore = base.files.size.toLong
     if (bins.size >= small.size)
-      CompactStats(baseFiles.size.toLong, totalBytes,
-        baseFiles.size.toLong, totalBytes)
+      CompactStats(filesBefore, totalBytes, filesBefore, totalBytes)
     else {
-      val id = headV.map(_ + 1).getOrElse(0L)
-      VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-        fs.mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-        bins.zipWithIndex.foreach { case ((group, _, _), g) =>
-          val raw = readMerged(spark, group.toSeq)
+      commitVersion(spark, tableDir, head, "OPTIMIZE") { stage =>
+        val packed = bins.zipWithIndex.map { case ((group, _, tuple), g) =>
           // the chain's full metadata applies: without the rename
           // mapping a compacted pre-rename file would NULL the
           // renamed column's values (r10 review fix)
-          val df = schema.map(alignTo(raw, _, renames)).getOrElse(raw)
-          writeSingleFile(df, fs, stage, s"opt-$id-$g.parquet")
+          val name = s"opt-${stage.version}-$g.parquet"
+          writeSingleFile(aligned(base, readMerged(spark, group.toSeq)),
+            fs, stage.path, name)
+          (s"${stage.vdir}/$name", tuple)
         }
-        val packed = bins.indices.map(g =>
-          s"$tableDir/v=$id/opt-$id-$g.parquet")
-        VersionStore.writeManifest(spark, stage,
-          large.map(_._1) ++ packed)
         val largeSet = large.map(_._1).toSet
-        val packedParts = bins.zipWithIndex.collect {
-          case ((_, _, Some(kv)), g) =>
-            s"$tableDir/v=$id/opt-$id-$g.parquet" -> kv
-        }
-        carryMeta(spark, stage, schema, cons, renames,
-          parts.filter { case (f, _) => largeSet(f) } ++ packedParts)
-        stampOp(spark, tableDir, headV, stage, "OPTIMIZE")
-        maintainStats(spark, tableDir,
-          headV.flatMap(statsOf(spark, tableDir, _)), stage, id,
-          large.map(_._1), schema, renames)
+        base.copy(files = large.map(_._1) ++ packed.map(_._1),
+          partitions = base.partitions.filter { case (f, _) =>
+            largeSet(f) } ++
+            packed.collect { case (f, Some(kv)) => f -> kv })
       }
-      CompactStats(baseFiles.size.toLong, totalBytes,
+      CompactStats(filesBefore, totalBytes,
         (large.size + bins.size).toLong, totalBytes)
     }
   }
 
   /** Metadata-only RENAME COLUMN — Delta's column-mapping move
     * without rewriting a byte: the declared schema swaps the name and
-    * the chain's mapping note records the OLD name as a physical
+    * the record's column mapping keeps the OLD name as a physical
     * alias, so readers coalesce `to` with `from` across mixed files
     * (pre-rename files wrote `from`, post-rename rewrites write
     * `to`; a row's file carries exactly one spelling). Constraints
@@ -1335,11 +1097,9 @@ object Scale {
   def renameColumn(spark: SparkSession, srcDir: String,
                    tableDir: String, from: String, to: String)
       : RewriteStats = withCommitRetry() {
-    import graft.tables.VersionStore
-    val (headV, baseFiles, declared, cons, renames, parts) =
-      resolveBase(spark, srcDir, tableDir)
-    val physical = readMerged(spark, baseFiles).schema
-    val current = declared.getOrElse(physical)
+    val (head, base) = baseOf(spark, srcDir, tableDir)
+    val physical = readMerged(spark, base.files).schema
+    val current = base.schema.getOrElse(physical)
     require(current.fieldNames.contains(from), s"no column $from")
     require(!current.fieldNames.contains(to),
       s"column $to already exists")
@@ -1348,34 +1108,24 @@ object Scale {
     require(!physical.fieldNames.contains(to),
       s"physical files still carry bytes named $to (a dropped " +
         "column?); OPTIMIZE first or pick a fresh name")
-    require(!cons.exists(_._2.contains(from)),
+    require(!base.constraints.exists(_._2.contains(from)),
       s"a CHECK constraint references $from; drop it first")
     val next = org.apache.spark.sql.types.StructType(current.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    val nextRenames = (renames - from) +
-      (to -> (from +: renames.getOrElse(from, Seq.empty)))
-    val id = headV.map(_ + 1).getOrElse(0L)
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      VersionStore.fsOf(spark, tableDir)
-        .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      VersionStore.writeManifest(spark, stage, baseFiles)
-      carryMeta(spark, stage, Some(next), cons, nextRenames,
-        parts.map { case (f, kv) => f -> kv.map { case (k, v2) =>
-          (if (k == from) to else k) -> v2 } })
-      stampOp(spark, tableDir, headV, stage, "RENAME_COLUMN",
-        s"$from>$to")
-      // the stats frame is keyed by LOGICAL column name: carry it
-      // through the rename so predicates on the NEW name keep pruning
-      // (the pre-fix behavior left the old key stale — sound but blind)
-      val renamedStats = headV.flatMap(statsOf(spark, tableDir, _))
-        .map(_.withColumnRenamed(s"min_$from", s"min_$to")
+    // the stats frame is keyed by LOGICAL column name: carry it
+    // through the rename so predicates on the NEW name keep pruning
+    // (the pre-fix behavior left the old key stale — sound but blind)
+    commitVersion(spark, tableDir, head, "RENAME_COLUMN", s"$from>$to",
+        carry = _.withColumnRenamed(s"min_$from", s"min_$to")
           .withColumnRenamed(s"max_$from", s"max_$to")
-          .withColumnRenamed(s"nc_$from", s"nc_$to"))
-      maintainStats(spark, tableDir, renamedStats, stage, id, baseFiles,
-        Some(next), nextRenames)
-    }
-    val n = graft.tables.Footers.rowCount(spark, baseFiles)
-    RewriteStats(baseFiles.size.toLong, 0L, n, n)
+          .withColumnRenamed(s"nc_$from", s"nc_$to"))(_ =>
+      base.copy(schema = Some(next),
+        renames = (base.renames - from) +
+          (to -> (from +: base.renames.getOrElse(from, Seq.empty))),
+        partitions = base.partitions.map { case (f, kv) =>
+          f -> kv.map { case (k, v2) => (if (k == from) to else k) -> v2 }
+        }))
+    metadataOnly(spark, base)
   }
 
   /** Metadata-only DROP COLUMN: the declared schema loses the field —
@@ -1386,92 +1136,57 @@ object Scale {
   def dropColumn(spark: SparkSession, srcDir: String,
                  tableDir: String, name: String): RewriteStats =
       withCommitRetry() {
-    import graft.tables.VersionStore
-    val (headV, baseFiles, declared, cons, renames, parts) =
-      resolveBase(spark, srcDir, tableDir)
-    val current = declared.getOrElse(
-      readMerged(spark, baseFiles).schema)
+    val (head, base) = baseOf(spark, srcDir, tableDir)
+    val current = base.schema.getOrElse(
+      readMerged(spark, base.files).schema)
     require(current.fieldNames.contains(name), s"no column $name")
     require(current.fields.length > 1, "cannot drop the last column")
-    require(!cons.exists(_._2.contains(name)),
+    require(!base.constraints.exists(_._2.contains(name)),
       s"a CHECK constraint references $name; drop it first")
-    val next = org.apache.spark.sql.types.StructType(
-      current.filterNot(_.name == name))
-    val id = headV.map(_ + 1).getOrElse(0L)
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      VersionStore.fsOf(spark, tableDir)
-        .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      VersionStore.writeManifest(spark, stage, baseFiles)
-      carryMeta(spark, stage, Some(next), cons, renames - name,
-        parts.map { case (f, kv) => f -> (kv - name) }
-          .filter(_._2.nonEmpty))
-      stampOp(spark, tableDir, headV, stage, "DROP_COLUMN", name)
-      val shed = headV.flatMap(statsOf(spark, tableDir, _)).map { ps =>
-        val gone = Set(s"min_$name", s"max_$name", s"nc_$name")
-        ps.select(ps.columns.filterNot(gone).map(col).toIndexedSeq: _*)
-      }
-      maintainStats(spark, tableDir, shed, stage, id, baseFiles,
-        Some(next), renames - name)
-    }
-    val n = graft.tables.Footers.rowCount(spark, baseFiles)
-    RewriteStats(baseFiles.size.toLong, 0L, n, n)
+    val gone = Set(s"min_$name", s"max_$name", s"nc_$name")
+    commitVersion(spark, tableDir, head, "DROP_COLUMN", name,
+        carry = ps => ps.select(
+          ps.columns.filterNot(gone).map(col).toIndexedSeq: _*))(_ =>
+      base.copy(
+        schema = Some(org.apache.spark.sql.types.StructType(
+          current.filterNot(_.name == name))),
+        renames = base.renames - name,
+        partitions = base.partitions.map { case (f, kv) => f -> (kv - name) }
+          .filter(_._2.nonEmpty)))
+    metadataOnly(spark, base)
   }
 
   /** RESTORE — roll the chain's head back to the state of committed
     * version `v`, published as a NEW version (Delta RESTORE): the
-    * restore's manifest/schema/constraints/mapping are `v`'s, so the
-    * un-restored versions stay time-travelable and the op log keeps
-    * the full story; zero data movement — pointers all the way. */
+    * restore's record is `v`'s, so the un-restored versions stay
+    * time-travelable and the op log keeps the full story; zero data
+    * movement — pointers all the way. */
   def restoreTable(spark: SparkSession, tableDir: String, v: Long)
       : RewriteStats = withCommitRetry() {
-    import graft.tables.VersionStore
-    val head = VersionStore.head(spark, tableDir)
-    require(head.nonEmpty, s"no committed versions under $tableDir")
-    require(VersionStore.committed(spark, tableDir).contains(v),
-      s"version $v not committed under $tableDir")
-    val files = VersionStore.manifest(spark, tableDir, v)
-    VersionStore.publishExclusive(spark, tableDir, head.get + 1) {
-      stage =>
-        VersionStore.fsOf(spark, tableDir)
-          .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-        VersionStore.writeManifest(spark, stage, files)
-        carryMeta(spark, stage,
-          VersionStore.schemaOf(spark, tableDir, v),
-          VersionStore.constraintsOf(spark, tableDir, v),
-          VersionStore.renamesOf(spark, tableDir, v),
-          VersionStore.partitionsOf(spark, tableDir, v))
-        stampOp(spark, tableDir, head, stage, "RESTORE", s"v=$v")
-        maintainStats(spark, tableDir, statsOf(spark, tableDir, v),
-          stage, head.get + 1, files,
-          VersionStore.schemaOf(spark, tableDir, v),
-          VersionStore.renamesOf(spark, tableDir, v))
-    }
-    val n = graft.tables.Footers.rowCount(spark, files)
-    RewriteStats(files.size.toLong, 0L, n, n)
+    val head = VersionStore.snapshot(spark, tableDir)
+    val target = VersionStore.snapshot(spark, tableDir, Some(v))
+    commitVersion(spark, tableDir, Some(head), "RESTORE", s"v=$v",
+      statsFrom = Some(target))(_ => target)
+    metadataOnly(spark, target)
   }
 
   /** DESCRIBE HISTORY: one row per committed version — (version, the
     * operation that produced it, its detail, WHEN it committed) —
-    * read from the chain's per-version op notes. `when` comes from
-    * the monotonic commit stamp ([[stampOp]]; NULL only for versions
-    * published before timestamps existed or outside the stamped DML
-    * paths). The frame is version-count-sized metadata; no data file
-    * is ever opened. */
+    * read from the chain's commit records. `when` is the monotonic
+    * commit stamp ([[VersionStore.commit]]; NULL only for versions
+    * written by a plain publish, which carry no record). The frame is
+    * version-count-sized metadata; no data file is ever opened. */
   def history(spark: SparkSession, tableDir: String): DataFrame = {
-    import graft.tables.VersionStore
     import spark.implicits._
-    VersionStore.committed(spark, tableDir).sorted
-      .map { v =>
-        val (op, detail, ts) = VersionStore.opNoteOf(spark, tableDir, v)
-          .getOrElse(("UNKNOWN", "", None))
-        (v, op, detail,
-          ts.map(new java.sql.Timestamp(_)).orNull)
-      }.toDF("version", "op", "detail", "when")
+    VersionStore.snapshots(spark, tableDir).map { s =>
+      (s.version, if (s.op.isEmpty) "UNKNOWN" else s.op, s.detail,
+        s.ts.map(new java.sql.Timestamp(_)).orNull)
+    }.toDF("version", "op", "detail", "when")
   }
 
   /** SHALLOW CLONE — a zero-copy fork of a chain (Delta's CLONE): the
-    * clone's v=0 manifest points at the SOURCE head's files, schema
-    * and constraints carry over, and from then on the two chains
+    * clone's v=0 record points at the SOURCE head's files and carries
+    * its metadata, and from then on the two chains
     * diverge independently — a clone's DML rewrites only its own hit
     * files (everything else still rides on the source's data). The
     * experimentation primitive at 100 TB: fork the production table
@@ -1482,37 +1197,23 @@ object Scale {
     * root) must keep what live clones still point at. */
   def cloneTable(spark: SparkSession, srcTableDir: String,
                  destTableDir: String): RewriteStats = {
-    import graft.tables.VersionStore
-    val headV = VersionStore.head(spark, srcTableDir)
-    require(headV.nonEmpty, s"nothing to clone under $srcTableDir")
-    val files = VersionStore.manifest(spark, srcTableDir, headV.get)
-    val schema = VersionStore.schemaOf(spark, srcTableDir, headV.get)
-    val cons = VersionStore.constraintsOf(spark, srcTableDir, headV.get)
-    val renames = VersionStore.renamesOf(spark, srcTableDir, headV.get)
-    val parts = VersionStore.partitionsOf(spark, srcTableDir, headV.get)
-    VersionStore.publishExclusive(spark, destTableDir, 0L) { stage =>
-      VersionStore.fsOf(spark, destTableDir)
-        .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      VersionStore.writeManifest(spark, stage, files)
-      carryMeta(spark, stage, schema, cons, renames, parts)
-      stampOp(spark, destTableDir, None, stage, "CLONE", srcTableDir)
-      maintainStats(spark, destTableDir,
-        statsOf(spark, srcTableDir, headV.get), stage, 0L, files,
-        schema, renames)
-    }
-    val n = graft.tables.Footers.rowCount(spark, files)
-    RewriteStats(files.size.toLong, 0L, n, n)
+    val src = VersionStore.latest(spark, srcTableDir).getOrElse(
+      throw new IllegalArgumentException(
+        s"nothing to clone under $srcTableDir"))
+    commitVersion(spark, destTableDir, None, "CLONE", srcTableDir,
+      statsFrom = Some(src))(_ => src)
+    metadataOnly(spark, src)
   }
 
-  /** CHANGE DATA FEED over a COW chain — the manifest-diff form: the
+  /** CHANGE DATA FEED over a COW chain — the record-diff form: the
     * row-level delta between two committed versions of a
     * [[deleteWhere]]/[[updateWhere]] table, computed by reading ONLY
-    * the files the two manifests DISAGREE on. Files shared by both
-    * manifests (the untouched pointers — the overwhelming majority of
+    * the files the two records DISAGREE on. Files shared by both
+    * records (the untouched pointers — the overwhelming majority of
     * a 100 TB table after a targeted DML) are never opened: a shared
     * file contributes identical rows to both sides and cancels by
     * definition, so the I/O bound is the changed data, not the table.
-    * This is what makes CDF on a pointer-manifest format cheap where
+    * This is what makes CDF on a pointer table cheap where
     * the snapshot-join form ([[graft.streaming.Streams.cdcChanges]],
     * right for full-snapshot chains) would re-read everything.
     *
@@ -1522,26 +1223,20 @@ object Scale {
     * cancels (bag semantics via exceptAll — duplicate-safe). */
   def tableChanges(spark: SparkSession, tableDir: String,
                    from: Long, to: Long): DataFrame = {
-    import graft.tables.VersionStore
     require(from < to, s"need from < to, got $from >= $to")
-    val fFrom = VersionStore.manifest(spark, tableDir, from)
+    val snapTo = VersionStore.snapshot(spark, tableDir, Some(to))
+    val fFrom = VersionStore.snapshot(spark, tableDir, Some(from)).files
       .map(f => normalize(f) -> f).toMap
-    val fTo = VersionStore.manifest(spark, tableDir, to)
-      .map(f => normalize(f) -> f).toMap
+    val fTo = snapTo.files.map(f => normalize(f) -> f).toMap
     val removed = (fFrom.keySet -- fTo.keySet).toSeq.map(fFrom)
     val added = (fTo.keySet -- fFrom.keySet).toSeq.map(fTo)
     // both sides align to `to`'s declared schema so a diff spanning a
     // metadata-only ADD COLUMN stays union-compatible (pre-DDL rows
     // carry typed NULLs)
-    val toSchema = VersionStore.schemaOf(spark, tableDir, to)
-    val toRenames = VersionStore.renamesOf(spark, tableDir, to)
-    val empty = alignedRead(spark, tableDir, to).limit(0)
+    val empty = readSnapshot(spark, snapTo).limit(0)
     def readOr(files: Seq[String]) =
       if (files.isEmpty) empty
-      else {
-        val raw = readMerged(spark, files)
-        toSchema.map(alignTo(raw, _, toRenames)).getOrElse(raw)
-      }
+      else aligned(snapTo, readMerged(spark, files))
     val rem = readOr(removed)
     val add = readOr(added)
     rem.exceptAll(add).withColumn("op", lit("D"))
@@ -1563,7 +1258,6 @@ object Scale {
     * versions spooled this call. */
   def spoolChanges(spark: SparkSession, tableDir: String,
                    spoolDir: String): Seq[Long] = {
-    import graft.tables.VersionStore
     val fs = VersionStore.fsOf(spark, spoolDir)
     fs.mkdirs(new org.apache.hadoop.fs.Path(spoolDir)): Unit
     val vs = VersionStore.committed(spark, tableDir).sorted
@@ -1630,12 +1324,8 @@ object Scale {
     * point of a change feed. */
   def readChangesStream(spark: SparkSession, tableDir: String,
                         spoolDir: String): DataFrame = {
-    import graft.tables.VersionStore
     spoolChanges(spark, tableDir, spoolDir): Unit
-    val head = VersionStore.head(spark, tableDir)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed versions under $tableDir"))
-    val schema = alignedRead(spark, tableDir, head).schema
+    val schema = readTable(spark, tableDir).schema
       .add("op", org.apache.spark.sql.types.StringType)
       .add("version", org.apache.spark.sql.types.LongType)
     spark.readStream.schema(schema).parquet(spoolDir)
@@ -1652,9 +1342,8 @@ object Scale {
     * the pruned ids. */
   def vacuumHours(spark: SparkSession, tableDir: String,
                   hours: Double): Seq[Long] = {
-    import graft.tables.VersionStore
-    val vs = VersionStore.committed(spark, tableDir).sorted
-    require(vs.nonEmpty, s"no committed versions under $tableDir")
+    val stamped = VersionStore.stamps(spark, tableDir)
+    require(stamped.nonEmpty, s"no committed versions under $tableDir")
     val cutoff =
       System.currentTimeMillis() - (hours * 3600 * 1000).toLong
     // prune exactly the maximal OLDEST-first run of versions PROVABLY
@@ -1663,11 +1352,9 @@ object Scale {
     // that suffix while pruning the very versions the pledge protects
     // (r12 review: an unstamped v0 under stamped out-of-window
     // successors must stop pruning at zero, not shift it upward)
-    val pruneable = vs.takeWhile(v =>
-      VersionStore.commitTsOf(spark, tableDir, v).exists(_ <= cutoff))
-      .size
+    val pruneable = stamped.takeWhile(_._2.exists(_ <= cutoff)).size
     VersionStore.retain(spark, tableDir,
-      math.max(1, vs.size - pruneable))
+      math.max(1, stamped.size - pruneable))
   }
 
   // ---- File-skipping: per-file stats index + pruned read ----------
@@ -1851,19 +1538,6 @@ object Scale {
         .map(_.getString(0)).toSeq)
   }
 
-  /** The files a DML with predicate `condSql` must SCAN for hit
-    * detection: exactly [[filesPrunedAt]]'s metadata pruning on the
-    * head (partition-map survivors ∩ stats survivors, both sound) —
-    * everything else provably holds no matching row and rides
-    * straight into the next manifest by pointer. A chainless base
-    * (first DML over a raw dir) has no metadata to prune with. */
-  private def dmlCandidates(spark: SparkSession, tableDir: String,
-      headV: Option[Long], baseFiles: Seq[String], condSql: String)
-      : Seq[String] = headV match {
-    case Some(v) => filesPrunedAt(spark, tableDir, v, condSql)._1
-    case None => baseFiles
-  }
-
   /** Read `dir` with FILE-LEVEL pruning: evaluate [[mayContain]] on
     * the (file-count-sized) stats frame, open only the surviving
     * files, and apply `condSql` as the usual row filter.
@@ -1901,14 +1575,17 @@ object Scale {
 
   /** The data-skipping stats of committed version `v`, if the chain
     * has been ANALYZEd ([[analyzeTable]]) — a file-count-sized frame
-    * keyed by MANIFEST path. */
+    * keyed by the record's file paths. */
   def statsOf(spark: SparkSession, tableDir: String, v: Long)
       : Option[DataFrame] = {
-    import graft.tables.VersionStore
-    val p = new org.apache.hadoop.fs.Path(statsDir(s"$tableDir/v=$v"))
+    val p = new Path(statsDir(s"$tableDir/v=$v"))
     if (!VersionStore.fsOf(spark, tableDir).exists(p)) None
     else Some(spark.read.parquet(p.toString))
   }
+
+  private def statsOf(spark: SparkSession, snap: Snapshot)
+      : Option[DataFrame] =
+    statsOf(spark, snap.dir, snap.version)
 
   private def writeStats(spark: SparkSession, vdirOrStage: String,
                          stats: DataFrame): Unit =
@@ -1942,87 +1619,73 @@ object Scale {
     aligned.groupBy("__f").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** ANALYZE: publish the next version (manifest unchanged — every
-    * file rides by pointer) carrying a per-file min/max stats frame
+  /** ANALYZE: publish the next version (same files — every file
+    * rides by pointer) carrying a per-file min/max stats frame
     * for `cols`, computed in ONE pass. From then on every DML
     * maintains the stats INCREMENTALLY: untouched pointers keep
     * their rows verbatim, only the files a publish actually writes
     * are re-profiled (hit-file-sized, the Delta "stats in the
     * manifest" upkeep). [[readTablePruned]] serves range predicates
     * off the maintained frame. Works on a fresh directory too — the
-    * first ANALYZE converts `srcDir` into a v=0 pointer manifest. */
+    * first ANALYZE converts `srcDir` into a v=0 pointer version. */
   def analyzeTable(spark: SparkSession, srcDir: String,
                    tableDir: String, cols: Seq[String]): RewriteStats =
       withCommitRetry() {
-    import graft.tables.VersionStore
-    val (headV, baseFiles, schema, cons, renames, parts) =
-      resolveBase(spark, srcDir, tableDir)
+    val (head, base) = baseOf(spark, srcDir, tableDir)
     // profile only columns the chain's READERS serve: declared schema
     // when one exists, else the physical footer union — a typo'd or
     // dropped column fails HERE with a named error, not as NULL stats
     // that would prune every file as provably-empty (r10 advice)
-    val servable = schema.map(_.fieldNames.toSet).getOrElse(
-      readMerged(spark, baseFiles).schema.fieldNames.toSet)
+    val servable = base.schema.map(_.fieldNames.toSet).getOrElse(
+      readMerged(spark, base.files).schema.fieldNames.toSet)
     val unknown = cols.filterNot(servable)
     require(unknown.isEmpty,
       s"ANALYZE of column(s) ${unknown.mkString(", ")} the table does " +
         s"not serve (declared: ${servable.toSeq.sorted.mkString(", ")})")
-    val stats = graft.core.Pin(fileStatsFor(spark, baseFiles, cols,
-      identity, schema, renames))
-    val id = headV.map(_ + 1).getOrElse(0L)
-    try VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      VersionStore.fsOf(spark, tableDir)
-        .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      VersionStore.writeManifest(spark, stage, baseFiles)
-      carryMeta(spark, stage, schema, cons, renames, parts)
-      stampOp(spark, tableDir, headV, stage, "ANALYZE",
-        cols.mkString(","))
-      writeStats(spark, stage, stats.df)
+    val stats = graft.core.Pin(fileStatsFor(spark, base.files, cols,
+      identity, base.schema, base.renames))
+    try VersionStore.commit(spark, tableDir, head) { stage =>
+      writeStats(spark, stage.path, stats.df)
+      base.copy(op = "ANALYZE", detail = cols.mkString(","))
     } finally stats.close()
-    val n = graft.tables.Footers.rowCount(spark, baseFiles)
-    RewriteStats(baseFiles.size.toLong, 0L, n, n)
+    metadataOnly(spark, base)
   }
 
-  /** Incremental stats upkeep for a data-writing publish: carry the
-    * parent's rows for surviving pointer files, re-profile ONLY the
-    * freshly written ones (read from the staging dir, keyed by their
-    * final `v=<id>` path, aligned to the version's declared schema
-    * like every reader). A stats column no longer served (DROPPED
-    * since the ANALYZE) drops from the WHOLE frame — a NULL-stats row
-    * would read as "provably empty" to the 3VL prune, which is only
-    * sound for genuinely all-null files. The carried-pointer filter
-    * is a left-semi JOIN against the untouched-path frame, never one
-    * giant `isin` In-list — at 100 TB file counts the In-expression
-    * blows up plan size, driver memory and codegen (r10 advice). */
-  private def maintainStats(spark: SparkSession, tableDir: String,
-                            parentStats: Option[DataFrame], stage: String,
-                            id: Long, untouched: Seq[String],
-                            schema: Option[org.apache.spark.sql.types.StructType] = None,
-                            renames: Map[String, Seq[String]] = Map.empty)
+  /** Incremental stats upkeep for a data-writing commit: carry the
+    * parent's rows for the files `next` still points at, re-profile
+    * ONLY the freshly written ones (read from the staging dir, keyed
+    * by their final `v=<id>` path, aligned to the version's declared
+    * schema like every reader). A stats column no longer served
+    * (DROPPED since the ANALYZE) drops from the WHOLE frame — a
+    * NULL-stats row would read as "provably empty" to the 3VL prune,
+    * which is only sound for genuinely all-null files. The
+    * carried-pointer filter is a left-semi JOIN against the record's
+    * path frame, never one giant `isin` In-list — at 100 TB file
+    * counts the In-expression blows up plan size, driver memory and
+    * codegen (r10 advice). */
+  private def maintainStats(spark: SparkSession,
+                            parentStats: Option[DataFrame],
+                            stage: VersionStore.Stage, next: Snapshot)
       : Unit =
     parentStats.foreach { ps =>
-      import graft.tables.VersionStore
       import spark.implicits._
-      val fs = VersionStore.fsOf(spark, tableDir)
-      val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).toSeq
-      val carried = ps.join(untouched.toDF("__f"), Seq("__f"),
+      val staged = parquetIn(VersionStore.fsOf(spark, stage.path),
+        stage.path)
+      val carried = ps.join(next.files.toDF("__f"), Seq("__f"),
         "left_semi")
       val all: Option[DataFrame] =
         if (staged.isEmpty) Some(carried)
         else {
           val cols = ps.columns.filter(_.startsWith("min_"))
             .map(_.stripPrefix("min_")).toSeq
-          val servable = schema.map(_.fieldNames.toSet).getOrElse(
+          val servable = next.schema.map(_.fieldNames.toSet).getOrElse(
             readMerged(spark, staged).schema.fieldNames.toSet)
           val usable = cols.filter(servable)
           if (usable.isEmpty) None
           else {
-            val fresh = fileStatsFor(spark, staged, usable, f =>
-              s"$tableDir/v=$id/" +
-                new org.apache.hadoop.fs.Path(f).getName,
-              schema, renames)
+            val fresh = fileStatsFor(spark, staged, usable,
+              f => s"${stage.vdir}/${new Path(f).getName}",
+              next.schema, next.renames)
             val have = ps.columns.toSet
             val keep = ("__f" +: usable.flatMap(c =>
               Seq(s"min_$c", s"max_$c", s"nc_$c")) :+ "cnt")
@@ -2032,29 +1695,25 @@ object Scale {
           }
         }
       all.foreach(a => scala.util.Using.resource(graft.core.Pin(a))(p =>
-        writeStats(spark, stage, p.df)))
+        writeStats(spark, stage.path, p.df)))
     }
 
-  /** The manifest files of committed version `v` that MAY hold a row
-    * matching `condSql`, decided from version metadata alone
-    * (maintained stats + partition tuples — never a data file open):
-    * the shared pruning core of [[readTablePruned]], the DML
-    * candidate pre-filter, and the SQL scan's pushdown. */
-  def filesPrunedAt(spark: SparkSession, tableDir: String, v: Long,
-                    condSql: String): (Seq[String], PruneStats) = {
-    import graft.tables.VersionStore
-    val files = VersionStore.manifest(spark, tableDir, v)
-    val fromStats: Option[Set[String]] = statsOf(spark, tableDir, v)
+  /** The files of `snap` that MAY hold a row matching `condSql`,
+    * decided from version metadata alone (maintained stats + partition
+    * tuples — never a data file open): the shared pruning core of
+    * [[readTablePruned]], the DML candidate pre-filter, and the SQL
+    * scan's pushdown. */
+  def filesPruned(spark: SparkSession, snap: Snapshot,
+                  condSql: String): (Seq[String], PruneStats) = {
+    val files = snap.files
+    val fromStats: Option[Set[String]] = statsOf(spark, snap)
       .flatMap(st => statsSurvivors(spark, st, condSql).map(_.toSet))
-    val parts = VersionStore.partitionsOf(spark, tableDir, v)
     val fromParts: Option[Set[String]] =
-      if (parts.isEmpty) None
+      if (snap.partitions.isEmpty) None
       else {
-        val types = VersionStore.schemaOf(spark, tableDir, v)
-          .map(_.fields.map(f => f.name -> f.dataType).toMap)
-          .getOrElse(readMerged(spark, files).schema.fields
-            .map(f => f.name -> f.dataType).toMap)
-        Some(partitionSurvivors(spark, files, parts, types,
+        val types = snap.schema.getOrElse(readMerged(spark, files).schema)
+          .fields.map(f => f.name -> f.dataType).toMap
+        Some(partitionSurvivors(spark, files, snap.partitions, types,
           condSql).toSet)
       }
     val keep = files.filter(f =>
@@ -2062,29 +1721,22 @@ object Scale {
     (keep, PruneStats(files.size.toLong, keep.size.toLong))
   }
 
-  /** Read version `v` of the chain with file-level pruning for
-    * `condSql`, WITHOUT applying the row filter (for callers that
-    * re-apply it themselves — the SQL scan does): surviving files,
-    * schema-aligned; empty survivors read as the empty aligned
-    * frame. */
-  def readVersionPruned(spark: SparkSession, tableDir: String, v: Long,
-                        condSql: String): (DataFrame, PruneStats) = {
-    import graft.tables.VersionStore
-    val (keep, ps) = filesPrunedAt(spark, tableDir, v, condSql)
+  /** `snap` read with file-level pruning for `condSql`, WITHOUT
+    * applying the row filter (for callers that re-apply it themselves
+    * — the SQL scan does): surviving files, schema-aligned; empty
+    * survivors read as the empty aligned frame. */
+  def readSnapshotPruned(spark: SparkSession, snap: Snapshot,
+                         condSql: String): (DataFrame, PruneStats) = {
+    val (keep, ps) = filesPruned(spark, snap, condSql)
     val out =
-      if (keep.isEmpty) alignedRead(spark, tableDir, v).limit(0)
-      else {
-        val raw = readMerged(spark, keep)
-        // align to the FULL version's schema even when none is
-        // declared: a pruned SUBSET of heterogeneous files can carry
-        // fewer columns than the whole manifest, and a caller that
-        // advertised the full shape (the SQL scan) would misbind
-        // rows (r11 review)
-        val target = VersionStore.schemaOf(spark, tableDir, v)
-          .getOrElse(alignedRead(spark, tableDir, v).schema)
-        alignTo(raw, target,
-          VersionStore.renamesOf(spark, tableDir, v))
-      }
+      if (keep.isEmpty) readSnapshot(spark, snap).limit(0)
+      // align to the FULL version's schema even when none is declared:
+      // a pruned SUBSET of heterogeneous files can carry fewer columns
+      // than the whole version, and a caller that advertised the full
+      // shape (the SQL scan) would misbind rows (r11 review)
+      else alignTo(readMerged(spark, keep),
+        snap.schema.getOrElse(readSnapshot(spark, snap).schema),
+        snap.renames)
     (out, ps)
   }
 
@@ -2096,34 +1748,19 @@ object Scale {
     * predicate) degrades to the full aligned read. */
   def readTablePruned(spark: SparkSession, tableDir: String,
                       condSql: String): (DataFrame, PruneStats) = {
-    import graft.tables.VersionStore
-    val vs = VersionStore.committed(spark, tableDir)
-    require(vs.nonEmpty, s"no committed versions under $tableDir")
-    val v = vs.max
-    val files = VersionStore.manifest(spark, tableDir, v)
-    val (keep, _) = filesPrunedAt(spark, tableDir, v, condSql)
-    val out =
-      if (keep.isEmpty)
-        alignedRead(spark, tableDir, v).limit(0).where(expr(condSql))
-      else {
-        val raw = readMerged(spark, keep)
-        val target = VersionStore.schemaOf(spark, tableDir, v)
-          .getOrElse(alignedRead(spark, tableDir, v).schema)
-        alignTo(raw, target,
-          VersionStore.renamesOf(spark, tableDir, v))
-          .where(expr(condSql))
-      }
-    (out, PruneStats(files.size.toLong, keep.size.toLong))
+    val (out, ps) = readSnapshotPruned(spark,
+      VersionStore.snapshot(spark, tableDir), condSql)
+    (out.where(expr(condSql)), ps)
   }
 
-  // ---- Partition-valued manifests (r10 verdict ask #5) ------------
+  // ---- Partition-valued records (r10 verdict ask #5) --------------
 
   /** REGISTER partition values on the chain: verify, in ONE
     * distributed profiling pass, that every `cols` column is
-    * FILE-CONSTANT and non-null per manifest file (min == max, zero
+    * FILE-CONSTANT and non-null per file (min == max, zero
     * nulls — empty files are skipped: they constrain nothing), then
     * publish the next version carrying a per-file partition tuple in
-    * the manifest metadata. This is the manifest-level form of a
+    * its record. This is the record-level form of a
     * hive `date=…/source=…` layout: once recorded, (a)
     * [[readTablePruned]] and SQL-text DML hit detection prune files
     * by tuple BEFORE opening anything, and (b) [[deletePartition]]
@@ -2138,11 +1775,9 @@ object Scale {
   def registerPartitions(spark: SparkSession, srcDir: String,
                          tableDir: String, cols: Seq[String])
       : RewriteStats = withCommitRetry() {
-    import graft.tables.VersionStore
-    val (headV, baseFiles, schema, cons, renames, parts0) =
-      resolveBase(spark, srcDir, tableDir)
-    val prof = fileStatsFor(spark, baseFiles, cols, identity,
-      schema, renames).collect()
+    val (head, base) = baseOf(spark, srcDir, tableDir)
+    val prof = fileStatsFor(spark, base.files, cols, identity,
+      base.schema, base.renames).collect()
     val fresh = prof.map { r =>
       val f = r.getAs[String]("__f")
       val kv = cols.map { c =>
@@ -2159,33 +1794,22 @@ object Scale {
     }.toMap
     // merge with any existing tuples (re-register after OPTIMIZE, or
     // register a second column set): fresh wins per file+column
-    val merged = (parts0.keySet ++ fresh.keySet).map { f =>
-      f -> (parts0.getOrElse(f, Map.empty) ++ fresh.getOrElse(f, Map.empty))
+    val merged = (base.partitions.keySet ++ fresh.keySet).map { f =>
+      f -> (base.partitions.getOrElse(f, Map.empty) ++
+        fresh.getOrElse(f, Map.empty))
     }.toMap
-    val id = headV.map(_ + 1).getOrElse(0L)
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      VersionStore.fsOf(spark, tableDir)
-        .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      VersionStore.writeManifest(spark, stage, baseFiles)
-      carryMeta(spark, stage, schema, cons, renames, merged)
-      stampOp(spark, tableDir, headV, stage, "REGISTER_PARTITIONS",
-        cols.mkString(","))
-      maintainStats(spark, tableDir,
-        headV.flatMap(statsOf(spark, tableDir, _)), stage, id, baseFiles,
-        schema, renames)
-    }
-    val n = graft.tables.Footers.rowCount(spark, baseFiles)
-    RewriteStats(baseFiles.size.toLong, 0L, n, n,
-      baseFiles.size.toLong)
+    commitVersion(spark, tableDir, head, "REGISTER_PARTITIONS",
+      cols.mkString(","))(_ => base.copy(partitions = merged))
+    metadataOnly(spark, base).copy(filesScanned = base.files.size.toLong)
   }
 
   /** METADATA-ONLY partition drop — `DELETE WHERE partCol = value`
-    * when the partition map PROVES file granularity: files whose
-    * recorded tuple equals `value` leave the manifest wholesale
+    * when the partition tuples PROVE file granularity: files whose
+    * recorded tuple equals `value` leave the record wholesale
     * (every row matches — [[registerPartitions]] verified the column
     * file-constant), every other file must prove NON-match by tuple.
-    * Zero data files are opened or written: the DML is two metadata
-    * writes at ANY table size, exactly a hive `DROP PARTITION`.
+    * Zero data files are opened or written: the DML is one
+    * metadata commit at ANY table size, exactly a hive `DROP PARTITION`.
     * Files without a recorded `partCol` value make the proof
     * impossible — the call refuses and names them (fall back to the
     * scanning [[deleteWhere]]). `value` is compared in the stored
@@ -2193,38 +1817,25 @@ object Scale {
   def deletePartition(spark: SparkSession, tableDir: String,
                       partCol: String, value: String): RewriteStats =
       withCommitRetry() {
-    import graft.tables.VersionStore
-    val (headV, baseFiles, schema, cons, renames, parts) =
-      resolveBase(spark, tableDir, tableDir)
-    require(headV.nonEmpty, s"no committed versions under $tableDir")
-    val unproven = baseFiles.filterNot(f =>
-      parts.get(f).exists(_.contains(partCol)))
+    val head = VersionStore.snapshot(spark, tableDir)
+    val unproven = head.files.filterNot(f =>
+      head.partitions.get(f).exists(_.contains(partCol)))
     require(unproven.isEmpty,
       s"deletePartition($partCol) needs every file tupled; " +
         s"${unproven.size} file(s) lack a value (e.g. " +
         s"${unproven.take(3).mkString(", ")}) — registerPartitions " +
         "again or use deleteWhere")
-    val (dropped, kept) = baseFiles.partition(f =>
-      parts(f)(partCol) == value)
+    val (dropped, kept) = head.files.partition(f =>
+      head.partitions(f)(partCol) == value)
     // footer-sum accounting — metadata only, zero Spark jobs
-    val footers = graft.tables.Footers.read(spark, baseFiles)
-    val rowsBefore = baseFiles.iterator.map(footers(_).rows).sum
+    val footers = Footers.read(spark, head.files)
+    val rowsBefore = head.files.iterator.map(footers(_).rows).sum
     val rowsDropped = dropped.iterator.map(footers(_).rows).sum
-    val id = headV.get + 1
-    VersionStore.publishExclusive(spark, tableDir, id) { stage =>
-      VersionStore.fsOf(spark, tableDir)
-        .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-      VersionStore.writeManifest(spark, stage, kept)
-      val keptSet = kept.toSet
-      carryMeta(spark, stage, schema, cons, renames,
-        parts.filter { case (f, _) => keptSet(f) })
-      stampOp(spark, tableDir, headV, stage, "DELETE_PARTITION",
-        s"$partCol=$value")
-      maintainStats(spark, tableDir,
-        headV.flatMap(statsOf(spark, tableDir, _)), stage, id, kept,
-        schema, renames)
-    }
-    RewriteStats(baseFiles.size.toLong, 0L, rowsBefore,
+    val keptSet = kept.toSet
+    commitVersion(spark, tableDir, Some(head), "DELETE_PARTITION",
+      s"$partCol=$value")(_ => head.copy(files = kept,
+        partitions = head.partitions.filter { case (f, _) => keptSet(f) }))
+    RewriteStats(head.files.size.toLong, 0L, rowsBefore,
       rowsBefore - rowsDropped, 0L)
   }
 

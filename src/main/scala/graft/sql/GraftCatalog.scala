@@ -27,8 +27,8 @@ import graft.ops.Scale
   *   MERGE INTO graft.`/data/tbl` t USING s ON ...    -- via GraftSql
   * }}}
   *
-  * Reads route through `Scale.readTable`/`readTableAt` (pointer
-  * resolution + schema alignment + column mapping), writes through
+  * Reads route through `Scale.readSnapshot` (pointer resolution +
+  * schema alignment + column mapping), writes through
   * the same commit protocol every Scala-API DML uses — the SQL layer
   * adds reachability, not a second engine. The scan is a
   * [[V1Scan]] fallback: the whole-plan still scans parquet through
@@ -83,8 +83,8 @@ class GraftCatalog extends TableCatalog {
       .getOrElse(false)
 
   /** `CREATE TABLE graft.\`p\` (cols)` and the create half of CTAS:
-    * v=0 commits an EMPTY manifest + the declared schema (two
-    * metadata writes); CTAS's data write then lands as the v=1
+    * v=0 commits one record with no files and the declared schema;
+    * CTAS's data write then lands as the v=1
     * append through the normal write path. Partition transforms are
     * refused (use `Scale.registerPartitions` once data exists —
     * graft partitions are verified properties of files, not write
@@ -216,20 +216,19 @@ class GraftTable(val dir: String, val travelVersion: Option[Long])
 
   private def spark = SparkSession.active
 
-  /** Reads PIN the version at first resolution (per table handle —
-    * Spark loads a fresh handle per statement): schema probing,
-    * planning and every scan of one statement serve the SAME
-    * committed version even while concurrent writers advance the
-    * head (r11 review: an unpinned scan could execute against a head
-    * whose schema differs from the plan's). Writes are unaffected —
-    * every DML re-resolves the head inside its own commit retry. */
-  private lazy val pinnedVersion: Long = travelVersion.getOrElse(
-    graft.tables.VersionStore.head(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions under $dir")))
+  /** Reads PIN the version's snapshot at first resolution (per table
+    * handle — Spark loads a fresh handle per statement): schema
+    * probing, planning and every scan of one statement serve the SAME
+    * committed version, resolved from ONE record read, even while
+    * concurrent writers advance the head (r11 review: an unpinned scan
+    * could execute against a head whose schema differs from the
+    * plan's). Writes are unaffected — every DML re-resolves the head
+    * inside its own commit retry. */
+  private lazy val snap: graft.tables.Snapshot =
+    graft.tables.VersionStore.snapshot(spark, dir, travelVersion)
 
   private def resolve(s: SparkSession): DataFrame =
-    Scale.readTableAt(s, dir, pinnedVersion)
+    Scale.readSnapshot(s, snap)
 
   override def name(): String =
     s"graft.`$dir`" +
@@ -245,7 +244,7 @@ class GraftTable(val dir: String, val travelVersion: Option[Long])
     java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
-  /** The SQL scan consults the chain's maintained stats + partition
+  /** The SQL scan consults the snapshot's maintained stats + partition
     * tuples with the query's OWN predicate (pushed down by Catalyst's
     * V2 pushdown rule): only surviving manifest files open. Filters
     * are reported NOT-pushed (`pushedFilters` empty), so Spark still
@@ -300,8 +299,7 @@ class GraftTable(val dir: String, val travelVersion: Option[Long])
               val s = context.sparkSession
               val df = sql match {
                 case Some(c) =>
-                  val (pruned, ps) =
-                    Scale.readVersionPruned(s, dir, pinnedVersion, c)
+                  val (pruned, ps) = Scale.readSnapshotPruned(s, snap, c)
                   GraftScanStats.last = Some(ps)
                   pruned
                 case None =>

@@ -59,13 +59,9 @@ class GraftSourceProvider extends StreamSourceProvider
 object GraftChangesSource {
   /** The feed's row shape: the head's served schema plus the CDF
     * tags. */
-  def changeSchema(spark: SparkSession, dir: String): StructType = {
-    val head = VersionStore.head(spark, dir)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed versions under $dir"))
-    Scale.readTableAt(spark, dir, head).schema
+  def changeSchema(spark: SparkSession, dir: String): StructType =
+    Scale.readSnapshot(spark, VersionStore.snapshot(spark, dir)).schema
       .add("op", StringType).add("version", LongType)
-  }
 }
 
 /** One chain's change feed as a v1 streaming [[Source]] (the API the

@@ -3,31 +3,40 @@ package graft.tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal versioned-table layer (r9-verdict ask #5): ONE
-  * implementation of the manifest-commit / retention / watermark
-  * discipline that the CDC snapshot chain
-  * ([[graft.streaming.Streams]]), the similarity-graph edge artifact
-  * ([[graft.dedup.Dedup.edgeTable]]), the ANN index artifact
-  * ([[graft.sim.Similarity.buildIvfIndex]]) and copy-on-write DML
-  * ([[graft.ops.Scale.deleteWhere]]) all share — previously three
-  * parallel copies of the same logic, each with its own torn-dir and
-  * replay edge cases.
+  * implementation of the commit / retention / watermark discipline
+  * that the CDC snapshot chain ([[graft.streaming.Streams]]), the
+  * similarity-graph edge artifact ([[graft.dedup.Dedup.edgeTable]]),
+  * the ANN index artifact ([[graft.sim.Similarity.buildIvfIndex]]) and
+  * copy-on-write DML ([[graft.ops.Scale.deleteWhere]]) all share —
+  * previously three parallel copies of the same logic, each with its
+  * own torn-dir and replay edge cases.
   *
   * Layout under a table root `dir`:
   * {{{
-  *   dir/v=<n>/...            one version (any content layout)
-  *   dir/v=<n>/_GRAFT_COMMITTED   commit marker: the version EXISTS
-  *                                only once this zero-byte object is
-  *                                PUT (atomic on every store)
-  *   dir/v=<n>/_GRAFT_MANIFEST    optional FILE MANIFEST: newline-
-  *                                separated absolute data-file paths
-  *                                this version consists of — files
-  *                                may live OUTSIDE v=<n> (untouched
-  *                                originals referenced by POINTER,
-  *                                the Delta/Iceberg COW shape)
-  *   dir/_GRAFT_PRUNED        retention low-watermark (highest id
-  *                                ever pruned), fencing out-of-window
-  *                                replays
+  *   dir/v=<n>/...                 one version
+  *   dir/v=<n>/_GRAFT_COMMITTED    commit marker: the version EXISTS
+  *                                 only once this zero-byte object is
+  *                                 PUT (atomic create-if-absent)
+  *   dir/v=<n>/_GRAFT_WRITER       writer token: which writer's staged
+  *                                 output this dir holds
+  *                                 ([[publishExclusive]])
+  *   dir/v=<n>/_GRAFT_COMMIT       the ONE commit record (JSON, written
+  *                                 by [[commit]]): data files, schema,
+  *                                 constraints, column mapping,
+  *                                 partition values, op and timestamp
+  *                                 — resolved into a [[Snapshot]]
+  *   dir/v=<n>/<f>.parquet         data files this version wrote; the
+  *                                 record may also point at files of
+  *                                 older versions or outside `dir`
+  *   dir/v=<n>/_graft_stats/       optional per-file data-skipping
+  *                                 stats ([[graft.ops.Scale]])
+  *   dir/_GRAFT_PRUNED             retention low-watermark (highest id
+  *                                 ever pruned), fencing out-of-window
+  *                                 replays
   * }}}
+  * Versions written by plain [[publish]] (the CDC snapshot chain, the
+  * edge artifact, the ANN index) carry no record and no token: they
+  * are their parquet files.
   *
   * Commit protocol ([[publish]]): the writer populates a staging dir
   * (`_stage_v=<n>`), the stage is renamed to `v=<n>`, then the
@@ -35,18 +44,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * S3-family stores rename is a non-atomic O(data) copy, which is
   * exactly why VISIBILITY hangs off the marker (a single object PUT,
   * atomic everywhere): a reader listing mid-copy sees an unmarked
-  * dir and skips it. A writer that dies at ANY point leaves either a
-  * stage dir or an unmarked version dir — both invisible, both
-  * reaped by the next [[retain]] (r9 advice: previously torn dirs
-  * accumulated forever).
+  * dir and skips it. The record is written INTO the stage, so it is
+  * complete before the marker can exist; a separate marker stays the
+  * arbiter because on local/HDFS storage a create-then-write object is
+  * visible before its bytes land. A writer that dies at ANY point
+  * leaves either a stage dir or an unmarked version dir — both
+  * invisible, both reaped by the next [[retain]] (r9 advice:
+  * previously torn dirs accumulated forever).
   *
   * Retention ([[retain]]): drops all but the newest `keepLast`
-  * committed versions. Versions with manifests make this
-  * reference-counted: a data file under a pruned `v=<k>` that a KEPT
-  * manifest still points at (a COW DML untouched-file pointer)
-  * survives — only unreferenced files go; a version dir is removed
-  * outright once nothing in it is referenced. Files outside the
-  * table root (e.g. the original source table a COW chain points
+  * committed versions, reference-counted: a data file under a pruned
+  * `v=<k>` that a KEPT record still points at (a COW DML untouched-
+  * file pointer) survives — only unreferenced files go; a version dir
+  * is removed outright once nothing in it is referenced. Files outside
+  * the table root (e.g. the original source table a COW chain points
   * into) are NEVER touched. */
 object VersionStore {
 
@@ -54,45 +65,8 @@ object VersionStore {
     * once this object is PUT. */
   val CommitMarker = "_GRAFT_COMMITTED"
 
-  /** Optional per-version file manifest (newline-separated absolute
-    * paths; may point outside the version dir). */
-  val ManifestFile = "_GRAFT_MANIFEST"
-
-  /** Optional per-version logical schema (StructType JSON) — written
-    * by metadata-only DDL ([[graft.ops.Scale.addColumn]]) and carried
-    * forward by every later publish; readers align pointer files that
-    * physically predate the DDL (missing columns read as NULL). */
-  val SchemaFile = "_GRAFT_SCHEMA"
-
-  /** Optional per-version CHECK constraints (one `name\tsql` line
-    * each) — enforced by [[graft.ops.Scale]]'s DML on the rows it
-    * rewrites/inserts, carried forward by every publish. */
-  val ConstraintsFile = "_GRAFT_CONSTRAINTS"
-
-  /** Optional per-version COLUMN-MAPPING note: one `logical\talias1,
-    * alias2` line per renamed column — the physical names older data
-    * files still carry for it. Readers coalesce the logical name with
-    * its aliases (a row's file wrote exactly one of them), so RENAME
-    * COLUMN is metadata-only (see [[graft.ops.Scale.renameColumn]]). */
-  val RenamesFile = "_GRAFT_RENAMES"
-
-  /** Optional per-version operation note (`op\tdetail`) — what
-    * produced this version; [[graft.ops.Scale.history]] reads the
-    * chain's notes as the DESCRIBE-HISTORY table. */
-  val OpFile = "_GRAFT_OP"
-
-  /** Optional per-version PARTITION-VALUE map: one
-    * `path\tcol=value[;col=value]` line per data file whose listed
-    * columns are FILE-CONSTANT (every row carries exactly that value
-    * — [[graft.ops.Scale.registerPartitions]] verifies before
-    * recording). The manifest-level representation of a hive-style
-    * partitioned layout: DML hit detection and pruned reads consult
-    * it before opening any stats, and a whole-partition DELETE
-    * becomes metadata-only. Files without a line (later appends,
-    * repacked OPTIMIZE outputs) are simply unprunable-by-partition —
-    * sound, never wrong. Values are stored as strings and cast to the
-    * column's declared type at use. */
-  val PartitionsFile = "_GRAFT_PARTITIONS"
+  /** The per-version commit record ([[Snapshot]] as JSON). */
+  private val CommitRecord = "_GRAFT_COMMIT"
 
   private val PrunedFile = "_GRAFT_PRUNED"
   private val AppliedFile = "_GRAFT_APPLIED"
@@ -121,7 +95,7 @@ object VersionStore {
 
   /** Newest committed version id, if any. */
   def head(spark: SparkSession, dir: String): Option[Long] =
-    committed(spark, dir).maxOption
+    headOf(fsOf(spark, dir), dir)
 
   /** Publish version `id`: `write` populates the staging dir it is
     * handed; the stage is renamed to `v=<id>` and the marker PUT —
@@ -278,207 +252,118 @@ object VersionStore {
     dest.toString
   }
 
-  /** Write a pointer manifest into a (staging or version) dir. */
-  def writeManifest(spark: SparkSession, vdir: String,
-                    files: Seq[String]): Unit = {
-    val out = fsOf(spark, vdir)
-      .create(new org.apache.hadoop.fs.Path(vdir, ManifestFile), true)
-    try out.write(files.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+  private def readString(fs: org.apache.hadoop.fs.FileSystem,
+                         p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try new String(
+      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+    finally in.close()
   }
 
-  /** Write a logical-schema file (StructType JSON) into a (staging or
-    * version) dir — the metadata side of a zero-rewrite DDL. */
-  def writeSchema(spark: SparkSession, vdir: String,
-                  schema: org.apache.spark.sql.types.StructType): Unit = {
-    val out = fsOf(spark, vdir)
-      .create(new org.apache.hadoop.fs.Path(vdir, SchemaFile), true)
-    try out.write(schema.json.getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** The logical schema version `id` declares, if any publish on the
-    * chain up to it wrote one (each schema-carrying publish copies
-    * the head's schema forward, so only this version dir is read). */
-  def schemaOf(spark: SparkSession, dir: String, id: Long)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(path(s"$dir/v=$id"), SchemaFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(org.apache.spark.sql.types.DataType.fromJson(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      finally in.close()
+  /** Version `v`'s snapshot, its marker already checked: the commit
+    * record when there is one, else (a plain [[publish]]) the parquet
+    * files directly under `v=<n>` with empty metadata. */
+  private def load(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                   v: Long): Snapshot = {
+    val vdir = path(s"$dir/v=$v")
+    try Snapshot.fromJson(dir, v,
+      readString(fs, new org.apache.hadoop.fs.Path(vdir, CommitRecord)))
+    catch {
+      case _: java.io.FileNotFoundException =>
+        Snapshot(dir, v, fs.listStatus(vdir).toSeq
+          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+          .map(_.getPath.toString))
     }
   }
 
-  /** Write the CHECK-constraint set into a (staging or version) dir. */
-  def writeConstraints(spark: SparkSession, vdir: String,
-                       cons: Seq[(String, String)]): Unit = {
-    val out = fsOf(spark, vdir)
-      .create(new org.apache.hadoop.fs.Path(vdir, ConstraintsFile), true)
-    try out.write(cons.map { case (n, c) => s"$n\t$c" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+  /** The newest committed version under `dir`: one listing, then a
+    * marker check per candidate from the top (normally one). */
+  private def headOf(fs: org.apache.hadoop.fs.FileSystem,
+                     dir: String): Option[Long] = {
+    val ids = try fs.listStatus(path(dir)).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
+      .flatMap(_.getPath.getName.stripPrefix("v=").toLongOption)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+    ids.sorted.reverseIterator.find(v =>
+      fs.exists(path(s"$dir/v=$v/$CommitMarker")))
   }
 
-  /** The CHECK constraints version `id` declares (empty before any
-    * [[graft.ops.Scale.addConstraint]] on the chain). */
-  def constraintsOf(spark: SparkSession, dir: String, id: Long)
-      : Seq[(String, String)] = {
+  /** The snapshot of committed version `version` (default: the head),
+    * resolved from one listing (none for an explicit version) plus one
+    * record read. Fails when the chain has no committed version or
+    * `version` is not committed. */
+  def snapshot(spark: SparkSession, dir: String,
+               version: Option[Long] = None): Snapshot = {
     val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(path(s"$dir/v=$id"),
-      ConstraintsFile)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-        .map { l =>
-          val i = l.indexOf('\t')
-          (l.substring(0, i), l.substring(i + 1))
-        }
-      finally in.close()
+    version match {
+      case Some(v) =>
+        require(fs.exists(path(s"$dir/v=$v/$CommitMarker")),
+          s"version $v not committed under $dir")
+        load(fs, dir, v)
+      case None =>
+        latest(spark, dir).getOrElse(throw new IllegalArgumentException(
+          s"no committed versions under $dir"))
     }
   }
 
-  /** Write the column-mapping note into a (staging or version) dir. */
-  def writeRenames(spark: SparkSession, vdir: String,
-                   renames: Map[String, Seq[String]]): Unit = {
-    val out = fsOf(spark, vdir)
-      .create(new org.apache.hadoop.fs.Path(vdir, RenamesFile), true)
-    try out.write(renames.toSeq.sortBy(_._1)
-      .map { case (n, as) => s"$n\t${as.mkString(",")}" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+  /** The head's snapshot, or None before the chain's first commit. */
+  def latest(spark: SparkSession, dir: String): Option[Snapshot] = {
+    val fs = fsOf(spark, dir)
+    headOf(fs, dir).map(load(fs, dir, _))
   }
 
-  /** The column mapping version `id` declares (empty before any
-    * rename on the chain). */
-  def renamesOf(spark: SparkSession, dir: String, id: Long)
-      : Map[String, Seq[String]] = {
+  /** Every committed version's snapshot, oldest first — the
+    * version-count-sized metadata behind history and as-of lookups. */
+  def snapshots(spark: SparkSession, dir: String): Seq[Snapshot] = {
     val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(path(s"$dir/v=$id"),
-      RenamesFile)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-        .map { l =>
-          val i = l.indexOf('\t')
-          l.substring(0, i) ->
-            l.substring(i + 1).split(",").toSeq.filter(_.nonEmpty)
-        }.toMap
-      finally in.close()
+    committed(spark, dir).sorted.map(load(fs, dir, _))
+  }
+
+  /** Each committed version with its commit timestamp, oldest first. A
+    * version without one (a plain [[publish]]) inherits its
+    * predecessor's: "as of" resolution then treats the pair as
+    * simultaneous — sound, and the LATER id wins the as-of pick. */
+  def stamps(spark: SparkSession, dir: String): Seq[(Long, Option[Long])] = {
+    var last = Option.empty[Long]
+    snapshots(spark, dir).map { s =>
+      last = s.ts.orElse(last)
+      s.version -> last
     }
   }
 
-  /** Write the partition-value map into a (staging or version) dir.
-    * Encoding note: paths may not contain tab/newline (enforced) and
-    * values are `;`/`=`-escaped via URL encoding so arbitrary
-    * partition values round-trip. */
-  def writePartitions(spark: SparkSession, vdir: String,
-                      parts: Map[String, Map[String, String]]): Unit = {
-    def enc(s: String) =
-      java.net.URLEncoder.encode(s, "UTF-8")
-    val out = fsOf(spark, vdir)
-      .create(new org.apache.hadoop.fs.Path(vdir, PartitionsFile), true)
-    try out.write(parts.toSeq.sortBy(_._1).map { case (p, kv) =>
-      require(!p.contains('\t') && !p.contains('\n'),
-        s"partition-map path may not contain tab/newline: $p")
-      s"$p\t" + kv.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString(";")
-    }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+  /** A version being committed: the writer fills the staging dir
+    * `path`, and names the files it writes there by their final
+    * location under `vdir` (`dir/v=<version>`). */
+  final case class Stage(path: String, version: Long, vdir: String)
 
-  /** The partition-value map version `id` declares (empty before any
-    * [[graft.ops.Scale.registerPartitions]] on the chain). */
-  def partitionsOf(spark: SparkSession, dir: String, id: Long)
-      : Map[String, Map[String, String]] = {
-    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
+  /** Commit the next version after `parent` (the head the caller
+    * resolved; None for a new chain): makes the stage, runs `write` —
+    * which writes the data and returns the next record, usually
+    * `parent.copy(files = …, op = …)` — stamps it, writes it into the
+    * stage and publishes EXCLUSIVELY ([[publishExclusive]]; a
+    * concurrent writer that took the id first surfaces as
+    * [[VersionConflictException]]). The timestamp is
+    * `max(now, parent.ts + 1)` (Delta's in-commit-timestamp
+    * discipline): two commits inside one clock tick still resolve
+    * distinctly under `TIMESTAMP AS OF`, and history never runs
+    * backwards. Returns the committed snapshot. */
+  def commit(spark: SparkSession, dir: String, parent: Option[Snapshot])
+            (write: Stage => Snapshot): Snapshot = {
     val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(path(s"$dir/v=$id"),
-      PartitionsFile)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-        .map { l =>
-          val i = l.indexOf('\t')
-          l.substring(0, i) -> l.substring(i + 1).split(";").toSeq
-            .filter(_.nonEmpty).map { kv =>
-              val j = kv.indexOf('=')
-              dec(kv.substring(0, j)) -> dec(kv.substring(j + 1))
-            }.toMap
-        }.toMap
-      finally in.close()
-    }
-  }
-
-  /** Record what produced a (staging or version) dir, and WHEN (epoch
-    * millis — r11 verdict ask #2: the one field that unlocks
-    * TIMESTAMP AS OF, a `when` column in DESCRIBE HISTORY and
-    * time-based VACUUM). Writers that care about cross-commit
-    * monotonicity pass a floored `ts` (see `graft.ops.Scale`'s
-    * stamping — `max(now, predecessor + 1)`, the Delta in-commit-
-    * timestamp discipline, so two commits inside one clock tick still
-    * resolve distinctly by timestamp). */
-  def writeOp(spark: SparkSession, vdir: String, op: String,
-              detail: String = "",
-              ts: Long = System.currentTimeMillis()): Unit = {
-    val out = fsOf(spark, vdir)
-      .create(new org.apache.hadoop.fs.Path(vdir, OpFile), true)
-    try out.write(s"$op\t$detail\t$ts".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** The operation note of committed version `id`, if recorded. */
-  def opOf(spark: SparkSession, dir: String, id: Long)
-      : Option[(String, String)] =
-    opNoteOf(spark, dir, id).map { case (op, detail, _) => (op, detail) }
-
-  /** Full operation note: (op, detail, commit epoch millis — None for
-    * notes written before timestamps existed, or by a publisher that
-    * records none). */
-  def opNoteOf(spark: SparkSession, dir: String, id: Long)
-      : Option[(String, String, Option[Long])] = {
-    val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(path(s"$dir/v=$id"), OpFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val l = new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        l.split("\t", -1) match {
-          case Array(op) => Some((op, "", None))
-          case Array(op, detail) => Some((op, detail, None))
-          case parts => Some((parts(0), parts(1),
-            parts(2).toLongOption))
-        }
-      } finally in.close()
-    }
-  }
-
-  /** Commit timestamp of version `id` (epoch millis), inheriting from
-    * the nearest stamped predecessor when the version itself carries
-    * none (an op-less streaming publish): "as of" resolution then
-    * treats the unstamped version as simultaneous with that
-    * predecessor — sound, since the pair is indistinguishable by time
-    * and the LATER id wins the as-of pick. */
-  def commitTsOf(spark: SparkSession, dir: String, id: Long)
-      : Option[Long] = {
-    val vs = committed(spark, dir).filter(_ <= id).sorted.reverse
-    vs.iterator.map(v => opNoteOf(spark, dir, v).flatMap(_._3))
-      .collectFirst { case Some(ts) => ts }
+    val id = parent.map(_.version + 1).getOrElse(0L)
+    val floor = parent.flatMap(_.ts).getOrElse(Long.MinValue)
+    var out: Snapshot = null
+    publishExclusive(spark, dir, id) { stage =>
+      fs.mkdirs(path(stage)): Unit
+      out = write(Stage(stage, id, s"$dir/v=$id")).copy(dir = dir,
+        version = id,
+        ts = Some(math.max(System.currentTimeMillis(), floor + 1)))
+      val rec = fs.create(new org.apache.hadoop.fs.Path(stage, CommitRecord),
+        true)
+      try rec.write(Snapshot.toJson(out).getBytes("UTF-8"))
+      finally rec.close()
+    }: Unit
+    out
   }
 
   /** The newest committed version whose commit timestamp is at or
@@ -487,15 +372,8 @@ object VersionStore {
     * version existed then) and an entirely unstamped chain. */
   def versionAt(spark: SparkSession, dir: String, tsMillis: Long)
       : Long = {
-    val vs = committed(spark, dir).sorted
-    require(vs.nonEmpty, s"no committed versions under $dir")
-    // carry the last seen stamp forward over unstamped versions
-    var lastTs = Option.empty[Long]
-    val stamped = vs.map { v =>
-      val ts = opNoteOf(spark, dir, v).flatMap(_._3).orElse(lastTs)
-      lastTs = ts
-      v -> ts
-    }
+    val stamped = stamps(spark, dir)
+    require(stamped.nonEmpty, s"no committed versions under $dir")
     val known = stamped.collect { case (v, Some(ts)) => (v, ts) }
     require(known.nonEmpty,
       s"chain under $dir carries no commit timestamps")
@@ -505,38 +383,11 @@ object VersionStore {
     known.filter(_._2 <= tsMillis).map(_._1).max
   }
 
-  /** The data files of committed version `id` — the manifest's list
-    * when one exists, else every `*.parquet` directly under the
-    * version dir. */
-  def manifest(spark: SparkSession, dir: String, id: Long)
-      : Seq[String] = {
-    val fs = fsOf(spark, dir)
-    val vdir = path(s"$dir/v=$id")
-    require(fs.exists(new org.apache.hadoop.fs.Path(vdir, CommitMarker)),
-      s"version $id under $dir is not committed")
-    val mf = new org.apache.hadoop.fs.Path(vdir, ManifestFile)
-    if (fs.exists(mf)) {
-      val in = fs.open(mf)
-      try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      finally in.close()
-    } else
-      fs.listStatus(vdir).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
-  }
-
-  /** Read committed version `id` (default: head) by resolving its
-    * manifest — the reader side of the pointer scheme. */
+  /** Read committed version `version` (default: head) by resolving its
+    * snapshot's files — the reader side of the pointer scheme. */
   def read(spark: SparkSession, dir: String,
-           version: Option[Long] = None): DataFrame = {
-    val vs = committed(spark, dir)
-    require(vs.nonEmpty, s"no committed versions under $dir")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not committed under $dir")
-    spark.read.parquet(manifest(spark, dir, v): _*)
-  }
+           version: Option[Long] = None): DataFrame =
+    spark.read.parquet(snapshot(spark, dir, version).files: _*)
 
   /** Highest EXTERNAL transaction id applied to this chain (None
     * before any) — the streaming-sink dedupe note: a foreachBatch
@@ -595,9 +446,9 @@ object VersionStore {
     * or below the committed head are crash debris no reader can ever
     * see (r9 advice: they previously accumulated forever; an id
     * ABOVE the head may be a concurrent writer mid-publish and is
-    * left alone). Manifest-aware: a file inside a pruned version dir
-    * that a kept manifest still references survives (only the
-    * marker, manifest and unreferenced files go; the dir itself goes
+    * left alone). Record-aware: a file inside a pruned version dir
+    * that a kept record still references survives (only the marker,
+    * record and unreferenced files go; the dir itself goes
     * once empty of referenced files). When `watermark` is set the
     * highest pruned id is persisted for replay fencing. Returns the
     * pruned ids. */
@@ -611,11 +462,11 @@ object VersionStore {
     val drop = vs.dropRight(keepLast)
     val keep = vs.takeRight(keepLast)
     // every file a KEPT version still points at must survive pruning;
-    // qualify both sides so scheme-less manifest entries ("/t/x")
+    // qualify both sides so scheme-less record entries ("/t/x")
     // match the scheme-qualified listing ("file:/t/x")
     def qual(s: String): String = fs.makeQualified(path(s)).toString
     val referenced: Set[String] = keep
-      .flatMap(v => manifest(spark, dir, v)).map(qual).toSet
+      .flatMap(v => load(fs, dir, v).files).map(qual).toSet
     def pruneDir(vdir: org.apache.hadoop.fs.Path): Unit = {
       val inside = fs.listStatus(vdir)
       val (keepF, dropF) = inside.partition(f =>

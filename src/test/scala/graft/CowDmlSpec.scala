@@ -63,7 +63,7 @@ class CowDmlSpec extends AnyFunSuite {
       .map(f => f.getName -> (f.length(), f.lastModified())).toMap
     assert(after == srcSnapshot, "source files were disturbed")
     // the manifest points at src for every untouched file
-    val mf = VersionStore.manifest(spark, dest, 0L)
+    val mf = VersionStore.snapshot(spark, dest, Some(0L)).files
     assert(mf.count(_.contains("/src/")) ==
       stats.filesTotal - stats.filesRewritten)
     // UPDATE twin: matched rows get the new value, others untouched
@@ -106,7 +106,7 @@ class CowDmlSpec extends AnyFunSuite {
     // v=1 still references it (it does not here — both DML hit the
     // same k-hash file? no: k=2 and k=1 differ) — referenced files
     // survive, unreferenced ones go, src is never touched
-    val mf1 = VersionStore.manifest(spark, tbl, 1L)
+    val mf1 = VersionStore.snapshot(spark, tbl, Some(1L)).files
     VersionStore.retain(spark, tbl, keepLast = 1)
     assert(VersionStore.committed(spark, tbl) == Seq(1L))
     mf1.foreach { f =>
@@ -144,8 +144,8 @@ class CowDmlSpec extends AnyFunSuite {
       ins.forall { case (id, v) => v == id * 1.0 + 0.5 })
     // I/O bound: the diff read only the files the manifests disagree
     // on — k=1's one rewritten file per side, never the whole table
-    val mf0 = VersionStore.manifest(spark, tbl, 0L).toSet
-    val mf1 = VersionStore.manifest(spark, tbl, 1L).toSet
+    val mf0 = VersionStore.snapshot(spark, tbl, Some(0L)).files.toSet
+    val mf1 = VersionStore.snapshot(spark, tbl, Some(1L)).files.toSet
     assert((mf0 -- mf1).size == 1 && (mf1 -- mf0).size == 1,
       "a one-key UPDATE must change exactly one manifest entry")
     rm(base.toFile)
@@ -266,7 +266,7 @@ class CowDmlSpec extends AnyFunSuite {
     assert(stats.filesAfter < stats.filesBefore,
       s"expected a packed layout, got $stats")
     // the chunky file rides by pointer — never rewritten or copied
-    val mf = VersionStore.manifest(spark, tbl, 0L)
+    val mf = VersionStore.snapshot(spark, tbl, Some(0L)).files
     assert(mf.exists(f => f.contains("/src/") && f.endsWith(bigFile)),
       "the already-compact file must ride by pointer")
     assert(parquets(s"$tbl/v=0").forall(_.getName.startsWith("opt-")))
@@ -314,7 +314,7 @@ class CowDmlSpec extends AnyFunSuite {
     // a valid UPDATE passes and the constraint rides forward
     Scale.updateWhere(spark, src, tbl, col("id") === 4L,
       Seq("v" -> lit(7.0)))                             // v=2
-    assert(VersionStore.constraintsOf(spark, tbl, 2L) ==
+    assert(VersionStore.snapshot(spark, tbl, Some(2L)).constraints ==
       Seq("v_pos" -> "v >= 0.0"))
     // a violating MERGE insert is rejected too
     intercept[Scale.ConstraintViolationException] {
@@ -363,7 +363,7 @@ class CowDmlSpec extends AnyFunSuite {
       "the clone's DML leaked into the source")
     // the clone inherits constraints-by-metadata semantics: its own
     // chain carries A's declared schema forward
-    assert(VersionStore.schemaOf(spark, b, 1L).exists(
+    assert(VersionStore.snapshot(spark, b, Some(1L)).schema.exists(
       _.fieldNames.contains("flag")))
     rm(base.toFile)
   }
@@ -464,7 +464,7 @@ class CowDmlSpec extends AnyFunSuite {
       df.where(col("day") === d).coalesce(2)
         .write.mode("append").parquet(src))
     Scale.registerPartitions(spark, src, tbl, Seq("day"))      // v=0
-    val p0 = VersionStore.partitionsOf(spark, tbl, 0L)
+    val p0 = VersionStore.snapshot(spark, tbl, Some(0L)).partitions
     assert(p0.size == 6 && p0.values.forall(_.keySet == Set("day")))
     // metadata-only drop: no parquet appears under the version dir,
     // the dropped partition's files leave the manifest wholesale
@@ -472,7 +472,7 @@ class CowDmlSpec extends AnyFunSuite {
     assert(drop.filesRewritten == 0 && drop.filesScanned == 0, s"$drop")
     assert(parquets(s"$tbl/v=1").isEmpty,
       "DELETE_PARTITION must write no data file")
-    assert(VersionStore.manifest(spark, tbl, 1L).size == 4)
+    assert(VersionStore.snapshot(spark, tbl, Some(1L)).files.size == 4)
     assert(Scale.readTable(spark, tbl).where(col("day") === "d1")
       .count() == 0)
     assert(drop.rowsAfter == 2000)
@@ -483,14 +483,14 @@ class CowDmlSpec extends AnyFunSuite {
       s"pre-filter must hand hit detection just d2's files: $upd")
     // rewritten files INHERIT their tuple (the UPDATE set `v`, not
     // `day`), so the next partition-targeted DML still pre-prunes
-    val p2 = VersionStore.partitionsOf(spark, tbl, 2L)
+    val p2 = VersionStore.snapshot(spark, tbl, Some(2L)).partitions
     assert(p2.size == 4 && p2.values.count(_ ("day") == "d2") == 2,
       s"rewritten d2 files must keep their tuple: $p2")
     // an UPDATE that SETs the partition column invalidates the tuple
     // for the files it rewrites — and only those
     Scale.updateWhere(spark, tbl, tbl, "day = 'd0'",
       Seq("day" -> lit("d9")))                                 // v=3
-    val p3 = VersionStore.partitionsOf(spark, tbl, 3L)
+    val p3 = VersionStore.snapshot(spark, tbl, Some(3L)).partitions
     assert(p3.size == 2 && p3.values.forall(_ ("day") == "d2"),
       s"rewrites that change the partition column must drop tuples: $p3")
     // untupled files make the whole-file proof impossible: refuse, by
@@ -564,8 +564,8 @@ class CowDmlSpec extends AnyFunSuite {
     assert(st.filesAfter < st.filesBefore, s"no packing: $st")
     // every packed file carries its group's tuple — bins never cross
     // partition boundaries
-    val p1 = VersionStore.partitionsOf(spark, tbl, 1L)
-    val mf = VersionStore.manifest(spark, tbl, 1L)
+    val p1 = VersionStore.snapshot(spark, tbl, Some(1L)).partitions
+    val mf = VersionStore.snapshot(spark, tbl, Some(1L)).files
     assert(mf.forall(p1.contains),
       s"every post-OPTIMIZE file must stay tupled: ${mf.filterNot(p1.contains)}")
     assert(p1.values.count(_ ("day") == "d0") >= 1 &&

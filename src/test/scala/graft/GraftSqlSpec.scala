@@ -84,8 +84,8 @@ class GraftSqlSpec extends AnyFunSuite {
       .head().getLong(0)
     assert(n == 1250)
     // the base files ride by pointer: v=1 holds ONLY the append file(s)
-    val mf = VersionStore.manifest(spark, tbl, 1L)
-    val baseCount = VersionStore.manifest(spark, tbl, 0L).size
+    val mf = VersionStore.snapshot(spark, tbl, Some(1L)).files
+    val baseCount = VersionStore.snapshot(spark, tbl, Some(0L)).files.size
     assert(mf.count(_.contains("/v=1/")) >= 1 &&
       mf.count(!_.contains("/v=1/")) == baseCount)
     rm(base.toFile)

@@ -1133,7 +1133,7 @@ class StreamingSpec extends AnyFunSuite {
     // file — update-only batches append nothing); the insert batch
     // rewrote nothing and appended one file
     val mfs = (0L to 2L).map(v =>
-      VersionStore.manifest(spark, tbl, v).toSet)
+      VersionStore.snapshot(spark, tbl, Some(v)).files.toSet)
     val diffs = mfs.indices.tail.map(i => (mfs(i) -- mfs(i - 1)).size)
     assert(diffs.forall(_ == 1),
       s"each one-file batch must change exactly one manifest entry: $diffs")

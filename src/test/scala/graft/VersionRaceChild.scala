@@ -1,40 +1,48 @@
 package graft
 
-import graft.tables.VersionStore
+import org.apache.spark.sql.SparkSession
+
+import graft.tables.{Snapshot, VersionStore}
 
 /** Child main for VersionStoreSpec's two-JVM race arm: a SEPARATE
   * driver process appending `count` versions to a shared chain
-  * through the real [[VersionStore.publishExclusive]] protocol —
-  * no shared JVM state with the test process, so the only
-  * coordination is the filesystem's create-if-absent marker. Each
-  * commit's op note records `tag-seq`; the parent asserts no commit
-  * is lost, duplicated, or torn. */
+  * through the real [[VersionStore.commit]] protocol — no shared JVM
+  * state with the test process, so the only coordination is the
+  * filesystem's create-if-absent marker. Each commit's record carries
+  * the op note `tag-seq`; the parent asserts no commit is lost,
+  * duplicated, or torn. */
 object VersionRaceChild {
-  def main(args: Array[String]): Unit = {
-    val Array(dir, tag, countS) = args
-    val n = countS.toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+
+  /** Commit `n` versions tagged `tag`, re-resolving the head after
+    * every conflict; returns how many landed (n unless starved). */
+  def race(spark: SparkSession, dir: String, tag: String, n: Int): Int = {
     var i = 0
     var attempts = 0
     while (i < n && attempts < 500) {
       attempts += 1
-      val id = VersionStore.head(spark, dir).map(_ + 1).getOrElse(0L)
+      val head = VersionStore.latest(spark, dir)
       try {
-        VersionStore.publishExclusive(spark, dir, id) { stage =>
-          VersionStore.fsOf(spark, dir)
-            .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-          VersionStore.writeOp(spark, stage, "APPEND", s"$tag-$i")
-        }
+        VersionStore.commit(spark, dir, head)(stage =>
+          Snapshot(dir, stage.version, Seq.empty, op = "APPEND",
+            detail = s"$tag-$i"))
         i += 1
       } catch {
         case _: VersionStore.VersionConflictException => ()
       }
     }
+    i
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Array(dir, tag, countS) = args
+    val n = countS.toInt
+    val spark = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "2")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val i = race(spark, dir, tag, n)
     spark.stop()
     sys.exit(if (i == n) 0 else 2)
   }

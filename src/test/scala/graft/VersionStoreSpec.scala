@@ -4,11 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.tables.VersionStore
+import graft.tables.{Snapshot, VersionStore}
 
 /** The shared versioned-table layer (r9-verdict ask #5): ONE
   * implementation of marker-gated listing, staged atomic publish,
-  * pointer manifests, reference-counted retention and the replay
+  * commit records, reference-counted retention and the replay
   * watermark — the CDC chain, edge artifact, ANN index and COW DML
   * all ride through this code, so the torn-dir / crash-debris edge
   * cases are proven here once. */
@@ -25,6 +25,37 @@ class VersionStoreSpec extends AnyFunSuite {
     f.delete(): Unit
   }
 
+  private def hpath(s: String) = new org.apache.hadoop.fs.Path(s)
+
+  /** Write `xs` as one data file `name` into the stage; returns its
+    * final path. */
+  private def stageRows(stage: VersionStore.Stage, name: String,
+                        xs: Seq[Int]): String = {
+    import spark.implicits._
+    val fs = VersionStore.fsOf(spark, stage.path)
+    xs.toDF("x").coalesce(1).write.parquet(s"${stage.path}/__tmp")
+    fs.listStatus(hpath(s"${stage.path}/__tmp")).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(p => fs.rename(p, hpath(s"${stage.path}/$name")): Unit)
+    fs.delete(hpath(s"${stage.path}/__tmp"), true): Unit
+    s"${stage.vdir}/$name"
+  }
+
+  /** Commit the next version after `parent`: `xs` land as one data
+    * file `name`, and the record points at it plus `keep` (files of
+    * earlier versions, by pointer). */
+  private def commitRows(dir: String, parent: Option[Snapshot],
+                         xs: Seq[Int], name: String = "rows.parquet",
+                         keep: Seq[String] = Nil): Snapshot =
+    VersionStore.commit(spark, dir, parent)(stage =>
+      Snapshot(dir, stage.version, keep :+ stageRows(stage, name, xs),
+        op = "APPEND", detail = xs.mkString(",")))
+
+  private def rows(dir: String, v: Option[Long] = None): Set[Int] = {
+    import spark.implicits._
+    VersionStore.read(spark, dir, v).as[Int].collect().toSet
+  }
+
   test("publish is marker-gated; torn dirs invisible and reaped") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_vs_spec")
@@ -35,6 +66,11 @@ class VersionStoreSpec extends AnyFunSuite {
     }
     assert(VersionStore.committed(spark, dir) == Seq(0L))
     assert(VersionStore.read(spark, dir).count() == 3)
+    // a plain publish carries no record: its snapshot is the parquet
+    // files under v=0, with empty metadata
+    val s0 = VersionStore.snapshot(spark, dir)
+    assert(s0.version == 0L && s0.files.nonEmpty && s0.op.isEmpty &&
+      s0.ts.isEmpty && s0.schema.isEmpty)
     // a torn writer: unmarked v=1 dir + leftover stage dir — both
     // invisible to readers...
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/v=1")): Unit
@@ -42,6 +78,9 @@ class VersionStoreSpec extends AnyFunSuite {
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_stage_v=0")): Unit
     assert(VersionStore.committed(spark, dir) == Seq(0L))
     assert(VersionStore.head(spark, dir).contains(0L))
+    assert(VersionStore.latest(spark, dir).map(_.version).contains(0L))
+    intercept[IllegalArgumentException](
+      VersionStore.snapshot(spark, dir, Some(1L)))
     // ...and BELOW-head debris is reaped by retention (r9 advice:
     // previously accumulated forever); v=1 is ABOVE head → a possible
     // concurrent writer, left alone until a later head supersedes it
@@ -61,120 +100,150 @@ class VersionStoreSpec extends AnyFunSuite {
   }
 
   test("publishExclusive: losers conflict, stage debris reaped") {
-    import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_vs_excl")
     val dir = base.resolve("t").toString
     val fs = VersionStore.fsOf(spark, dir)
-    VersionStore.publishExclusive(spark, dir, 0L) { stage =>
-      Seq(1, 2, 3).toDF("x").write.parquet(stage)
-    }
+    val v0 = commitRows(dir, None, Seq(1, 2, 3))
     assert(VersionStore.committed(spark, dir) == Seq(0L))
-    // a second writer that resolved the SAME head computes the same
-    // next id — it must fail with a conflict, not clobber the winner
+    // a second writer that resolved the SAME head (none) computes the
+    // same next id — it must fail with a conflict, not clobber the
+    // winner
     intercept[VersionStore.VersionConflictException] {
-      VersionStore.publishExclusive(spark, dir, 0L) { stage =>
-        Seq(9).toDF("x").write.parquet(stage)
-      }
+      commitRows(dir, None, Seq(9))
     }
-    assert(VersionStore.read(spark, dir).count() == 3,
+    assert(rows(dir) == Set(1, 2, 3),
       "the losing writer must not disturb the committed version")
     // the loser re-resolves the head and retries with the next id —
     // the optimistic-concurrency loop Scale's DML runs
-    VersionStore.publishExclusive(spark, dir,
-      VersionStore.head(spark, dir).get + 1) { stage =>
-      Seq(9).toDF("x").write.parquet(stage)
-    }
+    val v1 = commitRows(dir, VersionStore.latest(spark, dir), Seq(9))
     assert(VersionStore.committed(spark, dir).sorted == Seq(0L, 1L))
+    assert(v1.ts.get > v0.ts.get, "commit stamps must be monotonic")
+    // the whole layout of a committed version: marker, writer token,
+    // ONE commit record and the data (filesystem checksums aside)
+    assert(fs.listStatus(hpath(s"$dir/v=1")).map(_.getPath.getName)
+      .filterNot(_.endsWith(".crc")).toSet == Set(
+        VersionStore.CommitMarker, "_GRAFT_WRITER", "_GRAFT_COMMIT",
+        "rows.parquet"))
     // UNMARKED debris at the target id (a writer that crashed between
     // its rename and its marker): while YOUNG (within the debris
     // grace) it is presumed a live racer mid-commit — the publisher
     // must back off with a conflict and leave the dir UNTOUCHED
     // (r11 advice: deleting it races the racer's marker PUT)...
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/v=2/junk")): Unit
+    fs.mkdirs(hpath(s"$dir/v=2/junk")): Unit
     intercept[VersionStore.VersionConflictException] {
-      VersionStore.publishExclusive(spark, dir, 2L) { stage =>
-        Seq(7, 8).toDF("x").write.parquet(stage)
-      }
+      commitRows(dir, Some(v1), Seq(7, 8))
     }
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=2/junk")),
+    assert(fs.exists(hpath(s"$dir/v=2/junk")),
       "young unmarked debris must not be touched (presumed racer)")
     // ...and once AGED past the grace it is evicted atomically and
-    // the new publish serves the new content — naive rename-onto-
+    // the new commit serves the new content — naive rename-onto-
     // existing would nest the new stage inside the debris and the
     // marker would commit the dead writer's content
     spark.conf.set("spark.graft.commit.debrisGraceMs", "0")
-    try VersionStore.publishExclusive(spark, dir, 2L) { stage =>
-      Seq(7, 8).toDF("x").write.parquet(stage)
-    } finally spark.conf.unset("spark.graft.commit.debrisGraceMs")
-    assert(VersionStore.read(spark, dir, Some(2L))
-      .collect().map(_.getInt(0)).toSet == Set(7, 8),
-      "publish onto unmarked debris must serve the NEW content")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=2/junk")),
+    try commitRows(dir, Some(v1), Seq(7, 8))
+    finally spark.conf.unset("spark.graft.commit.debrisGraceMs")
+    assert(rows(dir, Some(2L)) == Set(7, 8),
+      "a commit onto unmarked debris must serve the NEW content")
+    assert(VersionStore.snapshot(spark, dir).detail == "7,8")
+    assert(!fs.exists(hpath(s"$dir/v=2/junk")),
       "debris must not survive inside the committed version")
     // unique-suffix stage debris (a loser that died before cleanup)
     // is still recognized and reaped by retention
-    fs.mkdirs(
-      new org.apache.hadoop.fs.Path(s"$dir/_stage_v=1.dead1234")): Unit
+    fs.mkdirs(hpath(s"$dir/_stage_v=1.dead1234")): Unit
     VersionStore.retain(spark, dir, keepLast = 5)
-    assert(!fs.exists(
-      new org.apache.hadoop.fs.Path(s"$dir/_stage_v=1.dead1234")),
+    assert(!fs.exists(hpath(s"$dir/_stage_v=1.dead1234")),
       "suffixed stage debris at/below head must be reaped")
     rm(base.toFile)
   }
 
   test("retention is manifest-reference-counted; watermark raises") {
-    import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_vs_ref")
     val dir = base.resolve("t").toString
     val fs = VersionStore.fsOf(spark, dir)
-    // v=0 holds two data files; v=1's manifest points at ONE of them
+    // v=0 holds two data files; v=1's record points at ONE of them
     // plus its own new file — pruning v=0 must keep the shared file
-    VersionStore.publish(spark, dir, 0L) { stage =>
-      Seq(1).toDF("x").coalesce(1).write.parquet(s"$stage/__tmp_a")
-      Seq(2).toDF("x").coalesce(1).write.parquet(s"$stage/__tmp_b")
-      def mv(sub: String, name: String): Unit =
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$stage/$sub"))
-          .map(_.getPath).find(_.getName.endsWith(".parquet"))
-          .foreach { p =>
-            fs.rename(p, new org.apache.hadoop.fs.Path(stage, name)): Unit
-            fs.delete(new org.apache.hadoop.fs.Path(s"$stage/$sub"),
-              true): Unit
-          }
-      mv("__tmp_a", "a.parquet")
-      mv("__tmp_b", "b.parquet")
-    }
-    VersionStore.publish(spark, dir, 1L) { stage =>
-      Seq(3).toDF("x").coalesce(1).write.parquet(s"$stage/__tmp_c")
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$stage/__tmp_c"))
-        .map(_.getPath).find(_.getName.endsWith(".parquet"))
-        .foreach { p =>
-          fs.rename(p, new org.apache.hadoop.fs.Path(stage,
-            "c.parquet")): Unit
-          fs.delete(new org.apache.hadoop.fs.Path(s"$stage/__tmp_c"),
-            true): Unit
-        }
-      VersionStore.writeManifest(spark, stage,
-        Seq(s"$dir/v=0/a.parquet", s"$dir/v=1/c.parquet"))
-    }
-    assert(VersionStore.read(spark, dir).as[Int].collect().toSet
-      == Set(1, 3))
+    val v0 = VersionStore.commit(spark, dir, None)(stage =>
+      Snapshot(dir, stage.version, Seq(stageRows(stage, "a.parquet", Seq(1)),
+        stageRows(stage, "b.parquet", Seq(2)))))
+    commitRows(dir, Some(v0), Seq(3), "c.parquet",
+      keep = Seq(s"$dir/v=0/a.parquet"))
+    assert(rows(dir) == Set(1, 3))
     val dropped = VersionStore.retain(spark, dir, keepLast = 1,
       watermark = true)
     assert(dropped == Seq(0L))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=0/a.parquet")),
-      "file referenced by the kept manifest must survive")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=0/b.parquet")),
+    assert(fs.exists(hpath(s"$dir/v=0/a.parquet")),
+      "file referenced by the kept record must survive")
+    assert(!fs.exists(hpath(s"$dir/v=0/b.parquet")),
       "unreferenced file must be pruned")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$dir/v=0/${VersionStore.CommitMarker}")),
+    assert(!fs.exists(hpath(s"$dir/v=0/${VersionStore.CommitMarker}")),
       "pruned version must lose its marker")
+    assert(fs.listStatus(hpath(s"$dir/v=0")).map(_.getPath.getName)
+      .toSeq == Seq("a.parquet"),
+      "a pruned version keeps only its referenced files")
     assert(VersionStore.committed(spark, dir) == Seq(1L))
-    assert(VersionStore.read(spark, dir).as[Int].collect().toSet
-      == Set(1, 3), "the head still serves through the pointer")
+    assert(rows(dir) == Set(1, 3),
+      "the head still serves through the pointer")
     // watermark raised and never lowers
     assert(VersionStore.prunedWatermark(spark, dir).contains(0L))
     VersionStore.raiseWatermark(spark, dir, -5L)
     assert(VersionStore.prunedWatermark(spark, dir).contains(0L))
+    rm(base.toFile)
+  }
+
+  test("a writer that dies mid-commit leaves no visible record; retain reaps it") {
+    val base = java.nio.file.Files.createTempDirectory("graft_vs_torn")
+    val dir = base.resolve("t").toString
+    val fs = VersionStore.fsOf(spark, dir)
+    // what a writer leaves when it dies after writing its record: the
+    // complete staged output (record, writer token, data) without the
+    // marker. Made by a real commit in a scratch chain, moved here
+    // with the marker taken away.
+    var deaths = 0
+    def deadWriter(at: String, xs: Int*): Unit = {
+      deaths += 1
+      val scratch = base.resolve(s"scratch$deaths").toString
+      commitRows(scratch, None, xs)
+      fs.delete(hpath(s"$scratch/v=0/${VersionStore.CommitMarker}"),
+        false): Unit
+      assert(fs.rename(hpath(s"$scratch/v=0"), hpath(at)))
+    }
+    val v0 = commitRows(dir, None, Seq(1))
+    val v1 = commitRows(dir, Some(v0), Seq(2))
+    val v2 = commitRows(dir, Some(v1), Seq(3))
+    VersionStore.retain(spark, dir, keepLast = 1): Unit
+    // (a) died with its record in the stage, before the rename
+    deadWriter(s"$dir/_stage_v=1.dead0001", 8)
+    // (b) a writer that computed id 1 from a head retention has since
+    // pruned: died after the rename, before the marker
+    deadWriter(s"$dir/v=1", 9)
+    // (c) the same above the head: a writer mid-commit, or dead
+    deadWriter(s"$dir/v=3", 7)
+    // none of them is visible to any reader
+    assert(VersionStore.committed(spark, dir) == Seq(2L))
+    assert(VersionStore.head(spark, dir).contains(2L))
+    assert(VersionStore.snapshot(spark, dir) == v2)
+    Seq(1L, 3L).foreach { v =>
+      intercept[IllegalArgumentException](
+        VersionStore.snapshot(spark, dir, Some(v)))
+    }
+    assert(VersionStore.snapshots(spark, dir) == Seq(v2))
+    assert(rows(dir) == Set(3))
+    // retention reaps the debris at or below the head, records and
+    // all, and leaves the id above it alone (maybe a live writer)
+    VersionStore.retain(spark, dir, keepLast = 5): Unit
+    assert(!fs.exists(hpath(s"$dir/_stage_v=1.dead0001")),
+      "stage holding a dead writer's record must be reaped")
+    assert(!fs.exists(hpath(s"$dir/v=1")),
+      "unmarked version dir below the head must be reaped")
+    assert(fs.exists(hpath(s"$dir/v=3")),
+      "an unmarked dir above the head may be a writer mid-commit")
+    // the next writer at id 3 evicts it once aged and commits its own
+    // record — the dead writer's record never becomes visible
+    spark.conf.set("spark.graft.commit.debrisGraceMs", "0")
+    val v3 = try commitRows(dir, Some(v2), Seq(4))
+      finally spark.conf.unset("spark.graft.commit.debrisGraceMs")
+    assert(VersionStore.snapshot(spark, dir, Some(3L)) == v3)
+    assert(v3.detail == "4" && rows(dir) == Set(4))
     rm(base.toFile)
   }
 
@@ -206,34 +275,20 @@ class VersionStoreSpec extends AnyFunSuite {
     pb.redirectOutput(log)
     val child = pb.start()
     // parent writer, in-process, same protocol, tag A
-    var i = 0
-    var attempts = 0
-    while (i < n && attempts < 500) {
-      attempts += 1
-      val id = VersionStore.head(spark, dir).map(_ + 1).getOrElse(0L)
-      try {
-        VersionStore.publishExclusive(spark, dir, id) { stage =>
-          VersionStore.fsOf(spark, dir)
-            .mkdirs(new org.apache.hadoop.fs.Path(stage)): Unit
-          VersionStore.writeOp(spark, stage, "APPEND", s"A-$i")
-        }
-        i += 1
-      } catch {
-        case _: VersionStore.VersionConflictException => ()
-      }
-    }
-    assert(i == n, s"parent writer starved after $attempts attempts")
+    val i = VersionRaceChild.race(spark, dir, "A", n)
+    assert(i == n, s"parent writer starved")
     assert(child.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
       "child JVM did not finish in time")
     assert(child.exitValue() == 0,
       s"child failed: ${scala.io.Source.fromFile(log).mkString.takeRight(800)}")
     // the chain: exactly 2n contiguous committed versions, each
-    // carrying exactly one writer's COMPLETE op note, both writers'
-    // full sequences present exactly once
-    val vs = VersionStore.committed(spark, dir).sorted
+    // carrying exactly one writer's COMPLETE op note in its record,
+    // both writers' full sequences present exactly once
+    val snaps = VersionStore.snapshots(spark, dir)
+    val vs = snaps.map(_.version)
     assert(vs == (0L until 2L * n), s"ids must be contiguous: $vs")
-    val notes = vs.map(v => VersionStore.opOf(spark, dir, v)
-      .getOrElse(fail(s"version $v lost its op note"))._2)
+    assert(snaps.forall(_.op == "APPEND"), s"torn records: $snaps")
+    val notes = snaps.map(_.detail)
     val want = (0 until n).flatMap(k => Seq(s"A-$k", s"B-$k")).toSet
     assert(notes.toSet == want && notes.size == want.size,
       s"lost/duplicated commits: $notes")
@@ -242,6 +297,38 @@ class VersionStoreSpec extends AnyFunSuite {
     def seqOf(tag: String) = notes.filter(_.startsWith(tag))
       .map(_.stripPrefix(s"$tag-").toInt)
     assert(seqOf("A") == (0 until n) && seqOf("B") == (0 until n))
+    // each stamp is floored by its parent's: strictly increasing
+    val ts = snaps.map(_.ts.get)
+    assert(ts.zip(ts.tail).forall { case (a, b) => a < b },
+      s"commit stamps must increase along the chain: $ts")
     rm(base.toFile)
+  }
+
+  test("guard: chain file names stay inside graft.tables") {
+    // the on-disk layout (marker, writer token, commit record,
+    // watermarks) is VersionStore's alone: every other module reads a
+    // chain through Snapshot. The one exception is ScaleExperiment's
+    // data-generator marker, which names no chain file.
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: $root")
+    val name = raw"(?<![A-Za-z0-9])_GRAFT_[A-Za-z0-9_]*".r
+    val allowed = Map("graft/ScaleExperiment.scala" -> Set("_GRAFT_GEN_OK_v2"))
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val offenders = files(root).flatMap { f =>
+      val rel = root.toPath.relativize(f.toPath).toString
+      if (rel.startsWith("graft/tables/")) Nil
+      else java.nio.file.Files.readAllLines(f.toPath,
+          java.nio.charset.StandardCharsets.UTF_8).asScala.zipWithIndex
+        .flatMap { case (l, i) =>
+          name.findAllIn(l)
+            .filterNot(allowed.getOrElse(rel, Set.empty[String]))
+            .map(n => s"$rel:${i + 1}: $n")
+        }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
