@@ -780,43 +780,40 @@ object Dedup {
     * five consumers of one artifact, hash-equal to a DuckDB replay
     * that recomputes the same pair set), and measured in
     * ScaleExperiment (family total with vs without the artifact). */
-  /** Committed versions of the edge artifact at `path` — VERSIONED
-    * MANIFEST-COMMIT layout (r8-verdict ask #4): each build/increment
-    * writes `path/v=<n>/{edges,degrees}` and then atomically PUTs a
-    * commit marker; readers only count marked versions, so a torn
-    * writer (crash between the two tables, object-store copy caught
-    * mid-flight) is invisible instead of serving mismatched halves. */
-  private def edgeVersions(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Seq[Long] =
-    graft.tables.VersionStore.committed(spark, path)
+  def edgeTable(docs: DataFrame, tau: Double, path: String): DataFrame =
+    edgeTableFrom(jaccardJoin(docs, tau), path)
 
-  /** Write edges+degrees into a staged `path/v=<id>` via the shared
-    * [[graft.tables.VersionStore.publish]] (atomic marker commit — a
-    * crash between the two tables leaves an unmarked dir no reader
-    * sees, reaped by the next retention), then drop committed
-    * versions older than the newest two (the retention discipline
-    * the CDC chain uses — the head plus the replay base). Returns
-    * the committed edges frame. */
+  /** Commit edges+degrees as the next version of the artifact at
+    * `path` after `head` — VERSIONED commit layout (r8-verdict ask
+    * #4): [[graft.tables.VersionStore.commit]] stages
+    * `edges/` and `degrees/` under the version dir, records every
+    * file it wrote, then atomically PUTs the commit marker; readers
+    * only count marked versions, so a torn writer (crash between the
+    * two tables, object-store copy caught mid-flight) is invisible
+    * instead of serving mismatched halves, and reaped by the next
+    * retention. A concurrent build that takes the same id first
+    * surfaces as a conflict; nothing overwrites a committed version.
+    * Committed versions older than the newest two are then dropped
+    * (the retention discipline the CDC chain uses — the head plus the
+    * replay base). Returns the committed edges frame. */
   private def publishEdgeVersion(edges: DataFrame, path: String,
-                                 id: Long): DataFrame = {
+                                 head: Option[graft.tables.Snapshot],
+                                 op: String): DataFrame = {
     val spark = edges.sparkSession
-    graft.tables.VersionStore.publish(spark, path, id) { stage =>
+    val vs = graft.tables.VersionStore
+    val snap = vs.commit(spark, path, head) { stage =>
       edges.repartition(col("doc_a"))
-        .write.mode("overwrite").parquet(s"$stage/edges")
-      spark.read.parquet(s"$stage/edges")
+        .write.mode("overwrite").parquet(s"${stage.path}/edges")
+      spark.read.parquet(s"${stage.path}/edges")
         .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("deg"))
         .repartition(col("doc_id"))
-        .write.mode("overwrite").parquet(s"$stage/degrees")
+        .write.mode("overwrite").parquet(s"${stage.path}/degrees")
+      graft.tables.Snapshot(path, stage.version,
+        vs.stagedFiles(spark, stage), op = op)
     }
-    graft.tables.VersionStore.retain(spark, path, keepLast = 2): Unit
-    spark.read.parquet(s"$path/v=$id/edges")
-  }
-
-  def edgeTable(docs: DataFrame, tau: Double, path: String): DataFrame = {
-    val spark = docs.sparkSession
-    val next = edgeVersions(spark, path).maxOption.getOrElse(-1L) + 1
-    publishEdgeVersion(jaccardJoin(docs, tau), path, next)
+    vs.retain(spark, path, keepLast = 2): Unit
+    spark.read.parquet(s"${snap.vdir}/edges")
   }
 
   /** [[edgeTable]] from an already-derived exact pair set — pairs
@@ -825,19 +822,15 @@ object Dedup {
     * and a minhash index built in the same session (q_graph_incr's
     * shape: build + index + increment used to pay the shingle pass
     * twice). */
-  def edgeTableFrom(pairs: DataFrame, path: String): DataFrame = {
-    val spark = pairs.sparkSession
-    val next = edgeVersions(spark, path).maxOption.getOrElse(-1L) + 1
-    publishEdgeVersion(pairs, path, next)
-  }
+  def edgeTableFrom(pairs: DataFrame, path: String): DataFrame =
+    publishEdgeVersion(pairs, path,
+      graft.tables.VersionStore.latest(pairs.sparkSession, path), "BUILD")
 
   /** Read back the newest COMMITTED artifact version — an unmarked
-    * (torn) `v=<n>` dir is never served. */
+    * (torn) version dir is never served. */
   def readEdgeTable(spark: org.apache.spark.sql.SparkSession,
                     path: String): EdgeArtifact = {
-    val vs = edgeVersions(spark, path)
-    require(vs.nonEmpty, s"no committed edge-artifact version under $path")
-    val vdir = s"$path/v=${vs.max}"
+    val vdir = graft.tables.VersionStore.snapshot(spark, path).vdir
     EdgeArtifact(spark.read.parquet(s"$vdir/edges"),
       spark.read.parquet(s"$vdir/degrees"))
   }
@@ -872,14 +865,11 @@ object Dedup {
     // Cost: one rewrite of the PAIR-sized artifact per batch — pairs
     // are orders of magnitude fewer than documents, so this is
     // changelog-economy, not a corpus pass.
-    val spark = fresh.sparkSession
-    val vs = edgeVersions(spark, path)
-    require(vs.nonEmpty,
-      s"edgeTableIncrement needs a committed artifact under $path")
-    val merged = spark.read.parquet(s"$path/v=${vs.max}/edges")
+    val head = graft.tables.VersionStore.snapshot(fresh.sparkSession, path)
+    val merged = fresh.sparkSession.read.parquet(s"${head.vdir}/edges")
       .unionByName(incrementalPairs(idx, fresh, tau = tau))
       .dropDuplicates("doc_a", "doc_b")
-    publishEdgeVersion(merged, path, vs.max + 1)
+    publishEdgeVersion(merged, path, Some(head), "INCREMENT")
   }
 
   /** Keep-best cluster dedup policy (#57n) over a near-dup pair frame:

@@ -2842,8 +2842,9 @@ object Queries {
       .map(_.getString(1)).toSeq
     require(opsCln == Seq("CLONE", "DELETE"),
       s"clone lifecycle must ride its own op log, got $opsCln")
-    require(!new java.io.File(s"$cln/v=0").listFiles()
-      .exists(_.getName.endsWith(".parquet")),
+    require(!new java.io.File(
+        graft.tables.VersionStore.snapshot(s, cln, Some(0L)).vdir)
+      .listFiles().exists(_.getName.endsWith(".parquet")),
       "CLONE must not copy data files")
     def roll(t: String, side: String) =
       Scale.readTable(s, t).groupBy("event_type")
@@ -3046,8 +3047,9 @@ object Queries {
       .write.parquet(src)                        // keeps the gate cheap
     Scale.deleteWhere(s, src, a, col("event_type") === "error")
     Scale.cloneTable(s, a, b)
-    require(!new java.io.File(s"$b/v=0").listFiles()
-      .exists(_.getName.endsWith(".parquet")),
+    require(!new java.io.File(
+        graft.tables.VersionStore.snapshot(s, b, Some(0L)).vdir)
+      .listFiles().exists(_.getName.endsWith(".parquet")),
       "a shallow clone must not copy data files")
     Scale.updateWhere(s, src, b, col("event_type") === "click",
       Seq("value" -> (col("value") * 2)))
@@ -7075,8 +7077,9 @@ object Queries {
     * .scd2MergeStream]]): the events changelog cut into 4 disjoint
     * ascending time ranges and folded into a PERSISTENT versioned
     * dimension history — each chunk one [[Relational.scd2Merge]]
-    * under the manifest-commit chain (batch id merges its committed
-    * predecessor, overwrites v=id: replay-idempotent). The final
+    * under the commit-once version chain (batch id merges its
+    * committed predecessor and commits v=id once; a replay of a
+    * committed id skips). The final
     * history must equal the ONE-SHOT scd2 of the whole changelog
     * bit-for-bit (the q_scd2_incr restriction theorem, now through
     * the streaming sink's version chain), so the oracle is q_scd2's

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
 import graft.tables.{Footers, Snapshot, Tables, VersionStore}
+import graft.tables.VersionStore.withCommitRetry
 
 /** Scale mechanics that don't change query semantics (SURVEY §5):
   * SQL-surface registration, skew-salted joins, bucketed co-located
@@ -219,33 +220,6 @@ object Scale {
       }.toSeq
     fs.delete(tmp, true): Unit
     staged
-  }
-
-  /** The optimistic-concurrency commit loop: `body` resolves the head,
-    * stages its output and commits through
-    * [[graft.tables.VersionStore.commit]]; a conflict (a concurrent
-    * writer committed the id first) re-runs the WHOLE body so hit
-    * detection re-resolves against the new head — the Delta/Iceberg
-    * retry, bounded so a livelock surfaces as the last conflict
-    * instead of spinning. */
-  private def withCommitRetry[A](attempts: Int = 5)(body: => A): A = {
-    var left = attempts
-    while (true) {
-      try return body
-      catch {
-        case e: VersionStore.VersionConflictException =>
-          left -= 1
-          if (left <= 0) throw e
-          // linear backoff: a conflict can also mean YOUNG crash
-          // debris at our target id (publishExclusive's age gate
-          // presumes a live racer) — the retries must outlast the
-          // debris grace (default 4 s; total sleep here ≈ 6 s at the
-          // default 5 attempts) or a crashed writer's leftover would
-          // hard-fail every DML until it ages out (r12 review).
-          Thread.sleep(600L * (attempts - left))
-      }
-    }
-    throw new IllegalStateException("unreachable")
   }
 
   /** A DML batch carried a row that fails a table CHECK constraint —
@@ -1173,14 +1147,12 @@ object Scale {
   /** DESCRIBE HISTORY: one row per committed version — (version, the
     * operation that produced it, its detail, WHEN it committed) —
     * read from the chain's commit records. `when` is the monotonic
-    * commit stamp ([[VersionStore.commit]]; NULL only for versions
-    * written by a plain publish, which carry no record). The frame is
+    * commit stamp ([[VersionStore.commit]]). The frame is
     * version-count-sized metadata; no data file is ever opened. */
   def history(spark: SparkSession, tableDir: String): DataFrame = {
     import spark.implicits._
     VersionStore.snapshots(spark, tableDir).map { s =>
-      (s.version, if (s.op.isEmpty) "UNKNOWN" else s.op, s.detail,
-        s.ts.map(new java.sql.Timestamp(_)).orNull)
+      (s.version, s.op, s.detail, new java.sql.Timestamp(s.ts))
     }.toDF("version", "op", "detail", "when")
   }
 
@@ -1335,26 +1307,18 @@ object Scale {
     * Delta spelling; RETAIN k VERSIONS stays for count-based policy):
     * keep every version whose commit stamp is within the window (plus
     * the head, always), drop the rest through the same reference-
-    * counted [[graft.tables.VersionStore.retain]]. A version with NO
-    * resolvable stamp is kept — never delete what can't be dated.
-    * Monotonic stamps make the in-window set a suffix of the version
-    * ids, so the cutoff maps exactly onto retain's keepLast. Returns
-    * the pruned ids. */
+    * counted [[graft.tables.VersionStore.retain]]. Monotonic stamps
+    * make the in-window set a suffix of the version ids, so the cutoff
+    * maps exactly onto retain's keepLast. Returns the pruned ids. */
   def vacuumHours(spark: SparkSession, tableDir: String,
                   hours: Double): Seq[Long] = {
-    val stamped = VersionStore.stamps(spark, tableDir)
-    require(stamped.nonEmpty, s"no committed versions under $tableDir")
+    val snaps = VersionStore.snapshots(spark, tableDir)
+    require(snaps.nonEmpty, s"no committed versions under $tableDir")
     val cutoff =
       System.currentTimeMillis() - (hours * 3600 * 1000).toLong
-    // prune exactly the maximal OLDEST-first run of versions PROVABLY
-    // dated out of the window — retain's keepLast is a suffix, and
-    // counting undatable versions as "keep" would smuggle them into
-    // that suffix while pruning the very versions the pledge protects
-    // (r12 review: an unstamped v0 under stamped out-of-window
-    // successors must stop pruning at zero, not shift it upward)
-    val pruneable = stamped.takeWhile(_._2.exists(_ <= cutoff)).size
+    val pruneable = snaps.takeWhile(_.ts <= cutoff).size
     VersionStore.retain(spark, tableDir,
-      math.max(1, stamped.size - pruneable))
+      math.max(1, snaps.size - pruneable))
   }
 
   // ---- File-skipping: per-file stats index + pruned read ----------
@@ -1548,24 +1512,13 @@ object Scale {
     * the skip accounting (spec-asserted). */
   def readPruned(spark: SparkSession, dir: String, condSql: String,
                  stats: DataFrame): (DataFrame, PruneStats) = {
-    val statCols = stats.columns.collect {
-      case c if c.startsWith("min_") => c.stripPrefix("min_")
-    }.toSet
-    val ncCols = stats.columns.collect {
-      case c if c.startsWith("nc_") => c.stripPrefix("nc_")
-    }.toSet
     val total = stats.count()
-    val keep = mayContain(spark, condSql, statCols, ncCols,
-      stats.columns.contains("cnt")) match {
-      case Some(p) => stats.where(expr(p))
-      case None => stats
-    }
-    val files = keep.select("__f").collect().map(_.getString(0))
+    val files = statsSurvivors(spark, stats, condSql).getOrElse(
+      stats.select("__f").collect().map(_.getString(0)).toSeq)
     val out =
       if (files.isEmpty)
         spark.read.parquet(dir).limit(0).where(expr(condSql))
-      else spark.read.parquet(files.toIndexedSeq: _*)
-        .where(expr(condSql))
+      else spark.read.parquet(files: _*).where(expr(condSql))
     (out, PruneStats(total, files.length.toLong))
   }
 
@@ -1577,15 +1530,15 @@ object Scale {
     * has been ANALYZEd ([[analyzeTable]]) — a file-count-sized frame
     * keyed by the record's file paths. */
   def statsOf(spark: SparkSession, tableDir: String, v: Long)
-      : Option[DataFrame] = {
-    val p = new Path(statsDir(s"$tableDir/v=$v"))
-    if (!VersionStore.fsOf(spark, tableDir).exists(p)) None
-    else Some(spark.read.parquet(p.toString))
-  }
+      : Option[DataFrame] =
+    statsOf(spark, VersionStore.snapshot(spark, tableDir, Some(v)))
 
   private def statsOf(spark: SparkSession, snap: Snapshot)
-      : Option[DataFrame] =
-    statsOf(spark, snap.dir, snap.version)
+      : Option[DataFrame] = {
+    val p = new Path(statsDir(snap.vdir))
+    if (!VersionStore.fsOf(spark, snap.dir).exists(p)) None
+    else Some(spark.read.parquet(p.toString))
+  }
 
   private def writeStats(spark: SparkSession, vdirOrStage: String,
                          stats: DataFrame): Unit =

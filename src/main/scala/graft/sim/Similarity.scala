@@ -630,10 +630,14 @@ object Similarity {
 
   /** Train ONCE, serve many: persist the IVF index — centroids,
     * cell assignments, and optionally the PQ codebook + codes — as a
-    * versioned, manifest-committed artifact at `path` (the
-    * [[graft.tables.VersionStore]] discipline shared with the edge
-    * artifact and CDC chains: staged write, atomic marker, torn
-    * writers invisible, newest two versions retained).
+    * versioned artifact at `path`, committed as the next version
+    * through [[graft.tables.VersionStore.commit]] (the discipline
+    * shared with the edge artifact and CDC chains: staged write, a
+    * record listing every file written, atomic marker, torn writers
+    * invisible, a racing build at the same id refused as a conflict
+    * rather than overwriting, newest two versions retained). Readers
+    * find `centroids/`, `assigned/`, `codebook/` and `codes/` under
+    * the committed snapshot's version dir.
     *
     * The r9 verdict's point: at 100 TB the index BUILD (train + one
     * full assignment pass + PQ encode) is the expensive step, and
@@ -658,37 +662,40 @@ object Similarity {
     val spark = emb.sparkSession
     val (pinned, cents) = ivfPinned(emb, centroids, trainIters)
     val assigned = pinned.df
-    val id = graft.tables.VersionStore.head(spark, path)
-      .map(_ + 1).getOrElse(0L)
-    try graft.tables.VersionStore.publish(spark, path, id) { stage =>
-      cents.write.mode("overwrite").parquet(s"$stage/centroids")
+    val vs = graft.tables.VersionStore
+    val id = try vs.commit(spark, path, vs.latest(spark, path)) { stage =>
+      cents.write.mode("overwrite").parquet(s"${stage.path}/centroids")
       // cell-clustered layout: a probe reads co-located cells
       assigned.repartition(col("cid"))
-        .write.mode("overwrite").parquet(s"$stage/assigned")
+        .write.mode("overwrite").parquet(s"${stage.path}/assigned")
       pq.foreach { case (m, ksub) =>
         val cb = trainPqCodebook(assigned, cents, m, ksub)
-        cb.write.mode("overwrite").parquet(s"$stage/codebook")
+        cb.write.mode("overwrite").parquet(s"${stage.path}/codebook")
         pqEncode(assigned, cents, cb, m).repartition(col("cid"))
-          .write.mode("overwrite").parquet(s"$stage/codes")
+          .write.mode("overwrite").parquet(s"${stage.path}/codes")
       }
-    } finally pinned.close()
-    graft.tables.VersionStore.retain(spark, path, keepLast = 2): Unit
+      graft.tables.Snapshot(path, stage.version,
+        vs.stagedFiles(spark, stage), op = "BUILD")
+    }.version finally pinned.close()
+    vs.retain(spark, path, keepLast = 2): Unit
     id
   }
 
   /** Read back the newest committed index version. */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession,
-                   path: String): AnnIndex = {
-    val vs = graft.tables.VersionStore.committed(spark, path)
-    require(vs.nonEmpty, s"no committed ANN index under $path")
-    val vdir = s"$path/v=${vs.max}"
-    val fs = graft.tables.VersionStore.fsOf(spark, path)
+                   path: String): AnnIndex =
+    annIndexOf(spark, graft.tables.VersionStore.snapshot(spark, path))
+
+  /** The index tables under committed version `snap`'s dir. */
+  private def annIndexOf(spark: org.apache.spark.sql.SparkSession,
+                         snap: graft.tables.Snapshot): AnnIndex = {
+    val fs = graft.tables.VersionStore.fsOf(spark, snap.dir)
     def sub(n: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(s"$vdir/$n")
+      val p = new org.apache.hadoop.fs.Path(s"${snap.vdir}/$n")
       if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
     }
-    AnnIndex(spark.read.parquet(s"$vdir/centroids"),
-      spark.read.parquet(s"$vdir/assigned"),
+    AnnIndex(spark.read.parquet(s"${snap.vdir}/centroids"),
+      spark.read.parquet(s"${snap.vdir}/assigned"),
       sub("codebook"), sub("codes"))
   }
 
@@ -703,7 +710,8 @@ object Similarity {
   def annIndexAppend(path: String, fresh: DataFrame): Long = {
     val spark = fresh.sparkSession
     graft.functions.VectorDot.register(spark)
-    val idx = readAnnIndex(spark, path)
+    val head = graft.tables.VersionStore.snapshot(spark, path)
+    val idx = annIndexOf(spark, head)
     // centroids unpinned: assignTo collects the ≤k rows itself, and the
     // re-publish below re-reads the (tiny) centroid parquet directly
     val cents = idx.centroids
@@ -711,22 +719,24 @@ object Similarity {
     val pinned = graft.core.Pin(assignTo(pv, cents))
     val freshAssigned = pinned.df
     val merged = idx.assigned.unionByName(freshAssigned)
-    val id = graft.tables.VersionStore.head(spark, path).get + 1
-    try graft.tables.VersionStore.publish(spark, path, id) { stage =>
-      cents.write.mode("overwrite").parquet(s"$stage/centroids")
+    val vs = graft.tables.VersionStore
+    val id = try vs.commit(spark, path, Some(head)) { stage =>
+      cents.write.mode("overwrite").parquet(s"${stage.path}/centroids")
       merged.repartition(col("cid"))
-        .write.mode("overwrite").parquet(s"$stage/assigned")
+        .write.mode("overwrite").parquet(s"${stage.path}/assigned")
       (idx.codebook, idx.codes) match {
         case (Some(cb), Some(codes)) =>
           val m = cb.agg(max(col("mi"))).head().getInt(0) + 1
-          cb.write.mode("overwrite").parquet(s"$stage/codebook")
+          cb.write.mode("overwrite").parquet(s"${stage.path}/codebook")
           codes.unionByName(pqEncode(freshAssigned, cents, cb, m))
             .repartition(col("cid"))
-            .write.mode("overwrite").parquet(s"$stage/codes")
+            .write.mode("overwrite").parquet(s"${stage.path}/codes")
         case _ => ()
       }
-    } finally pinned.close()
-    graft.tables.VersionStore.retain(spark, path, keepLast = 2): Unit
+      graft.tables.Snapshot(path, stage.version,
+        vs.stagedFiles(spark, stage), op = "APPEND")
+    }.version finally pinned.close()
+    vs.retain(spark, path, keepLast = 2): Unit
     id
   }
 

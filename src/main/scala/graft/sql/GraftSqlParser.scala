@@ -158,8 +158,7 @@ case class GraftVacuumCommand(tableDir: String, keepLast: Int)
 }
 
 /** `VACUUM … RETAIN n HOURS`: time-based retention off the commit
-  * stamps (versions newer than the window — and the head — survive;
-  * undatable versions are never dropped). */
+  * stamps (versions newer than the window — and the head — survive). */
 case class GraftVacuumHoursCommand(tableDir: String, hours: Double)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(

@@ -100,35 +100,85 @@ object Streams {
         ()
     }
 
-  /** Publish `df` as `snapDir/v=<id>` ([[graft.tables.VersionStore
-    * .publish]]: staged write, rename, then the atomic marker PUT that
-    * makes the version visible). Version-chain mechanics (marker-gated
-    * listing, staged atomic publish, watermark, retention) live in the
-    * SHARED [[graft.tables.VersionStore]] layer (r9-verdict ask #5: CDC
+  /** Commit batch `id` of a batch-versioned chain (the CDC snapshot
+    * chain, the SCD2 history) as version `id`: `next` turns the
+    * predecessor's full state — `v=<id-1>`, or an empty frame of
+    * `emptyBase` for batch 0 — into the new full state, which
+    * [[graft.tables.VersionStore.commit]] publishes with a record
+    * listing its files and schema (so reading a version back needs no
+    * footer-inference job). Version-chain mechanics (marker-gated listing,
+    * staged exclusive commit, watermark, retention) live in the SHARED
+    * [[graft.tables.VersionStore]] layer (r9-verdict ask #5: CDC
     * snapshots, the edge artifact, the ANN index and COW DML all ran
     * parallel copies of this logic; the torn-dir / replay edge cases
-    * are now proven once, against the common code). */
-  private def publishVersion(df: DataFrame, snapDir: String,
-                             id: Long): Unit =
-    graft.tables.VersionStore.publish(df.sparkSession, snapDir, id) {
-      stage => df.write.mode("overwrite").parquet(stage)
-    }: Unit
+    * are now proven once, against the common code).
+    *
+    * Replay rules, in order:
+    *  - FABRICATION GUARD (r8-verdict nit #1 + r8-advice high): at or
+    *    below the retention watermark, or with no committed
+    *    predecessor once retention has pruned ANY version, the batch
+    *    is an out-of-window replay — merging it onto an empty base
+    *    would fabricate a historical snapshot that [[cdcSnapshotAsOf]]
+    *    would then serve as truth. Refused. The foreachBatch
+    *    discipline never hits this (checkpoint recovery replays only
+    *    the last uncommitted batch, whose predecessor [[cdcRetain]]
+    *    always keeps).
+    *  - A batch whose version is already committed is SKIPPED: it was
+    *    built from the same predecessor with the same rows, so the
+    *    committed version already is its output.
+    *  - A batch that would leave a gap in the ids is refused.
+    * A concurrent writer that takes the id first surfaces as a
+    * conflict; the retry ([[graft.tables.VersionStore.withCommitRetry]])
+    * then finds the id committed and skips. */
+  private def commitBatch(batch: DataFrame, dir: String, id: Long,
+                          op: String, emptyBase: StructType)
+                         (next: DataFrame => DataFrame): Unit = {
+    val vs = graft.tables.VersionStore
+    val s = batch.sparkSession
+    vs.withCommitRetry() {
+      val done = vs.committed(s, dir)
+      val prev = done.filter(_ < id).maxOption
+      vs.prunedWatermark(s, dir).foreach { wm =>
+        require(id > wm,
+          s"batch $id is at or below the retention watermark $wm — " +
+            "its predecessor chain was pruned; refusing to fabricate " +
+            "a historical snapshot")
+        require(prev.nonEmpty,
+          s"batch $id has no committed predecessor but retention has " +
+            s"pruned up to version $wm — refusing to merge from an " +
+            "empty base")
+      }
+      if (!done.contains(id)) {
+        require(prev.getOrElse(-1L) == id - 1,
+          s"batch $id would leave a gap in the version ids under $dir " +
+            s"(newest committed: ${prev.getOrElse("none")})")
+        val parent = prev.map(v => vs.snapshot(s, dir, Some(v)))
+        val base = parent.map(vs.read(s, _)).getOrElse(s.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), emptyBase))
+        vs.commit(s, dir, parent) { stage =>
+          val out = next(base)
+          out.write.mode("append").parquet(stage.path)
+          graft.tables.Snapshot(dir, id, vs.stagedFiles(s, stage),
+            schema = Some(out.schema), op = op, detail = s"batch $id")
+        }: Unit
+      }
+    }
+  }
 
   /** One CDC MERGE step (#81): apply a changelog micro-batch onto the
     * persistent snapshot at `snapDir` — the composition of
-    * [[graft.ops.Relational.upsert]] with the [[idempotentParquetSink]]
-    * versioning discipline, shared verbatim by the streaming sink
-    * ([[cdcMergeSink]]), the graded chunked replay (q_stream_upsert)
-    * and the StreamingSpec restart gate.
+    * [[graft.ops.Relational.upsert]] with the version chain, shared
+    * verbatim by the streaming sink ([[cdcMergeSink]]), the graded
+    * chunked replay (q_stream_upsert) and the StreamingSpec restart
+    * gate.
     *
-    * Restart safety is the version chain: batch `id` ALWAYS merges the
-    * latest snapshot version `< id` (its original predecessor) with
-    * overwrite semantics, so a batch REPLAYED after a failure —
-    * Structured Streaming's at-least-once re-delivery — rewrites
-    * `v=<id>` from the same predecessor with the same rows instead of
-    * re-applying onto its own output: at-least-once delivery +
-    * deterministic predecessor + idempotent overwrite = exactly-once
-    * snapshot state, no transactional table format needed. Within a
+    * Restart safety is the version chain ([[commitBatch]]): batch `id`
+    * merges its predecessor `v=<id-1>` and commits `v=<id>` exactly
+    * once, so a batch REPLAYED after a failure — Structured
+    * Streaming's at-least-once re-delivery — finds its version
+    * committed and skips instead of re-applying onto its own output:
+    * at-least-once delivery + deterministic predecessor + commit-once
+    * versions = exactly-once snapshot state. Within a
     * batch, last-writer-wins per `key` under the total `order` (a
     * changelog batch can carry several updates for one key).
     *
@@ -142,43 +192,18 @@ object Streams {
                op: Option[String] = None)
               (batch: DataFrame, id: Long): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val s = batch.sparkSession
-    val prev = graft.tables.VersionStore.committed(s, snapDir).filter(_ < id)
-    // FABRICATION GUARD (r8-verdict nit #1 + r8-advice high): once
-    // retention has pruned ANY version, an empty predecessor chain can
-    // only mean an out-of-window replay — merging it onto the empty
-    // base would publish a bogus historical snapshot that
-    // cdcSnapshotAsOf would then serve as truth. Refuse loudly; the
-    // foreachBatch discipline never hits this (checkpoint recovery
-    // replays only the last uncommitted batch, whose predecessor
-    // cdcRetain always keeps).
-    graft.tables.VersionStore.prunedWatermark(s, snapDir).foreach { wm =>
-      require(id > wm,
-        s"batch $id is at or below the retention watermark $wm — " +
-          "its predecessor chain was pruned; refusing to fabricate " +
-          "a historical snapshot")
-      require(prev.nonEmpty,
-        s"batch $id has no committed predecessor but retention has " +
-          s"pruned up to v=$wm — refusing to merge from an empty base")
-    }
     // the snapshot never carries the op column — strip it from the
     // empty-base schema so batch 0's output shape equals every later
     // version's (Relational.upsert's contract is base's shape)
     val baseSchema = StructType(
       batch.schema.filterNot(f => op.contains(f.name)))
-    val base = prev.maxOption match {
-      case Some(v) => s.read.parquet(s"$snapDir/v=$v")
-      case None =>
-        s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          baseSchema)
+    commitBatch(batch, snapDir, id, "CDC MERGE", baseSchema) { base =>
+      val w = Window.partitionBy(key.map(col): _*)
+        .orderBy(order.map(col(_).desc): _*)
+      val latest = batch.withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1).drop("__rn")
+      graft.ops.Relational.upsert(base, latest, key, op).drop("action")
     }
-    val w = Window.partitionBy(key.map(col): _*)
-      .orderBy(order.map(col(_).desc): _*)
-    val latest = batch.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-    publishVersion(
-      graft.ops.Relational.upsert(base, latest, key, op).drop("action"),
-      snapDir, id)
   }
 
   /** Streaming CDC sink (#81): every micro-batch of `changes` MERGED
@@ -250,22 +275,16 @@ object Streams {
     }
 
   /** Latest committed snapshot written by [[cdcMerge]]. */
-  def cdcSnapshot(spark: SparkSession, snapDir: String): DataFrame = {
-    val vs = graft.tables.VersionStore.committed(spark, snapDir)
-    require(vs.nonEmpty, s"no snapshot versions under $snapDir")
-    spark.read.parquet(s"$snapDir/v=${vs.max}")
-  }
+  def cdcSnapshot(spark: SparkSession, snapDir: String): DataFrame =
+    graft.tables.VersionStore.read(spark, snapDir)
 
   /** TIME TRAVEL: the snapshot as of version `v` — any committed
-    * `v=<id>` in the chain is a complete snapshot (each merge writes
-    * the full post-merge state), so an as-of read is one directory
-    * read, no log replay. */
+    * version in the chain is a complete snapshot (each merge writes
+    * the full post-merge state), so an as-of read is one version's
+    * files, no log replay. */
   def cdcSnapshotAsOf(spark: SparkSession, snapDir: String,
-                      v: Long): DataFrame = {
-    require(graft.tables.VersionStore.committed(spark, snapDir).contains(v),
-      s"version $v not present under $snapDir")
-    spark.read.parquet(s"$snapDir/v=$v")
-  }
+                      v: Long): DataFrame =
+    graft.tables.VersionStore.read(spark, snapDir, Some(v))
 
   /** CHANGE DATA FEED: the row-level changes between two committed
     * versions of a [[cdcMerge]] / [[scd2MergeStream]] chain — what
@@ -309,11 +328,11 @@ object Streams {
     * highest pruned id as a low-watermark file beside the chain.
     *
     * `keepLast >= 2` is REQUIRED (r8 advice): an at-least-once
-    * re-delivery of the head batch `id` merges the newest version
-    * `< id` — the head's PREDECESSOR, not the head itself — so the
-    * predecessor must survive retention or a replay would silently
-    * rebuild `v=<id>` from an empty base. Keeping two versions keeps
-    * every reachable replay's base; anything older is fenced by the
+    * re-delivery of the head batch `id` must pass [[commitBatch]]'s
+    * fabrication guard — which, once a watermark exists, wants a
+    * committed version `< id`, the head's PREDECESSOR — before it can
+    * skip as committed. Keeping two versions keeps every reachable
+    * replay inside the window; anything older is fenced by the
     * watermark ([[cdcMerge]] refuses ids at or below it, and refuses
     * an empty predecessor chain once the watermark exists). Returns
     * the ids dropped. */
@@ -321,7 +340,7 @@ object Streams {
                 keepLast: Int): Seq[Long] = {
     require(keepLast >= 2,
       "cdcRetain must keep the chain head AND its predecessor — " +
-        "a replayed head batch merges the predecessor as its base")
+        "a replayed head batch is fenced without its predecessor")
     graft.tables.VersionStore.retain(spark, snapDir, keepLast,
       watermark = true)
   }
@@ -331,11 +350,11 @@ object Streams {
     * chunk, applied onto the persistent history via
     * [[graft.ops.Relational.scd2Merge]] (carry-in state = one row per
     * affected key; history never window-scanned) under the SAME
-    * versioned manifest-commit discipline as [[cdcMerge]]: batch `id`
-    * always merges the latest committed version `< id` and overwrites
-    * `v=id`, so at-least-once replay rewrites the version identically
-    * — exactly-once history state on a plain parquet chain, torn
-    * writers invisible to readers. The warehouse "stream Debezium
+    * commit-once version chain as [[cdcMerge]] ([[commitBatch]]):
+    * batch `id` merges `v=<id-1>` and commits `v=<id>`, and an
+    * at-least-once replay of a committed batch skips — exactly-once
+    * history state on a plain parquet chain, torn writers invisible
+    * to readers. The warehouse "stream Debezium
     * into the customer dimension with full history" job. Contract:
     * batches must partition the changelog in ascending `order` ranges
     * (the log-ordered CDC feed; same contract as [[cdcMerge]]'s
@@ -344,15 +363,6 @@ object Streams {
   def scd2MergeStream(histDir: String, key: Seq[String],
                       order: Seq[String], value: String)
                      (batch: DataFrame, id: Long): Unit = {
-    val s = batch.sparkSession
-    val prev = graft.tables.VersionStore.committed(s, histDir).filter(_ < id)
-    graft.tables.VersionStore.prunedWatermark(s, histDir).foreach { wm =>
-      require(id > wm,
-        s"batch $id is at or below the retention watermark $wm")
-      require(prev.nonEmpty,
-        s"batch $id has no committed predecessor but retention has " +
-          s"pruned up to v=$wm — refusing to merge from an empty base")
-    }
     val histSchema = StructType(
       key.map(k => batch.schema(k)) ++ Seq(
         StructField("version", LongType),
@@ -360,14 +370,8 @@ object Streams {
         StructField("valid_from", batch.schema(order.head).dataType),
         StructField("valid_to", batch.schema(order.head).dataType),
         StructField("is_current", BooleanType)))
-    val base = prev.maxOption match {
-      case Some(v) => s.read.parquet(s"$histDir/v=$v")
-      case None => s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), histSchema)
-    }
-    publishVersion(
-      graft.ops.Relational.scd2Merge(base, batch, key, order, value),
-      histDir, id)
+    commitBatch(batch, histDir, id, "SCD2 MERGE", histSchema)(base =>
+      graft.ops.Relational.scd2Merge(base, batch, key, order, value))
   }
 
   /** [[scd2MergeStream]] as a `foreachBatch` starter. */

@@ -28,11 +28,12 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   *    unprunable by partition — sound, never wrong. Values are stored
   *    as strings and cast to the column's declared type at use.
   *  - `op`, `detail`, `ts`: what produced the version and when (epoch
-  *    millis, monotonic along the chain — see [[VersionStore.commit]]).
+  *    millis, monotonic along the chain — stamped by
+  *    [[VersionStore.commit]], so a record a writer is still building
+  *    carries 0 until then).
   *
-  * A version written by plain [[VersionStore.publish]] carries no
-  * record: it resolves to the parquet files directly under `v=<n>`
-  * with empty metadata. */
+  * Every committed version carries its record; a chain with no
+  * record has no version. */
 final case class Snapshot(
     dir: String,
     version: Long,
@@ -43,7 +44,12 @@ final case class Snapshot(
     partitions: Map[String, Map[String, String]] = Map.empty,
     op: String = "",
     detail: String = "",
-    ts: Option[Long] = None)
+    ts: Long = 0L) {
+
+  /** The version's own directory: where the data files it wrote live
+    * (an artifact's `edges/`, `centroids/`, ... are subdirs of it). */
+  def vdir: String = VersionStore.versionDir(dir, version)
+}
 
 object Snapshot {
 
@@ -63,7 +69,7 @@ object Snapshot {
           case (k, v) => k -> (JString(v): JValue) }) }),
       "op" -> JString(s.op),
       "detail" -> JString(s.detail),
-      "ts" -> s.ts.map(JLong(_)).getOrElse(JNothing))))
+      "ts" -> JLong(s.ts))))
   }
 
   private[tables] def fromJson(dir: String, version: Long, json: String)
@@ -100,9 +106,10 @@ object Snapshot {
       op = str("op"),
       detail = str("detail"),
       ts = j \ "ts" match {
-        case JInt(n) => Some(n.toLong)
-        case JLong(n) => Some(n)
-        case _ => None
+        case JInt(n) => n.toLong
+        case JLong(n) => n
+        case t => throw new IllegalStateException(
+          s"commit record of version $version under $dir has no ts: $t")
       })
   }
 }

@@ -6,14 +6,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * implementation of the commit / retention / watermark discipline
   * that the CDC snapshot chain ([[graft.streaming.Streams]]), the
   * similarity-graph edge artifact ([[graft.dedup.Dedup.edgeTable]]),
-  * the ANN index artifact ([[graft.sim.Similarity.buildIvfIndex]]) and
+  * the ANN index artifact ([[graft.sim.Similarity.buildAnnIndex]]) and
   * copy-on-write DML ([[graft.ops.Scale.deleteWhere]]) all share —
   * previously three parallel copies of the same logic, each with its
   * own torn-dir and replay edge cases.
   *
   * Layout under a table root `dir`:
   * {{{
-  *   dir/v=<n>/...                 one version
+  *   dir/v=<n>/...                 one version ([[Snapshot.vdir]])
   *   dir/v=<n>/_GRAFT_COMMITTED    commit marker: the version EXISTS
   *                                 only once this zero-byte object is
   *                                 PUT (atomic create-if-absent)
@@ -25,22 +25,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                                 constraints, column mapping,
   *                                 partition values, op and timestamp
   *                                 — resolved into a [[Snapshot]]
-  *   dir/v=<n>/<f>.parquet         data files this version wrote; the
-  *                                 record may also point at files of
-  *                                 older versions or outside `dir`
+  *   dir/v=<n>/<f>.parquet         data files this version wrote, also
+  *                                 in subdirs (an artifact's
+  *                                 `edges/`, `centroids/`, ...); the
+  *                                 record lists every one and may also
+  *                                 point at files of older versions or
+  *                                 outside `dir`
   *   dir/v=<n>/_graft_stats/       optional per-file data-skipping
   *                                 stats ([[graft.ops.Scale]])
   *   dir/_GRAFT_PRUNED             retention low-watermark (highest id
   *                                 ever pruned), fencing out-of-window
   *                                 replays
   * }}}
-  * Versions written by plain [[publish]] (the CDC snapshot chain, the
-  * edge artifact, the ANN index) carry no record and no token: they
-  * are their parquet files.
+  * Every committed version of every chain carries its record.
   *
-  * Commit protocol ([[publish]]): the writer populates a staging dir
-  * (`_stage_v=<n>`), the stage is renamed to `v=<n>`, then the
-  * marker is PUT. On HDFS/local the rename is one metadata op; on
+  * Commit protocol ([[commit]] over [[publishExclusive]]): the writer
+  * populates a uniquely named staging dir (`_stage_v=<n>.<token>`),
+  * the record and the writer token are written into it, the stage is
+  * renamed to `v=<n>`, then the marker is PUT — create-if-absent, so
+  * a version id is committed ONCE and a second writer at the same id
+  * gets [[VersionConflictException]]; nothing ever overwrites a
+  * committed version. On HDFS/local the rename is one metadata op; on
   * S3-family stores rename is a non-atomic O(data) copy, which is
   * exactly why VISIBILITY hangs off the marker (a single object PUT,
   * atomic everywhere): a reader listing mid-copy sees an unmarked
@@ -80,6 +85,11 @@ object VersionStore {
 
   private def path(s: String) = new org.apache.hadoop.fs.Path(s)
 
+  /** Where version `v` of the chain at `dir` lives — the one spelling
+    * of the `v=<n>` layout ([[Snapshot.vdir]], [[Stage.vdir]]). */
+  private[tables] def versionDir(dir: String, v: Long): String =
+    s"$dir/v=$v"
+
   /** Committed version ids under `dir` — marker-gated, so a torn
     * writer (crash between data and marker, object-store rename
     * caught mid-copy) is invisible, never served. */
@@ -88,46 +98,50 @@ object VersionStore {
     val fs = fsOf(spark, dir)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v=")
-        && fs.exists(new org.apache.hadoop.fs.Path(st.getPath, CommitMarker)))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
       .map(_.getPath.getName.stripPrefix("v=").toLong)
+      .filter(marked(fs, dir, _))
   }
 
   /** Newest committed version id, if any. */
   def head(spark: SparkSession, dir: String): Option[Long] =
     headOf(fsOf(spark, dir), dir)
 
-  /** Publish version `id`: `write` populates the staging dir it is
-    * handed; the stage is renamed to `v=<id>` and the marker PUT —
-    * the version becomes visible exactly at the marker write. A
-    * pre-existing `v=<id>` (an at-least-once replay overwriting its
-    * own torn output) is deleted first, its marker going with it, so
-    * the rewrite window is invisible too. Returns the version dir. */
-  def publish(spark: SparkSession, dir: String, id: Long)
-             (write: String => Unit): String = {
-    val fs = fsOf(spark, dir)
-    val stage = path(s"$dir/$StagePrefix$id")
-    val dest = path(s"$dir/v=$id")
-    if (fs.exists(stage)) fs.delete(stage, true)
-    write(stage.toString)
-    if (fs.exists(dest)) fs.delete(dest, true)
-    if (!fs.rename(stage, dest))
-      throw new java.io.IOException(s"publish of $dest failed")
-    fs.create(new org.apache.hadoop.fs.Path(dest, CommitMarker), true)
-      .close()
-    dest.toString
-  }
-
   /** Signals an OPTIMISTIC-CONCURRENCY conflict: the version id this
     * writer computed from the head it read was committed by someone
-    * else first. The loser re-resolves the head and retries (the
-    * Delta/Iceberg commit loop — [[graft.ops.Scale]]'s DML does). */
+    * else first. The loser re-resolves the head and retries
+    * ([[withCommitRetry]], the Delta/Iceberg commit loop). */
   final class VersionConflictException(msg: String)
     extends RuntimeException(msg)
 
-  /** Publish version `id` EXCLUSIVELY: unlike [[publish]] (whose
-    * overwrite-on-replay semantics a single-writer streaming sink
-    * wants), a pre-existing COMMITTED `v=<id>` means another writer
+  /** The optimistic-concurrency commit loop: `body` resolves the head,
+    * stages its output and commits through [[commit]]; a conflict (a
+    * concurrent writer committed the id first) re-runs the WHOLE body
+    * so everything derived from the head is re-resolved against the
+    * new one — the Delta/Iceberg retry, bounded so a livelock surfaces
+    * as the last conflict instead of spinning. */
+  def withCommitRetry[A](attempts: Int = 5)(body: => A): A = {
+    var left = attempts
+    while (true) {
+      try return body
+      catch {
+        case e: VersionConflictException =>
+          left -= 1
+          if (left <= 0) throw e
+          // linear backoff: a conflict can also mean YOUNG crash
+          // debris at our target id (publishExclusive's age gate
+          // presumes a live racer) — the retries must outlast the
+          // debris grace (default 4 s; total sleep here ≈ 6 s at the
+          // default 5 attempts) or a crashed writer's leftover would
+          // hard-fail every commit until it ages out (r12 review).
+          Thread.sleep(600L * (attempts - left))
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Publish version `id` EXCLUSIVELY — the protocol under [[commit]]:
+    * a pre-existing COMMITTED `v=<id>` means another writer
     * won the race for this id — the stage is discarded and
     * [[VersionConflictException]] thrown so the caller can re-read
     * the head and retry. The stage dir carries a unique suffix so
@@ -151,7 +165,7 @@ object VersionStore {
   def publishExclusive(spark: SparkSession, dir: String, id: Long)
                       (write: String => Unit): String = {
     val fs = fsOf(spark, dir)
-    val dest = path(s"$dir/v=$id")
+    val dest = path(versionDir(dir, id))
     def conflict() = throw new VersionConflictException(
       s"version $id under $dir already committed by a concurrent writer")
     def committedNow =
@@ -260,21 +274,16 @@ object VersionStore {
     finally in.close()
   }
 
-  /** Version `v`'s snapshot, its marker already checked: the commit
-    * record when there is one, else (a plain [[publish]]) the parquet
-    * files directly under `v=<n>` with empty metadata. */
+  /** Version `v`'s snapshot (its commit record), its marker already
+    * checked. */
   private def load(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                   v: Long): Snapshot = {
-    val vdir = path(s"$dir/v=$v")
-    try Snapshot.fromJson(dir, v,
-      readString(fs, new org.apache.hadoop.fs.Path(vdir, CommitRecord)))
-    catch {
-      case _: java.io.FileNotFoundException =>
-        Snapshot(dir, v, fs.listStatus(vdir).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.toString))
-    }
-  }
+                   v: Long): Snapshot =
+    Snapshot.fromJson(dir, v,
+      readString(fs, path(s"${versionDir(dir, v)}/$CommitRecord")))
+
+  private def marked(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                     v: Long): Boolean =
+    fs.exists(path(s"${versionDir(dir, v)}/$CommitMarker"))
 
   /** The newest committed version under `dir`: one listing, then a
     * marker check per candidate from the top (normally one). */
@@ -284,8 +293,7 @@ object VersionStore {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
       .flatMap(_.getPath.getName.stripPrefix("v=").toLongOption)
     catch { case _: java.io.FileNotFoundException => Seq.empty }
-    ids.sorted.reverseIterator.find(v =>
-      fs.exists(path(s"$dir/v=$v/$CommitMarker")))
+    ids.sorted.reverseIterator.find(marked(fs, dir, _))
   }
 
   /** The snapshot of committed version `version` (default: the head),
@@ -297,8 +305,7 @@ object VersionStore {
     val fs = fsOf(spark, dir)
     version match {
       case Some(v) =>
-        require(fs.exists(path(s"$dir/v=$v/$CommitMarker")),
-          s"version $v not committed under $dir")
+        require(marked(fs, dir, v), s"version $v not committed under $dir")
         load(fs, dir, v)
       case None =>
         latest(spark, dir).getOrElse(throw new IllegalArgumentException(
@@ -319,22 +326,29 @@ object VersionStore {
     committed(spark, dir).sorted.map(load(fs, dir, _))
   }
 
-  /** Each committed version with its commit timestamp, oldest first. A
-    * version without one (a plain [[publish]]) inherits its
-    * predecessor's: "as of" resolution then treats the pair as
-    * simultaneous — sound, and the LATER id wins the as-of pick. */
-  def stamps(spark: SparkSession, dir: String): Seq[(Long, Option[Long])] = {
-    var last = Option.empty[Long]
-    snapshots(spark, dir).map { s =>
-      last = s.ts.orElse(last)
-      s.version -> last
-    }
-  }
-
   /** A version being committed: the writer fills the staging dir
     * `path`, and names the files it writes there by their final
     * location under `vdir` (`dir/v=<version>`). */
   final case class Stage(path: String, version: Long, vdir: String)
+
+  /** Every parquet data file written into `stage` so far, subdirs
+    * included, named by its final location under `stage.vdir` — the
+    * `files` of a record whose version consists of exactly what it
+    * wrote (a snapshot chain's full state, an artifact's tables).
+    * Hidden names (`_…`, `.…`: Spark's own rule) are not data. */
+  def stagedFiles(spark: SparkSession, stage: Stage): Seq[String] = {
+    val fs = fsOf(spark, stage.path)
+    // listStatus, not listFiles(recursive): no block-location lookups
+    def walk(dir: org.apache.hadoop.fs.Path, rel: String): Seq[String] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) Nil
+        else if (st.isDirectory) walk(st.getPath, s"$rel$n/")
+        else if (n.endsWith(".parquet")) Seq(s"${stage.vdir}/$rel$n")
+        else Nil
+      }
+    walk(path(stage.path), "").sorted
+  }
 
   /** Commit the next version after `parent` (the head the caller
     * resolved; None for a new chain): makes the stage, runs `write` —
@@ -351,13 +365,12 @@ object VersionStore {
             (write: Stage => Snapshot): Snapshot = {
     val fs = fsOf(spark, dir)
     val id = parent.map(_.version + 1).getOrElse(0L)
-    val floor = parent.flatMap(_.ts).getOrElse(Long.MinValue)
+    val floor = parent.map(_.ts + 1).getOrElse(Long.MinValue)
     var out: Snapshot = null
     publishExclusive(spark, dir, id) { stage =>
       fs.mkdirs(path(stage)): Unit
-      out = write(Stage(stage, id, s"$dir/v=$id")).copy(dir = dir,
-        version = id,
-        ts = Some(math.max(System.currentTimeMillis(), floor + 1)))
+      out = write(Stage(stage, id, versionDir(dir, id))).copy(dir = dir,
+        version = id, ts = math.max(System.currentTimeMillis(), floor))
       val rec = fs.create(new org.apache.hadoop.fs.Path(stage, CommitRecord),
         true)
       try rec.write(Snapshot.toJson(out).getBytes("UTF-8"))
@@ -368,78 +381,70 @@ object VersionStore {
 
   /** The newest committed version whose commit timestamp is at or
     * before `tsMillis` — `TIMESTAMP AS OF` resolution (Delta's rule).
-    * Refuses a timestamp BEFORE the chain's first stamped commit (no
-    * version existed then) and an entirely unstamped chain. */
+    * Refuses a timestamp BEFORE the chain's first commit (no version
+    * existed then). */
   def versionAt(spark: SparkSession, dir: String, tsMillis: Long)
       : Long = {
-    val stamped = stamps(spark, dir)
-    require(stamped.nonEmpty, s"no committed versions under $dir")
-    val known = stamped.collect { case (v, Some(ts)) => (v, ts) }
-    require(known.nonEmpty,
-      s"chain under $dir carries no commit timestamps")
-    require(tsMillis >= known.head._2,
+    val snaps = snapshots(spark, dir)
+    require(snaps.nonEmpty, s"no committed versions under $dir")
+    require(tsMillis >= snaps.head.ts,
       s"timestamp $tsMillis predates the first commit " +
-        s"(${known.head._2}) of $dir")
-    known.filter(_._2 <= tsMillis).map(_._1).max
+        s"(${snaps.head.ts}) of $dir")
+    snaps.filter(_.ts <= tsMillis).map(_.version).max
   }
 
   /** Read committed version `version` (default: head) by resolving its
     * snapshot's files — the reader side of the pointer scheme. */
   def read(spark: SparkSession, dir: String,
            version: Option[Long] = None): DataFrame =
-    spark.read.parquet(snapshot(spark, dir, version).files: _*)
+    read(spark, snapshot(spark, dir, version))
+
+  /** Read `snap`'s files, under its recorded schema when it has one
+    * (no footer-inference job). Raw files: a COW table's column
+    * mapping is applied by [[graft.ops.Scale.readSnapshot]]. */
+  def read(spark: SparkSession, snap: Snapshot): DataFrame =
+    snap.schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(snap.files: _*)
+
+  /** The long kept in the side file `name` beside the chain at `dir`,
+    * None before the first [[raiseNote]]. */
+  private def readNote(spark: SparkSession, dir: String,
+                       name: String): Option[Long] =
+    try Some(readString(fsOf(spark, dir), path(s"$dir/$name")).trim.toLong)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** Raise the side file `name` to at least `v` (never lowers — stale
+    * ids can't rewind it). */
+  private def raiseNote(spark: SparkSession, dir: String, name: String,
+                        v: Long): Unit = {
+    val raised = math.max(v, readNote(spark, dir, name)
+      .getOrElse(Long.MinValue))
+    val out = fsOf(spark, dir).create(path(s"$dir/$name"), true)
+    try out.write(raised.toString.getBytes("UTF-8")) finally out.close()
+  }
 
   /** Highest EXTERNAL transaction id applied to this chain (None
     * before any) — the streaming-sink dedupe note: a foreachBatch
     * sink records its batch id here AFTER publishing so a checkpoint-
     * recovery replay of an already-applied batch can skip instead of
     * re-merging (see [[graft.streaming.Streams]]'s COW merge sink). */
-  def appliedId(spark: SparkSession, dir: String): Option[Long] = {
-    val fs = fsOf(spark, dir)
-    val p = path(s"$dir/$AppliedFile")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        "UTF-8").trim.toLong)
-      finally in.close()
-    }
-  }
+  def appliedId(spark: SparkSession, dir: String): Option[Long] =
+    readNote(spark, dir, AppliedFile)
 
   /** Raise the applied-transaction note to at least `id` (never
     * lowers — replays of stale ids can't rewind it). */
-  def recordAppliedId(spark: SparkSession, dir: String,
-                      id: Long): Unit = {
-    val v = math.max(id,
-      appliedId(spark, dir).getOrElse(Long.MinValue))
-    val out = fsOf(spark, dir).create(path(s"$dir/$AppliedFile"), true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-  }
+  def recordAppliedId(spark: SparkSession, dir: String, id: Long): Unit =
+    raiseNote(spark, dir, AppliedFile, id)
 
   /** Retention low-watermark: highest id ever pruned (None before
     * any retention). Persisted beside the chain so replay fencing
     * survives restarts. */
-  def prunedWatermark(spark: SparkSession, dir: String): Option[Long] = {
-    val fs = fsOf(spark, dir)
-    val p = path(s"$dir/$PrunedFile")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        "UTF-8").trim.toLong)
-      finally in.close()
-    }
-  }
+  def prunedWatermark(spark: SparkSession, dir: String): Option[Long] =
+    readNote(spark, dir, PrunedFile)
 
   /** Raise the watermark to at least `v` (never lowers). */
-  def raiseWatermark(spark: SparkSession, dir: String, v: Long): Unit = {
-    val wm = math.max(v,
-      prunedWatermark(spark, dir).getOrElse(Long.MinValue))
-    val out = fsOf(spark, dir).create(path(s"$dir/$PrunedFile"), true)
-    try out.write(wm.toString.getBytes("UTF-8")) finally out.close()
-  }
+  def raiseWatermark(spark: SparkSession, dir: String, v: Long): Unit =
+    raiseNote(spark, dir, PrunedFile, v)
 
   /** Drop all but the newest `keepLast` committed versions; also reap
     * TORN leftovers — unmarked `v=<n>` dirs and stage dirs with id at
@@ -474,7 +479,7 @@ object VersionStore {
       if (keepF.isEmpty) fs.delete(vdir, true): Unit
       else dropF.foreach(f => fs.delete(f.getPath, true): Unit)
     }
-    drop.foreach(v => pruneDir(path(s"$dir/v=$v")))
+    drop.foreach(v => pruneDir(path(versionDir(dir, v))))
     // torn leftovers: unmarked v-dirs / stage dirs at or below head
     val headV = keep.lastOption.getOrElse(Long.MinValue)
     fs.listStatus(root).foreach { st =>

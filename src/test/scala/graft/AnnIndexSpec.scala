@@ -25,6 +25,18 @@ class AnnIndexSpec extends AnyFunSuite {
     f.delete(): Unit
   }
 
+  /** Every data file under a committed version's dir, spelled the way
+    * its record names them (hidden `_`/`.` names are not data). */
+  private def dataFilesUnder(vdir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(vdir)
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".parquet") &&
+        !root.relativize(p).iterator().asScala
+          .exists(n => n.toString.startsWith("_") || n.toString.startsWith(".")))
+      .map(_.toString).toSet
+  }
+
   private lazy val emb = {
     val s = spark
     import s.implicits._
@@ -65,7 +77,17 @@ class AnnIndexSpec extends AnyFunSuite {
     val v1 = Similarity.buildAnnIndex(emb, path, centroids = 8)
     assert(v0 == 0L && v1 == 1L)
     assert(VersionStore.committed(spark, path).sorted == Seq(0L, 1L))
-    def dump(v: Long) = spark.read.parquet(s"$path/v=$v/assigned")
+    // every artifact version carries its commit record, listing every
+    // file the build wrote
+    val snaps = VersionStore.snapshots(spark, path)
+    assert(snaps.map(_.version) == Seq(0L, 1L))
+    snaps.foreach { s =>
+      assert(s.op == "BUILD" && s.ts > 0L, s"record-less version: $s")
+      assert(s.files.nonEmpty && s.files.toSet == dataFilesUnder(s.vdir),
+        s"the record must list exactly the files v=${s.version} wrote")
+    }
+    def dump(v: Long) =
+      spark.read.parquet(s"${VersionStore.snapshot(spark, path, Some(v)).vdir}/assigned")
       .select("vec_id", "cid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(dump(0L) == dump(1L), "rebuild produced different cells")
@@ -86,7 +108,13 @@ class AnnIndexSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cents = before.centroids.collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
-    Similarity.annIndexAppend(path, freshEmb)
+    val built = VersionStore.snapshot(spark, path)
+    assert(Similarity.annIndexAppend(path, freshEmb) == built.version + 1)
+    val appended = VersionStore.snapshot(spark, path)
+    assert(appended.op == "APPEND" && appended.ts > built.ts)
+    assert(appended.files.toSet == dataFilesUnder(appended.vdir) &&
+      appended.files.exists(_.contains("/codes/")),
+      "the append's record must list every file it wrote")
     val after = Similarity.readAnnIndex(spark, path)
     // centroids unchanged (no retrain)
     assert(after.centroids.collect()

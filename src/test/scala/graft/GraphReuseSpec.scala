@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.ops.Relational
+import graft.tables.VersionStore
 
 /** The build-once edge artifact ([[graft.dedup.Dedup.edgeTable]]) and
   * q_graph_reuse's rollup must agree EXACTLY with composing the
@@ -22,6 +23,18 @@ class GraphReuseSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sf = "/root/testdata/sf0.001"
+
+  /** Every data file under a committed version's dir, spelled the way
+    * its record names them (hidden `_`/`.` names are not data). */
+  private def dataFilesUnder(vdir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(vdir)
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".parquet") &&
+        !root.relativize(p).iterator().asScala
+          .exists(n => n.toString.startsWith("_") || n.toString.startsWith(".")))
+      .map(_.toString).toSet
+  }
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
@@ -67,6 +80,14 @@ class GraphReuseSpec extends AnyFunSuite {
     Dedup.edgeTableIncrement(incrPath,
       Dedup.minhashIndex(docs.where(col("doc_id") < cut)),
       docs.where(col("doc_id") >= cut), 0.8)
+    // build and increment are committed versions with full records
+    val snaps = VersionStore.snapshots(spark, incrPath)
+    assert(snaps.map(s => s.version -> s.op) ==
+      Seq(0L -> "BUILD", 1L -> "INCREMENT"))
+    assert(snaps(0).ts > 0L && snaps(1).ts > snaps(0).ts)
+    snaps.foreach(s => assert(s.files.toSet == dataFilesUnder(s.vdir) &&
+      Seq("/edges/", "/degrees/").forall(d => s.files.exists(_.contains(d))),
+      s"the record must list every file v=${s.version} wrote"))
     val fullPath = java.nio.file.Files
       .createTempDirectory("graft_edge_full").toString
     Dedup.edgeTable(docs, 0.8, fullPath)

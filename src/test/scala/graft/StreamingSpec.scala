@@ -305,6 +305,16 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("rk", row_number().over(w)).where(col("rk") === 1))
   }
 
+  /** Committed version `v` of the chain at `dir` as it sits on disk:
+    * its commit record plus every file's name, size and mtime. */
+  private def onDisk(dir: String, v: Long) = {
+    val vs = graft.tables.VersionStore
+    val snap = vs.snapshot(spark, dir, Some(v))
+    snap -> vs.fsOf(spark, dir)
+      .listStatus(new org.apache.hadoop.fs.Path(snap.vdir))
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSet
+  }
+
   test("CDC merge sink: streamed snapshot == one-shot batch twin (#81)") {
     val stage = java.nio.file.Files.createTempDirectory("graft_cdc")
     val evDir = stageChangelog(stage)
@@ -342,14 +352,19 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = cdcRows(Streams.cdcSnapshot(spark, snap))
     assert(streamed.nonEmpty && streamed == batch,
       s"streamed=${streamed.size} batch=${batch.size}")
-    // replay idempotence (at-least-once re-delivery): re-applying the
-    // final batch id merges its original PREDECESSOR, never its own
-    // output — the snapshot must stay bit-identical even for a
-    // superset resend (whole changelog tagged with the last id)
+    // replay idempotence (at-least-once re-delivery): the final batch
+    // id is already committed, so re-applying it skips — the snapshot
+    // stays bit-identical even for a superset resend (whole changelog
+    // tagged with the last id), and the committed version's record and
+    // files are never rewritten
+    val committed = onDisk(snap, versions.max)
+    assert(committed._1.op.nonEmpty && committed._1.ts > 0L)
     Streams.cdcMerge(snap, Seq("user_id"), Seq("tsec", "event_id"))(
       spark.read.parquet(evDir.toString), versions.max)
     assert(cdcRows(Streams.cdcSnapshot(spark, snap)) == batch,
       "replayed final batch changed the snapshot")
+    assert(onDisk(snap, versions.max) == committed,
+      "replayed final batch rewrote its committed version")
   }
 
   test("SCD2 sink: streamed history == one-shot scd2; torn version invisible (#81b)") {
@@ -397,13 +412,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(versions.length >= 4, s"expected >=4 versions: ${versions.toSeq}")
     // exact re-delivery of the SAME batch (the at-least-once case the
     // log-ordered contract supports; unlike upsert, a superset resend
-    // would violate scd2's ordered-chunk contract)
+    // would violate scd2's ordered-chunk contract): its version is
+    // committed, so the replay skips and leaves record and files alone
+    val committed = onDisk(hist, versions.max)
+    assert(committed._1.op.nonEmpty && committed._1.ts > 0L)
     Streams.scd2MergeStream(hist, Seq("user_id"),
       Seq("tsec", "event_id"), "value")(
       spark.read.parquet(evDir.resolve(f"chunk-${versions.max}%02d.parquet")
         .toString), versions.max)
     assert(histRows(Streams.cdcSnapshot(spark, hist)) == oneShot,
       "replayed final batch changed the history")
+    assert(onDisk(hist, versions.max) == committed,
+      "replayed final batch rewrote its committed version")
     // a torn (unmarked) version dir must be invisible to readers
     val torn = new java.io.File(hist, s"v=${versions.max + 1}")
     assert(torn.mkdirs())
@@ -519,8 +539,8 @@ class StreamingSpec extends AnyFunSuite {
     val after2 = state()
     assert(after2 == Seq((1L, 1.0), (2L, 5.0), (3L, 9.0), (4L, 4.5)),
       s"delete/re-insert semantics wrong: $after2")
-    // at-least-once replay WITH deletes: re-applying batch 2 merges
-    // its original predecessor — snapshot stays bit-identical
+    // at-least-once replay WITH deletes: batch 2 is committed, so
+    // re-applying it skips — snapshot stays bit-identical
     merge(batch2, 2)
     assert(state() == after2, "replayed delete batch changed the snapshot")
     // time travel: any committed version is a whole snapshot
@@ -529,8 +549,8 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(asOf1 == after1, s"as-of(1) != recorded state: $asOf1")
     // retention: drop all but the last 2 versions; replay idempotence
-    // survives (batch id 2 merges the newest version < 2 = v1, which
-    // retention kept)
+    // survives (batch id 2 passes the fence — its predecessor v1 was
+    // kept — and skips as committed)
     val dropped = Streams.cdcRetain(spark, snap, keepLast = 2)
     assert(dropped == Seq(0L), s"expected to drop v=0 only: $dropped")
     merge(batch2, 2)
@@ -553,6 +573,11 @@ class StreamingSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException] {
       merge(Seq((1L, 40L, 12L, 7.0, "U")), 1)
     }
+    // a batch id past the head + 1 would leave a gap: refused
+    val gap = intercept[IllegalArgumentException] {
+      merge(Seq((1L, 40L, 12L, 7.0, "U")), 4)
+    }
+    assert(gap.getMessage.contains("gap"), gap.getMessage)
     assert(state() == after2, "refused merges must not touch the chain")
     // r9 (r8-verdict ask #4): MANIFEST COMMIT — an unmarked (torn)
     // version dir is invisible to every reader: never the head, never

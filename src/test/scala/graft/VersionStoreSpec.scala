@@ -7,11 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.tables.{Snapshot, VersionStore}
 
 /** The shared versioned-table layer (r9-verdict ask #5): ONE
-  * implementation of marker-gated listing, staged atomic publish,
-  * commit records, reference-counted retention and the replay
-  * watermark — the CDC chain, edge artifact, ANN index and COW DML
-  * all ride through this code, so the torn-dir / crash-debris edge
-  * cases are proven here once. */
+  * implementation of marker-gated listing, the exclusive staged
+  * commit (every version carries its commit record), reference-counted
+  * retention and the replay watermark — the CDC chain, SCD2 history,
+  * edge artifact, ANN index and COW DML all commit through
+  * `VersionStore.commit`, so the torn-dir / crash-debris / racing-
+  * writer edge cases are proven here once. */
 class VersionStoreSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -56,21 +57,15 @@ class VersionStoreSpec extends AnyFunSuite {
     VersionStore.read(spark, dir, v).as[Int].collect().toSet
   }
 
-  test("publish is marker-gated; torn dirs invisible and reaped") {
+  test("commit is marker-gated; torn dirs invisible and reaped") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_vs_spec")
     val dir = base.resolve("t").toString
     val fs = VersionStore.fsOf(spark, dir)
-    VersionStore.publish(spark, dir, 0L) { stage =>
-      Seq(1, 2, 3).toDF("x").write.parquet(stage)
-    }
+    val v0 = commitRows(dir, None, Seq(1, 2, 3))
     assert(VersionStore.committed(spark, dir) == Seq(0L))
     assert(VersionStore.read(spark, dir).count() == 3)
-    // a plain publish carries no record: its snapshot is the parquet
-    // files under v=0, with empty metadata
-    val s0 = VersionStore.snapshot(spark, dir)
-    assert(s0.version == 0L && s0.files.nonEmpty && s0.op.isEmpty &&
-      s0.ts.isEmpty && s0.schema.isEmpty)
+    assert(VersionStore.snapshot(spark, dir) == v0)
     // a torn writer: unmarked v=1 dir + leftover stage dir — both
     // invisible to readers...
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/v=1")): Unit
@@ -89,9 +84,8 @@ class VersionStoreSpec extends AnyFunSuite {
       "stage debris at/below head must be reaped")
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=1")),
       "an unmarked dir above head may be a writer mid-publish")
-    VersionStore.publish(spark, dir, 2L) { stage =>
-      Seq(4, 5).toDF("x").write.parquet(stage)
-    }
+    // a commit that lands ABOVE the torn id (its parent claims id 1)
+    commitRows(dir, Some(v0.copy(version = 1L)), Seq(4, 5))
     VersionStore.retain(spark, dir, keepLast = 5)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=1")),
       "torn dir below the new head must be reaped")
@@ -117,7 +111,7 @@ class VersionStoreSpec extends AnyFunSuite {
     // the optimistic-concurrency loop Scale's DML runs
     val v1 = commitRows(dir, VersionStore.latest(spark, dir), Seq(9))
     assert(VersionStore.committed(spark, dir).sorted == Seq(0L, 1L))
-    assert(v1.ts.get > v0.ts.get, "commit stamps must be monotonic")
+    assert(v1.ts > v0.ts, "commit stamps must be monotonic")
     // the whole layout of a committed version: marker, writer token,
     // ONE commit record and the data (filesystem checksums aside)
     assert(fs.listStatus(hpath(s"$dir/v=1")).map(_.getPath.getName)
@@ -298,7 +292,7 @@ class VersionStoreSpec extends AnyFunSuite {
       .map(_.stripPrefix(s"$tag-").toInt)
     assert(seqOf("A") == (0 until n) && seqOf("B") == (0 until n))
     // each stamp is floored by its parent's: strictly increasing
-    val ts = snaps.map(_.ts.get)
+    val ts = snaps.map(_.ts)
     assert(ts.zip(ts.tail).forall { case (a, b) => a < b },
       s"commit stamps must increase along the chain: $ts")
     rm(base.toFile)
@@ -306,13 +300,20 @@ class VersionStoreSpec extends AnyFunSuite {
 
   test("guard: chain file names stay inside graft.tables") {
     // the on-disk layout (marker, writer token, commit record,
-    // watermarks) is VersionStore's alone: every other module reads a
-    // chain through Snapshot. The one exception is ScaleExperiment's
-    // data-generator marker, which names no chain file.
+    // watermarks, the `v=<n>` version dirs) is VersionStore's alone:
+    // every other module reads a chain through Snapshot (a version's
+    // dir is `Snapshot.vdir`). The one exception is ScaleExperiment's
+    // data-generator marker, which names no chain file. Version paths
+    // are checked in code only; docs may describe the layout.
     import scala.jdk.CollectionConverters._
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root: $root")
     val name = raw"(?<![A-Za-z0-9])_GRAFT_[A-Za-z0-9_]*".r
+    val versionPath = raw"/v=".r
+    def isDoc(l: String) = {
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }
     val allowed = Map("graft/ScaleExperiment.scala" -> Set("_GRAFT_GEN_OK_v2"))
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f =>
@@ -324,8 +325,10 @@ class VersionStoreSpec extends AnyFunSuite {
       else java.nio.file.Files.readAllLines(f.toPath,
           java.nio.charset.StandardCharsets.UTF_8).asScala.zipWithIndex
         .flatMap { case (l, i) =>
-          name.findAllIn(l)
-            .filterNot(allowed.getOrElse(rel, Set.empty[String]))
+          val code = if (isDoc(l)) "" else l.split("//", 2).head
+          (name.findAllIn(l)
+            .filterNot(allowed.getOrElse(rel, Set.empty[String])) ++
+            versionPath.findAllIn(code))
             .map(n => s"$rel:${i + 1}: $n")
         }
     }
