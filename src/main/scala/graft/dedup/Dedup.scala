@@ -1,7 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Near-duplicate detection family (SURVEY §2.5 #56–59).
   *
@@ -667,34 +669,92 @@ object Dedup {
   /** Connected components over a near-dup pair list — what cluster-based
     * dedup actually keys on: near-duplication is transitive in practice
     * (A≈B≈C usually means one cluster), so production pipelines keep one
-    * doc per COMPONENT of the similarity graph, not one per pair.
+    * doc per COMPONENT of the similarity graph, not one per pair. The
+    * label is the component's min doc_id — a canonical,
+    * engine-independent cluster id (and exactly the keep-this-one choice
+    * exact dedup already makes).
     *
-    * Min-label propagation through [[graft.core.Fixpoint]]: seed every
-    * node with its own id, each round take the min label across self and
-    * neighbors. Per round: one keyed join + partial-agg min — no
-    * all-pairs, no driver-side graph. Rounds needed = component
-    * diameter; near-dup clusters are shallow (dups of one source), so
-    * the default bound is generous. The label sum is the convergence
-    * measure: labels only ever decrease, so an unchanged sum IS the
-    * fixpoint. The converged label is the component's min doc_id — a
-    * canonical, engine-independent cluster id (and exactly the
-    * keep-this-one choice exact dedup already makes).
+    * Two paths, chosen from an exact statistic: the pinned edge list's
+    * `sizeInBytes`, which [[graft.core.Pin]] sets to observed rows × row
+    * width.
+    *  - Driver path: when the session's
+    *    `spark.sql.autoBroadcastJoinThreshold` is > 0, the edges fit
+    *    under it and the ids are `LongType`, the edge list is collected
+    *    once and labeled by union-find on the driver
+    *    ([[labelOnDriver]]). Two jobs in all (the pin and the collect);
+    *    any diameter is labeled exactly, so `maxIter` is not used. It
+    *    holds no more on the driver than the other path, whose every
+    *    `edges ⋈ labels` round broadcasts this same edge list.
+    *  - Fixpoint path, for everything else: min-label propagation
+    *    through [[graft.core.Fixpoint]]. Round 1 comes straight from the
+    *    edges (each node's label is the min of itself and its
+    *    neighbors); each later round takes the min label across self and
+    *    neighbors with one keyed join + partial-agg min — no all-pairs,
+    *    no driver-side graph. Rounds needed = component diameter; it
+    *    RAISES when `maxIter` rounds do not converge. The label sum is
+    *    the convergence measure: labels only ever decrease, so an
+    *    unchanged sum IS the fixpoint.
     *
-    * Returns (doc_id, comp) for every doc incident to a pair; docs with
-    * no near-dup are singletons by definition and are left out (at
-    * 100 TB the pair graph is vastly smaller than the corpus — this
-    * frame is cluster-sized, not corpus-sized). */
+    * Both return (doc_id, comp) with the same schema for every doc
+    * incident to a pair; docs with no near-dup are singletons by
+    * definition and are left out (at 100 TB the pair graph is vastly
+    * smaller than the corpus — this frame is cluster-sized, not
+    * corpus-sized). A null id keeps a null label and links nothing. */
   def components(pairs: DataFrame, maxIter: Int = 24): DataFrame = {
     val edges = pinnedEdges(pairs)
-    val seed = edges.df.select(col("src").as("doc_id")).distinct()
-      .withColumn("comp", col("doc_id"))
+    try {
+      val threshold =
+        pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+      val bytes = edges.df.queryExecution.optimizedPlan.stats.sizeInBytes
+      if (threshold > 0 && bytes <= threshold &&
+          edges.df.schema("src").dataType == LongType)
+        labelOnDriver(edges.df)
+      else fixpointLabels(edges.df, maxIter)
+    } finally edges.close()
+  }
+
+  /** [[components]]' driver path: union-find over the collected edges.
+    * The distinct ids sit sorted in a primitive array and a merged set's
+    * root is its smaller index, so every label is its component's min
+    * id. The result is a local frame. */
+  private def labelOnDriver(edges: DataFrame): DataFrame = {
+    val es = edges.collect()
+    // every node is some edge's src: the edges run both ways
+    val ids = es.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0))
+      .toArray.sorted.distinct
+    def index(e: Row, i: Int) =
+      java.util.Arrays.binarySearch(ids, e.getLong(i))
+    val parent = Array.range(0, ids.length)
+    def root(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    for (e <- es if !e.isNullAt(0) && !e.isNullAt(1)) {
+      val (a, b) = (root(index(e, 0)), root(index(e, 1)))
+      parent(math.max(a, b)) = math.min(a, b)
+    }
+    val labels = ids.indices.map(i => Row(ids(i), ids(root(i)))) ++
+      (if (es.exists(_.isNullAt(0))) Seq(Row(null, null)) else Nil)
+    val nullable = edges.schema("src").nullable
+    edges.sparkSession.createDataFrame(labels.asJava, StructType(Seq(
+      StructField("doc_id", LongType, nullable),
+      StructField("comp", LongType, nullable))))
+  }
+
+  /** [[components]]' Fixpoint path: min-label propagation seeded with
+    * round 1, so no identity round is pinned. */
+  private def fixpointLabels(edges: DataFrame, maxIter: Int): DataFrame = {
+    val seed = edges.groupBy("src").agg(min("dst").as("nbr_min"))
+      .select(col("src").as("doc_id"),
+        when(col("src").isNull, col("src"))
+          .otherwise(least(col("src"), col("nbr_min"))).as("comp"))
     // decimal-exact sum measure: label values may be 60-bit hash ids
     // whose long sum overflows (ANSI mode raises) — the measure just
     // needs exact equality across iterations, not a machine word
-    try graft.core.Fixpoint.iterate(seed, maxIter,
-      sum(col("comp").cast(
-        org.apache.spark.sql.types.DecimalType(38, 0)))) { labels =>
-      val nbrMin = edges.df
+    graft.core.Fixpoint.iterate(seed, maxIter,
+      sum(col("comp").cast(DecimalType(38, 0)))) { labels =>
+      val nbrMin = edges
         .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
         .groupBy(col("dst").as("doc_id"))
         .agg(min("comp").as("nbr_comp"))
@@ -703,7 +763,6 @@ object Dedup {
           least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
             .as("comp"))
     }.df
-    finally edges.close()
   }
 
   /** Multi-source BFS hop levels — "how far is everything from this

@@ -5775,13 +5775,14 @@ object Queries {
       .orderBy("doc_id")
 
   /** #57b CLUSTER dedup: connected components over the minhash pair
-    * graph ([[graft.dedup.Dedup.components]] — min-label propagation
-    * through the bounded [[graft.core.Fixpoint]], the total mapping of
-    * the reference's `fix`). Near-duplication is transitive in
-    * practice, so production dedup keeps one doc per component, not
-    * one per pair; the converged label is the component's min doc_id —
-    * canonical across engines, which is what lets a recursive-CTE
-    * oracle hash-gate a distributed fixpoint. */
+    * graph ([[graft.dedup.Dedup.components]] — union-find on the
+    * driver when the pair graph fits the broadcast threshold, else
+    * min-label propagation through the bounded [[graft.core.Fixpoint]],
+    * the total mapping of the reference's `fix`). Near-duplication is
+    * transitive in practice, so production dedup keeps one doc per
+    * component, not one per pair; the label is the component's min
+    * doc_id — canonical across engines and paths, which is what lets a
+    * recursive-CTE oracle hash-gate it. */
   def qDedupCluster(s: SparkSession, dir: String): DataFrame =
     graft.dedup.Dedup.components(
         graft.dedup.Dedup.minhashPairs(T(s, dir).documents))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -289,17 +290,135 @@ class DedupSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 12L -> 10L))
   }
 
+  /** `body`'s result and the Spark jobs it ran: a listener counts the
+    * job starts between two marker jobs, and since it sees events in
+    * order, the end marker's arrival means every job has been counted. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.job.description"))
+          .orNull match {
+          case "jobsOf-start" => jobs.set(0)
+          case "jobsOf-end" => done.countDown()
+          case _ => if (jobs.get >= 0) jobs.incrementAndGet()
+        }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobsOf-start")
+      val result = body
+      marker("jobsOf-end")
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("components: every minhash pair lands in one component (sf0.001)") {
     val pairs = Dedup.minhashPairs(
       graft.tables.Tables(spark, "/root/testdata/sf0.001").documents)
-    val comp = Dedup.components(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ps = pairs.select("doc_a", "doc_b").collect()
+    // over pre-pinned pairs the driver path runs two jobs: the edge pin
+    // and the collect
+    val pinned = graft.core.Pin(pairs).df
+    val (rows, jobs) = jobsOf(Dedup.components(pinned).collect())
+    assert(jobs <= 2, s"components ran $jobs jobs")
+    val comp = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ps = pinned.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(ps.nonEmpty)
     // pair members share a component, and the label is the component min
     for ((a, b) <- ps) assert(comp(a) == comp(b))
     for ((id, c) <- comp) assert(c <= id && comp(c) == c)
+  }
+
+  /** `body` with the Fixpoint path forced: no broadcast threshold. */
+  private def noBroadcast[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** A seeded graph of `shape` as (doc_a, doc_b) pairs over node ids
+    * scattered in [0, 10^6): chains of diameter < 24, stars or
+    * disjoint triangles, several components each. */
+  private def graph(shape: String, seed: Long) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val ids = rnd.shuffle((0L until 1000000L by 997L).toVector)
+    var next = 0
+    def fresh(k: Int) = { val v = ids.slice(next, next + k); next += k; v }
+    val pairs = (1 to 2 + rnd.nextInt(4)).flatMap { _ =>
+      shape match {
+        case "chain" =>
+          val v = fresh(2 + rnd.nextInt(23)); v.zip(v.tail)
+        case "star" =>
+          val v = fresh(2 + rnd.nextInt(12)); v.tail.map(v.head -> _)
+        case "triangle" =>
+          val v = fresh(3); Seq(v(0) -> v(1), v(1) -> v(2), v(0) -> v(2))
+      }
+    }
+    pairs.map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+      .toDF("doc_a", "doc_b")
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
+  test("components: the driver path and the Fixpoint path agree") {
+    for (shape <- Seq("chain", "star", "triangle"); seed <- 1L to 3L) {
+      val pairs = graph(shape, seed)
+      val driver = Dedup.components(pairs)
+      val fix = noBroadcast(Dedup.components(pairs))
+      assert(driver.queryExecution.analyzed.isInstanceOf[LocalRelation],
+        s"$shape/$seed did not take the driver path")
+      assert(driver.schema == fix.schema, s"$shape/$seed")
+      assert(sortedRows(driver) == sortedRows(fix), s"$shape/$seed")
+    }
+    // 60-bit hash ids: their label sums overflow a long
+    val mixed = Seq("chain", "star", "triangle").map(graph(_, 7L))
+      .reduce(_ unionByName _)
+    val hashed = mixed.select(
+      Dedup.md5Hash60(col("doc_a").cast("string"), lit("cc")).as("doc_a"),
+      Dedup.md5Hash60(col("doc_b").cast("string"), lit("cc")).as("doc_b"))
+    val driver = Dedup.components(hashed)
+    val fix = noBroadcast(Dedup.components(hashed))
+    assert(driver.schema == fix.schema)
+    assert(sortedRows(driver) == sortedRows(fix))
+    assert(sortedRows(driver).exists(_._2 > (1L << 40)))
+    // a null id keeps a null label and links nothing, on both paths
+    import spark.implicits._
+    val withNull = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (Some(2L), None), (None, Some(5L)), (Some(5L), Some(6L)))
+      .toDF("doc_a", "doc_b")
+    def labels(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    assert(labels(Dedup.components(withNull)) == Set(
+      (Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(5L), Some(5L)),
+      (Some(6L), Some(5L)), (None, None)))
+    assert(labels(Dedup.components(withNull)) ==
+      labels(noBroadcast(Dedup.components(withNull))))
+  }
+
+  test("components: a chain of diameter 30 is exact on the driver, " +
+       "and raises past maxIter on the Fixpoint path") {
+    import spark.implicits._
+    val chain = (0L until 30L).map(i => (i * 7 + 3, i * 7 + 10))
+      .toDF("doc_a", "doc_b")
+    val got = Dedup.components(chain, maxIter = 24).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (0L to 30L).map(i => (i * 7 + 3) -> 3L).toMap)
+    val e = intercept[IllegalStateException](
+      noBroadcast(Dedup.components(chain, maxIter = 24)))
+    assert(e.getMessage.contains("no convergence"))
   }
 
   test("pageRank matches a driver-local reference on the sf0.001 graph") {

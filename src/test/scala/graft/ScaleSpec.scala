@@ -339,11 +339,20 @@ class ScaleSpec extends AnyFunSuite {
     assert(!ch.contains("Join") && !ch.contains("HashAggregate"),
       s"q_chunk should be a pure generate:\n$ch")
     // cluster dedup: the fixpoint rounds are keyed joins over the pair
-    // graph — nothing may cross-product at any round
-    val cc = graft.dedup.Dedup.components(
-      graft.dedup.Dedup.minhashPairs(
-        graft.tables.Tables(spark, sf).documents))
-    val ccPlan = cc.queryExecution.executedPlan.toString
+    // graph — nothing may cross-product at any round. With a broadcast
+    // threshold the pair graph fits, components labels it on the driver
+    // and returns a local frame, so the threshold is off here to audit
+    // the Fixpoint path.
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    val bcSaved = spark.conf.getOption(bcKey)
+    spark.conf.set(bcKey, "-1")
+    val ccPlan = try graft.dedup.Dedup.components(
+        graft.dedup.Dedup.minhashPairs(
+          graft.tables.Tables(spark, sf).documents))
+      .queryExecution.executedPlan.toString
+    finally bcSaved.fold(spark.conf.unset(bcKey))(spark.conf.set(bcKey, _))
+    assert(!ccPlan.contains("LocalTableScan"),
+      s"components took the driver path:\n$ccPlan")
     assert(!ccPlan.contains("CartesianProduct") &&
            !ccPlan.contains("BroadcastNestedLoopJoin"),
       s"components result plan contains a cartesian:\n$ccPlan")
