@@ -2,10 +2,12 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, NumericType, StringType,
+  StructField, StructType}
 
 import org.apache.hadoop.fs.Path
 
-import graft.tables.{Footers, Snapshot, Tables, VersionStore}
+import graft.tables.{Footers, Snapshot, Stats, Tables, VersionStore}
 import graft.tables.VersionStore.withCommitRetry
 
 /** Scale mechanics that don't change query semantics (SURVEY §5):
@@ -182,8 +184,9 @@ object Scale {
 
   /** Write `df` as exactly ONE parquet file named `name` inside
     * `stage` — the shared single-file-write used by every COW
-    * rewrite. FAILS LOUDLY: a missing part file or a false rename
-    * throws BEFORE any manifest can reference the path (silently
+    * rewrite and by the change-feed spool. FAILS LOUDLY: a missing
+    * part file or a false rename throws BEFORE any manifest can
+    * reference the path (silently
     * dropping the only copy of rewritten data was the alternative). */
   private def writeSingleFile(df: DataFrame, fs: org.apache.hadoop.fs.FileSystem,
                               stage: String, name: String): Unit = {
@@ -248,25 +251,21 @@ object Scale {
 
   /** Commit the next version of `tableDir` after `head`
     * ([[VersionStore.commit]]) as operation `op`: `write` stages data
-    * and returns the next record. The chain's maintained stats carry
-    * into it — those of `statsFrom` (default: the head), adjusted by
-    * `carry`, keep their rows for the files the record still points
-    * at, and the files `write` staged are profiled fresh. */
+    * and returns the next record, whose stats are those it carried
+    * over (usually the parent's: `base.copy` keeps them, RESTORE and
+    * CLONE bring the copied record's). They are kept current here
+    * ([[maintained]]): entries of the files the record still points
+    * at stay verbatim, and the files `write` staged are profiled in
+    * one collect. */
   private def commitVersion(spark: SparkSession, tableDir: String,
                             head: Option[Snapshot], op: String,
-                            detail: String = "",
-                            statsFrom: Option[Snapshot] = None,
-                            carry: DataFrame => DataFrame = identity)
+                            detail: String = "")
                            (write: VersionStore.Stage => Snapshot)
-      : Snapshot = {
-    val parentStats = statsFrom.orElse(head).flatMap(statsOf(spark, _))
-      .map(carry)
+      : Snapshot =
     VersionStore.commit(spark, tableDir, head) { stage =>
       val next = write(stage).copy(op = op, detail = detail)
-      maintainStats(spark, parentStats, stage, next)
-      next
+      next.copy(stats = next.stats.flatMap(maintained(spark, stage, next, _)))
     }
-  }
 
   /** ENFORCE the chain's CHECK constraints on the rows a DML is about
     * to make visible (SQL CHECK semantics: a row fails only when the
@@ -916,23 +915,31 @@ object Scale {
     val grouped = sized.groupBy { case (f, _) => base.partitions.get(f) }
       .toSeq.sortBy(_._1.map(_.toSeq.sorted.mkString(";"))
         .getOrElse(""))
-    // serve the normalization bounds from the MAINTAINED stats when
-    // the chain is ANALYZEd on both z-dimensions (r12 verdict ask #4):
-    // per-file min/max aggregate driver-cheaply to the group bounds —
-    // min over file-mins IS the column min — replacing one full data
-    // pass per group with a lookup over the file-count-sized stats
-    // frame. Falls back to the data agg when the dims are expressions,
-    // stats are absent, or any group file is missing from them.
-    // a PLAIN attribute renders as its bare name (anything computed
-    // renders with parens/operators and falls back to the data agg)
-    def attrName(c: Column): Option[String] =
-      Some(c.toString).filter(_.matches("[A-Za-z_][A-Za-z0-9_]*"))
-    val statsMM: Option[(DataFrame, String, String)] = for {
-      nx <- attrName(zx); ny <- attrName(zy)
-      st <- head.flatMap(statsOf(spark, _))
-      names = st.columns.toSet
-      if Seq(nx, ny).forall(n => names(s"min_$n") && names(s"max_$n"))
-    } yield (st, nx, ny)
+    // serve the normalization bounds from the record's stats when the
+    // chain is ANALYZEd on both z-dimensions (r12 verdict ask #4): min
+    // over file-mins IS the column min, so the group bounds come off
+    // the driver with no data pass and no job. Falls back to one data
+    // agg per group when a dim is an expression or not numeric, stats
+    // are absent, or a group file has no entry. A PLAIN attribute
+    // renders as its bare name (anything computed renders with
+    // parens/operators).
+    val dims = Seq(zx, zy).map(_.toString)
+      .filter(_.matches("[A-Za-z_][A-Za-z0-9_]*"))
+    def recordedBounds(groupFiles: Seq[String]): Option[Seq[Double]] = for {
+      st <- base.stats
+      idx = dims.map(st.columns.fieldNames.indexOf(_)).filter(i =>
+        i >= 0 && st.columns(i).dataType.isInstanceOf[NumericType])
+      if idx.size == 2
+      es = groupFiles.flatMap(st.files.get)
+      if es.size == groupFiles.size
+    } yield idx.flatMap { i =>
+      // Spark's min/max order: NULLs skipped, NaN above all
+      def vals(side: Stats.File => Seq[Any]) = es.map(side(_)(i))
+        .filter(_ != null).map(_.asInstanceOf[Number].doubleValue)
+        .sorted(Ordering.Double.TotalOrdering)
+      Seq(vals(_.min).headOption.getOrElse(0.0),
+        vals(_.max).lastOption.getOrElse(0.0))
+    }
     val next = commitVersion(spark, tableDir, head, "OPTIMIZE_ZORDER") {
         stage =>
       val outParts =
@@ -947,28 +954,15 @@ object Scale {
         // reason): raw values of unequal width hand the curve's high
         // bits entirely to the wider column — slicing then splits
         // only that dimension and the other never prunes. Bounds come
-        // from the maintained stats when available (`statsMM` above),
+        // from the record when it has them (`recordedBounds` above),
         // else one min/max agg per group; NULLs sort into one slice
         // (zval of NULL is NULL — ordered first, still a tight file).
-        val mm: org.apache.spark.sql.Row = statsMM.flatMap {
-          case (st, nx, ny) =>
-            import spark.implicits._
-            val r = st.join(groupFiles.toDF("__f"), Seq("__f"),
-                "left_semi")
-              .agg(count(lit(1)),
-                min(col(s"min_$nx")).cast("double"),
-                max(col(s"max_$nx")).cast("double"),
-                min(col(s"min_$ny")).cast("double"),
-                max(col(s"max_$ny")).cast("double")).head()
-            if (r.getLong(0) == groupFiles.size.toLong)
-              Some(org.apache.spark.sql.Row(
-                r.get(1), r.get(2), r.get(3), r.get(4)))
-            else None // a group file the stats don't cover: data agg
-        }.getOrElse(df.agg(
-          min(zx).cast("double"), max(zx).cast("double"),
-          min(zy).cast("double"), max(zy).cast("double")).head())
-        def bound(i: Int): Double =
-          if (mm.isNullAt(i)) 0.0 else mm.getDouble(i)
+        val bound: Seq[Double] = recordedBounds(groupFiles).getOrElse {
+          val r = df.agg(
+            min(zx).cast("double"), max(zx).cast("double"),
+            min(zy).cast("double"), max(zy).cast("double")).head()
+          (0 until 4).map(i => if (r.isNullAt(i)) 0.0 else r.getDouble(i))
+        }
         def norm(c: Column, i: Int): Column = {
           val (lo, hi) = (bound(2 * i), bound(2 * i + 1))
           if (hi <= lo) lit(0L)
@@ -1084,16 +1078,14 @@ object Scale {
         "column?); OPTIMIZE first or pick a fresh name")
     require(!base.constraints.exists(_._2.contains(from)),
       s"a CHECK constraint references $from; drop it first")
-    val next = org.apache.spark.sql.types.StructType(current.map(f =>
-      if (f.name == from) f.copy(name = to) else f))
-    // the stats frame is keyed by LOGICAL column name: carry it
-    // through the rename so predicates on the NEW name keep pruning
-    // (the pre-fix behavior left the old key stale — sound but blind)
-    commitVersion(spark, tableDir, head, "RENAME_COLUMN", s"$from>$to",
-        carry = _.withColumnRenamed(s"min_$from", s"min_$to")
-          .withColumnRenamed(s"max_$from", s"max_$to")
-          .withColumnRenamed(s"nc_$from", s"nc_$to"))(_ =>
-      base.copy(schema = Some(next),
+    def renamed(st: StructType) =
+      StructType(st.map(f => if (f.name == from) f.copy(name = to) else f))
+    // stats are keyed by LOGICAL column name: carry them through the
+    // rename so predicates on the NEW name keep pruning (the pre-fix
+    // behavior left the old key stale — sound but blind)
+    commitVersion(spark, tableDir, head, "RENAME_COLUMN", s"$from>$to")(_ =>
+      base.copy(schema = Some(renamed(current)),
+        stats = base.stats.map(st => st.copy(columns = renamed(st.columns))),
         renames = (base.renames - from) +
           (to -> (from +: base.renames.getOrElse(from, Seq.empty))),
         partitions = base.partitions.map { case (f, kv) =>
@@ -1117,13 +1109,10 @@ object Scale {
     require(current.fields.length > 1, "cannot drop the last column")
     require(!base.constraints.exists(_._2.contains(name)),
       s"a CHECK constraint references $name; drop it first")
-    val gone = Set(s"min_$name", s"max_$name", s"nc_$name")
-    commitVersion(spark, tableDir, head, "DROP_COLUMN", name,
-        carry = ps => ps.select(
-          ps.columns.filterNot(gone).map(col).toIndexedSeq: _*))(_ =>
+    commitVersion(spark, tableDir, head, "DROP_COLUMN", name)(_ =>
       base.copy(
-        schema = Some(org.apache.spark.sql.types.StructType(
-          current.filterNot(_.name == name))),
+        stats = base.stats.flatMap(_.without(Set(name))),
+        schema = Some(StructType(current.filterNot(_.name == name))),
         renames = base.renames - name,
         partitions = base.partitions.map { case (f, kv) => f -> (kv - name) }
           .filter(_._2.nonEmpty)))
@@ -1139,8 +1128,8 @@ object Scale {
       : RewriteStats = withCommitRetry() {
     val head = VersionStore.snapshot(spark, tableDir)
     val target = VersionStore.snapshot(spark, tableDir, Some(v))
-    commitVersion(spark, tableDir, Some(head), "RESTORE", s"v=$v",
-      statsFrom = Some(target))(_ => target)
+    commitVersion(spark, tableDir, Some(head), "RESTORE", s"v=$v")(_ =>
+      target)
     metadataOnly(spark, target)
   }
 
@@ -1172,8 +1161,7 @@ object Scale {
     val src = VersionStore.latest(spark, srcTableDir).getOrElse(
       throw new IllegalArgumentException(
         s"nothing to clone under $srcTableDir"))
-    commitVersion(spark, destTableDir, None, "CLONE", srcTableDir,
-      statsFrom = Some(src))(_ => src)
+    commitVersion(spark, destTableDir, None, "CLONE", srcTableDir)(_ => src)
     metadataOnly(spark, src)
   }
 
@@ -1264,17 +1252,7 @@ object Scale {
       if (!fs.exists(dest)) {
         val delta = tableChanges(spark, tableDir, prev, v)
           .withColumn("version", lit(v))
-        val tmp = new org.apache.hadoop.fs.Path(spoolDir, s"__spool_v$v")
-        delta.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = fs.listStatus(tmp)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath).headOption
-          .getOrElse(throw new java.io.IOException(
-            s"no part file produced under $tmp"))
-        if (!fs.rename(part, dest))
-          throw new java.io.IOException(
-            s"spool rename $part -> $dest failed")
-        fs.delete(tmp, true): Unit
+        writeSingleFile(delta, fs, spoolDir, dest.getName)
       }
       VersionStore.recordAppliedId(spark, spoolDir, v)
     }
@@ -1345,13 +1323,9 @@ object Scale {
     * everything. Persist the (tiny, file-count-sized) frame and reuse
     * it across queries; rebuild after compaction/DML. */
   def fileStats(spark: SparkSession, dir: String,
-                cols: Seq[String]): DataFrame = {
-    val aggs = statAggs(cols)
-    spark.read.parquet(dir)
-      .withColumn("__f", input_file_name())
-      .groupBy("__f")
-      .agg(aggs.head, aggs.tail: _*)
-  }
+                cols: Seq[String]): DataFrame =
+    fileStatsFor(spark, parquetIn(VersionStore.fsOf(spark, dir), dir), cols,
+      identity)
 
   /** Translate a SQL predicate into a MAY-CONTAIN test (SQL text)
     * over a [[fileStats]] row — the same interval logic parquet
@@ -1454,7 +1428,6 @@ object Scale {
       files: Seq[String], parts: Map[String, Map[String, String]],
       types: Map[String, org.apache.spark.sql.types.DataType],
       condSql: String): Seq[String] = {
-    import org.apache.spark.sql.types.{StructField, StructType, StringType}
     val pcols = parts.valuesIterator.flatMap(_.keys).toSet
       .intersect(referencedCols(spark, condSql))
       .filter(types.contains).toSeq.sorted
@@ -1482,11 +1455,11 @@ object Scale {
     }
   }
 
-  /** [[mayContain]] evaluated over a maintained stats frame: the
+  /** [[mayContain]] evaluated over a stats frame: the
     * surviving manifest paths, or None when the predicate doesn't
     * translate (callers must then read everything). A manifest file
-    * with NO stats row does not survive — the only way a maintained
-    * frame lacks a file's row is a rewrite that emptied it, and
+    * with NO stats row does not survive — the only way a chain's
+    * stats lack a file's entry is a file with no rows, and
     * skipping an empty file is sound. */
   private def statsSurvivors(spark: SparkSession, stats: DataFrame,
                              condSql: String): Option[Seq[String]] = {
@@ -1524,8 +1497,6 @@ object Scale {
 
   // ---- Chain-maintained stats: ANALYZE + incremental upkeep -------
 
-  private def statsDir(vdir: String) = s"$vdir/_graft_stats"
-
   /** The data-skipping stats of committed version `v`, if the chain
     * has been ANALYZEd ([[analyzeTable]]) — a file-count-sized frame
     * keyed by the record's file paths. */
@@ -1533,17 +1504,41 @@ object Scale {
       : Option[DataFrame] =
     statsOf(spark, VersionStore.snapshot(spark, tableDir, Some(v)))
 
+  /** `snap`'s record stats as a LOCAL frame of the [[fileStats]] shape
+    * (`__f`, then `min_<c>`, `max_<c>`, `nc_<c>` per column, then
+    * `cnt`), built on the driver like [[partitionSurvivors]]' tuples:
+    * filtering and collecting it runs no Spark job. */
   private def statsOf(spark: SparkSession, snap: Snapshot)
-      : Option[DataFrame] = {
-    val p = new Path(statsDir(snap.vdir))
-    if (!VersionStore.fsOf(spark, snap.dir).exists(p)) None
-    else Some(spark.read.parquet(p.toString))
+      : Option[DataFrame] = snap.stats.map { st =>
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(StructField("__f", StringType) +:
+      st.columns.flatMap(c => Seq(
+        StructField(s"min_${c.name}", c.dataType),
+        StructField(s"max_${c.name}", c.dataType),
+        StructField(s"nc_${c.name}", LongType))) :+
+      StructField("cnt", LongType))
+    val rows = st.files.toSeq.sortBy(_._1).map { case (f, e) =>
+      org.apache.spark.sql.Row.fromSeq(f +: st.columns.indices.flatMap(i =>
+        Seq(e.min(i), e.max(i), e.nulls(i))) :+ e.cnt)
+    }
+    spark.createDataFrame(rows.asJava, schema)
   }
 
-  private def writeStats(spark: SparkSession, vdirOrStage: String,
-                         stats: DataFrame): Unit =
-    stats.coalesce(1).write.mode("overwrite")
-      .parquet(statsDir(vdirOrStage)): Unit
+  /** A [[fileStatsFor]] profile collected into record stats over
+    * `columns`, each min/max cast to its recorded type: one collect,
+    * file-count-sized. */
+  private def collectStats(profile: DataFrame, columns: StructType): Stats = {
+    val n = columns.length
+    Stats(columns, profile.select(Seq(col("__f"), col("cnt")) ++
+        Seq("min", "max").flatMap(side => columns.map(c =>
+          col(s"${side}_${c.name}").cast(c.dataType))) ++
+        columns.map(c => col(s"nc_${c.name}")): _*)
+      .collect().map { r =>
+        def part(k: Int) = (2 + k * n until 2 + (k + 1) * n).map(r.get)
+        r.getString(0) -> Stats.File(r.getLong(1), part(0), part(1),
+          part(2).map(_.asInstanceOf[Long]))
+      }.toMap)
+  }
 
   /** Per-file min/max/null-count over an explicit FILE LIST, re-keyed
     * so `__f` holds the caller's canonical path for each file
@@ -1557,8 +1552,9 @@ object Scale {
     * counts record exactly). */
   private def fileStatsFor(spark: SparkSession, files: Seq[String],
                            cols: Seq[String], keyOf: String => String,
-                           schema: Option[org.apache.spark.sql.types.StructType] = None,
-                           renames: Map[String, Seq[String]] = Map.empty)
+                           schema: Option[StructType] = None,
+                           renames: Map[String, Seq[String]] = Map.empty,
+                           oneTask: Boolean = false)
       : DataFrame = {
     val byNorm = files.map(f => normalize(f) -> keyOf(f)).toMap
     val remap = udf((f: String) => byNorm.getOrElse(normalize(f),
@@ -1569,18 +1565,34 @@ object Scale {
     val aligned = schema
       .map(alignTo(raw, _, renames, keep = Seq("__f"))).getOrElse(raw)
     val aggs = statAggs(cols)
-    aligned.groupBy("__f").agg(aggs.head, aggs.tail: _*)
+    // in ONE task the per-file groupBy needs no exchange, so the
+    // profile is one job (AQE runs an exchange as a job of its own)
+    (if (oneTask) aligned.coalesce(1) else aligned)
+      .groupBy("__f").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** `cols` of every file of `base` profiled into record stats, each
+    * column under the type its readers see. */
+  private def profiled(spark: SparkSession, base: Snapshot,
+                       cols: Seq[String]): Stats = {
+    val profile = fileStatsFor(spark, base.files, cols, identity,
+      base.schema, base.renames)
+    collectStats(profile,
+      StructType(cols.map(c => profile.schema(s"min_$c").copy(name = c))))
   }
 
   /** ANALYZE: publish the next version (same files — every file
-    * rides by pointer) carrying a per-file min/max stats frame
-    * for `cols`, computed in ONE pass. From then on every DML
-    * maintains the stats INCREMENTALLY: untouched pointers keep
-    * their rows verbatim, only the files a publish actually writes
-    * are re-profiled (hit-file-sized, the Delta "stats in the
-    * manifest" upkeep). [[readTablePruned]] serves range predicates
-    * off the maintained frame. Works on a fresh directory too — the
-    * first ANALYZE converts `srcDir` into a v=0 pointer version. */
+    * rides by pointer) whose commit record carries per-file min/max,
+    * null-count and row-count stats for `cols`, profiled in ONE pass
+    * and collected into the record (file-count-sized; no side file).
+    * From then on every commit maintains them INCREMENTALLY
+    * ([[commitVersion]]): untouched pointers keep their entries
+    * verbatim, only the files a commit actually writes are profiled
+    * (hit-file-sized, the Delta "stats in the manifest" upkeep).
+    * [[readTablePruned]] serves range predicates off the record. Works
+    * on a fresh directory too — the first ANALYZE converts `srcDir`
+    * into a v=0 pointer version. Columns must be of a type the record
+    * carries exactly ([[Stats.recordable]]: atomic, not binary). */
   def analyzeTable(spark: SparkSession, srcDir: String,
                    tableDir: String, cols: Seq[String]): RewriteStats =
       withCommitRetry() {
@@ -1595,65 +1607,50 @@ object Scale {
     require(unknown.isEmpty,
       s"ANALYZE of column(s) ${unknown.mkString(", ")} the table does " +
         s"not serve (declared: ${servable.toSeq.sorted.mkString(", ")})")
-    val stats = graft.core.Pin(fileStatsFor(spark, base.files, cols,
-      identity, base.schema, base.renames))
-    try VersionStore.commit(spark, tableDir, head) { stage =>
-      writeStats(spark, stage.path, stats.df)
-      base.copy(op = "ANALYZE", detail = cols.mkString(","))
-    } finally stats.close()
+    val stats = profiled(spark, base, cols)
+    commitVersion(spark, tableDir, head, "ANALYZE", cols.mkString(","))(_ =>
+      base.copy(stats = Some(stats)))
     metadataOnly(spark, base)
   }
 
-  /** Incremental stats upkeep for a data-writing commit: carry the
-    * parent's rows for the files `next` still points at, re-profile
-    * ONLY the freshly written ones (read from the staging dir, keyed
-    * by their final `v=<id>` path, aligned to the version's declared
-    * schema like every reader). A stats column no longer served
-    * (DROPPED since the ANALYZE) drops from the WHOLE frame — a
-    * NULL-stats row would read as "provably empty" to the 3VL prune,
-    * which is only sound for genuinely all-null files. The
-    * carried-pointer filter is a left-semi JOIN against the record's
-    * path frame, never one giant `isin` In-list — at 100 TB file
-    * counts the In-expression blows up plan size, driver memory and
-    * codegen (r10 advice). */
-  private def maintainStats(spark: SparkSession,
-                            parentStats: Option[DataFrame],
-                            stage: VersionStore.Stage, next: Snapshot)
-      : Unit =
-    parentStats.foreach { ps =>
-      import spark.implicits._
-      val staged = parquetIn(VersionStore.fsOf(spark, stage.path),
-        stage.path)
-      val carried = ps.join(next.files.toDF("__f"), Seq("__f"),
-        "left_semi")
-      val all: Option[DataFrame] =
-        if (staged.isEmpty) Some(carried)
-        else {
-          val cols = ps.columns.filter(_.startsWith("min_"))
-            .map(_.stripPrefix("min_")).toSeq
-          val servable = next.schema.map(_.fieldNames.toSet).getOrElse(
-            readMerged(spark, staged).schema.fieldNames.toSet)
-          val usable = cols.filter(servable)
-          if (usable.isEmpty) None
-          else {
-            val fresh = fileStatsFor(spark, staged, usable,
-              f => s"${stage.vdir}/${new Path(f).getName}",
-              next.schema, next.renames)
-            val have = ps.columns.toSet
-            val keep = ("__f" +: usable.flatMap(c =>
-              Seq(s"min_$c", s"max_$c", s"nc_$c")) :+ "cnt")
-              .filter(have)
-            Some(carried.select(keep.map(col): _*)
-              .unionByName(fresh.select(keep.map(col): _*)))
-          }
+  /** `st` kept current for `next`, the version `stage` commits: the
+    * entries of the files `next` still points at stay verbatim, and
+    * the files the stage wrote (those under `next`'s own version dir)
+    * are profiled in one collect, aligned to the version's declared
+    * schema like every reader. A stats column no longer served
+    * (DROPPED since the ANALYZE) leaves the stats altogether — an
+    * all-NULL entry would read as "provably empty" to the 3VL prune,
+    * which is only sound for genuinely all-null files. */
+  private def maintained(spark: SparkSession, stage: VersionStore.Stage,
+                         next: Snapshot, st: Stats): Option[Stats] = {
+    val live = next.files.toSet
+    val carried = st.copy(files = st.files.filter { case (f, _) => live(f) })
+    val stagedOf = next.files.filter(_.startsWith(s"${stage.vdir}/"))
+      .map(f => s"${stage.path}${f.stripPrefix(stage.vdir)}" -> f).toMap
+    if (stagedOf.isEmpty) Some(carried)
+    else {
+      val staged = stagedOf.keys.toSeq
+      // one task when the new files fit what Spark reads per scan task
+      val fs = VersionStore.fsOf(spark, stage.path)
+      val oneTask = staged.iterator
+        .scanLeft(0L)((sum, f) => sum + fs.getFileStatus(new Path(f)).getLen)
+        .forall(_ <= spark.sessionState.conf.filesMaxPartitionBytes)
+      // without a declared schema every write carries every column
+      carried.without(next.schema.fold(Set.empty[String])(s =>
+        st.columns.fieldNames.filterNot(s.fieldNames.contains).toSet))
+        .map { kept =>
+          val fresh = collectStats(fileStatsFor(spark, staged,
+            kept.columns.fieldNames.toSeq, stagedOf, next.schema,
+            next.renames, oneTask), kept.columns)
+          kept.copy(files = kept.files ++ fresh.files)
         }
-      all.foreach(a => scala.util.Using.resource(graft.core.Pin(a))(p =>
-        writeStats(spark, stage.path, p.df)))
     }
+  }
 
   /** The files of `snap` that MAY hold a row matching `condSql`,
-    * decided from version metadata alone (maintained stats + partition
-    * tuples — never a data file open): the shared pruning core of
+    * decided from the commit record alone (stats + partition tuples,
+    * evaluated over local frames — no data file open, no Spark job):
+    * the shared pruning core of
     * [[readTablePruned]], the DML candidate pre-filter, and the SQL
     * scan's pushdown. */
   def filesPruned(spark: SparkSession, snap: Snapshot,
@@ -1693,11 +1690,12 @@ object Scale {
     (out, ps)
   }
 
-  /** Read the chain's head with FILE-LEVEL pruning off the maintained
-    * stats ([[analyzeTable]]'s frame, kept current by every DML):
-    * the [[readPruned]] may-contain translation, then only surviving
-    * files open — with schema alignment, so the pruned read is
-    * drop-in for [[readTable]]. No stats (or an untranslatable
+  /** Read the chain's head with FILE-LEVEL pruning off the stats in
+    * its commit record ([[analyzeTable]]'s, kept current by every
+    * commit) and its partition tuples, decided on the driver with no
+    * Spark job: the [[readPruned]] may-contain translation, then only
+    * surviving files open — with schema alignment, so the pruned read
+    * is drop-in for [[readTable]]. No stats (or an untranslatable
     * predicate) degrades to the full aligned read. */
   def readTablePruned(spark: SparkSession, tableDir: String,
                       condSql: String): (DataFrame, PruneStats) = {
@@ -1729,22 +1727,16 @@ object Scale {
                          tableDir: String, cols: Seq[String])
       : RewriteStats = withCommitRetry() {
     val (head, base) = baseOf(spark, srcDir, tableDir)
-    val prof = fileStatsFor(spark, base.files, cols, identity,
-      base.schema, base.renames).collect()
-    val fresh = prof.map { r =>
-      val f = r.getAs[String]("__f")
-      val kv = cols.map { c =>
-        val mn = r.getAs[Any](s"min_$c")
-        val mx = r.getAs[Any](s"max_$c")
-        val nc = r.getAs[Long](s"nc_$c")
+    val fresh = profiled(spark, base, cols).files.map { case (f, e) =>
+      f -> cols.zipWithIndex.map { case (c, i) =>
+        val (mn, mx, nc) = (e.min(i), e.max(i), e.nulls(i))
         require(nc == 0L && mn != null && mn == mx,
           s"column $c is not file-constant non-null in $f " +
             s"(min=$mn, max=$mx, nulls=$nc) — lay the table out " +
             "per-partition (e.g. write one partition per file) first")
         c -> String.valueOf(mn)
       }.toMap
-      f -> kv
-    }.toMap
+    }
     // merge with any existing tuples (re-register after OPTIMIZE, or
     // register a second column set): fresh wins per file+column
     val merged = (base.partitions.keySet ++ fresh.keySet).map { f =>

@@ -1,6 +1,7 @@
 package graft.tables
 
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
@@ -27,6 +28,9 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   *    before opening any stats. Files without an entry are simply
   *    unprunable by partition — sound, never wrong. Values are stored
   *    as strings and cast to the column's declared type at use.
+  *  - `stats`: per-file data-skipping stats ([[Stats]]), written by
+  *    [[graft.ops.Scale.analyzeTable]] and kept current by every later
+  *    commit of the chain; None for a chain never ANALYZEd.
   *  - `op`, `detail`, `ts`: what produced the version and when (epoch
   *    millis, monotonic along the chain — stamped by
   *    [[VersionStore.commit]], so a record a writer is still building
@@ -42,6 +46,7 @@ final case class Snapshot(
     constraints: Seq[(String, String)] = Seq.empty,
     renames: Map[String, Seq[String]] = Map.empty,
     partitions: Map[String, Map[String, String]] = Map.empty,
+    stats: Option[Stats] = None,
     op: String = "",
     detail: String = "",
     ts: Long = 0L) {
@@ -67,6 +72,7 @@ object Snapshot {
       "partitions" -> JObject(s.partitions.toList.sortBy(_._1).map {
         case (f, kv) => f -> JObject(kv.toList.sorted.map {
           case (k, v) => k -> (JString(v): JValue) }) }),
+      "stats" -> s.stats.map(Stats.toJson).getOrElse(JNothing),
       "op" -> JString(s.op),
       "detail" -> JString(s.detail),
       "ts" -> JLong(s.ts))))
@@ -103,6 +109,10 @@ object Snapshot {
       partitions = fields(j \ "partitions").map { case (f, kv) =>
         f -> fields(kv).collect { case (k, JString(v)) => k -> v }.toMap
       }.toMap,
+      stats = j \ "stats" match {
+        case JNothing | JNull => None
+        case st => Some(Stats.fromJson(st))
+      },
       op = str("op"),
       detail = str("detail"),
       ts = j \ "ts" match {
@@ -111,5 +121,94 @@ object Snapshot {
         case t => throw new IllegalStateException(
           s"commit record of version $version under $dir has no ts: $t")
       })
+  }
+}
+
+/** Per-file data-skipping stats of a version: the ANALYZEd `columns`
+  * with their types and, for each data file that holds rows, its row
+  * count `cnt` and, in `columns` order, each column's min, max and
+  * null count. Values are the Row values Spark collects for the
+  * column's type (`Long`, `Double`, `java.math.BigDecimal`,
+  * `java.sql.Timestamp`, ...); min and max are null for a file whose
+  * column is all-NULL. A file with no entry holds no rows. */
+final case class Stats(columns: StructType,
+                       files: Map[String, Stats.File]) {
+
+  require(columns.forall(c => Stats.recordable(c.dataType)),
+    "the commit record cannot carry stats of " + columns.filterNot(c =>
+      Stats.recordable(c.dataType)).map(_.toDDL).mkString(", "))
+
+  /** The stats without `names`; None once no column is left. */
+  def without(names: Set[String]): Option[Stats] = {
+    val keep = columns.indices.filterNot(i => names(columns(i).name))
+    Option.when(keep.nonEmpty)(Stats(StructType(keep.map(columns(_))),
+      files.map { case (f, e) => f -> Stats.File(e.cnt, keep.map(e.min),
+        keep.map(e.max), keep.map(e.nulls)) }))
+  }
+}
+
+object Stats {
+  final case class File(cnt: Long, min: Seq[Any], max: Seq[Any],
+                        nulls: Seq[Long])
+
+  // values travel as text: Java's text of a number parses back to the
+  // same value (NaN, -0.0 and a decimal's scale included), dates and
+  // timestamps as Spark's day and microsecond counts, converted both
+  // ways by the rules collect and createDataFrame use
+  private def encode(t: DataType)(v: Any): JValue =
+    if (v == null) JNull else JString(t match {
+      case DateType => DateTimeUtils.anyToDays(v).toString
+      case TimestampType => DateTimeUtils.anyToMicros(v).toString
+      case TimestampNTZType => DateTimeUtils.localDateTimeToMicros(
+        v.asInstanceOf[java.time.LocalDateTime]).toString
+      case _ => v.toString
+    })
+
+  private val fromText: PartialFunction[DataType, String => Any] = {
+    case BooleanType => _.toBoolean
+    case ByteType => _.toByte
+    case ShortType => _.toShort
+    case IntegerType => _.toInt
+    case LongType => _.toLong
+    case FloatType => _.toFloat
+    case DoubleType => _.toDouble
+    case _: DecimalType => new java.math.BigDecimal(_)
+    case _: StringType => identity
+    case DateType => s => DateTimeUtils.toJavaDate(s.toInt)
+    case TimestampType => s => DateTimeUtils.toJavaTimestamp(s.toLong)
+    case TimestampNTZType => s => DateTimeUtils.microsToLocalDateTime(s.toLong)
+  }
+
+  /** Types whose values the record carries exactly. */
+  def recordable(t: DataType): Boolean = fromText.isDefinedAt(t)
+
+  private def long(j: JValue): Long = j match {
+    case JInt(n) => n.toLong
+    case JLong(n) => n
+    case o => throw new IllegalStateException(s"not an integer: $o")
+  }
+
+  /** `{"columns": <schema>, "files": {f: {"cnt": n, "min": [...],
+    * "max": [...], "nulls": [...]}}}`. */
+  private[tables] def toJson(s: Stats): JValue = JObject(
+    "columns" -> parse(s.columns.json),
+    "files" -> JObject(s.files.toList.sortBy(_._1).map { case (f, e) =>
+      def vals(vs: Seq[Any]) = JArray(s.columns.toList.zip(vs)
+        .map { case (c, v) => encode(c.dataType)(v) })
+      f -> JObject("cnt" -> JLong(e.cnt), "min" -> vals(e.min),
+        "max" -> vals(e.max), "nulls" -> JArray(e.nulls.map(JLong(_)).toList))
+    }))
+
+  private[tables] def fromJson(j: JValue): Stats = {
+    val columns = DataType.fromJson(compact(render(j \ "columns")))
+      .asInstanceOf[StructType]
+    def vals(v: JValue) = columns.toList.zip(v.children).map {
+      case (c, JString(x)) => fromText(c.dataType)(x)
+      case _ => null
+    }
+    Stats(columns, (j \ "files").asInstanceOf[JObject].obj.map {
+      case (f, e) => f -> File(long(e \ "cnt"), vals(e \ "min"),
+        vals(e \ "max"), (e \ "nulls").children.map(long))
+    }.toMap)
   }
 }

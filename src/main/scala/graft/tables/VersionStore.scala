@@ -23,16 +23,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   dir/v=<n>/_GRAFT_COMMIT       the ONE commit record (JSON, written
   *                                 by [[commit]]): data files, schema,
   *                                 constraints, column mapping,
-  *                                 partition values, op and timestamp
-  *                                 — resolved into a [[Snapshot]]
+  *                                 partition values, per-file stats,
+  *                                 op and timestamp — resolved into a
+  *                                 [[Snapshot]]
   *   dir/v=<n>/<f>.parquet         data files this version wrote, also
   *                                 in subdirs (an artifact's
   *                                 `edges/`, `centroids/`, ...); the
   *                                 record lists every one and may also
   *                                 point at files of older versions or
   *                                 outside `dir`
-  *   dir/v=<n>/_graft_stats/       optional per-file data-skipping
-  *                                 stats ([[graft.ops.Scale]])
   *   dir/_GRAFT_PRUNED             retention low-watermark (highest id
   *                                 ever pruned), fencing out-of-window
   *                                 replays

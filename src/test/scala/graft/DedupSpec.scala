@@ -290,44 +290,14 @@ class DedupSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 12L -> 10L))
   }
 
-  /** `body`'s result and the Spark jobs it ran: a listener counts the
-    * job starts between two marker jobs, and since it sees events in
-    * order, the end marker's arrival means every job has been counted. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.job.description"))
-          .orNull match {
-          case "jobsOf-start" => jobs.set(0)
-          case "jobsOf-end" => done.countDown()
-          case _ => if (jobs.get >= 0) jobs.incrementAndGet()
-        }
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("jobsOf-start")
-      val result = body
-      marker("jobsOf-end")
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (result, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("components: every minhash pair lands in one component (sf0.001)") {
     val pairs = Dedup.minhashPairs(
       graft.tables.Tables(spark, "/root/testdata/sf0.001").documents)
     // over pre-pinned pairs the driver path runs two jobs: the edge pin
     // and the collect
     val pinned = graft.core.Pin(pairs).df
-    val (rows, jobs) = jobsOf(Dedup.components(pinned).collect())
+    val (rows, jobs) = SparkJobs.jobsOf(spark)(
+      Dedup.components(pinned).collect())
     assert(jobs <= 2, s"components ran $jobs jobs")
     val comp = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ps = pinned.select("doc_a", "doc_b").collect()

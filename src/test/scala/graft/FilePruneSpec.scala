@@ -171,6 +171,56 @@ class FilePruneSpec extends AnyFunSuite {
     rm(base.toFile)
   }
 
+  test("record stats: reads and metadata DDL run no job, commits one") {
+    import spark.implicits._
+    import graft.tables.VersionStore
+    val base = java.nio.file.Files.createTempDirectory("graft_prune_j")
+    val src = base.resolve("src").toString
+    (1 to 8000).map(i => (i.toLong, (i % 100).toLong, s"p$i"))
+      .toDF("x", "y", "p")
+      .repartitionByRange(8, col("x")).sortWithinPartitions("x")
+      .write.parquet(src)
+    // the same 8 files as v=0 of two chains: one ANALYZEd on two
+    // columns, one never ANALYZEd (a DELETE that matches nothing)
+    val analyzed = base.resolve("a").toString
+    val plain = base.resolve("b").toString
+    Scale.analyzeTable(spark, src, analyzed, Seq("x", "y"))
+    Scale.deleteWhere(spark, src, plain, lit(false))
+    val more = (9001 to 9100).map(i => (i.toLong, (i % 100).toLong, s"p$i"))
+      .toDF("x", "y", "p")
+    // each statement runs on both chains; its Spark jobs per chain
+    def jobs(stmt: String => Any): (Int, Int) =
+      (SparkJobs.jobsOf(spark)(stmt(analyzed))._2,
+        SparkJobs.jobsOf(spark)(stmt(plain))._2)
+    val counts = Seq(
+      "filesPruned" -> jobs(t => Scale.filesPruned(spark,
+        VersionStore.snapshot(spark, t), "x >= 2000 AND x < 3000")),
+      "DELETE" -> jobs(t => Scale.deleteWhere(spark, t, t,
+        col("x") >= 2000 && col("x") < 2100)),
+      "APPEND" -> jobs(t => Scale.appendTable(spark, t, more)),
+      "OPTIMIZE ZORDER" -> jobs(t => Scale.optimizeTable(spark, t, t, 0.02,
+        Some((col("x"), col("y"))))),
+      "RENAME COLUMN" -> jobs(t => Scale.renameColumn(spark, t, t, "y", "w")))
+    counts.foreach { case (stmt, (a, p)) =>
+      info(s"$stmt: $a jobs ANALYZEd, $p not") }
+    val byStmt = counts.toMap
+    assert(byStmt("filesPruned")._1 == 0 && byStmt("RENAME COLUMN")._1 == 0,
+      s"stats reads and metadata-only DDL must run no job: $counts")
+    Seq("DELETE", "APPEND", "OPTIMIZE ZORDER").foreach { stmt =>
+      val (a, p) = byStmt(stmt)
+      assert(a <= p + 1, s"$stmt: stats upkeep ran ${a - p} extra jobs")
+    }
+    // the stats followed every statement: they still prune, under the
+    // renamed column too
+    val head = VersionStore.snapshot(spark, analyzed)
+    assert(Scale.statsOf(spark, analyzed, head.version).get.columns
+      .toSeq == Seq("__f", "min_x", "max_x", "nc_x", "min_w", "max_w",
+        "nc_w", "cnt"))
+    val (_, ps) = Scale.filesPruned(spark, head, "x > 9050")
+    assert(ps.filesRead < ps.filesTotal, s"no skipping: $ps")
+    rm(base.toFile)
+  }
+
   test("all-null column stats prune soundly") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_prune_n")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.tables.{Snapshot, VersionStore}
+import graft.tables.{Snapshot, Stats, VersionStore}
 
 /** The shared versioned-table layer (r9-verdict ask #5): ONE
   * implementation of marker-gated listing, the exclusive staged
@@ -298,6 +298,77 @@ class VersionStoreSpec extends AnyFunSuite {
     rm(base.toFile)
   }
 
+  /** Equal as the record must keep them: doubles bit for bit (NaN,
+    * -0.0), decimals with their scale, everything else by value and
+    * class. */
+  private def same(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) =>
+      java.lang.Double.doubleToRawLongBits(x) ==
+        java.lang.Double.doubleToRawLongBits(y)
+    case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.equals(y)
+    case _ => a == b && (a == null || a.getClass == b.getClass)
+  }
+
+  test("the commit record carries per-file stats exactly, type by type") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val base = java.nio.file.Files.createTempDirectory("graft_vs_stats")
+    val dir = base.resolve("t").toString
+    val columns = StructType(Seq(
+      StructField("l", LongType), StructField("i", IntegerType),
+      StructField("d", DoubleType), StructField("m", DecimalType(38, 18)),
+      StructField("s", StringType), StructField("day", DateType),
+      StructField("ts", TimestampType), StructField("none", LongType)))
+    val lo = Row(Long.MinValue, Int.MinValue, -0.0,
+      new java.math.BigDecimal("-12345678901234567890.123456789012345678"),
+      "naïve Ωμέγα 東京 🚀", java.sql.Date.valueOf("1969-12-31"),
+      java.sql.Timestamp.valueOf("1969-12-31 23:59:59.999999"), null)
+    val hi = Row(Long.MaxValue, Int.MaxValue, Double.NaN,
+      new java.math.BigDecimal("0.000000000000000001"),
+      "ünïcødé", java.sql.Date.valueOf("2024-02-29"),
+      java.sql.Timestamp.valueOf("2024-02-29 12:34:56.123456"), null)
+    val entry = Stats.File(5L, lo.toSeq, hi.toSeq,
+      columns.indices.map(i => if (i == 7) 5L else i.toLong))
+    val stats = Stats(columns, Map(s"$dir/v=0/a.parquet" -> entry,
+      s"$dir/v=0/b.parquet" -> entry.copy(cnt = 7L)))
+    val committed = VersionStore.commit(spark, dir, None)(stage =>
+      Snapshot(dir, stage.version, Seq(stageRows(stage, "a.parquet", Seq(1))),
+        stats = Some(stats)))
+    val back = VersionStore.snapshot(spark, dir)
+    assert(back.copy(stats = None) == committed.copy(stats = None))
+    val got = back.stats.get
+    assert(got.columns == columns && got.files.keySet == stats.files.keySet)
+    for ((f, want) <- stats.files) {
+      val have = got.files(f)
+      assert(have.cnt == want.cnt && have.nulls == want.nulls)
+      for (i <- columns.indices)
+        assert(same(have.min(i), want.min(i)) &&
+          same(have.max(i), want.max(i)),
+          s"$f.${columns(i).name}: $want came back as $have")
+    }
+    // and the values ANALYZE records are exactly those Spark profiles
+    val src = base.resolve("src").toString
+    Seq(Seq(lo, hi), Seq(hi, lo, hi)).foreach(rs =>
+      spark.createDataFrame(rs.asJava, columns).coalesce(1)
+        .write.mode("append").parquet(src))
+    graft.ops.Scale.analyzeTable(spark, src, base.resolve("a").toString,
+      columns.fieldNames.toSeq)
+    def profile(df: org.apache.spark.sql.DataFrame) =
+      df.drop("__f").collect().sortBy(_.getAs[Long]("cnt")).map(_.toSeq)
+    val recorded = graft.ops.Scale.statsOf(spark,
+      base.resolve("a").toString, 0L).get
+    val direct = graft.ops.Scale.fileStats(spark, src, columns.fieldNames.toSeq)
+    assert(recorded.schema.map(f => f.name -> f.dataType) ==
+      direct.schema.map(f => f.name -> f.dataType))
+    val (pr, pd) = (profile(recorded), profile(direct))
+    assert(pr.length == 2 && pr.zip(pd).forall { case (a, b) =>
+      a.length == b.length && a.zip(b).forall { case (x, y) => same(x, y) }
+    }, s"recorded ${pr.map(_.mkString(",")).mkString(" | ")} vs " +
+      s"profiled ${pd.map(_.mkString(",")).mkString(" | ")}")
+    rm(base.toFile)
+  }
+
   test("guard: chain file names stay inside graft.tables") {
     // the on-disk layout (marker, writer token, commit record,
     // watermarks, the `v=<n>` version dirs) is VersionStore's alone:
@@ -308,7 +379,7 @@ class VersionStoreSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root: $root")
-    val name = raw"(?<![A-Za-z0-9])_GRAFT_[A-Za-z0-9_]*".r
+    val name = raw"(?i)(?<![A-Za-z0-9])_GRAFT_[A-Za-z0-9_]*".r
     val versionPath = raw"/v=".r
     def isDoc(l: String) = {
       val t = l.trim
