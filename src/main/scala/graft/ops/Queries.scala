@@ -1868,7 +1868,7 @@ object Queries {
     * DML on an immutable parquet lake: the events table is laid out
     * hash-clustered on event_type (8 files), a `DELETE WHERE
     * event_type = 'error'` rewrites ONLY the file(s) containing
-    * error rows (file-granular hit detection via `input_file_name`,
+    * error rows (file-granular hit detection via `_metadata.file_path`,
     * a file-count-bounded collect) and carries the rest into the new
     * version's manifest BY POINTER ([[graft.tables.VersionStore]] —
     * nothing untouched is ever copied), and the graded rollup reads

@@ -1,11 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, NumericType, StringType,
   StructField, StructType}
 
 import org.apache.hadoop.fs.Path
+import scala.reflect.runtime.universe.TypeTag
 
 import graft.tables.{Footers, Snapshot, Stats, Tables, VersionStore}
 import graft.tables.VersionStore.withCommitRetry
@@ -110,52 +111,6 @@ object Scale {
                                 rowsBefore: Long, rowsAfter: Long,
                                 filesScanned: Long = -1L)
 
-  /** Scheme-blind path identity: manifest entries are written
-    * scheme-less (`/t/v=1/x`) while `input_file_name()` yields
-    * qualified URIs (`file:///t/v=1/x`) — hit detection must match a
-    * file across both spellings (a chain's files all live on ONE
-    * filesystem, so dropping the scheme cannot collide). Goes through
-    * Hadoop's `Path`, not `java.net.URI`, because table paths are raw
-    * strings that may carry URI-illegal characters (spaces) — `Path`
-    * percent-handles them where a bare `new URI(s)` throws
-    * `URISyntaxException` (r10 advice). */
-  private def normalize(uri: String): String = {
-    // two spellings reach here: manifest entries / Path.toString
-    // (DECODED — a raw space makes them an ILLEGAL URI) and
-    // input_file_name() (percent-ENCODED legal URIs). Parse as URI
-    // when legal (getPath decodes %xx); otherwise strip the
-    // scheme//authority prefix textually — the remainder is already
-    // in decoded form. Hadoop's Path can't do this: its constructor
-    // RE-quotes a '%' in an already-encoded string (r11 review).
-    def stripped: String = {
-      val i = uri.indexOf(':')
-      val rest =
-        if (i > 0 &&
-          uri.substring(0, i).matches("[A-Za-z][A-Za-z0-9+.-]*"))
-          uri.substring(i + 1)
-        else uri
-      if (rest.startsWith("//")) {
-        val j = rest.indexOf('/', 2)
-        if (j >= 0) rest.substring(j) else "/"
-      } else rest
-    }
-    scala.util.Try(new java.net.URI(uri)).toOption
-      .flatMap(u => Option(u.getPath)).filter(_.nonEmpty)
-      .getOrElse(stripped)
-  }
-
-  /** Map a scan-reported file back to its manifest spelling, failing
-    * with a NAMED error instead of a bare `NoSuchElementException`
-    * when qualification diverges (r10 advice): the message carries
-    * both the unmatched path and the base-manifest size so the
-    * mismatch is diagnosable from the exception alone. */
-  private def resolveHit(byNorm: Map[String, String], f: String): String =
-    byNorm.getOrElse(normalize(f), throw new IllegalStateException(
-      s"scan-reported file $f (normalized ${normalize(f)}) matches " +
-        s"none of the ${byNorm.size} base-manifest entries — path " +
-        "qualification mismatch between input_file_name() and the " +
-        "manifest spelling"))
-
   /** Read `files` exactly as the chain's `mergeSchema` union read
     * does, but serve the union schema from driver-read FOOTERS when
     * every file carries Spark's serialized schema key (every
@@ -182,24 +137,153 @@ object Scale {
       : DataFrame =
     readMerged(spark, files, graft.tables.Footers.read(spark, files))
 
-  /** Write `df` as exactly ONE parquet file named `name` inside
-    * `stage` — the shared single-file-write used by every COW
-    * rewrite and by the change-feed spool. FAILS LOUDLY: a missing
-    * part file or a false rename throws BEFORE any manifest can
-    * reference the path (silently
-    * dropping the only copy of rewritten data was the alternative). */
-  private def writeSingleFile(df: DataFrame, fs: org.apache.hadoop.fs.FileSystem,
-                              stage: String, name: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(stage, s"__w_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new java.io.IOException(
-        s"no part file produced under $tmp"))
-    val dest = new org.apache.hadoop.fs.Path(stage, name)
-    if (!fs.rename(part, dest))
-      throw new java.io.IOException(s"rename $part -> $dest failed")
-    fs.delete(tmp, true): Unit
+  /** A file's identity whichever spelling names it: the scheme,
+    * authority and DECODED path of its qualified URI. Record entries
+    * are decoded and often scheme-less, while a scan reports
+    * `_metadata.file_path` encoded and as `file:/…` where `Path.toUri`
+    * says `file:///…`: compared as strings they never meet. */
+  private def fileId(u: java.net.URI): String =
+    s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
+
+  /** `files` by their [[fileId]], each qualified by its own file
+    * system. */
+  private def byId(spark: SparkSession, files: Seq[String])
+      : Map[String, String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.map { f =>
+      val p = new Path(f)
+      fileId(p.getFileSystem(conf).makeQualified(p).toUri) -> f
+    }.toMap
+  }
+
+  /** `at`'s value for the file a scan reports as `path` (its
+    * `_metadata.file_path`), by [[fileId]]; a file `at` does not name
+    * fails loudly. */
+  private def lookup[A](at: Map[String, A])(path: String): A =
+    at.getOrElse(fileId(new java.net.URI(path)),
+      throw new IllegalStateException(s"scanned file $path matches " +
+        s"none of the statement's ${at.size} files"))
+
+  /** [[lookup]] for each scanned row, parsing a path once per file a
+    * task reads. */
+  private def scanLookup[A: TypeTag](at: Map[String, A]): Column = {
+    val parsed = new java.util.concurrent.ConcurrentHashMap[String, A]()
+    udf((p: String) => parsed.computeIfAbsent(p, lookup(at)(_)))
+      .apply(col("_metadata.file_path"))
+  }
+
+  /** Whether a write over `files` fits what Spark reads per scan task
+    * (`spark.sql.files.maxPartitionBytes`), by their footers' sizes. */
+  private def fitsOneTask(spark: SparkSession, files: Seq[String],
+                          footers: Map[String, Footers.Info]): Boolean =
+    files.iterator.map(footers(_).bytes).sum <=
+      spark.sessionState.conf.filesMaxPartitionBytes
+
+  /** The files among `files` of `snap` that hold a row `hit` keeps:
+    * `hit` sees the rows as `snap` serves them plus their file's path
+    * `__f`, matched to `files` by [[fileId]] as [[readTagged]] tags;
+    * one collect, bounded by file count. Paths are made distinct per
+    * scan task and then on the driver: a `distinct()` would add a
+    * shuffle, a job of its own. */
+  private def hitFilesOf(spark: SparkSession, snap: Snapshot,
+                         files: Seq[String],
+                         footers: Map[String, Footers.Info])
+                        (hit: DataFrame => DataFrame): Seq[String] =
+    if (files.isEmpty) Seq.empty
+    else {
+      val ids = byId(spark, files)
+      hit(aligned(snap, readMerged(spark, files, footers)
+          .withColumn("__f", col("_metadata.file_path")), Seq("__f")))
+        .select("__f").as(Encoders.STRING)
+        .mapPartitions(_.distinct)(Encoders.STRING)
+        .collect().map(lookup(ids)).distinct.toSeq
+    }
+
+  /** The rows of `targets`' files as `snap` serves them, each tagged
+    * with its target index `__tag` and its position `__pos` in that
+    * target, for [[stageTargets]]: target i concatenates the rows of
+    * `targets(i)` in order (offsets from footer row counts, positions
+    * from the scan's `_metadata.row_index`), each row found by its
+    * file's [[fileId]] ([[scanLookup]]). */
+  private def readTagged(spark: SparkSession, snap: Snapshot,
+                         targets: Seq[Seq[String]],
+                         footers: Map[String, Footers.Info]): DataFrame = {
+    val at = targets.zipWithIndex.flatMap { case (files, t) =>
+      files.zip(files.scanLeft(0L)(_ + footers(_).rows)).map {
+        case (f, offset) => f -> (t, offset)
+      }
+    }.toMap
+    val src = scanLookup(byId(spark, targets.flatten).map {
+      case (id, f) => id -> at(f) })
+    aligned(snap, readMerged(spark, targets.flatten, footers)
+      .withColumns(Map("__tag" -> src("_1"),
+        "__pos" -> (src("_2") + col("_metadata.row_index")))),
+      Seq("__tag", "__pos"))
+  }
+
+  /** The names the rewrites of `files` take in the stage of `version`:
+    * each file's own (1:1), except a name already taken — a CLONE's
+    * record points at its source's files, which a later version of the
+    * clone can name alike — which gets the version and its position
+    * as a prefix. */
+  private def rewriteNames(files: Seq[String], version: Long)
+      : IndexedSeq[String] = {
+    val taken = scala.collection.mutable.Set.empty[String]
+    files.zipWithIndex.map { case (f, i) =>
+      val n = new Path(f).getName
+      if (taken.add(n)) n else s"r$version-$i-$n"
+    }.toIndexedSeq
+  }
+
+  /** Write `df`, its rows tagged with a target index `__tag` and a
+    * position `__pos`, as exactly ONE parquet file per target in ONE
+    * Spark write: target i lands in `stage` as `names(i)`, its rows in
+    * `__pos` order (so a source file's clustering survives its
+    * rewrite). One target, or a write whose input `fits` one scan task
+    * ([[fitsOneTask]]), is written by one task with no exchange; more
+    * are repartitioned by target. A target with no rows gets a
+    * footer-only file written on the driver ([[Footers.writeEmpty]]),
+    * unless its name is in `skipEmpty`. Returns the names staged, in
+    * target order. FAILS LOUDLY before any record can name a path:
+    * same-named targets, an untagged row, a target dir holding
+    * anything but one part file (a session's `maxRecordsPerFile`, say)
+    * or a false rename throws. */
+  private def stageTargets(df: DataFrame,
+                           fs: org.apache.hadoop.fs.FileSystem,
+                           stage: String, names: IndexedSeq[String],
+                           skipEmpty: Set[String] = Set.empty,
+                           fits: Boolean = false): Seq[String] = {
+    require(names.distinct.size == names.size,
+      s"same-named targets in one stage: ${names.mkString(", ")}")
+    val tmp = new Path(stage, "__targets")
+    (if (fits || names.size == 1) df.coalesce(1)
+     else df.repartition(col("__tag")))
+      .sortWithinPartitions("__tag", "__pos")
+      .drop("__pos").write.mode("overwrite").partitionBy("__tag")
+      .parquet(tmp.toString)
+    val parts = fs.listStatus(tmp).filter(_.isDirectory).map { d =>
+      val t = d.getPath.getName.stripPrefix("__tag=").toIntOption
+        .filter(names.indices.contains)
+      val files = fs.listStatus(d.getPath).map(_.getPath)
+        .filterNot(p => p.getName.startsWith(".") || p.getName.startsWith("_"))
+      if (t.isEmpty || files.length != 1)
+        throw new java.io.IOException(s"${d.getPath}: expected one part " +
+          s"file of a target, found ${files.map(_.getName).mkString(", ")}")
+      t.get -> files.head
+    }.toMap
+    val schema =
+      StructType(df.schema.filterNot(f => Set("__tag", "__pos")(f.name)))
+    try names.indices
+      .filter(t => parts.contains(t) || !skipEmpty(names(t))).map { t =>
+        val dest = new Path(stage, names(t))
+        parts.get(t) match {
+          case Some(part) => if (!fs.rename(part, dest))
+            throw new java.io.IOException(s"rename $part -> $dest failed")
+          case None => Footers.writeEmpty(df.sparkSession, dest, schema)
+        }
+        names(t)
+      }
+    finally fs.delete(tmp, true): Unit
   }
 
   /** Write `df` into `stage` as sequenced `<name(i)>` parquet files
@@ -284,44 +368,23 @@ object Scale {
             "nothing published")
     }
 
-  /** Rewrite each of `files` 1:1 into `stage` under its own name, all
-    * concurrently: a bounded driver thread pool submits independent
-    * single-file Spark jobs (the scheduler interleaves them; at 100 TB
-    * each file job is executor-sized and the pool keeps the cluster
-    * fed), each `coalesce(1)` so the file granularity — and any
-    * clustering ([[compact]]'s Z-order) — survives the DML. */
-  private def rewriteEach(fs: org.apache.hadoop.fs.FileSystem,
-                          stage: String, files: Seq[String])
-                         (rewrite: String => DataFrame): Unit =
-    if (files.nonEmpty) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, files.size))
-      try files.map { f =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit =
-            writeSingleFile(rewrite(f), fs, stage, new Path(f).getName)
-        })
-      }.foreach(_.get())
-      finally pool.shutdown()
-    }
-
   /** Partition tuples after a 1:1 rewrite: untouched pointers keep
-    * their entries; a rewritten hit file inherits its source file's
-    * tuple restricted to the columns `keeps` (those the DML provably
-    * left unchanged — an UPDATE that SETs a partition column
-    * invalidates that key, a DELETE never does); new files without
-    * provenance stay untupled (sound). */
+    * their entries; a rewritten hit file (`rewrites`: hit file → its
+    * staged name) inherits its source file's tuple restricted to the
+    * columns `keeps` (those the DML provably left unchanged — an UPDATE
+    * that SETs a partition column invalidates that key, a DELETE never
+    * does); new files without provenance stay untupled (sound). */
   private def carriedParts(base: Snapshot, untouched: Seq[String],
-                           hitFiles: Seq[String],
+                           rewrites: Seq[(String, String)],
                            stage: VersionStore.Stage,
                            keeps: String => Boolean)
       : Map[String, Map[String, String]] = {
     val untouchedSet = untouched.toSet
     base.partitions.filter { case (f, _) => untouchedSet(f) } ++
-      hitFiles.flatMap { f =>
+      rewrites.flatMap { case (f, name) =>
         base.partitions.get(f).map(_.filter { case (k, _) => keeps(k) })
           .filter(_.nonEmpty)
-          .map(kv => s"${stage.vdir}/${new Path(f).getName}" -> kv)
+          .map(kv => s"${stage.vdir}/$name" -> kv)
       }
   }
 
@@ -343,10 +406,12 @@ object Scale {
     * Base resolution ([[baseOf]]): the chain's head when one exists
     * (chained DML), else the parquet files of `srcDir`.
     *
-    * Hit detection is file-granular: `input_file_name()` on the
-    * filtered scan, a collect bounded by FILE COUNT, never rows. Hit
-    * files rewrite concurrently ([[rewriteEach]]). Readers resolve the
-    * record via [[readTable]]; time travel via [[readTableAt]]. */
+    * Hit detection is file-granular: the file name of each row the
+    * filtered scan keeps ([[hitFilesOf]]), a collect bounded by FILE
+    * COUNT, never rows. All hit files rewrite in ONE Spark write, one
+    * file each, rows in their source order ([[stageTargets]]). Readers
+    * resolve the record via [[readTable]]; time travel via
+    * [[readTableAt]]. */
   private def cowRewrite(spark: SparkSession, srcDir: String,
                          tableDir: String, cond: Column,
                          rewrite: DataFrame => DataFrame,
@@ -358,10 +423,7 @@ object Scale {
     val fs = VersionStore.fsOf(spark, tableDir)
     val (head, base) = baseOf(spark, srcDir, tableDir)
     val baseFiles = base.files
-    val byNorm = baseFiles.map(f => normalize(f) -> f).toMap
     val footers = Footers.read(spark, baseFiles)
-    def readBase(files: Seq[String]) =
-      aligned(base, readMerged(spark, files, footers))
     // row accounting straight from the already-read footers (guide
     // §1.2): the sums are exactly what count() over the same files
     // returns, with zero Spark jobs per commit
@@ -376,27 +438,26 @@ object Scale {
       case None => baseFiles
     }
     // file-granular hit detection: rows where cond IS TRUE name their
-    // file; the collect is bounded by file count
-    val hitFiles: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else readBase(candidates)
-        .withColumn("__f", input_file_name())
-        .where(cond).select("__f").distinct()
-        .collect().map(r => resolveHit(byNorm, r.getString(0))).toSeq
+    // file
+    val hitFiles = hitFilesOf(spark, base, candidates, footers)(_.where(cond))
     val untouched = baseFiles.filterNot(hitFiles.toSet)
+    lazy val rewritten = rewrite(
+      readTagged(spark, base, hitFiles.map(Seq(_)), footers))
     if (base.constraints.nonEmpty && hitFiles.nonEmpty)
-      enforce(rewrite(readBase(hitFiles)), base.constraints)
+      enforce(rewritten, base.constraints)
     // rows-delta accounting is HIT-FILE-priced: counting the whole
     // post-DML table would defeat the hit-priced contract (the r10
     // review nit) — the untouched pointers contribute unchanged rows
     val hitBefore = hitFiles.iterator.map(footers(_).rows).sum
     var hitAfter = 0L
     commitVersion(spark, tableDir, head, opName) { stage =>
-      rewriteEach(fs, stage.path, hitFiles)(f => rewrite(readBase(Seq(f))))
       // the record names the FINAL paths: rewritten files under the
       // version dir the stage is about to become, untouched files by
       // pointer wherever they already live
-      val names = hitFiles.map(new Path(_).getName)
+      val names = rewriteNames(hitFiles, stage.version)
+      if (hitFiles.nonEmpty)
+        stageTargets(rewritten, fs, stage.path, names,
+          fits = fitsOneTask(spark, hitFiles, footers))
       hitAfter = Footers.rowCount(spark, names.map(n => s"${stage.path}/$n"))
       // REPLACE-WHERE append arm (r11 verdict ask #7): the
       // replacement rows land in the SAME commit as the predicate's
@@ -411,8 +472,8 @@ object Scale {
       }.getOrElse(Seq.empty)
       base.copy(
         files = untouched ++ (names ++ appended).map(n => s"${stage.vdir}/$n"),
-        partitions = carriedParts(base, untouched, hitFiles, stage,
-          k => !tupleBreakers(k)))
+        partitions = carriedParts(base, untouched, hitFiles.zip(names),
+          stage, k => !tupleBreakers(k)))
     }
     RewriteStats(baseFiles.size.toLong, hitFiles.size.toLong,
       rowsBefore, rowsBefore - hitBefore + hitAfter,
@@ -443,9 +504,11 @@ object Scale {
   }
 
   /** `raw` rows of `snap`'s files as its readers see them: aligned to
-    * the declared schema and column mapping, when it declares one. */
-  private def aligned(snap: Snapshot, raw: DataFrame): DataFrame =
-    snap.schema.map(alignTo(raw, _, snap.renames)).getOrElse(raw)
+    * the declared schema and column mapping, when it declares one,
+    * with `raw`'s columns `keep` carried along. */
+  private def aligned(snap: Snapshot, raw: DataFrame,
+                      keep: Seq[String] = Nil): DataFrame =
+    snap.schema.map(alignTo(raw, _, snap.renames, keep)).getOrElse(raw)
 
   /** The table as `snap` serves it: `mergeSchema` unions footers
     * written before and after a metadata-only DDL, then [[alignTo]]
@@ -605,14 +668,15 @@ object Scale {
 
   /** The shared COW MERGE: hit files (those holding any source key — a
     * sound superset of the rows any clause touches) rewrite 1:1 as
-    * `rewriteOf(file rows, source rows with the file's keys)` —
-    * restricting changes to the file's own keys keeps a key that
-    * appears in several base files updating ALL its copies while
-    * inserts land exactly once. `insertsOf(base, source)` gives the
-    * NOT MATCHED rows in the base's shape; they land as one appended
-    * file. Everything else rides by pointer. Hit detection is one
-    * broadcast semi-join of the base scan against the source keys,
-    * collecting FILE NAMES (file-count-bounded). */
+    * `rewriteOf(hit rows, source rows with a hit file's key)` — every
+    * change key is present in the hit rows, so a key that appears in
+    * several base files updates ALL its copies while inserts land
+    * exactly once. `insertsOf(base, source)` gives the NOT MATCHED rows
+    * in the base's shape; they land as one appended file, written by
+    * the same single Spark write as the hit files ([[stageTargets]]).
+    * Everything else rides by pointer. Hit detection is one broadcast
+    * semi-join of the base scan against the source keys, collecting
+    * FILE NAMES (file-count-bounded). */
   private def cowMerge(spark: SparkSession, srcDir: String,
                        tableDir: String, source: DataFrame,
                        key: Seq[String], detail: String)
@@ -622,10 +686,7 @@ object Scale {
     val fs = VersionStore.fsOf(spark, tableDir)
     val (head, base) = baseOf(spark, srcDir, tableDir)
     val baseFiles = base.files
-    val byNorm = baseFiles.map(f => normalize(f) -> f).toMap
     val footers = Footers.read(spark, baseFiles)
-    def readBase(files: Seq[String]) =
-      aligned(base, readMerged(spark, files, footers))
     withPinnedSource(source) { src =>
     // an EMPTY base (a just-CREATEd table) serves the declared
     // schema's empty frame — the bootstrap MERGE is then a pure insert
@@ -633,57 +694,46 @@ object Scale {
     // any clause runs)
     val df =
       if (baseFiles.isEmpty && head.isDefined) readSnapshot(spark, base)
-      else readBase(baseFiles)
+      else aligned(base, readMerged(spark, baseFiles, footers))
     // row accounting from footers (guide §1.2) — no count() jobs
     val rowsBefore = baseFiles.iterator.map(footers(_).rows).sum
-    val srcKeys = src.select(key.map(col): _*).distinct()
-    val hitFiles: Seq[String] =
-      if (baseFiles.isEmpty) Seq.empty
-      else df
-        .withColumn("__f", input_file_name())
-        .join(broadcast(srcKeys), key, "left_semi")
-        .select("__f").distinct()
-        .collect().map(r => resolveHit(byNorm, r.getString(0))).toSeq
+    val hitFiles = hitFilesOf(spark, base, baseFiles, footers)(
+      _.join(broadcast(src.select(key.map(col): _*)), key, "left_semi"))
     val untouched = baseFiles.filterNot(hitFiles.toSet)
-    def rewrite(files: DataFrame): DataFrame = rewriteOf(files,
-      src.join(files.select(key.map(col): _*).distinct(), key, "left_semi"))
+    // NOT MATCHED → INSERT: one appended file (changelog-sized here; at
+    // scale repartition to the target file size), target index after
+    // the hit files'; an update-only MERGE (the common streaming batch)
+    // appends nothing
     val inserts = insertsOf(df, src)
-    if (base.constraints.nonEmpty) {
-      // validate what the MERGE makes visible: the post-merge state of
-      // the hit files plus the inserts — changed data only. This
-      // recomputes the hit-file rewrite once more than the commit
-      // does (both hit-file-sized); trading that for caching the
-      // merged frames would pin changelog-sized state per file
-      val changedBase =
-        if (hitFiles.nonEmpty) rewrite(readBase(hitFiles))
-        else df.limit(0)
-      enforce(changedBase.unionByName(inserts), base.constraints)
-    }
+      .withColumn("__tag", lit(hitFiles.size)).withColumn("__pos", lit(0L))
+    val changed =
+      if (hitFiles.isEmpty) inserts
+      else {
+        val hits = readTagged(spark, base, hitFiles.map(Seq(_)), footers)
+        rewriteOf(hits,
+          src.join(hits.select(key.map(col): _*), key, "left_semi"))
+          .unionByName(inserts)
+      }
+    // validate what the MERGE makes visible: the post-merge state of
+    // the hit files plus the inserts — changed data only
+    if (base.constraints.nonEmpty) enforce(changed, base.constraints)
     val hitBefore = hitFiles.iterator.map(footers(_).rows).sum
     var stagedAfter = 0L
     commitVersion(spark, tableDir, head, "MERGE", detail) { stage =>
-      rewriteEach(fs, stage.path, hitFiles)(f => rewrite(readBase(Seq(f))))
-      // NOT MATCHED → INSERT: one appended file (changelog-sized
-      // here; at scale repartition to the target file size); an
-      // update-only MERGE (the common streaming batch) appends
-      // nothing. Written FIRST, then dropped if empty (footer count):
-      // one execution of the anti-join plan instead of two — an
-      // isEmpty gate runs the whole join before the write re-runs it
-      // (guide §1.2)
-      val ins = new Path(stage.path, s"merge-insert-${stage.version}.parquet")
-      writeSingleFile(inserts, fs, stage.path, ins.getName)
-      if (Footers.rowCount(spark, Seq(ins.toString)) == 0L)
-        fs.delete(ins, false): Unit
-      val staged = parquetIn(fs, stage.path)
-      stagedAfter = Footers.rowCount(spark, staged)
+      val ins = s"merge-insert-${stage.version}.parquet"
+      val names = rewriteNames(hitFiles, stage.version)
+      // the inserts' plan scans every base file
+      val staged = stageTargets(changed, fs, stage.path, names :+ ins,
+        skipEmpty = Set(ins), fits = fitsOneTask(spark, baseFiles, footers))
+      stagedAfter = Footers.rowCount(spark,
+        staged.map(n => s"${stage.path}/$n"))
       // tuple upkeep: a MERGE may overwrite any non-key column, so a
       // rewritten hit file keeps only the tuple keys that are JOIN
       // keys (provably unchanged); the insert file has no provenance
       base.copy(
-        files = untouched ++ staged.map(f =>
-          s"${stage.vdir}/${new Path(f).getName}"),
-        partitions = carriedParts(base, untouched, hitFiles, stage,
-          key.contains))
+        files = untouched ++ staged.map(n => s"${stage.vdir}/$n"),
+        partitions = carriedParts(base, untouched, hitFiles.zip(names),
+          stage, key.contains))
     }
     RewriteStats(baseFiles.size.toLong, hitFiles.size.toLong,
       rowsBefore, rowsBefore - hitBefore + stagedAfter)
@@ -867,7 +917,8 @@ object Scale {
     * pointer table: bin-pack the head's files SMALLER than
     * `targetMB` into ~target-sized rewrites (first-fit decreasing on
     * on-disk bytes, PARTITION-AWARE: bins never cross partition-tuple
-    * groups, and a packed output inherits its group's tuple) and
+    * groups, and a packed output inherits its group's tuple), all bins
+    * in ONE Spark write with one file per bin ([[stageTargets]]), and
     * publish the next version with every
     * already-compact file riding by POINTER. The job cost is the
     * small-file bytes alone — a 100 TB table that is 99% compacted
@@ -1033,15 +1084,16 @@ object Scale {
       CompactStats(filesBefore, totalBytes, filesBefore, totalBytes)
     else {
       commitVersion(spark, tableDir, head, "OPTIMIZE") { stage =>
-        val packed = bins.zipWithIndex.map { case ((group, _, tuple), g) =>
-          // the chain's full metadata applies: without the rename
-          // mapping a compacted pre-rename file would NULL the
-          // renamed column's values (r10 review fix)
-          val name = s"opt-${stage.version}-$g.parquet"
-          writeSingleFile(aligned(base, readMerged(spark, group.toSeq)),
-            fs, stage.path, name)
-          (s"${stage.vdir}/$name", tuple)
-        }
+        // every bin is one target of one write; the chain's full
+        // metadata applies: without the rename mapping a compacted
+        // pre-rename file would NULL the renamed column's values (r10
+        // review fix)
+        val groups = bins.map(_._1.toSeq).toSeq
+        val names = bins.indices.map(g => s"opt-${stage.version}-$g.parquet")
+        val footers = Footers.read(spark, groups.flatten)
+        stageTargets(readTagged(spark, base, groups, footers), fs,
+          stage.path, names, fits = fitsOneTask(spark, groups.flatten, footers))
+        val packed = names.map(n => s"${stage.vdir}/$n").zip(bins.map(_._3))
         val largeSet = large.map(_._1).toSet
         base.copy(files = large.map(_._1) ++ packed.map(_._1),
           partitions = base.partitions.filter { case (f, _) =>
@@ -1185,11 +1237,11 @@ object Scale {
                    from: Long, to: Long): DataFrame = {
     require(from < to, s"need from < to, got $from >= $to")
     val snapTo = VersionStore.snapshot(spark, tableDir, Some(to))
+    // a record carries every file it keeps verbatim, so a shared file
+    // has one spelling in both
     val fFrom = VersionStore.snapshot(spark, tableDir, Some(from)).files
-      .map(f => normalize(f) -> f).toMap
-    val fTo = snapTo.files.map(f => normalize(f) -> f).toMap
-    val removed = (fFrom.keySet -- fTo.keySet).toSeq.map(fFrom)
-    val added = (fTo.keySet -- fFrom.keySet).toSeq.map(fTo)
+    val removed = fFrom.diff(snapTo.files)
+    val added = snapTo.files.diff(fFrom)
     // both sides align to `to`'s declared schema so a diff spanning a
     // metadata-only ADD COLUMN stays union-compatible (pre-DDL rows
     // carry typed NULLs)
@@ -1252,7 +1304,8 @@ object Scale {
       if (!fs.exists(dest)) {
         val delta = tableChanges(spark, tableDir, prev, v)
           .withColumn("version", lit(v))
-        writeSingleFile(delta, fs, spoolDir, dest.getName)
+        stageTargets(delta.withColumn("__tag", lit(0))
+          .withColumn("__pos", lit(0L)), fs, spoolDir, IndexedSeq(dest.getName))
       }
       VersionStore.recordAppliedId(spark, spoolDir, v)
     }
@@ -1541,10 +1594,10 @@ object Scale {
   }
 
   /** Per-file min/max/null-count over an explicit FILE LIST, re-keyed
-    * so `__f` holds the caller's canonical path for each file
-    * (manifest entries, or the final `v=<id>` paths of files still
-    * sitting in a staging dir). One distributed pass over just those
-    * files — profiled THROUGH the same [[alignTo]] projection readers
+    * ([[scanLookup]]) so `__f` holds the caller's canonical path for
+    * each file (manifest entries, or the final `v=<id>` paths of files
+    * still sitting in a staging dir). One distributed pass over just
+    * those files — profiled THROUGH the same [[alignTo]] projection readers
     * use (r10 advice): after a RENAME, pre-rename pointer files
     * profile their aliased bytes into the logical column (not NULL);
     * a declared-but-never-backfilled ADD COLUMN profiles as all-NULL,
@@ -1556,12 +1609,8 @@ object Scale {
                            renames: Map[String, Seq[String]] = Map.empty,
                            oneTask: Boolean = false)
       : DataFrame = {
-    val byNorm = files.map(f => normalize(f) -> keyOf(f)).toMap
-    val remap = udf((f: String) => byNorm.getOrElse(normalize(f),
-      throw new IllegalStateException(
-        s"stats remap: scanned file $f matches no manifest entry")))
-    val raw = readMerged(spark, files)
-      .withColumn("__f", remap(input_file_name()))
+    val raw = readMerged(spark, files).withColumn("__f",
+      scanLookup(byId(spark, files).map { case (id, f) => id -> keyOf(f) }))
     val aligned = schema
       .map(alignTo(raw, _, renames, keep = Seq("__f"))).getOrElse(raw)
     val aggs = statAggs(cols)

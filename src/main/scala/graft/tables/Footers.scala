@@ -14,6 +14,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - exact per-file ROW COUNTS: a footer's row-group counts are the
   *    very numbers `count()` aggregates, so DML accounting
   *    (rowsBefore / hitBefore / rowsAfter) needs no job at all;
+  *  - the file's LENGTH, from the same open: whether a rewrite's
+  *    input fits one scan task;
   *  - the file's SPARK SCHEMA (the `org.apache.spark.sql.parquet.row.
   *    metadata` footer key every Spark-written file carries — the same
   *    key Spark's own `mergeSchema` path prefers), so chain reads can
@@ -22,9 +24,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * Files without the key (non-Spark writers) report no schema and
   * callers fall back to the real `mergeSchema` read — behavior
-  * identical, just without the saving. */
+  * identical, just without the saving. The one write, [[writeEmpty]],
+  * gives a rewrite target with no rows its footer-only file. */
 object Footers {
-  final case class Info(rows: Long, schema: Option[StructType])
+  final case class Info(rows: Long, schema: Option[StructType],
+                        bytes: Long)
 
   private val SparkSchemaKey =
     "org.apache.spark.sql.parquet.row.metadata"
@@ -49,7 +53,7 @@ object Footers {
                 .getKeyValueMetaData.get(SparkSchemaKey))
                 .flatMap(j => scala.util.Try(DataType.fromJson(j)
                   .asInstanceOf[StructType]).toOption)
-              f -> Info(r.getRecordCount, schema)
+              f -> Info(r.getRecordCount, schema, in.getLength)
             } finally r.close()
           }
         })
@@ -68,6 +72,20 @@ object Footers {
         }
       }.toMap
     } finally pool.shutdown()
+  }
+
+  /** Write a ZERO-ROW parquet file at `path` on the driver, no Spark
+    * job: Spark's own parquet writer, opened and closed with no row,
+    * so the footer carries `schema` exactly as a Spark write does. */
+  def writeEmpty(spark: SparkSession, path: Path, schema: StructType): Unit = {
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+      .newInstance(path.toString, schema,
+        new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+          job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+      .close()
   }
 
   /** Exact row total of `files` from footers alone — the number

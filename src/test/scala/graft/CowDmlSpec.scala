@@ -581,4 +581,181 @@ class CowDmlSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSet == Set("d1"))
     rm(base.toFile)
   }
+
+  /** 8 parquet files under `dir`, file i holding x in
+    * (1000 i, 1000 (i + 1)] in ascending order: a predicate on x hits
+    * an exact, known set of files. */
+  private def eightSortedFiles(dir: String): Unit = {
+    import spark.implicits._
+    (0 until 8).foreach { i =>
+      (1000 * i + 1 to 1000 * (i + 1))
+        .map(x => (x.toLong, (x % 100).toLong, s"p$x")).toDF("x", "y", "p")
+        .coalesce(1).write.mode("append").parquet(dir)
+    }
+  }
+
+  /** `body` run with `spark.sql.files.maxPartitionBytes` at `split`
+    * (Spark's default when None): a rewrite whose input fits one scan
+    * task is written by one task, otherwise repartitioned by target. */
+  private def withSplit[T](split: Option[String])(body: => T): T = {
+    split.foreach(spark.conf.set("spark.sql.files.maxPartitionBytes", _))
+    try body finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  test("a rewrite is one Spark write: jobs do not grow with hit files or bins") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_cow_jobs")
+    val src = base.resolve("src").toString
+    eightSortedFiles(src)
+    var n = 0
+    // one statement on a fresh chain over the same 8 files: its jobs
+    // and its result
+    def run[T](stmt: String => T): (T, Int) = {
+      n += 1
+      SparkJobs.jobsOf(spark)(stmt(base.resolve(s"t$n").toString))
+    }
+    val one = col("x") <= 100
+    val all = pmod(col("x"), lit(1000)) < 100
+    def merge(keys: Seq[Long]) = (keys :+ 9001L)
+      .map(x => (x, 0L, "m")).toDF("x", "y", "p")
+    val lens = parquets(src).map(_.length())
+    // first-fit decreasing packs two files per bin below 3 × the
+    // smallest file, every file in one bin above the total
+    val mb = 1024.0 * 1024
+    require(2 * lens.max < 3 * lens.min, s"uneven files: ${lens.toSeq}")
+    val pairs = (2 * lens.max + 3 * lens.min) / 2 / mb
+    val whole = (lens.sum + 1024) / mb
+    // with a 4 KB split nothing fits one task, and one target still
+    // needs no exchange where several are repartitioned by target: one
+    // job more at most
+    def gate(split: Option[String], slack: Int): Unit = withSplit(split) {
+      val mode = split.fold("one task")(b => s"$b splits")
+      val counts = Seq(
+        "DELETE" -> (run(t => Scale.deleteWhere(spark, src, t, one)),
+          run(t => Scale.deleteWhere(spark, src, t, all))),
+        "UPDATE" -> (
+          run(t => Scale.updateWhere(spark, src, t, one,
+            Seq("p" -> lit("u")))),
+          run(t => Scale.updateWhere(spark, src, t, all,
+            Seq("p" -> lit("u"))))),
+        "MERGE" -> (
+          run(t => Scale.mergeInto(spark, src, t, merge(Seq(50L)),
+            Seq("x"))),
+          run(t => Scale.mergeInto(spark, src, t,
+            merge((0 until 8).map(i => 1000L * i + 50)), Seq("x")))))
+      counts.foreach { case (stmt, ((s1, j1), (s8, j8))) =>
+        info(s"$stmt, $mode: $j1 jobs for 1 hit file, $j8 for 8")
+        assert(s1.filesRewritten == 1 && s8.filesRewritten == 8,
+          s"$stmt hit ${s1.filesRewritten} and ${s8.filesRewritten} files")
+        assert(j8 <= j1 + slack,
+          s"$stmt, $mode: $j8 jobs for 8 hit files vs $j1 for 1")
+      }
+      val (o1, j1) = run(t => Scale.optimizeTable(spark, src, t, whole))
+      val (o4, j4) = run(t => Scale.optimizeTable(spark, src, t, pairs))
+      info(s"OPTIMIZE, $mode: $j1 jobs into 1 bin, $j4 into ${o4.filesAfter}")
+      assert(o1.filesAfter == 1 && o4.filesAfter == 4, s"$o1 / $o4")
+      assert(j4 <= j1 + slack,
+        s"OPTIMIZE, $mode: $j4 jobs for 4 bins vs $j1 for 1")
+    }
+    gate(None, 0)
+    gate(Some("4k"), 1)
+    rm(base.toFile)
+  }
+
+  test("UPDATE and MERGE rewrite 1:1 and keep each file's row order") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_cow_order")
+    val src = base.resolve("src").toString
+    eightSortedFiles(src)
+    Seq(None, Some("4k")).foreach { split =>
+      val tbl = base.resolve(s"tbl-${split.size}").toString
+      def rows(f: String) = spark.read.parquet(f).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+      def name(f: String) = new org.apache.hadoop.fs.Path(f).getName
+      // version `v` keeps every file of `before` by pointer or rewrites
+      // it into one file of the same name, holding `change` of its
+      // source's rows in their order; `inserts` files are new
+      def check(before: Seq[String], v: Long, hits: Int, inserts: Int)
+               (change: ((Long, Long, String)) => (Long, Long, String)) = {
+        val after = VersionStore.snapshot(spark, tbl, Some(v)).files
+        val (written, untouched) = after.partition(_.contains(s"/v=$v/"))
+        val rewritten =
+          written.filterNot(f => name(f).startsWith("merge-insert-"))
+        assert(rewritten.size == hits && written.size == hits + inserts &&
+          untouched.size + hits == before.size, s"record of v=$v: $after")
+        assert((untouched ++ rewritten).map(name).toSet ==
+          before.map(name).toSet,
+          "every hit file maps to one file of the same name")
+        val sources = before.map(f => name(f) -> f).toMap
+        rewritten.foreach { f =>
+          assert(rows(f) == rows(sources(name(f))).map(change),
+            s"$f lost its source's row order")
+        }
+      }
+      withSplit(split)(Scale.updateWhere(spark, src, tbl,
+        pmod(col("x"), lit(3)) === 0 && col("x") <= 4000,
+        Seq("p" -> lit("U"))))                                     // v=0
+      check(parquets(src).map(_.getPath).toSeq, 0L, 4, 0) {
+        case (x, y, p) => (x, y, if (x % 3 == 0) "U" else p) }
+      val before = VersionStore.snapshot(spark, tbl, Some(0L)).files
+      val keys = Seq(2500L, 3500L, 4500L, 5500L)
+      withSplit(split)(Scale.mergeInto(spark, tbl, tbl,
+        (keys ++ Seq(9001L, 9002L)).map(x => (x, -1L, "M"))
+          .toDF("x", "y", "p"), Seq("x")))                         // v=1
+      check(before, 1L, 4, 1) { case (x, y, p) =>
+        if (keys.contains(x)) (x, -1L, "M") else (x, y, p) }
+      assert(Scale.readTable(spark, tbl).count() == 8002L)
+    }
+    rm(base.toFile)
+  }
+
+  test("a CLONE's files may share names with its source's: DML, OPTIMIZE and ANALYZE key on the path") {
+    import spark.implicits._
+    // a space and a '%' in the path: a file's identity survives every
+    // spelling of it
+    val base = java.nio.file.Files.createTempDirectory("graft cow%clone ")
+    def dir(d: String) = base.resolve(d).toString
+    def rows(lo: Long, hi: Long) =
+      (lo to hi).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1)
+    rows(1, 100).write.parquet(dir("src"))
+    Scale.deleteWhere(spark, dir("src"), dir("a"), col("id") > 1000) // v=0
+    Scale.appendTable(spark, dir("a"), rows(101, 200))   // a/v=1/append-1-0
+    // b's v=0 points at a's files; its own v=1 names a file alike
+    Scale.cloneTable(spark, dir("a"), dir("b"))
+    Scale.appendTable(spark, dir("b"), rows(201, 300))   // b/v=1/append-1-0
+    val files = VersionStore.snapshot(spark, dir("b"), Some(1L)).files
+    assert(files.count(_.endsWith("/append-1-0.parquet")) == 2, s"$files")
+    def ids(t: String) = Scale.readTable(spark, t).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val all = (1L to 300L).map(i => i -> i * 1.0).toMap
+    // DELETE hits all three files, two of them same-named
+    Scale.cloneTable(spark, dir("b"), dir("c1"))
+    val d = Scale.deleteWhere(spark, dir("c1"), dir("c1"),
+      pmod(col("id"), lit(10)) === 0)
+    assert(d.filesRewritten == 3 && d.rowsAfter == 270, s"$d")
+    assert(ids(dir("c1")) == all.filter(_._1 % 10 != 0))
+    // MERGE updates a key in each same-named file and inserts one
+    Scale.cloneTable(spark, dir("b"), dir("c2"))
+    val m = Scale.mergeInto(spark, dir("c2"), dir("c2"),
+      Seq((150L, -1.0), (250L, -2.0), (9001L, 0.5)).toDF("id", "v"),
+      Seq("id"))
+    assert(m.filesRewritten == 2 && m.rowsAfter == 301, s"$m")
+    assert(ids(dir("c2")) ==
+      all ++ Map(150L -> -1.0, 250L -> -2.0, 9001L -> 0.5))
+    assert(VersionStore.latest(spark, dir("c2")).get.files.distinct.size ==
+      4, "each rewrite is a file of its own")
+    // bin-pack OPTIMIZE packs both into one bin, rows intact
+    Scale.cloneTable(spark, dir("b"), dir("c3"))
+    val o = Scale.optimizeTable(spark, dir("c3"), dir("c3"), 64.0)
+    assert(o.filesAfter == 1, s"$o")
+    assert(ids(dir("c3")) == all)
+    // ANALYZE profiles each same-named file under its own path
+    Scale.analyzeTable(spark, dir("b"), dir("b"), Seq("id"))
+    val st = VersionStore.latest(spark, dir("b")).get.stats.get.files
+    assert(files.map(f => f -> (st(f).cnt, st(f).min, st(f).max)).toMap ==
+      files.map(f => f -> (if (f.contains("/b/")) (100L, Seq(201L), Seq(300L))
+        else if (f.contains("/a/")) (100L, Seq(101L), Seq(200L))
+        else (100L, Seq(1L), Seq(100L)))).toMap, s"$st")
+    rm(base.toFile)
+  }
 }

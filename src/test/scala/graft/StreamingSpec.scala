@@ -1294,6 +1294,48 @@ class StreamingSpec extends AnyFunSuite {
     rm(base.toFile)
   }
 
+  test("spoolChanges: a backlog spanning ADD COLUMN spools each version in its own schema") {
+    import spark.implicits._
+    import graft.ops.Scale
+    val base = java.nio.file.Files.createTempDirectory("graft_spool_ddl")
+    val src = base.resolve("src").toString
+    val tbl = base.resolve("tbl").toString
+    val spool = base.resolve("spool").toString
+    (1 to 1000).map(i => (i.toLong, i.toLong % 4, i.toDouble))
+      .toDF("id", "k", "v")
+      .repartition(4, col("k")).write.parquet(src)
+    Scale.deleteWhere(spark, src, tbl, col("k") === 3)          // v=0
+    Scale.updateWhere(spark, tbl, tbl, col("k") === 0,
+      Seq("v" -> (col("v") + 0.5)))                             // v=1
+    Scale.addColumn(spark, tbl, tbl, "flag",
+      org.apache.spark.sql.types.LongType)                      // v=2
+    Scale.updateWhere(spark, tbl, tbl, col("k") === 1,
+      Seq("flag" -> lit(7L)))                                   // v=3
+    Scale.deleteWhere(spark, tbl, tbl, col("k") === 2)          // v=4
+    // the whole backlog in one call
+    assert(Scale.spoolChanges(spark, tbl, spool) == Seq(1L, 2L, 3L, 4L))
+    (1L to 4L).foreach { v =>
+      val got = spark.read.parquet(s"$spool/v$v.parquet")
+      val want = Scale.tableChanges(spark, tbl, v - 1, v)
+        .withColumn("version", lit(v))
+      def shape(df: org.apache.spark.sql.DataFrame) =
+        df.schema.map(f => f.name -> f.dataType)
+      assert(shape(got) == shape(want),
+        s"v$v spooled as ${shape(got)}, its delta is ${shape(want)}")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"v$v spooled rows differ from its delta")
+    }
+    assert(!spark.read.parquet(s"$spool/v1.parquet").columns
+      .contains("flag"), "a version before the ADD COLUMN gained it")
+    assert(Scale.spoolChanges(spark, tbl, spool).isEmpty)
+    def rm(f: java.io.File): Unit = {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(rm)
+      f.delete(): Unit
+    }
+    rm(base.toFile)
+  }
+
   test("format(graft) source: spool-free deltas, version-offset restart (#81f)") {
     import spark.implicits._
     import graft.ops.Scale
