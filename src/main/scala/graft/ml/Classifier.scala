@@ -67,7 +67,7 @@ object Classifier {
 
   /** Row-local margin w·x (x binary, so a fold of weight lookups). */
   private def margin(w: Array[Double]): Column = {
-    val wl = array(w.map(lit): _*)
+    val wl = typedLit(w.toSeq)
     aggregate(col("bs"), lit(0d),
       (acc, b) => acc + element_at(wl, b + 1))
   }

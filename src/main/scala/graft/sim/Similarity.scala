@@ -327,9 +327,10 @@ object Similarity {
 
   /** Nearest-centroid assignment of unit vectors `pv` (vec_id, ne) to
     * driver-held centroids: ONE narrow per-row argmax — for each row a
-    * fold over the ≤k literal centroid vectors (the same ascending
-    * native `vec_dot` per candidate as the broadcast form), max `csim`
-    * with ties to the lowest cid. Replaces the r12 crossJoin+window
+    * fold over the ≤k centroid vectors (bound as ONE typed literal: a
+    * tree of per-element literals costs the analyzer and codegen k·dim
+    * nodes) with the same ascending native `vec_dot` per candidate as
+    * the broadcast form, max `csim` with ties to the lowest cid. Replaces the r12 crossJoin+window
     * shape, which exploded the corpus ×k and shuffled the copies (ne
     * payload included) just to pick a per-row argmax (guide §1.2 /
     * §2.4: the decision needs no shuffle at all — centroids are
@@ -340,17 +341,14 @@ object Similarity {
     * Shared by the per-run trainer ([[ivfAssign]]) and the
     * stored-index append path ([[annIndexAppend]] — faiss add()), so
     * both produce bit-identical assignments for the same centroids. */
-  private def assignTo(pv: DataFrame,
+  private[graft] def assignTo(pv: DataFrame,
                        cents: Array[(Long, Array[Double])]): DataFrame = {
     graft.functions.VectorDot.register(pv.sparkSession)
     val sorted = cents.sortBy(_._1)
     val k = sorted.length
     require(k > 0, "assignTo needs at least one centroid")
-    val ceArr = array(sorted.map(c =>
-      array(c._2.map(lit(_)).toIndexedSeq: _*)).toIndexedSeq: _*)
-    val cidArr = array(sorted.map(c => lit(c._1)).toIndexedSeq: _*)
-    pv.withColumn("__ces", ceArr)
-      .withColumn("__cids", cidArr)
+    pv.withColumn("__ces", typedLit(sorted.map(_._2.toSeq).toSeq))
+      .withColumn("__cids", typedLit(sorted.map(_._1).toSeq))
       .withColumn("__best", expr(
         s"""array_max(transform(sequence(0, ${k - 1}), i ->
            |  named_struct(
@@ -479,7 +477,8 @@ object Similarity {
     * subvector. ONE narrow per-row projection: the m·ksub codebook
     * rows and the ≤k centroids are collected driver-side (both are
     * index-build metadata — exactly what faiss holds in RAM) and
-    * embedded as literals, so encoding is a per-row fold — residual
+    * bound as one typed literal each (codebook, norms, centroid map),
+    * so encoding is a per-row fold — residual
     * via a centroid-map lookup, then per subvector an argmin over the
     * literal codebook entries. Replaces the r12
     * explode(×m)+broadcast-join(×ksub)+window shape, which multiplied
@@ -512,22 +511,12 @@ object Similarity {
       while (i < v.length) { acc += v(i) * v(i); i += 1 }
       acc
     }
-    val cbArr = array(cb.map { case (_, rows) =>
-      array(rows.map(r =>
-        array(r._3.map(lit(_)).toIndexedSeq: _*)).toIndexedSeq: _*)
-    }.toIndexedSeq: _*)
-    val cbN2 = array(cb.map { case (_, rows) =>
-      array(rows.map(r => lit(n2(r._3))).toIndexedSeq: _*)
-    }.toIndexedSeq: _*)
-    val ceMap = map_from_arrays(
-      array(centArr.map(c => lit(c._1)).toIndexedSeq: _*),
-      array(centArr.map(c =>
-        array(c._2.map(lit(_)).toIndexedSeq: _*)).toIndexedSeq: _*))
     assigned
-      .withColumn("__cb", cbArr)
-      .withColumn("__cbn", cbN2)
-      .withColumn("resid",
-        zip_with(col("ne"), element_at(ceMap, col("cid")), (a, b) => a - b))
+      .withColumn("__cb", typedLit(cb.map(_._2.map(_._3.toSeq).toSeq)))
+      .withColumn("__cbn", typedLit(cb.map(_._2.map(r => n2(r._3)).toSeq)))
+      .withColumn("resid", zip_with(col("ne"), element_at(
+        typedLit(centArr.map(c => c._1 -> c._2.toSeq).toMap), col("cid")),
+        (a, b) => a - b))
       .withColumn("sub", (size(col("resid")) / m).cast("int"))
       .select(col("vec_id"), col("cid"), expr(
         s"""transform(sequence(0, ${m - 1}), mi ->

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - exact per-file ROW COUNTS: a footer's row-group counts are the
   *    very numbers `count()` aggregates, so DML accounting
   *    (rowsBefore / hitBefore / rowsAfter) needs no job at all;
-  *  - the file's LENGTH, from the same open: whether a rewrite's
-  *    input fits one scan task;
+  *  - the file's LENGTH, from the same open: whether a rewrite's or
+  *    a profile's input fits one scan task, and OPTIMIZE's file sizes;
   *  - the file's SPARK SCHEMA (the `org.apache.spark.sql.parquet.row.
   *    metadata` footer key every Spark-written file carries — the same
   *    key Spark's own `mergeSchema` path prefers), so chain reads can

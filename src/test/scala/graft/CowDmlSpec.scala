@@ -758,4 +758,98 @@ class CowDmlSpec extends AnyFunSuite {
         else (100L, Seq(1L), Seq(100L)))).toMap, s"$st")
     rm(base.toFile)
   }
+
+  test("MERGE computes its inserts from the hit rows, not the whole table") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_cow_mins")
+    val src = base.resolve("src").toString
+    eightSortedFiles(src)
+    // one source key in one of the 8 files, one new key: hit detection
+    // reads the table once, the rewrite and the inserts only the hit file
+    val (st, _, read) = SparkJobs.countsOf(spark)(Scale.mergeInto(spark, src,
+      base.resolve("t").toString,
+      Seq((2500L, -1L, "M"), (9001L, 0L, "I")).toDF("x", "y", "p"),
+      Seq("x")))
+    info(s"MERGE on one hit file of 8: $read input records for 8000 rows")
+    assert(st.filesRewritten == 1 && st.rowsAfter == 8001L, s"$st")
+    assert(read < 2 * 8000L, s"MERGE read $read records of an 8000-row table")
+    rm(base.toFile)
+  }
+
+  test("OPTIMIZE ZORDER is one Spark write: jobs do not grow with partition groups") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_cow_zgroups")
+    // the same 8000 rows twice: 8 files by x range, and 2 files per
+    // group g; y is a permutation of x, so no x-sorted file prunes y
+    val rows = (0 until 8000).map(x =>
+      (x.toLong, (x * 7919L) % 8000, s"g${x % 4}")).toDF("x", "y", "g")
+    val mixed = base.resolve("mixed").toString
+    val byG = base.resolve("by-g").toString
+    rows.repartitionByRange(8, col("x")).write.parquet(mixed)
+    (0 until 4).foreach(g => rows.where(col("g") === s"g$g").repartition(2)
+      .write.mode("append").parquet(byG))
+    val bytes = parquets(mixed).map(_.length()).sum
+    var n = 0
+    // OPTIMIZE ZORDER on a fresh un-ANALYZEd chain over one layout: one
+    // partition group, or the 4 registered groups of g
+    def zorder(groups: Int): (String, Int) = {
+      n += 1
+      val t = base.resolve(s"t$n").toString
+      if (groups == 1) Scale.deleteWhere(spark, mixed, t, lit(false))
+      else Scale.registerPartitions(spark, byG, t, Seq("g"))
+      val (_, jobs) = SparkJobs.jobsOf(spark)(Scale.optimizeTable(spark, t,
+        t, bytes / 32.0 / 1048576, Some((col("x"), col("y")))))
+      (t, jobs)
+    }
+    Seq(None -> 0, Some("4k") -> 1).foreach { case (splitBytes, slack) =>
+      withSplit(splitBytes) {
+        val (t1, j1) = zorder(1)
+        val (t4, j4) = zorder(4)
+        val mode = splitBytes.fold("default split")(b => s"$b splits")
+        info(s"OPTIMIZE ZORDER, $mode: $j1 jobs for 1 group, $j4 for 4")
+        assert(j4 <= j1 + slack,
+          s"OPTIMIZE ZORDER, $mode: $j4 jobs for 4 groups vs $j1 for 1")
+        Seq(t1 -> 1, t4 -> 4).foreach { case (t, groups) =>
+          val snap = VersionStore.snapshot(spark, t)
+          // every file holds one group, which the record carries as its
+          // tuple; the rows are the source's
+          if (groups == 1) assert(snap.partitions.isEmpty)
+          else snap.files.foreach { f =>
+            val gs = spark.read.parquet(f).select("g").distinct()
+              .collect().map(_.getString(0)).toSeq
+            assert(gs.size == 1 && snap.partitions(f) == Map("g" -> gs.head),
+              s"$f holds groups $gs, recorded ${snap.partitions.get(f)}")
+          }
+          assert(Scale.readTable(spark, t).collect().map(_.toSeq).toSet ==
+            rows.collect().map(_.toSeq).toSet, s"$t lost or changed rows")
+          // a range on the second dimension prunes files
+          Scale.analyzeTable(spark, t, t, Seq("x", "y"))
+          val (_, ps) = Scale.filesPruned(spark, VersionStore.snapshot(spark, t),
+            "y < 500")
+          assert(ps.filesRead < ps.filesTotal, s"$t: y does not prune: $ps")
+        }
+      }
+    }
+    rm(base.toFile)
+  }
+
+  test("guard: Scale stages chain files only through stageTargets") {
+    // every file a version stages is written by the one staging helper;
+    // compact and writeBucketed write plain directories, no chain stage
+    val src = new java.io.File("src/main/scala/graft/ops/Scale.scala")
+    assert(src.isFile, s"run from the repository root: $src")
+    val lines = java.nio.file.Files.readAllLines(src.toPath,
+      java.nio.charset.StandardCharsets.UTF_8).toArray.toSeq.map(_.toString)
+    val defAt = raw"^  (?:private(?:\[\w+\])? )?def (\w+)".r
+    val writes = raw"\.write\b|writeEmpty\(".r
+    val allowed = Set("stageTargets", "compact", "writeBucketed")
+    val offenders = lines.zipWithIndex
+      .scanLeft(("", "", 0)) { case ((owner, _, _), (l, i)) =>
+        (defAt.findFirstMatchIn(l).map(_.group(1)).getOrElse(owner), l, i + 1)
+      }.drop(1).collect {
+        case (owner, l, i) if writes.findFirstIn(l).nonEmpty &&
+          !allowed(owner) => s"Scale.scala:$i ($owner): ${l.trim}"
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

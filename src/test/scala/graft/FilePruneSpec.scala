@@ -184,7 +184,8 @@ class FilePruneSpec extends AnyFunSuite {
     // columns, one never ANALYZEd (a DELETE that matches nothing)
     val analyzed = base.resolve("a").toString
     val plain = base.resolve("b").toString
-    Scale.analyzeTable(spark, src, analyzed, Seq("x", "y"))
+    val (_, analyze) = SparkJobs.jobsOf(spark)(
+      Scale.analyzeTable(spark, src, analyzed, Seq("x", "y")))
     Scale.deleteWhere(spark, src, plain, lit(false))
     val more = (9001 to 9100).map(i => (i.toLong, (i % 100).toLong, s"p$i"))
       .toDF("x", "y", "p")
@@ -203,6 +204,8 @@ class FilePruneSpec extends AnyFunSuite {
       "RENAME COLUMN" -> jobs(t => Scale.renameColumn(spark, t, t, "y", "w")))
     counts.foreach { case (stmt, (a, p)) =>
       info(s"$stmt: $a jobs ANALYZEd, $p not") }
+    info(s"ANALYZE of the 8 files: $analyze jobs")
+    assert(analyze == 1, s"a profile that fits one task is one job: $analyze")
     val byStmt = counts.toMap
     assert(byStmt("filesPruned")._1 == 0 && byStmt("RENAME COLUMN")._1 == 0,
       s"stats reads and metadata-only DDL must run no job: $counts")

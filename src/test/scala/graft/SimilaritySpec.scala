@@ -375,4 +375,25 @@ class SimilaritySpec extends AnyFunSuite {
       assert(auto == exact)
     }
   }
+
+  test("assignTo binds its centroids as one literal, not one per element") {
+    import spark.implicits._
+    // q_embed_cluster's shape: 16 unit centroids of 64 dims
+    val cents = Array.tabulate(16) { c =>
+      val v = Array.tabulate(64)(i => math.sin(c * 64.0 + i))
+      val norm = math.sqrt(v.map(x => x * x).sum)
+      (c.toLong, v.map(_ / norm))
+    }
+    val pv = Seq((1L, cents(3)._2.toSeq), (2L, cents(9)._2.toSeq))
+      .toDF("vec_id", "ne")
+    val out = Similarity.assignTo(pv, cents)
+    val literals = out.queryExecution.analyzed.collect { case p =>
+      p.expressions.map(_.collect {
+        case l: org.apache.spark.sql.catalyst.expressions.Literal => l
+      }.size).sum
+    }.sum
+    assert(literals < 64, s"$literals literals for 16 x 64 centroids")
+    assert(out.orderBy("vec_id").collect().map(_.getLong(2)).toSeq ==
+      Seq(3L, 9L))
+  }
 }
