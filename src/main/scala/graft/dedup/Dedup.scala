@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
@@ -65,6 +66,43 @@ object Dedup {
       .where(size(col("toks")) >= 3)
       .selectExpr("doc_id", s"$shinglesExpr AS sh")
 
+  /** Shared signature/banding stage of the minhash family, pinned (every
+    * caller reads it at least twice): per doc, `bk` — band b's bucket,
+    * `hash(b, slice(sig, b * rows + 1, rows))` over the native k=64
+    * signature, one int per band — and `shh`, the sorted hashed shingles
+    * the exact verify reads. The signature itself stays out of the pin:
+    * nothing reads it but the buckets. A bucket is a pure function of
+    * its signature slice, so two frames built at different times (a
+    * persisted index vs a fresh batch) land in the SAME buckets — what
+    * makes [[incrementalPairs]] exactly the restriction of
+    * [[minhashPairs]]. */
+  private def bucketedSigs(docs: DataFrame, k: Int, bands: Int)
+      : graft.core.Pin = {
+    require(k == graft.functions.MinHashSig.K, s"native signature is k=64")
+    val rows = k / bands
+    // Native one-hash MinHash: each shingle string-hashed once, 64
+    // family members by long mixing (graft.functions.MinHashSig). The
+    // SQL-fold equivalent (k interpreted lambda hashes per shingle) and
+    // an explode + k min-aggregates rewrite were both measured and lost.
+    graft.functions.MinHashSig.register(docs.sparkSession)
+    graft.functions.SortedIntersectCount.register(docs.sparkSession)
+    // one term per band, not a lambda over the bands: the optimizer
+    // inlines a once-referenced `sig` into a lambda, which would compute
+    // the signature once per band
+    val bk = array((0 until bands).map(b =>
+      hash(lit(b), slice(col("sig"), b * rows + 1, rows))): _*)
+    graft.core.Pin(shingled(docs).select(col("doc_id"),
+        expr("minhash_sig(sh)").as("sig"),
+        expr("array_sort(transform(sh, s -> xxhash64(s)))").as("shh"))
+      .select(col("doc_id"), bk.as("bk"), col("shh")))
+  }
+
+  /** [[bucketedSigs]]' `bk` as (doc_id, band, bucket) rows, the key of
+    * the bucket self-join and of the index probe. */
+  private def bandRows(perDoc: DataFrame): DataFrame =
+    perDoc.select(col("doc_id"),
+      posexplode(col("bk")).as(Seq("band", "bucket")))
+
   /** Candidate pairs via banded LSH over the minhash signature, verified
     * with exact shingle Jaccard ≥ `tau`. bands×rows = k.
     *
@@ -83,68 +121,87 @@ object Dedup {
     * SUPERSET — correctness comes from the exact-Jaccard verify, so no
     * cross-engine hash portability is needed here (unlike simhash).
     *
-    * Plan shape (the 100 TB contract): the cached per-doc frame carries
-    * ONE sorted hashed-shingle array + one k-long signature; everything
-    * that shuffles ×bands — the banding explode, the bucket self-join,
-    * the candidate dedup — is (band, bucket, doc_id) narrow. Shingle
-    * arrays re-enter only at the verify, keyed by doc_id, for the few
-    * candidate pairs, compared with the native sorted-merge counter
-    * (same pattern as [[ngramJaccardPairs]], measured ~8× faster than
-    * string array_intersect). */
-  /** Shared signature/banding stage of the minhash family: per-doc
-    * (native k=64 sig, sorted hashed shingles) — pinned, every caller
-    * joins it at least twice — plus the per-band bucket rows. The
-    * bucket value is a pure function of the signature slice, so two
-    * frames built at different times (a persisted index vs a fresh
-    * batch) land in the SAME buckets — what makes [[incrementalPairs]]
-    * exactly the restriction of [[minhashPairs]]. */
-  private def bucketedSigs(docs: DataFrame, k: Int, bands: Int)
-      : (DataFrame, DataFrame) = {
-    require(k == graft.functions.MinHashSig.K, s"native signature is k=64")
-    val rows = k / bands
-    // Native one-hash MinHash: each shingle string-hashed once, 64
-    // family members by long mixing (graft.functions.MinHashSig). The
-    // SQL-fold equivalent (k interpreted lambda hashes per shingle) and
-    // an explode + k min-aggregates rewrite were both measured and lost.
-    graft.functions.MinHashSig.register(docs.sparkSession)
-    graft.functions.SortedIntersectCount.register(docs.sparkSession)
-    // Pinned: consumed by both sides of the bucket self-join AND both
-    // sides of the verify re-join — without the cache each consumer
-    // recomputes the whole shingle+signature pipeline.
-    val perDoc = graft.core.Pin(shingled(docs).select(
-      col("doc_id"),
-      expr("minhash_sig(sh)").as("sig"),
-      expr("array_sort(transform(sh, s -> xxhash64(s)))").as("shh"))).df
-    val bucketed = perDoc.select(col("doc_id"),
-        explode(expr(
-          s"""transform(sequence(0, ${bands - 1}), b ->
-             |  named_struct('band', b,
-             |    'bucket', hash(b, slice(sig, b * $rows + 1, $rows))))"""
-            .stripMargin)).as("bk"))
-      .select(col("doc_id"),
-        col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-    (perDoc, bucketed)
-  }
-
+    * Two paths over the one pin of [[bucketedSigs]]:
+    *  - Driver path: the pin [[graft.core.Pin.fits]] and doc_id is
+    *    `LongType`. The pin is collected once; each band's buckets go
+    *    into a hash map, candidate pairs are deduplicated, and each is
+    *    verified with [[graft.functions.SortedIntersectCount.count]] and
+    *    the distributed plan's double arithmetic ([[pairsOnDriver]]).
+    *    The result is a local frame with the distributed plan's schema
+    *    (analysis only), which [[components]] labels with no job: three
+    *    jobs in all (the pin's two under AQE and the collect). Fail-safe:
+    *    when the candidates, 16 bytes for each of ΣC(n, 2) over every
+    *    bucket of every band, would not fit the same gate, the
+    *    distributed path runs over the same pin.
+    *  - Distributed path: everything that shuffles ×bands — the banding
+    *    explode, the bucket self-join, the candidate dedup — is (band,
+    *    bucket, doc_id) narrow. Shingle arrays re-enter only at the
+    *    verify, keyed by doc_id, for the few candidate pairs, compared
+    *    with the native sorted-merge counter (same pattern as
+    *    [[ngramJaccardPairs]], measured ~8× faster than string
+    *    array_intersect).
+    * Both give the same rows and bit-identical `j` (DedupSpec). */
   def minhashPairs(docs: DataFrame, k: Int = 64, bands: Int = 16,
                    tau: Double = 0.8): DataFrame = {
-    val (perDoc, bucketed) = bucketedSigs(docs, k, bands)
-    val a = bucketed.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_a"))
-    val b = bucketed.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_b"))
-    val cands = a.join(b, Seq("band", "bucket"))
+    val perDoc = bucketedSigs(docs, k, bands)
+    val a = bandRows(perDoc.df).withColumnRenamed("doc_id", "doc_a")
+    val b = bandRows(perDoc.df).withColumnRenamed("doc_id", "doc_b")
+    val plan = verified(a.join(b, Seq("band", "bucket"))
       .where(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-    val sa = perDoc.select(col("doc_id").as("doc_a"), col("shh").as("sh_a"))
-    val sb = perDoc.select(col("doc_id").as("doc_b"), col("shh").as("sh_b"))
+      .dropDuplicates("doc_a", "doc_b"), perDoc.df, tau)
+    val local =
+      if (perDoc.fits && perDoc.df.schema("doc_id").dataType == LongType)
+        pairsOnDriver(perDoc.df, tau, plan.schema)
+      else None
+    local.fold(plan) { l => perDoc.close(); l }
+  }
+
+  /** Candidate (doc_a, doc_b) pairs joined to both docs' `shh` and kept
+    * where their exact Jaccard reaches `tau`. */
+  private def verified(cands: DataFrame, shh: DataFrame,
+                       tau: Double): DataFrame = {
+    val sa = shh.select(col("doc_id").as("doc_a"), col("shh").as("sh_a"))
+    val sb = shh.select(col("doc_id").as("doc_b"), col("shh").as("sh_b"))
     cands.join(sa, "doc_a").join(sb, "doc_b")
       .withColumn("inter", expr("sorted_intersect_count(sh_a, sh_b)"))
       .withColumn("j", col("inter").cast("double") /
         (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
       .where(col("j") >= tau)
       .select("doc_a", "doc_b", "j")
+  }
+
+  /** [[minhashPairs]]' driver path over the collected pin, as a local
+    * frame of `schema`; None when the candidates would not fit the
+    * gate. A null id pairs with nothing (`doc_a < doc_b` is never true
+    * for it); a repeated id verifies every row of it, as the joins do. */
+  private def pairsOnDriver(perDoc: DataFrame, tau: Double,
+                            schema: StructType): Option[DataFrame] = {
+    val docs = perDoc.collect().filterNot(_.isNullAt(0))
+    val buckets =
+      scala.collection.mutable.HashMap.empty[(Int, Int), List[Int]]
+    for ((r, i) <- docs.zipWithIndex;
+         (bucket, band) <- r.getSeq[Int](1).zipWithIndex)
+      buckets((band, bucket)) = i :: buckets.getOrElse((band, bucket), Nil)
+    val cands =
+      buckets.valuesIterator.map(m => m.size * (m.size - 1L) / 2).sum
+    if (!graft.core.Pin.fits(perDoc.sparkSession, cands * 16)) None
+    else {
+      val ids = docs.map(_.getLong(0))
+      val shh = docs.map(r => org.apache.spark.sql.catalyst.expressions
+        .UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](2).toArray))
+      val rowsOf = ids.indices.groupBy(ids(_))
+      val pairs = (for (m <- buckets.valuesIterator; i <- m; j <- m
+                        if ids(i) < ids(j)) yield (ids(i), ids(j))).toSet
+      val out = for {
+        (a, b) <- pairs.toSeq.sorted; i <- rowsOf(a); j <- rowsOf(b)
+        inter = graft.functions.SortedIntersectCount.count(shh(i), shh(j))
+        jac = inter.toDouble /
+          (shh(i).numElements + shh(j).numElements - inter).toDouble
+        if jac >= tau
+      } yield Row(a, b, jac)
+      Some(perDoc.sparkSession.createDataFrame(out.asJava, schema))
+    }
   }
 
   /** A prebuilt minhash index over a corpus: `buckets`(doc_id, band,
@@ -159,8 +216,8 @@ object Dedup {
     * per-compaction) cost that [[incrementalPairs]] amortizes. */
   def minhashIndex(corpus: DataFrame, k: Int = 64,
                    bands: Int = 16): MinhashIndex = {
-    val (perDoc, bucketed) = bucketedSigs(corpus, k, bands)
-    MinhashIndex(bucketed, perDoc.select("doc_id", "shh"))
+    val perDoc = bucketedSigs(corpus, k, bands).df
+    MinhashIndex(bandRows(perDoc), perDoc.select("doc_id", "shh"))
   }
 
   /** INCREMENTAL near-dup ingest — the production shape at 100 TB: a
@@ -179,30 +236,21 @@ object Dedup {
     * Contract: `fresh` doc_ids are disjoint from the index's. */
   def incrementalPairs(idx: MinhashIndex, fresh: DataFrame, k: Int = 64,
                        bands: Int = 16, tau: Double = 0.8): DataFrame = {
-    val (perNew, bNew) = bucketedSigs(fresh, k, bands)
-    val newSide = bNew.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_n"))
+    val perNew = bucketedSigs(fresh, k, bands).df
+    val bNew = bandRows(perNew)
+    val newSide = bNew.withColumnRenamed("doc_id", "doc_n")
     val crossCands = newSide
       .join(idx.buckets.select(col("band"), col("bucket"),
         col("doc_id").as("doc_o")), Seq("band", "bucket"))
       .select(least(col("doc_n"), col("doc_o")).as("doc_a"),
         greatest(col("doc_n"), col("doc_o")).as("doc_b"))
     val selfCands = newSide
-      .join(bNew.select(col("band"), col("bucket"),
-        col("doc_id").as("doc_b")), Seq("band", "bucket"))
+      .join(bNew.withColumnRenamed("doc_id", "doc_b"), Seq("band", "bucket"))
       .where(col("doc_n") < col("doc_b"))
       .select(col("doc_n").as("doc_a"), col("doc_b"))
-    val cands = crossCands.unionByName(selfCands)
-      .dropDuplicates("doc_a", "doc_b")
-    val all = idx.docs.unionByName(perNew.select("doc_id", "shh"))
-    val sa = all.select(col("doc_id").as("doc_a"), col("shh").as("sh_a"))
-    val sb = all.select(col("doc_id").as("doc_b"), col("shh").as("sh_b"))
-    cands.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("inter", expr("sorted_intersect_count(sh_a, sh_b)"))
-      .withColumn("j", col("inter").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-      .where(col("j") >= tau)
-      .select("doc_a", "doc_b", "j")
+    verified(crossCands.unionByName(selfCands)
+      .dropDuplicates("doc_a", "doc_b"),
+      idx.docs.unionByName(perNew.select("doc_id", "shh")), tau)
   }
 
   /** Banding (bands, rows) over the k=64 minhash signature for a Jaccard
@@ -674,16 +722,14 @@ object Dedup {
     * engine-independent cluster id (and exactly the keep-this-one choice
     * exact dedup already makes).
     *
-    * Two paths, chosen from an exact statistic: the pinned edge list's
-    * `sizeInBytes`, which [[graft.core.Pin]] sets to observed rows × row
-    * width.
-    *  - Driver path: when the session's
-    *    `spark.sql.autoBroadcastJoinThreshold` is > 0, the edges fit
-    *    under it and the ids are `LongType`, the edge list is collected
-    *    once and labeled by union-find on the driver
-    *    ([[labelOnDriver]]). Two jobs in all (the pin and the collect);
-    *    any diameter is labeled exactly, so `maxIter` is not used. It
-    *    holds no more on the driver than the other path, whose every
+    * Two paths, chosen by the one driver gate, [[graft.core.Pin.fits]]:
+    *  - Driver path: the ids are `LongType` and either `pairs` is a
+    *    local frame that fits (what [[minhashPairs]]' driver path
+    *    returns: labeled with no pin and no job) or the pinned edge
+    *    list fits (two jobs: the pin and the collect). The pairs are
+    *    labeled by union-find on the driver ([[labelOnDriver]]); any
+    *    diameter is labeled exactly, so `maxIter` is not used. It holds
+    *    no more on the driver than the other path, whose every
     *    `edges ⋈ labels` round broadcasts this same edge list.
     *  - Fixpoint path, for everything else: min-label propagation
     *    through [[graft.core.Fixpoint]]. Round 1 comes straight from the
@@ -701,27 +747,30 @@ object Dedup {
     * smaller than the corpus — this frame is cluster-sized, not
     * corpus-sized). A null id keeps a null label and links nothing. */
   def components(pairs: DataFrame, maxIter: Int = 24): DataFrame = {
-    val edges = pinnedEdges(pairs)
-    try {
-      val threshold =
-        pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-      val bytes = edges.df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (threshold > 0 && bytes <= threshold &&
-          edges.df.schema("src").dataType == LongType)
-        labelOnDriver(edges.df)
-      else fixpointLabels(edges.df, maxIter)
-    } finally edges.close()
+    val ends = pairs.select("doc_a", "doc_b")
+    ends.queryExecution.optimizedPlan match {
+      case l: LocalRelation if ends.schema.forall(_.dataType == LongType) &&
+          graft.core.Pin.fits(pairs.sparkSession, l.stats.sizeInBytes) =>
+        labelOnDriver(ends)
+      case _ =>
+        val edges = pinnedEdges(pairs)
+        try
+          if (edges.fits && edges.df.schema("src").dataType == LongType)
+            labelOnDriver(edges.df)
+          else fixpointLabels(edges.df, maxIter)
+        finally edges.close()
+    }
   }
 
-  /** [[components]]' driver path: union-find over the collected edges.
-    * The distinct ids sit sorted in a primitive array and a merged set's
+  /** [[components]]' driver path: union-find over the collected id
+    * pairs (the local pairs, or the pinned edges both ways). The
+    * distinct ids sit sorted in a primitive array and a merged set's
     * root is its smaller index, so every label is its component's min
     * id. The result is a local frame. */
   private def labelOnDriver(edges: DataFrame): DataFrame = {
     val es = edges.collect()
-    // every node is some edge's src: the edges run both ways
-    val ids = es.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0))
-      .toArray.sorted.distinct
+    val ids = es.iterator.flatMap(e => Iterator(0, 1).filterNot(e.isNullAt)
+      .map(e.getLong)).toArray.sorted.distinct
     def index(e: Row, i: Int) =
       java.util.Arrays.binarySearch(ids, e.getLong(i))
     val parent = Array.range(0, ids.length)
@@ -735,8 +784,9 @@ object Dedup {
       parent(math.max(a, b)) = math.min(a, b)
     }
     val labels = ids.indices.map(i => Row(ids(i), ids(root(i)))) ++
-      (if (es.exists(_.isNullAt(0))) Seq(Row(null, null)) else Nil)
-    val nullable = edges.schema("src").nullable
+      (if (es.exists(e => e.isNullAt(0) || e.isNullAt(1))) Seq(Row(null, null))
+       else Nil)
+    val nullable = edges.schema.exists(_.nullable)
     edges.sparkSession.createDataFrame(labels.asJava, StructType(Seq(
       StructField("doc_id", LongType, nullable),
       StructField("comp", LongType, nullable))))
@@ -861,13 +911,11 @@ object Dedup {
     val spark = edges.sparkSession
     val vs = graft.tables.VersionStore
     val snap = vs.commit(spark, path, head) { stage =>
-      edges.repartition(col("doc_a"))
-        .write.mode("overwrite").parquet(s"${stage.path}/edges")
-      spark.read.parquet(s"${stage.path}/edges")
+      stage.put(edges.repartition(col("doc_a")), "edges")
+      stage.put(spark.read.parquet(s"${stage.path}/edges")
         .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("deg"))
-        .repartition(col("doc_id"))
-        .write.mode("overwrite").parquet(s"${stage.path}/degrees")
+        .repartition(col("doc_id")), "degrees")
       graft.tables.Snapshot(path, stage.version,
         vs.stagedFiles(spark, stage), op = op)
     }

@@ -34,20 +34,11 @@ case class SortedIntersectCount(left: Expression, right: Expression)
         s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (n, m) = (x.numElements(), y.numElements())
-    var i = 0; var j = 0; var c = 0L
-    while (i < n && j < m) {
-      val xv = x.getLong(i); val yv = y.getLong(j)
-      if (xv == yv) { c += 1; i += 1; j += 1 }
-      else if (xv < yv) i += 1
-      else j += 1
-    }
-    c
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectCount.count(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData])
 
+  // the same scan as [[SortedIntersectCount.count]], inlined
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val i = ctx.freshName("i"); val j = ctx.freshName("j")
@@ -72,6 +63,21 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
+  /** The kernel: the two-pointer count over `x` and `y`, each sorted
+    * ascending. Interpreted evaluation and driver-side verifies
+    * ([[graft.dedup.Dedup.minhashPairs]]) call it. */
+  def count(x: ArrayData, y: ArrayData): Long = {
+    val (n, m) = (x.numElements(), y.numElements())
+    var i = 0; var j = 0; var c = 0L
+    while (i < n && j < m) {
+      val xv = x.getLong(i); val yv = y.getLong(j)
+      if (xv == yv) { c += 1; i += 1; j += 1 }
+      else if (xv < yv) i += 1
+      else j += 1
+    }
+    c
+  }
+
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "sorted_intersect_count",

@@ -268,8 +268,8 @@ object Scale {
       else (if (fits || targets == 1) df.coalesce(1)
             else df.repartition(col("__tag")))
         .sortWithinPartitions("__tag", "__pos").drop("__pos")
-    (if (targets == 1) laid.drop("__tag").write
-     else laid.write.partitionBy("__tag"))
+    (if (targets == 1) VersionStore.stageWriter(laid.drop("__tag"))
+     else VersionStore.stageWriter(laid).partitionBy("__tag"))
       .mode("overwrite").parquet(tmp.toString)
     def partsIn(d: Path) = fs.listStatus(d).map(_.getPath).filterNot(p =>
       Seq(".", "_").exists(p.getName.startsWith)).sortBy(_.getName).toSeq

@@ -653,15 +653,14 @@ object Similarity {
     val assigned = pinned.df
     val vs = graft.tables.VersionStore
     val id = try vs.commit(spark, path, vs.latest(spark, path)) { stage =>
-      cents.write.mode("overwrite").parquet(s"${stage.path}/centroids")
+      stage.put(cents, "centroids")
       // cell-clustered layout: a probe reads co-located cells
-      assigned.repartition(col("cid"))
-        .write.mode("overwrite").parquet(s"${stage.path}/assigned")
+      stage.put(assigned.repartition(col("cid")), "assigned")
       pq.foreach { case (m, ksub) =>
         val cb = trainPqCodebook(assigned, cents, m, ksub)
-        cb.write.mode("overwrite").parquet(s"${stage.path}/codebook")
-        pqEncode(assigned, cents, cb, m).repartition(col("cid"))
-          .write.mode("overwrite").parquet(s"${stage.path}/codes")
+        stage.put(cb, "codebook")
+        stage.put(pqEncode(assigned, cents, cb, m).repartition(col("cid")),
+          "codes")
       }
       graft.tables.Snapshot(path, stage.version,
         vs.stagedFiles(spark, stage), op = "BUILD")
@@ -710,16 +709,14 @@ object Similarity {
     val merged = idx.assigned.unionByName(freshAssigned)
     val vs = graft.tables.VersionStore
     val id = try vs.commit(spark, path, Some(head)) { stage =>
-      cents.write.mode("overwrite").parquet(s"${stage.path}/centroids")
-      merged.repartition(col("cid"))
-        .write.mode("overwrite").parquet(s"${stage.path}/assigned")
+      stage.put(cents, "centroids")
+      stage.put(merged.repartition(col("cid")), "assigned")
       (idx.codebook, idx.codes) match {
         case (Some(cb), Some(codes)) =>
           val m = cb.agg(max(col("mi"))).head().getInt(0) + 1
-          cb.write.mode("overwrite").parquet(s"${stage.path}/codebook")
-          codes.unionByName(pqEncode(freshAssigned, cents, cb, m))
-            .repartition(col("cid"))
-            .write.mode("overwrite").parquet(s"${stage.path}/codes")
+          stage.put(cb, "codebook")
+          stage.put(codes.unionByName(pqEncode(freshAssigned, cents, cb, m))
+            .repartition(col("cid")), "codes")
         case _ => ()
       }
       graft.tables.Snapshot(path, stage.version,

@@ -157,7 +157,7 @@ object Streams {
           new java.util.ArrayList[org.apache.spark.sql.Row](), emptyBase))
         vs.commit(s, dir, parent) { stage =>
           val out = next(base)
-          out.write.mode("append").parquet(stage.path)
+          vs.stageWriter(out).mode("append").parquet(stage.path)
           graft.tables.Snapshot(dir, id, vs.stagedFiles(s, stage),
             schema = Some(out.schema), op = op, detail = s"batch $id")
         }: Unit

@@ -1,6 +1,6 @@
 package graft.tables
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
 /** Minimal versioned-table layer (r9-verdict ask #5): ONE
   * implementation of the commit / retention / watermark discipline
@@ -328,7 +328,19 @@ object VersionStore {
   /** A version being committed: the writer fills the staging dir
     * `path`, and names the files it writes there by their final
     * location under `vdir` (`dir/v=<version>`). */
-  final case class Stage(path: String, version: Long, vdir: String)
+  final case class Stage(path: String, version: Long, vdir: String) {
+    /** Write `df` as the stage's subdirectory `sub`. */
+    def put(df: DataFrame, sub: String): Unit =
+      stageWriter(df).mode("overwrite").parquet(s"$path/$sub")
+  }
+
+  /** The writer of every Spark write into a stage. It leaves out
+    * Hadoop's `_SUCCESS` marker and its checksum: the commit record is
+    * the chain's marker, [[stagedFiles]] skips them, and on a local
+    * file system each file created costs a `chmod` process. */
+  def stageWriter(df: DataFrame): DataFrameWriter[Row] =
+    df.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
+      "false")
 
   /** Every parquet data file written into `stage` so far, subdirs
     * included, named by its final location under `stage.vdir` — the

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.RDDBlockId
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 
 /** The one `private[sql]` seam graft's SQL surface needs: turning an
@@ -42,11 +43,21 @@ object Bridge {
       df.queryExecution.toRdd, isStreaming = true)(
       df.sparkSession.asInstanceOf[classic.SparkSession]))
 
-  /** A checkpointed frame re-planned with its observed row count. */
-  def withRowCount(df: DataFrame, rows: Long): DataFrame = {
+  /** A checkpointed frame re-planned with its observed row count and
+    * the bytes its blocks hold, memory + disk, as the block-manager
+    * master records them: each task reports its block before it ends,
+    * so the figure is complete once the checkpoint's job returns, and
+    * reading it runs no job. The schema's row width × rows is the
+    * floor; alone it counts an array or a string as one element. */
+  def withStats(df: DataFrame, rows: Long): DataFrame = {
     val r = df.queryExecution.analyzed.asInstanceOf[LogicalRDD]
-    val stats = Statistics(rowCount = Some(BigInt(rows)),
-      sizeInBytes = (EstimationUtils.getSizePerRow(r.output) * rows).max(1))
+    val stored = org.apache.spark.SparkEnv.get.blockManager.master
+      .getStorageStatus.iterator.flatMap(_.rddBlocks).collect {
+        case (RDDBlockId(id, _), b) if id == r.rdd.id =>
+          BigInt(b.memSize + b.diskSize)
+      }.sum
+    val stats = Statistics(rowCount = Some(BigInt(rows)), sizeInBytes =
+      stored.max(EstimationUtils.getSizePerRow(r.output) * rows).max(1))
     ofRows(df.sparkSession, LogicalRDD(r.output, r.rdd,
       r.outputPartitioning, r.outputOrdering, r.isStreaming)(
       df.sparkSession.asInstanceOf[classic.SparkSession], Some(stats), None))

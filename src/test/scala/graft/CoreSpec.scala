@@ -286,6 +286,17 @@ class CoreSpec extends AnyFunSuite {
     scala.util.Using.resource(Pin(empty))(p => assert(p.rows == 0L))
   }
 
+  test("Pin reports the bytes its blocks hold, not rows x schema width") {
+    // 500 rows of 50-long bigint arrays: 200,000 payload bytes, where
+    // the schema's default row width counts each array as one element
+    val arrays = spark.range(0L, 500L, 1L, 4)
+      .select(expr("sequence(id, id + 49)").as("a"))
+    scala.util.Using.resource(Pin(arrays)) { p =>
+      assert(p.bytes >= BigInt(500L * 50 * 8), s"bytes=${p.bytes}")
+      assert(p.df.queryExecution.optimizedPlan.stats.sizeInBytes == p.bytes)
+    }
+  }
+
   test("Pin releases: Fixpoint over >=10 rounds and Bpe.trainDistributed free every block") {
     import spark.implicits._
     val before = Residency.ids(spark)
@@ -301,6 +312,33 @@ class CoreSpec extends AnyFunSuite {
       ("wider", 2L)).toDF("w", "freq")
     assert(graft.text.Bpe.trainDistributed(wc, 8).nonEmpty)
     Residency.assertReleased(spark, before)
+  }
+
+  test("guard: the broadcast threshold is read only by Pin.fits") {
+    // one driver gate: an operator that finishes small inputs on the
+    // driver asks Pin.fits, so -1 turns every such path off. Excepted:
+    // ScaleExperiment, which saves, sets and restores the setting.
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: $root")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val readers = files(root).flatMap { f =>
+      val rel = root.toPath.relativize(f.toPath).toString
+      java.nio.file.Files.readAllLines(f.toPath,
+          java.nio.charset.StandardCharsets.UTF_8).asScala.zipWithIndex
+        .filter { case (l, _) => l.contains("utoBroadcastJoinThreshold") &&
+          !Seq("*", "//", "/*").exists(l.trim.startsWith) }
+        .map { case (l, i) => (rel, s"$rel:${i + 1}: ${l.trim}") }.toSeq
+    }
+    val offenders = readers.collect {
+      case (rel, hit) if rel != "graft/ScaleExperiment.scala" &&
+        rel != "graft/core/Pin.scala" => hit
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    assert(readers.count(_._1 == "graft/core/Pin.scala") == 1,
+      readers.mkString("\n"))
   }
 
   test("guard: Pin is the only materialize-and-release idiom in src/main") {

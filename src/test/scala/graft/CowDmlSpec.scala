@@ -833,6 +833,32 @@ class CowDmlSpec extends AnyFunSuite {
     rm(base.toFile)
   }
 
+  test("committed DML and CDC versions hold no Hadoop _SUCCESS marker") {
+    import spark.implicits._
+    // the commit record is the chain's marker; each extra file is one
+    // more `chmod` process on a local file system
+    val base = java.nio.file.Files.createTempDirectory("graft_cow_success")
+    val src = base.resolve("src").toString
+    (1 to 400).map(i => (i.toLong, i.toLong % 4)).toDF("id", "k")
+      .repartition(4, col("k")).write.parquet(src)
+    val tbl = base.resolve("tbl").toString
+    Scale.deleteWhere(spark, src, tbl, col("k") === 2)
+    Scale.updateWhere(spark, src, tbl, col("k") === 1, Seq("k" -> lit(5L)))
+    val cdc = base.resolve("cdc").toString
+    for (b <- 0L to 1L)
+      graft.streaming.Streams.cdcMerge(cdc, Seq("id"), Seq("k"))(
+        Seq((b, b), (b + 10, b)).toDF("id", "k"), b)
+    def names(f: java.io.File): Seq[String] =
+      Option(f.listFiles()).toSeq.flatten.flatMap(c =>
+        if (c.isDirectory) names(c) else Seq(c.getName))
+    for (d <- Seq(tbl, cdc)) {
+      assert(VersionStore.committed(spark, d).size == 2, d)
+      val found = names(new java.io.File(d)).filter(_.contains("_SUCCESS"))
+      assert(found.isEmpty, s"$d: ${found.mkString(", ")}")
+    }
+    rm(base.toFile)
+  }
+
   test("guard: Scale stages chain files only through stageTargets") {
     // every file a version stages is written by the one staging helper;
     // compact and writeBucketed write plain directories, no chain stage
@@ -841,7 +867,7 @@ class CowDmlSpec extends AnyFunSuite {
     val lines = java.nio.file.Files.readAllLines(src.toPath,
       java.nio.charset.StandardCharsets.UTF_8).toArray.toSeq.map(_.toString)
     val defAt = raw"^  (?:private(?:\[\w+\])? )?def (\w+)".r
-    val writes = raw"\.write\b|writeEmpty\(".r
+    val writes = raw"\.write\b|writeEmpty\(|stageWriter\(".r
     val allowed = Set("stageTargets", "compact", "writeBucketed")
     val offenders = lines.zipWithIndex
       .scanLeft(("", "", 0)) { case ((owner, _, _), (l, i)) =>

@@ -17,6 +17,8 @@ class DedupSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  val sf = "/root/testdata/sf0.001"
+
   private def docs = {
     import spark.implicits._
     Seq(
@@ -224,7 +226,7 @@ class DedupSpec extends AnyFunSuite {
     // band there (deterministic on the fixed data) — assert that, PLUS
     // the tighter mean-level property
     // that the average error across pairs is well inside one sd
-    val rows = graft.ops.Queries.qJaccardEst(spark, "/root/testdata/sf0.001")
+    val rows = graft.ops.Queries.qJaccardEst(spark, sf)
       .collect().map(r => (r.getDouble(2), r.getDouble(4)))
     assert(rows.nonEmpty)
     rows.foreach { case (j, est) =>
@@ -292,7 +294,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("components: every minhash pair lands in one component (sf0.001)") {
     val pairs = Dedup.minhashPairs(
-      graft.tables.Tables(spark, "/root/testdata/sf0.001").documents)
+      graft.tables.Tables(spark, sf).documents)
     // over pre-pinned pairs the driver path runs two jobs: the edge pin
     // and the collect
     val pinned = graft.core.Pin(pairs).df
@@ -391,9 +393,89 @@ class DedupSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no convergence"))
   }
 
+  /** (doc_a, doc_b, raw bits of j), sorted: bit-identical `j` or bust. */
+  private def pairBits(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (Option(r.get(0)), Option(r.get(1)),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq
+      .sortBy(t => (t._1.map(_.toString), t._2.map(_.toString), t._3))
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  test("minhashPairs: the driver path and the distributed path agree " +
+       "bit for bit") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(41)
+    val vocab = (0 until 300).map(i => s"w$i")
+    val dupHeavy = (0 until 40).flatMap { b =>
+      val base = Seq.fill(25 + rnd.nextInt(15))(vocab(rnd.nextInt(vocab.size)))
+      (0 until 3).map { c =>
+        val mut = base.map(w =>
+          if (rnd.nextInt(100) < c * 4) vocab(rnd.nextInt(vocab.size)) else w)
+        (Option((b * 3 + c).toLong), mut.mkString(" "))
+      }
+    }
+    val inputs = Seq(
+      "sf0.001" -> graft.tables.Tables(spark, sf).documents,
+      "dup-heavy" -> dupHeavy.toDF("doc_id", "text"),
+      // two docs under 3 tokens, a null id beside its own duplicate, and
+      // a repeated id whose second text is another doc's near-dup
+      "short+null" -> (dupHeavy.take(6) ++ Seq(
+        (Option(900L), "two words"), (Option(901L), "one"),
+        (None, dupHeavy.head._2), (Option(2L), dupHeavy(4)._2)))
+        .toDF("doc_id", "text"),
+      "empty" -> dupHeavy.take(0).toDF("doc_id", "text"))
+    for ((name, docs) <- inputs) {
+      val driver = Dedup.minhashPairs(docs)
+      val dist = noBroadcast(Dedup.minhashPairs(docs))
+      assert(isLocal(driver), s"$name did not take the driver path")
+      assert(!isLocal(dist), s"$name: threshold -1 must stay distributed")
+      assert(driver.schema == dist.schema, name)
+      assert(pairBits(driver) == pairBits(dist), name)
+      if (name != "empty") assert(pairBits(driver).nonEmpty, name)
+    }
+    // the pinned buckets are the per-band lambda's values, bit for bit
+    val sfDocs = inputs.head._2
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sorted.toSeq
+    val lambdaForm = Dedup.shingled(sfDocs).select(col("doc_id"), explode(expr(
+      """transform(sequence(0, 15), b -> named_struct('band', b,
+        |  'bucket', hash(b, slice(minhash_sig(sh), b * 4 + 1, 4))))"""
+        .stripMargin)).as("x")).select("doc_id", "x.band", "x.bucket")
+    assert(rows(Dedup.minhashIndex(sfDocs).buckets) == rows(lambdaForm))
+  }
+
+  test("minhashPairs: heavy buckets fall back to the distributed path") {
+    import spark.implicits._
+    // 200 identical docs: every band holds one bucket of 200, so
+    // 16 x C(200, 2) = 318,400 candidates (5.1 MB at 16 B each) against
+    // a 1 MB threshold that the pin itself fits easily
+    val docs = (0L until 200L).map(i => (i, "alpha beta gamma delta"))
+      .toDF("doc_id", "text")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, (1L << 20).toString)
+    val heavy = try Dedup.minhashPairs(docs)
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(!isLocal(heavy), "heavy buckets must not be enumerated")
+    val want = noBroadcast(pairBits(Dedup.minhashPairs(docs)))
+    assert(pairBits(heavy) == want && want.size == 200 * 199 / 2)
+  }
+
+  test("components(minhashPairs(sf0.001)) runs at most 3 jobs") {
+    val docs = graft.tables.Tables(spark, sf).documents
+    docs.schema: Unit
+    // the signature pin (its shuffle and its checkpoint) and its collect;
+    // the pairs and their labels are then found with no further job
+    val (rows, jobs) = SparkJobs.jobsOf(spark)(
+      Dedup.components(Dedup.minhashPairs(docs)).collect())
+    assert(jobs <= 3, s"ran $jobs jobs")
+    assert(rows.nonEmpty)
+  }
+
   test("pageRank matches a driver-local reference on the sf0.001 graph") {
     val pairs = Dedup.jaccardJoin(
-      graft.tables.Tables(spark, "/root/testdata/sf0.001").documents, 0.8)
+      graft.tables.Tables(spark, sf).documents, 0.8)
     val got = Dedup.pageRank(pairs, iters = 8).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     // independent per-iteration reference: plain Scala maps, the same

@@ -33,4 +33,27 @@ class SortedIntersectSpec extends AnyFunSuite {
       })
     assert(res.passed, res.toString)
   }
+
+  test("SortedIntersectCount.count == the expression, codegen and " +
+       "interpreted, incl. duplicates and empty arrays") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    SortedIntersectCount.register(spark)
+    val rnd = new scala.util.Random(5)
+    // small value ranges force repeats inside an array and across the two
+    def arr() = Seq.fill(rnd.nextInt(12))(rnd.nextInt(8).toLong).sorted
+    val cases = Seq((Seq.empty[Long], Seq.empty[Long]),
+      (Seq.empty[Long], Seq(1L, 1L)), (Seq(2L, 2L, 3L), Seq(2L, 2L))) ++
+      Seq.fill(200)((arr(), arr()))
+    val exprs = cases.toDF("a", "b")
+      .select(expr("sorted_intersect_count(a, b)")).as[Long].collect()
+    for (((a, b), viaExpr) <- cases.zip(exprs)) {
+      val fn = SortedIntersectCount.count(ArrayData.toArrayData(a.toArray),
+        ArrayData.toArrayData(b.toArray))
+      val interpreted = SortedIntersectCount(Literal(a.toArray),
+        Literal(b.toArray)).eval()
+      assert(fn == viaExpr && fn == interpreted, s"$a ∩ $b")
+    }
+  }
 }
