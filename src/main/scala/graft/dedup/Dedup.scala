@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
+import graft.tables.{Snapshot, VersionStore}
+
 /** Near-duplicate detection family (SURVEY §2.5 #56–59).
   *
   * Scale design: signatures (minhash / simhash) are computed per-row with
@@ -858,7 +860,7 @@ object Dedup {
   /** The materialized similarity-graph artifact: `edges` is the exact
     * J ≥ τ pair set (doc_a < doc_b, with j), `degrees` the per-node
     * undirected degree. Both are plain DataFrames read back from the
-    * parquet written by [[edgeTable]]. */
+    * parts [[edgeTable]] commits, under their recorded schemas. */
   case class EdgeArtifact(edges: DataFrame, degrees: DataFrame)
 
   /** BUILD-ONCE similarity-graph artifact — the r6-verdict structural
@@ -871,9 +873,10 @@ object Dedup {
     * recomputes first); each graph operator then starts from a frame
     * that is pair-participant-sized, not corpus-sized.
     *
-    * Layout: edges are written repartitioned on doc_a and degrees on
-    * doc_id — per-key file clustering so a consumer's first shuffle
-    * reads co-located keys (in a metastore deployment this is
+    * Layout: the version's record names two parts, `edges` written
+    * repartitioned on doc_a and `degrees` on doc_id, each with its
+    * schema and files — per-key file clustering so a consumer's first
+    * shuffle reads co-located keys (in a metastore deployment this is
     * `bucketBy(doc_a)`/`bucketBy(doc_id)` `sortBy` the same keys,
     * which removes that shuffle entirely; plain parquet is used here
     * because the graded harness runs metastore-less). The artifact is
@@ -894,33 +897,31 @@ object Dedup {
 
   /** Commit edges+degrees as the next version of the artifact at
     * `path` after `head` — VERSIONED commit layout (r8-verdict ask
-    * #4): [[graft.tables.VersionStore.commit]] stages
-    * `edges/` and `degrees/` under the version dir, records every
-    * file it wrote, then atomically PUTs the commit marker; readers
-    * only count marked versions, so a torn writer (crash between the
-    * two tables, object-store copy caught mid-flight) is invisible
-    * instead of serving mismatched halves, and reaped by the next
-    * retention. A concurrent build that takes the same id first
+    * #4): [[graft.tables.VersionStore.commit]] stages the parts
+    * `edges` and `degrees` (the degrees pass reads the staged edges
+    * part), records each with its schema and files, then atomically
+    * PUTs the commit marker; readers only count marked versions, so
+    * a torn writer (crash between the two tables, object-store copy
+    * caught mid-flight) is invisible instead of serving mismatched
+    * halves, and reaped by the next retention. A concurrent build that takes the same id first
     * surfaces as a conflict; nothing overwrites a committed version.
     * Committed versions older than the newest two are then dropped
     * (the retention discipline the CDC chain uses — the head plus the
-    * replay base). Returns the committed edges frame. */
+    * replay base). Returns the committed `edges` part. */
   private def publishEdgeVersion(edges: DataFrame, path: String,
-                                 head: Option[graft.tables.Snapshot],
+                                 head: Option[Snapshot],
                                  op: String): DataFrame = {
     val spark = edges.sparkSession
-    val vs = graft.tables.VersionStore
-    val snap = vs.commit(spark, path, head) { stage =>
-      stage.put(edges.repartition(col("doc_a")), "edges")
-      stage.put(spark.read.parquet(s"${stage.path}/edges")
+    val snap = VersionStore.commit(spark, path, head) { stage =>
+      val staged = stage.put(edges.repartition(col("doc_a")), "edges")
+      stage.put(staged
         .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("deg"))
         .repartition(col("doc_id")), "degrees")
-      graft.tables.Snapshot(path, stage.version,
-        vs.stagedFiles(spark, stage), op = op)
+      Snapshot(path, stage.version, Nil, parts = stage.parts, op = op)
     }
-    vs.retain(spark, path, keepLast = 2): Unit
-    spark.read.parquet(s"${snap.vdir}/edges")
+    VersionStore.retain(spark, path, keepLast = 2): Unit
+    VersionStore.read(spark, snap.part("edges"))
   }
 
   /** [[edgeTable]] from an already-derived exact pair set — pairs
@@ -931,15 +932,15 @@ object Dedup {
     * twice). */
   def edgeTableFrom(pairs: DataFrame, path: String): DataFrame =
     publishEdgeVersion(pairs, path,
-      graft.tables.VersionStore.latest(pairs.sparkSession, path), "BUILD")
+      VersionStore.latest(pairs.sparkSession, path), "BUILD")
 
   /** Read back the newest COMMITTED artifact version — an unmarked
-    * (torn) version dir is never served. */
+    * (torn) version dir is never served — from its recorded parts. */
   def readEdgeTable(spark: org.apache.spark.sql.SparkSession,
                     path: String): EdgeArtifact = {
-    val vdir = graft.tables.VersionStore.snapshot(spark, path).vdir
-    EdgeArtifact(spark.read.parquet(s"$vdir/edges"),
-      spark.read.parquet(s"$vdir/degrees"))
+    val snap = VersionStore.snapshot(spark, path)
+    EdgeArtifact(VersionStore.read(spark, snap.part("edges")),
+      VersionStore.read(spark, snap.part("degrees")))
   }
 
   /** INCREMENTAL artifact maintenance — [[edgeTable]] composed with
@@ -972,8 +973,8 @@ object Dedup {
     // Cost: one rewrite of the PAIR-sized artifact per batch — pairs
     // are orders of magnitude fewer than documents, so this is
     // changelog-economy, not a corpus pass.
-    val head = graft.tables.VersionStore.snapshot(fresh.sparkSession, path)
-    val merged = fresh.sparkSession.read.parquet(s"${head.vdir}/edges")
+    val head = VersionStore.snapshot(fresh.sparkSession, path)
+    val merged = VersionStore.read(fresh.sparkSession, head.part("edges"))
       .unionByName(incrementalPairs(idx, fresh, tau = tau))
       .dropDuplicates("doc_a", "doc_b")
     publishEdgeVersion(merged, path, Some(head), "INCREMENT")

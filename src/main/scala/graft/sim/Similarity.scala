@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.tables.{Snapshot, VersionStore}
+
 /** Similarity search over embedding columns (SURVEY §2.5 #60–62).
   *
   * Cosine is computed in double precision as a sequential left fold over
@@ -609,10 +611,11 @@ object Similarity {
 
   // ---- BUILD-ONCE ANN INDEX ARTIFACT (r9-verdict ask #4) ----------
 
-  /** A persisted IVF(-PQ) index read back from disk: `centroids`
-    * (cid, ce), `assigned` (vec_id, ne, cid) clustered by cell, and —
-    * when the index was built with PQ — the residual `codebook`
-    * (mi, j, cbv) and per-vector `codes` (vec_id, cid, code). */
+  /** A persisted IVF(-PQ) index read back from its commit record's
+    * parts: `centroids` (cid, ce), `assigned` (vec_id, ne, cid)
+    * clustered by cell, and — when the index was built with PQ — the
+    * residual `codebook` (mi, j, cbv) and per-vector `codes`
+    * (vec_id, cid, code). */
   final case class AnnIndex(centroids: DataFrame, assigned: DataFrame,
                             codebook: Option[DataFrame],
                             codes: Option[DataFrame])
@@ -624,9 +627,9 @@ object Similarity {
     * shared with the edge artifact and CDC chains: staged write, a
     * record listing every file written, atomic marker, torn writers
     * invisible, a racing build at the same id refused as a conflict
-    * rather than overwriting, newest two versions retained). Readers
-    * find `centroids/`, `assigned/`, `codebook/` and `codes/` under
-    * the committed snapshot's version dir.
+    * rather than overwriting, newest two versions retained). The
+    * record names the parts `centroids`, `assigned` and, with PQ,
+    * `codebook` and `codes`, each with its schema and files.
     *
     * The r9 verdict's point: at 100 TB the index BUILD (train + one
     * full assignment pass + PQ encode) is the expensive step, and
@@ -651,8 +654,8 @@ object Similarity {
     val spark = emb.sparkSession
     val (pinned, cents) = ivfPinned(emb, centroids, trainIters)
     val assigned = pinned.df
-    val vs = graft.tables.VersionStore
-    val id = try vs.commit(spark, path, vs.latest(spark, path)) { stage =>
+    val head = VersionStore.latest(spark, path)
+    val id = try VersionStore.commit(spark, path, head) { stage =>
       stage.put(cents, "centroids")
       // cell-clustered layout: a probe reads co-located cells
       stage.put(assigned.repartition(col("cid")), "assigned")
@@ -662,67 +665,56 @@ object Similarity {
         stage.put(pqEncode(assigned, cents, cb, m).repartition(col("cid")),
           "codes")
       }
-      graft.tables.Snapshot(path, stage.version,
-        vs.stagedFiles(spark, stage), op = "BUILD")
+      Snapshot(path, stage.version, Nil, parts = stage.parts, op = "BUILD")
     }.version finally pinned.close()
-    vs.retain(spark, path, keepLast = 2): Unit
+    VersionStore.retain(spark, path, keepLast = 2): Unit
     id
   }
 
-  /** Read back the newest committed index version. */
+  /** Read back the newest committed index version: its recorded
+    * parts, under their recorded schemas. */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession,
-                   path: String): AnnIndex =
-    annIndexOf(spark, graft.tables.VersionStore.snapshot(spark, path))
-
-  /** The index tables under committed version `snap`'s dir. */
-  private def annIndexOf(spark: org.apache.spark.sql.SparkSession,
-                         snap: graft.tables.Snapshot): AnnIndex = {
-    val fs = graft.tables.VersionStore.fsOf(spark, snap.dir)
-    def sub(n: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(s"${snap.vdir}/$n")
-      if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-    }
-    AnnIndex(spark.read.parquet(s"${snap.vdir}/centroids"),
-      spark.read.parquet(s"${snap.vdir}/assigned"),
-      sub("codebook"), sub("codes"))
+                   path: String): AnnIndex = {
+    val snap = VersionStore.snapshot(spark, path)
+    AnnIndex(VersionStore.read(spark, snap.part("centroids")),
+      VersionStore.read(spark, snap.part("assigned")),
+      snap.parts.get("codebook").map(VersionStore.read(spark, _)),
+      snap.parts.get("codes").map(VersionStore.read(spark, _)))
   }
 
   /** Day-2 growth without retraining — the faiss `add()` path:
     * assign `fresh` vectors (vec_ids disjoint from the index's) to
     * the STORED centroids, PQ-encode them against the STORED
     * codebook when present, and publish the merged index as the next
-    * version. Centroids and codebook are carried unchanged, so every
-    * existing cell/code stays bit-identical — only the fresh rows
-    * are computed, batch-sized work against a 100 TB index. Returns
-    * the committed version id. */
+    * version. Centroids and codebook are carried unchanged: the new
+    * record points at the head's parts, so every existing cell/code
+    * stays bit-identical — only `assigned` and `codes` are rewritten
+    * with the fresh rows, batch-sized work against a 100 TB index.
+    * Returns the committed version id. */
   def annIndexAppend(path: String, fresh: DataFrame): Long = {
     val spark = fresh.sparkSession
     graft.functions.VectorDot.register(spark)
-    val head = graft.tables.VersionStore.snapshot(spark, path)
-    val idx = annIndexOf(spark, head)
-    // centroids unpinned: assignTo collects the ≤k rows itself, and the
-    // re-publish below re-reads the (tiny) centroid parquet directly
-    val cents = idx.centroids
+    val head = VersionStore.snapshot(spark, path)
+    // centroids unpinned: assignTo collects the ≤k rows itself
+    val cents = VersionStore.read(spark, head.part("centroids"))
     val pv = normalized(fresh).select(col("vec_id"), col("ne"))
     val pinned = graft.core.Pin(assignTo(pv, cents))
     val freshAssigned = pinned.df
-    val merged = idx.assigned.unionByName(freshAssigned)
-    val vs = graft.tables.VersionStore
-    val id = try vs.commit(spark, path, Some(head)) { stage =>
-      stage.put(cents, "centroids")
-      stage.put(merged.repartition(col("cid")), "assigned")
-      (idx.codebook, idx.codes) match {
-        case (Some(cb), Some(codes)) =>
-          val m = cb.agg(max(col("mi"))).head().getInt(0) + 1
-          stage.put(cb, "codebook")
-          stage.put(codes.unionByName(pqEncode(freshAssigned, cents, cb, m))
-            .repartition(col("cid")), "codes")
-        case _ => ()
+    val carried = head.parts.view.filterKeys(Set("centroids", "codebook")).toMap
+    val id = try VersionStore.commit(spark, path, Some(head)) { stage =>
+      stage.put(VersionStore.read(spark, head.part("assigned"))
+        .unionByName(freshAssigned).repartition(col("cid")), "assigned")
+      carried.get("codebook").foreach { cbPart =>
+        val cb = VersionStore.read(spark, cbPart)
+        val m = cb.agg(max(col("mi"))).head().getInt(0) + 1
+        stage.put(VersionStore.read(spark, head.part("codes"))
+          .unionByName(pqEncode(freshAssigned, cents, cb, m))
+          .repartition(col("cid")), "codes")
       }
-      graft.tables.Snapshot(path, stage.version,
-        vs.stagedFiles(spark, stage), op = "APPEND")
+      Snapshot(path, stage.version, Nil,
+        parts = carried ++ stage.parts, op = "APPEND")
     }.version finally pinned.close()
-    vs.retain(spark, path, keepLast = 2): Unit
+    VersionStore.retain(spark, path, keepLast = 2): Unit
     id
   }
 

@@ -31,6 +31,11 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   *  - `stats`: per-file data-skipping stats ([[Stats]]), written by
   *    [[graft.ops.Scale.analyzeTable]] and kept current by every later
   *    commit of the chain; None for a chain never ANALYZEd.
+  *  - `parts`: an artifact's named sub-tables (the edge artifact's
+  *    `edges`/`degrees`, the ANN index's `centroids`, `assigned`,
+  *    `codebook`, `codes`), each with its schema and files
+  *    ([[Part]]); read through [[VersionStore.read]]. A part the
+  *    record does not name does not exist.
   *  - `op`, `detail`, `ts`: what produced the version and when (epoch
   *    millis, monotonic along the chain — stamped by
   *    [[VersionStore.commit]], so a record a writer is still building
@@ -47,14 +52,23 @@ final case class Snapshot(
     renames: Map[String, Seq[String]] = Map.empty,
     partitions: Map[String, Map[String, String]] = Map.empty,
     stats: Option[Stats] = None,
+    parts: Map[String, Part] = Map.empty,
     op: String = "",
     detail: String = "",
     ts: Long = 0L) {
 
-  /** The version's own directory: where the data files it wrote live
-    * (an artifact's `edges/`, `centroids/`, ... are subdirs of it). */
+  /** The version's own directory: where the data files it wrote live. */
   def vdir: String = VersionStore.versionDir(dir, version)
+
+  /** The recorded part `name`; fails naming it when the record has no
+    * such part. */
+  def part(name: String): Part = parts.getOrElse(name,
+    sys.error(s"version $version of $dir records no part '$name'"))
 }
+
+/** A named sub-table of a version: its schema and data files, read
+  * under that schema with no footer inference. */
+final case class Part(schema: StructType, files: Seq[String])
 
 object Snapshot {
 
@@ -73,6 +87,9 @@ object Snapshot {
         case (f, kv) => f -> JObject(kv.toList.sorted.map {
           case (k, v) => k -> (JString(v): JValue) }) }),
       "stats" -> s.stats.map(Stats.toJson).getOrElse(JNothing),
+      "parts" -> JObject(s.parts.toList.sortBy(_._1).map { case (n, p) =>
+        n -> JObject("schema" -> parse(p.schema.json),
+          "files" -> strs(p.files)) }),
       "op" -> JString(s.op),
       "detail" -> JString(s.detail),
       "ts" -> JLong(s.ts))))
@@ -93,12 +110,13 @@ object Snapshot {
       case JString(x) => x
       case _ => ""
     }
+    def struct(v: JValue): StructType =
+      DataType.fromJson(compact(render(v))).asInstanceOf[StructType]
     Snapshot(dir, version,
       files = strs(j \ "files"),
       schema = j \ "schema" match {
         case JNothing | JNull => None
-        case st => Some(DataType.fromJson(compact(render(st)))
-          .asInstanceOf[StructType])
+        case st => Some(struct(st))
       },
       constraints = (j \ "constraints") match {
         case JArray(xs) => xs.map(strs).collect { case List(n, c) => (n, c) }
@@ -113,6 +131,8 @@ object Snapshot {
         case JNothing | JNull => None
         case st => Some(Stats.fromJson(st))
       },
+      parts = fields(j \ "parts").map { case (n, p) =>
+        n -> Part(struct(p \ "schema"), strs(p \ "files")) }.toMap,
       op = str("op"),
       detail = str("detail"),
       ts = j \ "ts" match {

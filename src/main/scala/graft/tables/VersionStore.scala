@@ -24,14 +24,15 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
   *                                 by [[commit]]): data files, schema,
   *                                 constraints, column mapping,
   *                                 partition values, per-file stats,
-  *                                 op and timestamp — resolved into a
-  *                                 [[Snapshot]]
-  *   dir/v=<n>/<f>.parquet         data files this version wrote, also
-  *                                 in subdirs (an artifact's
-  *                                 `edges/`, `centroids/`, ...); the
+  *                                 named parts, op and timestamp —
+  *                                 resolved into a [[Snapshot]]
+  *   dir/v=<n>/<f>.parquet         data files this version wrote; the
   *                                 record lists every one and may also
   *                                 point at files of older versions or
   *                                 outside `dir`
+  *   dir/v=<n>/<part>/<f>.parquet  named parts ([[Stage.put]]), each
+  *                                 listed in the record with its
+  *                                 schema ([[Part]])
   *   dir/_GRAFT_PRUNED             retention low-watermark (highest id
   *                                 ever pruned), fencing out-of-window
   *                                 replays
@@ -93,14 +94,17 @@ object VersionStore {
     * writer (crash between data and marker, object-store rename
     * caught mid-copy) is invisible, never served. */
   def committed(spark: SparkSession, dir: String): Seq[Long] = {
-    val p = path(dir)
     val fs = fsOf(spark, dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .filter(marked(fs, dir, _))
+    versionIds(fs, dir).filter(marked(fs, dir, _))
   }
+
+  /** The ids of the `v=<n>` dirs under `dir`, committed or not. */
+  private def versionIds(fs: org.apache.hadoop.fs.FileSystem,
+                         dir: String): Seq[Long] =
+    try fs.listStatus(path(dir)).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
+      .flatMap(_.getPath.getName.stripPrefix("v=").toLongOption)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
 
   /** Newest committed version id, if any. */
   def head(spark: SparkSession, dir: String): Option[Long] =
@@ -287,13 +291,8 @@ object VersionStore {
   /** The newest committed version under `dir`: one listing, then a
     * marker check per candidate from the top (normally one). */
   private def headOf(fs: org.apache.hadoop.fs.FileSystem,
-                     dir: String): Option[Long] = {
-    val ids = try fs.listStatus(path(dir)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .flatMap(_.getPath.getName.stripPrefix("v=").toLongOption)
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
-    ids.sorted.reverseIterator.find(marked(fs, dir, _))
-  }
+                     dir: String): Option[Long] =
+    versionIds(fs, dir).sorted.reverseIterator.find(marked(fs, dir, _))
 
   /** The snapshot of committed version `version` (default: the head),
     * resolved from one listing (none for an explicit version) plus one
@@ -329,9 +328,21 @@ object VersionStore {
     * `path`, and names the files it writes there by their final
     * location under `vdir` (`dir/v=<version>`). */
   final case class Stage(path: String, version: Long, vdir: String) {
-    /** Write `df` as the stage's subdirectory `sub`. */
-    def put(df: DataFrame, sub: String): Unit =
-      stageWriter(df).mode("overwrite").parquet(s"$path/$sub")
+    private val written = collection.mutable.Map.empty[String, Part]
+
+    /** Write `df` as this version's part `name` and record it: the
+      * frame's schema and the files the write left in `<path>/<name>`
+      * (one flat listing). Returns the part read back from the stage,
+      * for a later part of the same commit. */
+    def put(df: DataFrame, name: String): DataFrame = {
+      stageWriter(df).mode("overwrite").parquet(s"$path/$name")
+      val names = parquetIn(fsOf(df.sparkSession, path), s"$path/$name")
+      written(name) = Part(df.schema, names.map(n => s"$vdir/$name/$n"))
+      read(df.sparkSession, Part(df.schema, names.map(n => s"$path/$name/$n")))
+    }
+
+    /** The parts [[put]] so far, for the record. */
+    def parts: Map[String, Part] = written.toMap
   }
 
   /** The writer of every Spark write into a stage. It leaves out
@@ -342,24 +353,20 @@ object VersionStore {
     df.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
       "false")
 
-  /** Every parquet data file written into `stage` so far, subdirs
-    * included, named by its final location under `stage.vdir` — the
-    * `files` of a record whose version consists of exactly what it
-    * wrote (a snapshot chain's full state, an artifact's tables).
+  /** The names of the parquet data files directly in `dir`, sorted.
     * Hidden names (`_…`, `.…`: Spark's own rule) are not data. */
-  def stagedFiles(spark: SparkSession, stage: Stage): Seq[String] = {
-    val fs = fsOf(spark, stage.path)
-    // listStatus, not listFiles(recursive): no block-location lookups
-    def walk(dir: org.apache.hadoop.fs.Path, rel: String): Seq[String] =
-      fs.listStatus(dir).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath, s"$rel$n/")
-        else if (n.endsWith(".parquet")) Seq(s"${stage.vdir}/$rel$n")
-        else Nil
-      }
-    walk(path(stage.path), "").sorted
-  }
+  private def parquetIn(fs: org.apache.hadoop.fs.FileSystem,
+                        dir: String): Seq[String] =
+    fs.listStatus(path(dir)).toSeq.map(_.getPath.getName)
+      .filter(n => n.endsWith(".parquet") && !"_.".contains(n.head)).sorted
+
+  /** The parquet data files written at the top of `stage` so far (one
+    * flat listing), named by their final location under `stage.vdir` —
+    * the `files` of a record whose version consists of exactly what it
+    * wrote (a snapshot chain's full state). */
+  def stagedFiles(spark: SparkSession, stage: Stage): Seq[String] =
+    parquetIn(fsOf(spark, stage.path), stage.path)
+      .map(n => s"${stage.vdir}/$n")
 
   /** Commit the next version after `parent` (the head the caller
     * resolved; None for a new chain): makes the stage, runs `write` —
@@ -417,6 +424,11 @@ object VersionStore {
     snap.schema.fold(spark.read)(spark.read.schema(_))
       .parquet(snap.files: _*)
 
+  /** Read a part (`snap.part(name)`) by its recorded files, under its
+    * recorded schema: no footer inference, no directory probe. */
+  def read(spark: SparkSession, part: Part): DataFrame =
+    spark.read.schema(part.schema).parquet(part.files: _*)
+
   /** The long kept in the side file `name` beside the chain at `dir`,
     * None before the first [[raiseNote]]. */
   private def readNote(spark: SparkSession, dir: String,
@@ -463,11 +475,11 @@ object VersionStore {
     * see (r9 advice: they previously accumulated forever; an id
     * ABOVE the head may be a concurrent writer mid-publish and is
     * left alone). Record-aware: a file inside a pruned version dir
-    * that a kept record still references survives (only the marker,
-    * record and unreferenced files go; the dir itself goes
-    * once empty of referenced files). When `watermark` is set the
-    * highest pruned id is persisted for replay fencing. Returns the
-    * pruned ids. */
+    * (or a part's subdir of it) that a kept record still references,
+    * as a file or in a part, survives (only the marker, record and
+    * unreferenced files go; a dir goes once it holds no referenced
+    * file). When `watermark` is set the highest pruned id is
+    * persisted for replay fencing. Returns the pruned ids. */
   def retain(spark: SparkSession, dir: String, keepLast: Int,
              watermark: Boolean = false): Seq[Long] = {
     require(keepLast >= 1, "retain must keep at least the head")
@@ -481,14 +493,17 @@ object VersionStore {
     // qualify both sides so scheme-less record entries ("/t/x")
     // match the scheme-qualified listing ("file:/t/x")
     def qual(s: String): String = fs.makeQualified(path(s)).toString
-    val referenced: Set[String] = keep
-      .flatMap(v => load(fs, dir, v).files).map(qual).toSet
-    def pruneDir(vdir: org.apache.hadoop.fs.Path): Unit = {
-      val inside = fs.listStatus(vdir)
-      val (keepF, dropF) = inside.partition(f =>
-        f.isFile && referenced.contains(qual(f.getPath.toString)))
-      if (keepF.isEmpty) fs.delete(vdir, true): Unit
-      else dropF.foreach(f => fs.delete(f.getPath, true): Unit)
+    val referenced: Set[String] = keep.map(load(fs, dir, _))
+      .flatMap(s => s.files ++ s.parts.values.flatMap(_.files))
+      .map(qual).toSet
+    def pruneDir(d: org.apache.hadoop.fs.Path): Unit = {
+      val under = qual(d.toString) + "/"
+      if (!referenced.exists(_.startsWith(under))) fs.delete(d, true): Unit
+      else fs.listStatus(d).foreach { f =>
+        if (f.isDirectory) pruneDir(f.getPath)
+        else if (!referenced.contains(qual(f.getPath.toString)))
+          fs.delete(f.getPath, false): Unit
+      }
     }
     drop.foreach(v => pruneDir(path(versionDir(dir, v))))
     // torn leftovers: unmarked v-dirs / stage dirs at or below head
@@ -498,12 +513,9 @@ object VersionStore {
       val torn =
         (n.startsWith("v=") && st.isDirectory
           && !fs.exists(new org.apache.hadoop.fs.Path(st.getPath, CommitMarker))
-          && scala.util.Try(n.stripPrefix("v=").toLong).toOption
-               .exists(_ <= headV)) ||
-        (n.startsWith(StagePrefix)
-          && scala.util.Try(n.stripPrefix(StagePrefix)
-               .takeWhile(_ != '.').toLong).toOption
-               .exists(_ <= headV))
+          && n.stripPrefix("v=").toLongOption.exists(_ <= headV)) ||
+        (n.startsWith(StagePrefix) && n.stripPrefix(StagePrefix)
+          .takeWhile(_ != '.').toLongOption.exists(_ <= headV))
       if (torn) pruneDir(st.getPath)
     }
     if (watermark && drop.nonEmpty) raiseWatermark(spark, dir, drop.max)

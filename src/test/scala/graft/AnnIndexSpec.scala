@@ -52,6 +52,12 @@ class AnnIndexSpec extends AnyFunSuite {
     val path = base.resolve("idx").toString
     Similarity.buildAnnIndex(emb, path, centroids = 8,
       pq = Some((4, 8)))
+    // the read-back is the record's four parts under their recorded
+    // schemas: no footer-inference job, no directory probe
+    val (idx, readJobs) = SparkJobs.jobsOf(spark)(
+      Similarity.readAnnIndex(spark, path))
+    assert(readJobs == 0, s"readAnnIndex ran $readJobs Spark jobs")
+    assert(idx.codebook.nonEmpty && idx.codes.nonEmpty)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
@@ -77,17 +83,19 @@ class AnnIndexSpec extends AnyFunSuite {
     val v1 = Similarity.buildAnnIndex(emb, path, centroids = 8)
     assert(v0 == 0L && v1 == 1L)
     assert(VersionStore.committed(spark, path).sorted == Seq(0L, 1L))
-    // every artifact version carries its commit record, listing every
-    // file the build wrote
+    // every artifact version carries its commit record, naming its
+    // parts and listing every file the build wrote; no PQ, no codebook
     val snaps = VersionStore.snapshots(spark, path)
     assert(snaps.map(_.version) == Seq(0L, 1L))
     snaps.foreach { s =>
       assert(s.op == "BUILD" && s.ts > 0L, s"record-less version: $s")
-      assert(s.files.nonEmpty && s.files.toSet == dataFilesUnder(s.vdir),
+      assert(s.parts.keySet == Set("centroids", "assigned"))
+      assert(s.parts.values.flatMap(_.files).toSet == dataFilesUnder(s.vdir),
         s"the record must list exactly the files v=${s.version} wrote")
     }
-    def dump(v: Long) =
-      spark.read.parquet(s"${VersionStore.snapshot(spark, path, Some(v)).vdir}/assigned")
+    assert(Similarity.readAnnIndex(spark, path).codebook.isEmpty)
+    def dump(v: Long) = VersionStore.read(spark,
+        VersionStore.snapshot(spark, path, Some(v)).part("assigned"))
       .select("vec_id", "cid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(dump(0L) == dump(1L), "rebuild produced different cells")
@@ -112,9 +120,16 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(Similarity.annIndexAppend(path, freshEmb) == built.version + 1)
     val appended = VersionStore.snapshot(spark, path)
     assert(appended.op == "APPEND" && appended.ts > built.ts)
-    assert(appended.files.toSet == dataFilesUnder(appended.vdir) &&
-      appended.files.exists(_.contains("/codes/")),
+    // the append rewrites assigned and codes and points at the build's
+    // centroids and codebook
+    val written = Set("assigned", "codes")
+    assert(appended.parts.keySet == written ++ Set("centroids", "codebook"))
+    assert(written.flatMap(appended.part(_).files) ==
+      dataFilesUnder(appended.vdir),
       "the append's record must list every file it wrote")
+    assert(Seq("centroids", "codebook").forall(n =>
+      appended.part(n) == built.part(n)),
+      "centroids and codebook must be carried, not rewritten")
     val after = Similarity.readAnnIndex(spark, path)
     // centroids unchanged (no retrain)
     assert(after.centroids.collect()

@@ -44,7 +44,11 @@ class GraphReuseSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft_edge_art").toString
     Dedup.edgeTable(docs, 0.8, path)
-    val art = Dedup.readEdgeTable(spark, path)
+    // the read-back is the record's two parts under their recorded
+    // schemas: no footer-inference job
+    val (art, readJobs) = SparkJobs.jobsOf(spark)(
+      Dedup.readEdgeTable(spark, path))
+    assert(readJobs == 0, s"readEdgeTable ran $readJobs Spark jobs")
     val direct = rows(Dedup.jaccardJoin(docs, 0.8)
       .orderBy("doc_a", "doc_b"))
     val stored = rows(art.edges.orderBy("doc_a", "doc_b"))
@@ -85,8 +89,8 @@ class GraphReuseSpec extends AnyFunSuite {
     assert(snaps.map(s => s.version -> s.op) ==
       Seq(0L -> "BUILD", 1L -> "INCREMENT"))
     assert(snaps(0).ts > 0L && snaps(1).ts > snaps(0).ts)
-    snaps.foreach(s => assert(s.files.toSet == dataFilesUnder(s.vdir) &&
-      Seq("/edges/", "/degrees/").forall(d => s.files.exists(_.contains(d))),
+    snaps.foreach(s => assert(s.parts.keySet == Set("edges", "degrees") &&
+      s.parts.values.flatMap(_.files).toSet == dataFilesUnder(s.vdir),
       s"the record must list every file v=${s.version} wrote"))
     val fullPath = java.nio.file.Files
       .createTempDirectory("graft_edge_full").toString
@@ -113,6 +117,29 @@ class GraphReuseSpec extends AnyFunSuite {
     assert(rows(replayed.degrees.orderBy("doc_id")) ==
       rows(full.degrees.orderBy("doc_id")),
       "replayed increment changed the degrees")
+  }
+
+  test("an edge build pays no footer-inference job for its degrees pass") {
+    val docs = graft.tables.Tables(spark, sf).documents
+    val pairs = graft.core.Pin(Dedup.jaccardJoin(docs, 0.8))
+    try {
+      val base = java.nio.file.Files.createTempDirectory("graft_edge_jobs")
+      // the same-run baseline: the two writes and the degrees pass over
+      // the written edges, read back under their known schema
+      val (_, direct) = SparkJobs.jobsOf(spark) {
+        val e = base.resolve("direct_edges").toString
+        pairs.df.repartition(col("doc_a")).write.parquet(e)
+        spark.read.schema(pairs.df.schema).parquet(e)
+          .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+          .groupBy("doc_id").agg(count(lit(1)).as("deg"))
+          .repartition(col("doc_id"))
+          .write.parquet(base.resolve("direct_degrees").toString)
+      }
+      val (_, build) = SparkJobs.jobsOf(spark)(
+        Dedup.edgeTableFrom(pairs.df, base.resolve("art").toString))
+      assert(build <= direct,
+        s"edgeTableFrom ran $build Spark jobs, the two writes $direct")
+    } finally pairs.close()
   }
 
   test("q_graph_reuse rollup == composing the standalone operators") {

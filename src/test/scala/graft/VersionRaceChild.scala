@@ -14,17 +14,26 @@ import graft.tables.{Snapshot, VersionStore}
 object VersionRaceChild {
 
   /** Commit `n` versions tagged `tag`, re-resolving the head after
-    * every conflict; returns how many landed (n unless starved). */
-  def race(spark: SparkSession, dir: String, tag: String, n: Int): Int = {
+    * every conflict; returns how many landed (n unless starved). With
+    * `parts`, commit `i`'s record also names two parts: `a` holds `i`,
+    * `b` holds `tag`. */
+  def race(spark: SparkSession, dir: String, tag: String, n: Int,
+           parts: Boolean = false): Int = {
+    import spark.implicits._
     var i = 0
     var attempts = 0
     while (i < n && attempts < 500) {
       attempts += 1
       val head = VersionStore.latest(spark, dir)
       try {
-        VersionStore.commit(spark, dir, head)(stage =>
-          Snapshot(dir, stage.version, Seq.empty, op = "APPEND",
-            detail = s"$tag-$i"))
+        VersionStore.commit(spark, dir, head) { stage =>
+          if (parts) {
+            stage.put(Seq(i).toDF("x").coalesce(1), "a")
+            stage.put(Seq(tag).toDF("tag").coalesce(1), "b")
+          }
+          Snapshot(dir, stage.version, Seq.empty, parts = stage.parts,
+            op = "APPEND", detail = s"$tag-$i")
+        }
         i += 1
       } catch {
         case _: VersionStore.VersionConflictException => ()
@@ -34,7 +43,7 @@ object VersionRaceChild {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(dir, tag, countS) = args
+    val Array(dir, tag, countS, parts) = args
     val n = countS.toInt
     val spark = SparkSession.builder()
       .master("local[2]")
@@ -42,7 +51,7 @@ object VersionRaceChild {
       .config("spark.sql.shuffle.partitions", "2")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val i = race(spark, dir, tag, n)
+    val i = race(spark, dir, tag, n, parts.toBoolean)
     spark.stop()
     sys.exit(if (i == n) 0 else 2)
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.tables.{Snapshot, Stats, VersionStore}
+import graft.tables.{Part, Snapshot, Stats, VersionStore}
 
 /** The shared versioned-table layer (r9-verdict ask #5): ONE
   * implementation of marker-gated listing, the exclusive staged
@@ -55,6 +55,34 @@ class VersionStoreSpec extends AnyFunSuite {
   private def rows(dir: String, v: Option[Long] = None): Set[Int] = {
     import spark.implicits._
     VersionStore.read(spark, dir, v).as[Int].collect().toSet
+  }
+
+  /** Commit the next version after `parent` as a record with two
+    * parts: `a` holds `xs`, `b` their negations. */
+  private def commitParts(dir: String, parent: Option[Snapshot],
+                          xs: Seq[Int]): Snapshot = {
+    import spark.implicits._
+    VersionStore.commit(spark, dir, parent) { stage =>
+      stage.put(xs.toDF("x").coalesce(1), "a")
+      stage.put(xs.map(-_).toDF("x").coalesce(1), "b")
+      Snapshot(dir, stage.version, Nil, parts = stage.parts,
+        op = "APPEND", detail = xs.mkString(","))
+    }
+  }
+
+  /** Part `name` of committed version `v` (default: head). */
+  private def partRows(dir: String, name: String,
+                       v: Option[Long] = None): Set[Int] = {
+    import spark.implicits._
+    VersionStore.read(spark, VersionStore.snapshot(spark, dir, v).part(name))
+      .as[Int].collect().toSet
+  }
+
+  /** The head of a two-part chain: part `a`, checked against `b`. */
+  private def partsServed(dir: String): Set[Int] = {
+    val a = partRows(dir, "a")
+    assert(partRows(dir, "b") == a.map(-_), s"torn parts under $dir")
+    a
   }
 
   test("commit is marker-gated; torn dirs invisible and reaped") {
@@ -184,7 +212,11 @@ class VersionStoreSpec extends AnyFunSuite {
     rm(base.toFile)
   }
 
-  test("a writer that dies mid-commit leaves no visible record; retain reaps it") {
+  /** A writer that dies mid-commit, for a chain whose versions
+    * `commitXs` commits and whose head `served` reads. */
+  private def tornWriters(
+      commitXs: (String, Option[Snapshot], Seq[Int]) => Snapshot,
+      served: String => Set[Int]): Unit = {
     val base = java.nio.file.Files.createTempDirectory("graft_vs_torn")
     val dir = base.resolve("t").toString
     val fs = VersionStore.fsOf(spark, dir)
@@ -196,14 +228,14 @@ class VersionStoreSpec extends AnyFunSuite {
     def deadWriter(at: String, xs: Int*): Unit = {
       deaths += 1
       val scratch = base.resolve(s"scratch$deaths").toString
-      commitRows(scratch, None, xs)
+      commitXs(scratch, None, xs)
       fs.delete(hpath(s"$scratch/v=0/${VersionStore.CommitMarker}"),
         false): Unit
       assert(fs.rename(hpath(s"$scratch/v=0"), hpath(at)))
     }
-    val v0 = commitRows(dir, None, Seq(1))
-    val v1 = commitRows(dir, Some(v0), Seq(2))
-    val v2 = commitRows(dir, Some(v1), Seq(3))
+    val v0 = commitXs(dir, None, Seq(1))
+    val v1 = commitXs(dir, Some(v0), Seq(2))
+    val v2 = commitXs(dir, Some(v1), Seq(3))
     VersionStore.retain(spark, dir, keepLast = 1): Unit
     // (a) died with its record in the stage, before the rename
     deadWriter(s"$dir/_stage_v=1.dead0001", 8)
@@ -221,7 +253,7 @@ class VersionStoreSpec extends AnyFunSuite {
         VersionStore.snapshot(spark, dir, Some(v)))
     }
     assert(VersionStore.snapshots(spark, dir) == Seq(v2))
-    assert(rows(dir) == Set(3))
+    assert(served(dir) == Set(3))
     // retention reaps the debris at or below the head, records and
     // all, and leaves the id above it alone (maybe a live writer)
     VersionStore.retain(spark, dir, keepLast = 5): Unit
@@ -234,14 +266,24 @@ class VersionStoreSpec extends AnyFunSuite {
     // the next writer at id 3 evicts it once aged and commits its own
     // record — the dead writer's record never becomes visible
     spark.conf.set("spark.graft.commit.debrisGraceMs", "0")
-    val v3 = try commitRows(dir, Some(v2), Seq(4))
+    val v3 = try commitXs(dir, Some(v2), Seq(4))
       finally spark.conf.unset("spark.graft.commit.debrisGraceMs")
     assert(VersionStore.snapshot(spark, dir, Some(3L)) == v3)
-    assert(v3.detail == "4" && rows(dir) == Set(4))
+    assert(v3.detail == "4" && served(dir) == Set(4))
     rm(base.toFile)
   }
 
-  test("two-JVM publishExclusive race: no commit lost, duplicated, or torn") {
+  test("a writer that dies mid-commit leaves no visible record; retain reaps it") {
+    tornWriters(commitRows(_, _, _), rows(_))
+  }
+
+  test("a writer that dies mid-commit of a two-part record: same laws") {
+    tornWriters(commitParts, partsServed)
+  }
+
+  /** Two driver processes race `n` commits each onto one chain; with
+    * `parts`, every record also names two parts. */
+  private def twoJvmRace(parts: Boolean): Unit = {
     import scala.jdk.CollectionConverters._
     val base = java.nio.file.Files.createTempDirectory("graft_vs_xjvm")
     val dir = base.resolve("t").toString
@@ -264,12 +306,13 @@ class VersionStoreSpec extends AnyFunSuite {
       (Seq(java17) ++ opens ++ Seq("-Xmx1g",
         "-Dspark.ui.enabled=false",
         "-cp", System.getProperty("java.class.path"),
-        "graft.VersionRaceChild", dir, "B", n.toString)).asJava)
+        "graft.VersionRaceChild", dir, "B", n.toString,
+        parts.toString)).asJava)
     pb.redirectErrorStream(true)
     pb.redirectOutput(log)
     val child = pb.start()
     // parent writer, in-process, same protocol, tag A
-    val i = VersionRaceChild.race(spark, dir, "A", n)
+    val i = VersionRaceChild.race(spark, dir, "A", n, parts)
     assert(i == n, s"parent writer starved")
     assert(child.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
       "child JVM did not finish in time")
@@ -295,6 +338,82 @@ class VersionStoreSpec extends AnyFunSuite {
     val ts = snaps.map(_.ts)
     assert(ts.zip(ts.tail).forall { case (a, b) => a < b },
       s"commit stamps must increase along the chain: $ts")
+    // each record's parts are its own writer's complete output
+    if (parts) snaps.foreach { snap =>
+      import spark.implicits._
+      val Array(tag, k) = snap.detail.split("-")
+      assert(snap.parts.keySet == Set("a", "b") && snap.parts.values
+        .forall(_.files.forall(_.startsWith(s"${snap.vdir}/"))))
+      assert(VersionStore.read(spark, snap.part("a")).as[Int].collect()
+        .toSeq == Seq(k.toInt) && VersionStore.read(spark, snap.part("b"))
+        .as[String].collect().toSeq == Seq(tag), s"torn parts: $snap")
+    }
+    rm(base.toFile)
+  }
+
+  test("two-JVM publishExclusive race: no commit lost, duplicated, or torn") {
+    twoJvmRace(parts = false)
+  }
+
+  test("two-JVM race on two-part records: no commit lost, duplicated, or torn") {
+    twoJvmRace(parts = true)
+  }
+
+  test("the commit record carries named parts exactly; a missing part fails by name") {
+    import org.apache.spark.sql.types._
+    val base = java.nio.file.Files.createTempDirectory("graft_vs_parts")
+    val dir = base.resolve("t").toString
+    // an ANN `assigned`-like part (non-null key, `ne` array<double>
+    // with non-null elements) and an empty part
+    val vecs = StructType(Seq(StructField("vec_id", LongType, false),
+      StructField("ne", ArrayType(DoubleType, containsNull = false)),
+      StructField("cid", LongType)))
+    val empty = StructType(Seq(StructField("k", StringType)))
+    var parts = Map.empty[String, Part]
+    val committed = VersionStore.commit(spark, dir, None) { stage =>
+      parts = Map(
+        "assigned" -> Part(vecs, Seq(s"${stage.vdir}/assigned/p0.parquet",
+          s"${stage.vdir}/assigned/p1.parquet")),
+        "none" -> Part(empty, Nil))
+      Snapshot(dir, stage.version, Nil, parts = parts)
+    }
+    val back = VersionStore.snapshot(spark, dir)
+    assert(back == committed && back.parts == parts)
+    assert(back.part("assigned").schema == vecs && back.files.isEmpty &&
+      back.schema.isEmpty)
+    // the empty part reads as no rows under its schema
+    val none = VersionStore.read(spark, back.part("none"))
+    assert(none.schema.fieldNames.toSeq == Seq("k") && none.count() == 0L)
+    // a record with no parts: the absence is a fact, and asking for a
+    // part names it
+    val plain = commitRows(dir, Some(back), Seq(1))
+    assert(VersionStore.snapshot(spark, dir) == plain && plain.parts.isEmpty)
+    val err = intercept[RuntimeException](plain.part("edges"))
+    assert(err.getMessage.contains("'edges'"), err.getMessage)
+    rm(base.toFile)
+  }
+
+  test("retention keeps every file a kept record's parts list") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_vs_pref")
+    val dir = base.resolve("t").toString
+    val fs = VersionStore.fsOf(spark, dir)
+    // v=1 carries v=0's part `a` by pointer and writes a part `c`
+    val v0 = commitParts(dir, None, Seq(1, 2))
+    VersionStore.commit(spark, dir, Some(v0)) { stage =>
+      stage.put(Seq(3).toDF("x").coalesce(1), "c")
+      Snapshot(dir, stage.version, Nil,
+        parts = Map("a" -> v0.part("a")) ++ stage.parts)
+    }: Unit
+    assert(VersionStore.retain(spark, dir, keepLast = 1) == Seq(0L))
+    assert(v0.part("a").files.forall(f => fs.exists(hpath(f))),
+      "a part file the kept record lists must survive")
+    assert(!fs.exists(hpath(s"$dir/v=0/b")) &&
+      !fs.exists(hpath(s"$dir/v=0/${VersionStore.CommitMarker}")),
+      "the pruned version's unreferenced part and marker must go")
+    assert(VersionStore.committed(spark, dir) == Seq(1L))
+    assert(partRows(dir, "a") == Set(1, 2) && partRows(dir, "c") == Set(3),
+      "the head still serves its carried part")
     rm(base.toFile)
   }
 
@@ -376,6 +495,12 @@ class VersionStoreSpec extends AnyFunSuite {
     // dir is `Snapshot.vdir`). The one exception is ScaleExperiment's
     // data-generator marker, which names no chain file. Version paths
     // are checked in code only; docs may describe the layout.
+    // A version's parts are read through its record: no code outside
+    // graft.tables reads a path built from a version dir (`vdir`) or a
+    // stage dir (`stage.path`), spells `$vdir/...`, or uses a committed
+    // version's dir at all, except the two CLONE no-copy listings in
+    // Queries; and the artifact writers in graft.sim and graft.dedup
+    // probe no path with `fs.exists`.
     import scala.jdk.CollectionConverters._
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root: $root")
@@ -386,6 +511,12 @@ class VersionStoreSpec extends AnyFunSuite {
       t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
     }
     val allowed = Map("graft/ScaleExperiment.scala" -> Set("_GRAFT_GEN_OK_v2"))
+    val versionDir = raw"(?<!stage)\.vdir\b|\$$\{?vdir\b".r
+    val dirRead = raw"\.read\b.*?(vdir|stage\.path)".r
+    val probe = raw"\bfs\.exists\b".r
+    val dirAllowed = Map("graft/ops/Queries.scala" -> Seq(
+      "snapshot(s, cln, Some(0L)).vdir", "snapshot(s, b, Some(0L)).vdir"))
+    val probeFree = Seq("graft/sim/", "graft/dedup/")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f =>
         if (f.isDirectory) files(f)
@@ -393,15 +524,28 @@ class VersionStoreSpec extends AnyFunSuite {
     val offenders = files(root).flatMap { f =>
       val rel = root.toPath.relativize(f.toPath).toString
       if (rel.startsWith("graft/tables/")) Nil
-      else java.nio.file.Files.readAllLines(f.toPath,
-          java.nio.charset.StandardCharsets.UTF_8).asScala.zipWithIndex
-        .flatMap { case (l, i) =>
-          val code = if (isDoc(l)) "" else l.split("//", 2).head
+      else {
+        val lines = java.nio.file.Files.readAllLines(f.toPath,
+          java.nio.charset.StandardCharsets.UTF_8).asScala.toVector
+        def code(i: Int) =
+          if (i >= lines.size || isDoc(lines(i))) ""
+          else lines(i).split("//", 2).head
+        lines.indices.flatMap { i =>
+          val l = lines(i)
+          // a read's path may sit on the line after `.read`
+          val read = if (code(i).contains(".read")) code(i) + code(i + 1)
+            else ""
           (name.findAllIn(l)
             .filterNot(allowed.getOrElse(rel, Set.empty[String])) ++
-            versionPath.findAllIn(code))
+            versionPath.findAllIn(code(i)) ++
+            dirRead.findAllIn(read) ++
+            (if (dirAllowed.getOrElse(rel, Nil).exists(code(i).contains)) Nil
+             else versionDir.findAllIn(code(i))) ++
+            (if (probeFree.exists(rel.startsWith)) probe.findAllIn(code(i))
+             else Nil))
             .map(n => s"$rel:${i + 1}: $n")
         }
+      }
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
