@@ -609,10 +609,14 @@ object Scale {
     * INSERT` on the pointer-manifest table — at 100 TB a
     * changelog-sized MERGE touches the files its keys live in plus
     * one append, never the table. Contract (inherited from upsert):
-    * `source` unique per `key`. */
+    * `source` unique per `key`. `batch` is a streaming sink's batch id
+    * ([[graft.streaming.Streams.cowMergeBatch]]): the commit records it,
+    * and the MERGE commits nothing when the head already records an id
+    * at or above it. */
   def mergeInto(spark: SparkSession, srcDir: String, tableDir: String,
-                source: DataFrame, key: Seq[String]): RewriteStats =
-    cowMerge(spark, srcDir, tableDir, source, key, "")(
+                source: DataFrame, key: Seq[String],
+                batch: Option[Long] = None): RewriteStats =
+    cowMerge(spark, srcDir, tableDir, source, key, "", batch)(
       (base, changes) => Relational.upsert(base, changes, key)
         .drop("action"),
       (df, src) => src.join(df.select(key.map(col): _*), key, "left_anti")
@@ -638,7 +642,7 @@ object Scale {
                        matchedUpdate: Option[(Column, Seq[(String, Column)])],
                        notMatchedInsert: Option[(Column, Seq[(String, Column)])])
       : RewriteStats =
-    cowMerge(spark, srcDir, tableDir, source, key, "multi-clause")(
+    cowMerge(spark, srcDir, tableDir, source, key, "multi-clause", None)(
       (base, changes) => Relational.mergeInto(base, changes, key,
         whenMatchedDelete = matchedDelete,
         whenMatchedUpdate =
@@ -665,18 +669,23 @@ object Scale {
     * the same single Spark write as the hit files ([[stageTargets]]).
     * Everything else rides by pointer. Hit detection is one broadcast
     * semi-join of the base scan against the source keys, collecting
-    * FILE NAMES (file-count-bounded). */
+    * FILE NAMES (file-count-bounded). A `batch` the head's record
+    * already covers commits nothing (checked per attempt, so a racing
+    * writer of the same batch makes the retry skip). */
   private def cowMerge(spark: SparkSession, srcDir: String,
                        tableDir: String, source: DataFrame,
-                       key: Seq[String], detail: String)
+                       key: Seq[String], detail: String,
+                       batch: Option[Long])
                       (rewriteOf: (DataFrame, DataFrame) => DataFrame,
                        insertsOf: (DataFrame, DataFrame) => DataFrame)
       : RewriteStats = withCommitRetry() {
-    val fs = VersionStore.fsOf(spark, tableDir)
     val (head, base) = baseOf(spark, srcDir, tableDir)
+    if (batch.exists(b => base.batchId.exists(b <= _)))
+      metadataOnly(spark, base)
+    else withPinnedSource(source) { src =>
+    val fs = VersionStore.fsOf(spark, tableDir)
     val baseFiles = base.files
     val footers = Footers.read(spark, baseFiles)
-    withPinnedSource(source) { src =>
     // row accounting from footers (guide §1.2) — no count() jobs
     val rowsBefore = baseFiles.iterator.map(footers(_).rows).sum
     val hitFiles = hitFilesOf(spark, base, baseFiles, footers)(
@@ -721,7 +730,8 @@ object Scale {
       base.copy(
         files = untouched ++ staged.map(n => s"${stage.vdir}/$n"),
         partitions = carriedParts(base, untouched, hitFiles.zip(names),
-          stage, key.contains))
+          stage, key.contains),
+        batchId = batch.orElse(base.batchId))
     }
     RewriteStats(baseFiles.size.toLong, hitFiles.size.toLong,
       rowsBefore, rowsBefore - hitBefore + stagedAfter)
@@ -1160,13 +1170,14 @@ object Scale {
     * version `v`, published as a NEW version (Delta RESTORE): the
     * restore's record is `v`'s, so the un-restored versions stay
     * time-travelable and the op log keeps the full story; zero data
-    * movement — pointers all the way. */
+    * movement — pointers all the way. The head's streaming batch id
+    * stays: a restore rolls data back, not the sink's progress. */
   def restoreTable(spark: SparkSession, tableDir: String, v: Long)
       : RewriteStats = withCommitRetry() {
     val head = VersionStore.snapshot(spark, tableDir)
     val target = VersionStore.snapshot(spark, tableDir, Some(v))
     commitVersion(spark, tableDir, Some(head), "RESTORE", s"v=$v")(_ =>
-      target)
+      target.copy(batchId = head.batchId))
     metadataOnly(spark, target)
   }
 
@@ -1192,13 +1203,16 @@ object Scale {
     * here too: the clone references the source's files, so source-
     * side RETENTION (never the clone's own — [[graft.tables
     * .VersionStore.retain]] refuses to touch files outside its own
-    * root) must keep what live clones still point at. */
+    * root) must keep what live clones still point at. The clone
+    * starts without the source's streaming batch id: a sink feeding
+    * the clone starts its own. */
   def cloneTable(spark: SparkSession, srcTableDir: String,
                  destTableDir: String): RewriteStats = {
     val src = VersionStore.latest(spark, srcTableDir).getOrElse(
       throw new IllegalArgumentException(
         s"nothing to clone under $srcTableDir"))
-    commitVersion(spark, destTableDir, None, "CLONE", srcTableDir)(_ => src)
+    commitVersion(spark, destTableDir, None, "CLONE", srcTableDir)(_ =>
+      src.copy(batchId = None))
     metadataOnly(spark, src)
   }
 
@@ -1249,18 +1263,24 @@ object Scale {
     * with an atomic rename so a concurrent file-source stream never
     * lists a torn file. The chain's FIRST committed version is the
     * base snapshot — deltas start at the second, exactly Delta CDF's
-    * convention. Idempotent and incremental: the mark (persisted
-    * beside the spool) survives restarts; a crash mid-spool replays
-    * that version's identical delta over its own files. Returns the
-    * versions spooled this call. */
+    * convention. Idempotent and incremental: the high-water mark is
+    * the newest `v<N>.parquet` the spool holds (each version publishes
+    * exactly one), so it survives restarts with no file of its own; a
+    * crash before a version's rename leaves no file and the next call
+    * spools that version again. Returns the versions spooled this
+    * call. */
   def spoolChanges(spark: SparkSession, tableDir: String,
                    spoolDir: String): Seq[Long] = {
     val fs = VersionStore.fsOf(spark, spoolDir)
     fs.mkdirs(new org.apache.hadoop.fs.Path(spoolDir)): Unit
     val vs = VersionStore.committed(spark, tableDir).sorted
     if (vs.isEmpty) return Seq.empty
-    val done = VersionStore.appliedId(spark, spoolDir)
-      .getOrElse(vs.head)
+    val spooled = """v(\d+)\.parquet""".r
+    val done = fs.listStatus(new org.apache.hadoop.fs.Path(spoolDir)).toSeq
+      .flatMap(st => st.getPath.getName match {
+        case spooled(n) => n.toLongOption
+        case _ => None
+      }).maxOption.getOrElse(vs.head)
     val todo = vs.filter(_ > done)
     todo.foreach { v =>
       val prior = vs.filter(_ < v)
@@ -1279,20 +1299,16 @@ object Scale {
       // checkpointed stream had already consumed (the file source
       // skips seen paths). One file per version means a torn attempt
       // is either fully invisible (crash before the rename) or fully
-      // authoritative (after it) — the replay then SKIPS a version
-      // whose file already exists instead of touching it. Cost: the
+      // authoritative (after it) — and the file IS the mark, so a
+      // replay never reaches a version whose file exists. Cost: the
       // per-commit delta funnels through one write task — fine for a
       // changelog-priced feed; a bulk consumer of huge deltas should
       // read the `graft` streaming format (GraftSourceProvider),
       // which serves each commit's diff distributed with no spool.
-      val dest = new org.apache.hadoop.fs.Path(spoolDir, s"v$v.parquet")
-      if (!fs.exists(dest)) {
-        val delta = tableChanges(spark, tableDir, prev, v)
-          .withColumn("version", lit(v))
-        stageTargets(delta.withColumn("__tag", lit(0))
-          .withColumn("__pos", lit(0L)), fs, spoolDir, 1, (_, _) => dest.getName)
-      }
-      VersionStore.recordAppliedId(spark, spoolDir, v)
+      val delta = tableChanges(spark, tableDir, prev, v)
+        .withColumn("version", lit(v))
+      stageTargets(delta.withColumn("__tag", lit(0))
+        .withColumn("__pos", lit(0L)), fs, spoolDir, 1, (_, _) => s"v$v.parquet")
     }
     todo
   }

@@ -491,9 +491,10 @@ object Similarity {
     * native `vec_dot`, and `array_min` on (d2, j) structs equal to
     * the window's (d2 asc, j asc) rank 1 — codes are bit-identical.
     * At scale this is the whole index: m small ints per vector
-    * instead of the raw embedding. */
+    * instead of the raw embedding. The subvector count m is the
+    * codebook's: one entry list per `mi`. */
   def pqEncode(assigned: DataFrame, cents: DataFrame,
-               codebook: DataFrame, m: Int): DataFrame = {
+               codebook: DataFrame): DataFrame = {
     graft.functions.VectorDot.register(assigned.sparkSession)
     val centArr = cents.select(col("cid"), col("ce")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -501,8 +502,9 @@ object Similarity {
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (mi, rows) => mi -> rows.sortBy(_._2) }
-    require(cb.map(_._1).toSeq == (0 until m).toSeq,
-      s"codebook must cover subvectors 0..${m - 1}, got ${cb.map(_._1)}")
+    val m = cb.size
+    require(m > 0 && cb.map(_._1) == (0 until m),
+      s"codebook must cover subvectors 0..m-1, got ${cb.map(_._1)}")
     cb.foreach { case (mi, rows) =>
       require(rows.map(_._2).toSeq == rows.indices.toSeq,
         s"codebook entries for subvector $mi must be contiguous j=0..n-1")
@@ -555,20 +557,20 @@ object Similarity {
                trainIters: Int = 2): DataFrame = {
     val (assigned, cents) = ivfAssign(emb, centroids, trainIters)
     val cb = trainPqCodebook(assigned, cents, m, ksub)
-    val codes = pqEncode(assigned, cents, cb, m)
-    knnIvfPqOn(assigned, cents, cb, codes, queryPred, k, probes,
-      ksub, rerank)
+    val codes = pqEncode(assigned, cents, cb)
+    knnIvfPqOn(assigned, cents, cb, codes, queryPred, k, probes, rerank)
   }
 
   /** The ADC probe plan of [[knnIvfPq]], over already-built index
     * frames — per-run-trained or read from the stored artifact
-    * ([[knnIvfPqIndexed]]). The subvector width is carried by the
-    * codebook rows themselves (`size(cbv)`), so only `ksub` is
-    * needed to index the flat ADC table. */
+    * ([[knnIvfPqIndexed]]). The PQ shape is carried by the rows
+    * themselves: the subvector width by each codebook row
+    * (`size(cbv)`), the entries per subvector by the flat ADC table's
+    * length over the code's (m·ksub / m). */
   private def knnIvfPqOn(assigned: DataFrame, cents: DataFrame,
                          cb: DataFrame, codes: DataFrame,
                          queryPred: Column, k: Int, probes: Int,
-                         ksub: Int, rerank: Int): DataFrame = {
+                         rerank: Int): DataFrame = {
     val q = assigned.where(queryPred)
       .select(col("vec_id").as("qid"), col("ne").as("qe"))
     // per-query ADC lookup table, packed flat ordered by (mi, j)
@@ -593,7 +595,8 @@ object Similarity {
       .withColumn("adc", col("csim") + aggregate(
         zip_with(col("code"),
           sequence(lit(0), size(col("code")) - 1),
-          (cj, mi) => element_at(col("tbl"), (mi * ksub + cj + 1).cast("int"))),
+          (cj, mi) => element_at(col("tbl"),
+            (mi * expr("size(tbl) div size(code)") + cj + 1).cast("int"))),
         lit(0.0), (acc, v) => acc + v))
     val wA = Window.partitionBy("qid").orderBy(col("adc").desc, col("vec_id"))
     val survivors = cand.withColumn("arn", row_number().over(wA))
@@ -662,7 +665,7 @@ object Similarity {
       pq.foreach { case (m, ksub) =>
         val cb = trainPqCodebook(assigned, cents, m, ksub)
         stage.put(cb, "codebook")
-        stage.put(pqEncode(assigned, cents, cb, m).repartition(col("cid")),
+        stage.put(pqEncode(assigned, cents, cb).repartition(col("cid")),
           "codes")
       }
       Snapshot(path, stage.version, Nil, parts = stage.parts, op = "BUILD")
@@ -705,10 +708,9 @@ object Similarity {
       stage.put(VersionStore.read(spark, head.part("assigned"))
         .unionByName(freshAssigned).repartition(col("cid")), "assigned")
       carried.get("codebook").foreach { cbPart =>
-        val cb = VersionStore.read(spark, cbPart)
-        val m = cb.agg(max(col("mi"))).head().getInt(0) + 1
         stage.put(VersionStore.read(spark, head.part("codes"))
-          .unionByName(pqEncode(freshAssigned, cents, cb, m))
+          .unionByName(pqEncode(freshAssigned, cents,
+            VersionStore.read(spark, cbPart)))
           .repartition(col("cid")), "codes")
       }
       Snapshot(path, stage.version, Nil,
@@ -737,10 +739,8 @@ object Similarity {
     val idx = readAnnIndex(spark, path)
     val cb = idx.codebook.getOrElse(
       sys.error(s"index at $path was built without PQ"))
-    val codes = idx.codes.get
-    val ksub = cb.agg(max(col("j"))).head().getInt(0) + 1
-    knnIvfPqOn(idx.assigned, idx.centroids, cb, codes, queryPred,
-      k, probes, ksub, rerank)
+    knnIvfPqOn(idx.assigned, idx.centroids, cb, idx.codes.get, queryPred,
+      k, probes, rerank)
   }
 
 

@@ -24,9 +24,9 @@ import graft.tables.VersionStore
   * deterministic), so delivery is exactly-once at the version level.
   * Convention matches Delta CDF and [[Scale.spoolChanges]]: the
   * chain's FIRST committed version is the base snapshot — deltas
-  * start at the second. Retention must keep the versions an offline
-  * consumer still needs ([[VersionStore.retain]]'s watermark fencing;
-  * a pruned predecessor fails loudly, never silently skips). The
+  * start at the second. Retention ([[VersionStore.retain]]) must
+  * keep the versions an offline consumer still needs: a pruned
+  * predecessor fails loudly, never silently skips. The
   * schema is fixed at stream start (head's declared schema + tags);
   * later deltas align to it — Delta CDF's rule. */
 class GraftSourceProvider extends StreamSourceProvider

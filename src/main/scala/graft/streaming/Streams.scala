@@ -107,25 +107,26 @@ object Streams {
     * [[graft.tables.VersionStore.commit]] publishes with a record
     * listing its files and schema (so reading a version back needs no
     * footer-inference job). Version-chain mechanics (marker-gated listing,
-    * staged exclusive commit, watermark, retention) live in the SHARED
+    * staged exclusive commit, retention) live in the SHARED
     * [[graft.tables.VersionStore]] layer (r9-verdict ask #5: CDC
     * snapshots, the edge artifact, the ANN index and COW DML all ran
     * parallel copies of this logic; the torn-dir / replay edge cases
     * are now proven once, against the common code).
     *
-    * Replay rules, in order:
-    *  - FABRICATION GUARD (r8-verdict nit #1 + r8-advice high): at or
-    *    below the retention watermark, or with no committed
-    *    predecessor once retention has pruned ANY version, the batch
-    *    is an out-of-window replay — merging it onto an empty base
-    *    would fabricate a historical snapshot that [[cdcSnapshotAsOf]]
-    *    would then serve as truth. Refused. The foreachBatch
-    *    discipline never hits this (checkpoint recovery replays only
-    *    the last uncommitted batch, whose predecessor [[cdcRetain]]
-    *    always keeps).
+    * Replay rules, in order, all read off one listing of the committed
+    * ids:
     *  - A batch whose version is already committed is SKIPPED: it was
     *    built from the same predecessor with the same rows, so the
-    *    committed version already is its output.
+    *    committed version already is its output. This holds under any
+    *    retention that kept the version, the head included.
+    *  - FABRICATION GUARD (r8-verdict nit #1 + r8-advice high): a chain
+    *    starts at v=0 and commits contiguously, so when the lowest
+    *    committed id is above 0 retention has pruned every id below
+    *    it. A batch under that fence is an out-of-window replay —
+    *    merging it onto an empty base would fabricate a historical
+    *    snapshot that [[cdcSnapshotAsOf]] would then serve as truth.
+    *    Refused, whichever retention pruned (`VersionStore.retain`,
+    *    SQL `VACUUM … RETAIN`, [[graft.ops.Scale.vacuumHours]]).
     *  - A batch that would leave a gap in the ids is refused.
     * A concurrent writer that takes the id first surfaces as a
     * conflict; the retry ([[graft.tables.VersionStore.withCommitRetry]])
@@ -137,18 +138,14 @@ object Streams {
     val s = batch.sparkSession
     vs.withCommitRetry() {
       val done = vs.committed(s, dir)
-      val prev = done.filter(_ < id).maxOption
-      vs.prunedWatermark(s, dir).foreach { wm =>
-        require(id > wm,
-          s"batch $id is at or below the retention watermark $wm — " +
-            "its predecessor chain was pruned; refusing to fabricate " +
-            "a historical snapshot")
-        require(prev.nonEmpty,
-          s"batch $id has no committed predecessor but retention has " +
-            s"pruned up to version $wm — refusing to merge from an " +
-            "empty base")
-      }
       if (!done.contains(id)) {
+        done.minOption.filter(_ > 0).foreach { low =>
+          require(id > low,
+            s"batch $id is at or below the retention watermark ${low - 1} " +
+              "— its predecessor chain was pruned; refusing to fabricate " +
+              "a historical snapshot")
+        }
+        val prev = done.filter(_ < id).maxOption
         require(prev.getOrElse(-1L) == id - 1,
           s"batch $id would leave a gap in the version ids under $dir " +
             s"(newest committed: ${prev.getOrElse("none")})")
@@ -229,36 +226,33 @@ object Streams {
     * only the files the batch's keys live in plus one append — at
     * 100 TB a changelog batch costs its hit files, not the table.
     *
-    * Exactly-once discipline: the chain's applied-id note
-    * ([[graft.tables.VersionStore.appliedId]]) records the highest
-    * merged batch AFTER its publish commits, so a checkpoint-recovery
-    * replay of an applied batch SKIPS. A crash in the window between
-    * publish and note re-merges that one batch — harmless by
-    * construction: re-applying a MERGE is content-idempotent (its
-    * updates rewrite the same values; its former inserts now MATCH
-    * and update to themselves), the replay just costs one extra
-    * version. Within a batch, `order` picks the winning row per key
-    * (changelogs carry multiple updates per key per batch). */
+    * Exactly-once discipline: the batch id rides in the MERGE's own
+    * commit record ([[graft.tables.Snapshot]]`.batchId`, Delta's
+    * streaming transaction id), so the data and the id publish in one
+    * atomic commit. The MERGE skips, inside its commit-retry loop,
+    * when the head's record already holds an id at or above this one:
+    * a checkpoint-recovery replay of a merged batch, or a racing writer
+    * of the same batch, commits nothing. No crash window is left
+    * between the publish and the id, and a replay costs no version.
+    * An empty batch commits nothing and records no id. Within a batch,
+    * `order` picks the winning row per key (changelogs carry multiple
+    * updates per key per batch). */
   def cowMergeBatch(srcDir: String, tableDir: String, key: Seq[String],
                     order: Seq[String])
                    (batch: DataFrame, id: Long): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val s = batch.sparkSession
-    val applied = graft.tables.VersionStore.appliedId(s, tableDir)
-    if (!applied.exists(id <= _)) {
-      val w = Window.partitionBy(key.map(col): _*)
-        .orderBy(order.map(col(_).desc): _*)
-      // pin the deduped batch once: the emptiness gate reads its row
-      // count, and mergeInto uses a pinned source as-is (no second pin)
-      val latest = graft.core.Pin(
-        batch.withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1).drop("__rn"))
-      try {
-        if (latest.rows > 0L)
-          graft.ops.Scale.mergeInto(s, srcDir, tableDir, latest.df, key): Unit
-      } finally latest.close()
-      graft.tables.VersionStore.recordAppliedId(s, tableDir, id)
-    }
+    val w = Window.partitionBy(key.map(col): _*)
+      .orderBy(order.map(col(_).desc): _*)
+    // pin the deduped batch once: the emptiness gate reads its row
+    // count, and mergeInto uses a pinned source as-is (no second pin)
+    val latest = graft.core.Pin(
+      batch.withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1).drop("__rn"))
+    try {
+      if (latest.rows > 0L)
+        graft.ops.Scale.mergeInto(batch.sparkSession, srcDir, tableDir,
+          latest.df, key, batch = Some(id)): Unit
+    } finally latest.close()
   }
 
   /** Streaming MERGE sink into a COW table (#81d): every micro-batch
@@ -323,28 +317,6 @@ object Streams {
         vals.flatMap(c => Seq(col(s"old_$c"), col(s"new_$c")))): _*)
   }
 
-  /** RETENTION (the vacuum half of the version chain): delete all but
-    * the newest `keepLast` committed versions, then persist the
-    * highest pruned id as a low-watermark file beside the chain.
-    *
-    * `keepLast >= 2` is REQUIRED (r8 advice): an at-least-once
-    * re-delivery of the head batch `id` must pass [[commitBatch]]'s
-    * fabrication guard — which, once a watermark exists, wants a
-    * committed version `< id`, the head's PREDECESSOR — before it can
-    * skip as committed. Keeping two versions keeps every reachable
-    * replay inside the window; anything older is fenced by the
-    * watermark ([[cdcMerge]] refuses ids at or below it, and refuses
-    * an empty predecessor chain once the watermark exists). Returns
-    * the ids dropped. */
-  def cdcRetain(spark: SparkSession, snapDir: String,
-                keepLast: Int): Seq[Long] = {
-    require(keepLast >= 2,
-      "cdcRetain must keep the chain head AND its predecessor — " +
-        "a replayed head batch is fenced without its predecessor")
-    graft.tables.VersionStore.retain(spark, snapDir, keepLast,
-      watermark = true)
-  }
-
   /** Streaming SCD2 sink (#81b): the CDC-feed → DIMENSION-HISTORY
     * composition — each micro-batch is the next log-ordered changelog
     * chunk, applied onto the persistent history via
@@ -359,7 +331,8 @@ object Streams {
     * batches must partition the changelog in ascending `order` ranges
     * (the log-ordered CDC feed; same contract as [[cdcMerge]]'s
     * last-writer-wins). Read back with [[cdcSnapshot]] /
-    * [[cdcSnapshotAsOf]]; retire with [[cdcRetain]]. */
+    * [[cdcSnapshotAsOf]]; retire with
+    * [[graft.tables.VersionStore.retain]]. */
   def scd2MergeStream(histDir: String, key: Seq[String],
                       order: Seq[String], value: String)
                      (batch: DataFrame, id: Long): Unit = {

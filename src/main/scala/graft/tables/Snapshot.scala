@@ -36,6 +36,11 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   *    `codebook`, `codes`), each with its schema and files
   *    ([[Part]]); read through [[VersionStore.read]]. A part the
   *    record does not name does not exist.
+  *  - `batchId`: the highest streaming batch a sink has merged into
+  *    the chain ([[graft.streaming.Streams.cowMergeBatch]]), written
+  *    by that MERGE's own commit and carried by every later commit
+  *    (RESTORE keeps the head's; a CLONE starts without one), so a
+  *    replay of a merged batch finds its id in the head's record.
   *  - `op`, `detail`, `ts`: what produced the version and when (epoch
   *    millis, monotonic along the chain — stamped by
   *    [[VersionStore.commit]], so a record a writer is still building
@@ -53,6 +58,7 @@ final case class Snapshot(
     partitions: Map[String, Map[String, String]] = Map.empty,
     stats: Option[Stats] = None,
     parts: Map[String, Part] = Map.empty,
+    batchId: Option[Long] = None,
     op: String = "",
     detail: String = "",
     ts: Long = 0L) {
@@ -90,6 +96,7 @@ object Snapshot {
       "parts" -> JObject(s.parts.toList.sortBy(_._1).map { case (n, p) =>
         n -> JObject("schema" -> parse(p.schema.json),
           "files" -> strs(p.files)) }),
+      "batchId" -> s.batchId.map(JLong(_)).getOrElse(JNothing),
       "op" -> JString(s.op),
       "detail" -> JString(s.detail),
       "ts" -> JLong(s.ts))))
@@ -112,6 +119,11 @@ object Snapshot {
     }
     def struct(v: JValue): StructType =
       DataType.fromJson(compact(render(v))).asInstanceOf[StructType]
+    def long(v: JValue): Option[Long] = v match {
+      case JInt(n) => Some(n.toLong)
+      case JLong(n) => Some(n)
+      case _ => None
+    }
     Snapshot(dir, version,
       files = strs(j \ "files"),
       schema = j \ "schema" match {
@@ -133,14 +145,12 @@ object Snapshot {
       },
       parts = fields(j \ "parts").map { case (n, p) =>
         n -> Part(struct(p \ "schema"), strs(p \ "files")) }.toMap,
+      batchId = long(j \ "batchId"),
       op = str("op"),
       detail = str("detail"),
-      ts = j \ "ts" match {
-        case JInt(n) => n.toLong
-        case JLong(n) => n
-        case t => throw new IllegalStateException(
-          s"commit record of version $version under $dir has no ts: $t")
-      })
+      ts = long(j \ "ts").getOrElse(throw new IllegalStateException(
+        s"commit record of version $version under $dir has no ts: " +
+          (j \ "ts"))))
   }
 }
 

@@ -3,7 +3,7 @@ package graft.tables
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
 /** Minimal versioned-table layer (r9-verdict ask #5): ONE
-  * implementation of the commit / retention / watermark discipline
+  * implementation of the commit / retention discipline
   * that the CDC snapshot chain ([[graft.streaming.Streams]]), the
   * similarity-graph edge artifact ([[graft.dedup.Dedup.edgeTable]]),
   * the ANN index artifact ([[graft.sim.Similarity.buildAnnIndex]]) and
@@ -33,11 +33,15 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
   *   dir/v=<n>/<part>/<f>.parquet  named parts ([[Stage.put]]), each
   *                                 listed in the record with its
   *                                 schema ([[Part]])
-  *   dir/_GRAFT_PRUNED             retention low-watermark (highest id
-  *                                 ever pruned), fencing out-of-window
-  *                                 replays
   * }}}
-  * Every committed version of every chain carries its record.
+  * Every committed version of every chain carries its record, and a
+  * chain's state is exactly its marked `v=<n>` listing plus those
+  * records: no other file lives at the chain root. Every chain starts
+  * at v=0 and commits contiguously, so retention has pruned versions
+  * exactly when the lowest committed id is above 0 (the replay fence
+  * of [[graft.streaming.Streams]]' batch chains), and a streaming
+  * sink's applied batch is a field of the record its MERGE committed
+  * ([[Snapshot.batchId]]).
   *
   * Commit protocol ([[commit]] over [[publishExclusive]]): the writer
   * populates a uniquely named staging dir (`_stage_v=<n>.<token>`),
@@ -73,8 +77,6 @@ object VersionStore {
   /** The per-version commit record ([[Snapshot]] as JSON). */
   private val CommitRecord = "_GRAFT_COMMIT"
 
-  private val PrunedFile = "_GRAFT_PRUNED"
-  private val AppliedFile = "_GRAFT_APPLIED"
   private val WriterToken = "_GRAFT_WRITER"
   private val StagePrefix = "_stage_v="
 
@@ -234,12 +236,9 @@ object VersionStore {
     // the stage BEFORE the rename), so: our token → our content;
     // a foreign token → a racer's complete content; NO token → the
     // dir was evicted/recreated mid-race and holds no complete output.
-    def tokenNow: Option[String] = scala.util.Try {
-      val in = fs.open(new org.apache.hadoop.fs.Path(dest, WriterToken))
-      try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    }.toOption
+    def tokenNow: Option[String] = scala.util.Try(
+      readString(fs, new org.apache.hadoop.fs.Path(dest, WriterToken)))
+      .toOption
     // the unified post-marker law (r10 advice + r12 review): a marker
     // only COUNTS over a complete output. Our token under the marker =
     // our publish succeeded (whoever's marker it is — a racer marking
@@ -429,46 +428,6 @@ object VersionStore {
   def read(spark: SparkSession, part: Part): DataFrame =
     spark.read.schema(part.schema).parquet(part.files: _*)
 
-  /** The long kept in the side file `name` beside the chain at `dir`,
-    * None before the first [[raiseNote]]. */
-  private def readNote(spark: SparkSession, dir: String,
-                       name: String): Option[Long] =
-    try Some(readString(fsOf(spark, dir), path(s"$dir/$name")).trim.toLong)
-    catch { case _: java.io.FileNotFoundException => None }
-
-  /** Raise the side file `name` to at least `v` (never lowers — stale
-    * ids can't rewind it). */
-  private def raiseNote(spark: SparkSession, dir: String, name: String,
-                        v: Long): Unit = {
-    val raised = math.max(v, readNote(spark, dir, name)
-      .getOrElse(Long.MinValue))
-    val out = fsOf(spark, dir).create(path(s"$dir/$name"), true)
-    try out.write(raised.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Highest EXTERNAL transaction id applied to this chain (None
-    * before any) — the streaming-sink dedupe note: a foreachBatch
-    * sink records its batch id here AFTER publishing so a checkpoint-
-    * recovery replay of an already-applied batch can skip instead of
-    * re-merging (see [[graft.streaming.Streams]]'s COW merge sink). */
-  def appliedId(spark: SparkSession, dir: String): Option[Long] =
-    readNote(spark, dir, AppliedFile)
-
-  /** Raise the applied-transaction note to at least `id` (never
-    * lowers — replays of stale ids can't rewind it). */
-  def recordAppliedId(spark: SparkSession, dir: String, id: Long): Unit =
-    raiseNote(spark, dir, AppliedFile, id)
-
-  /** Retention low-watermark: highest id ever pruned (None before
-    * any retention). Persisted beside the chain so replay fencing
-    * survives restarts. */
-  def prunedWatermark(spark: SparkSession, dir: String): Option[Long] =
-    readNote(spark, dir, PrunedFile)
-
-  /** Raise the watermark to at least `v` (never lowers). */
-  def raiseWatermark(spark: SparkSession, dir: String, v: Long): Unit =
-    raiseNote(spark, dir, PrunedFile, v)
-
   /** Drop all but the newest `keepLast` committed versions; also reap
     * TORN leftovers — unmarked `v=<n>` dirs and stage dirs with id at
     * or below the committed head are crash debris no reader can ever
@@ -478,10 +437,9 @@ object VersionStore {
     * (or a part's subdir of it) that a kept record still references,
     * as a file or in a part, survives (only the marker, record and
     * unreferenced files go; a dir goes once it holds no referenced
-    * file). When `watermark` is set the highest pruned id is
-    * persisted for replay fencing. Returns the pruned ids. */
-  def retain(spark: SparkSession, dir: String, keepLast: Int,
-             watermark: Boolean = false): Seq[Long] = {
+    * file). Returns the pruned ids. */
+  def retain(spark: SparkSession, dir: String, keepLast: Int)
+      : Seq[Long] = {
     require(keepLast >= 1, "retain must keep at least the head")
     val fs = fsOf(spark, dir)
     val root = path(dir)
@@ -518,7 +476,6 @@ object VersionStore {
           .takeWhile(_ != '.').toLongOption.exists(_ <= headV))
       if (torn) pruneDir(st.getPath)
     }
-    if (watermark && drop.nonEmpty) raiseWatermark(spark, dir, drop.max)
     drop
   }
 }

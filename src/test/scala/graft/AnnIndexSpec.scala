@@ -76,6 +76,26 @@ class AnnIndexSpec extends AnyFunSuite {
     rm(base.toFile)
   }
 
+  test("the PQ shape is read off the index rows: no aggregate job to serve or append") {
+    val base = java.nio.file.Files.createTempDirectory("graft_ann_shape")
+    val path = base.resolve("idx").toString
+    Similarity.buildAnnIndex(emb.where(col("vec_id") < 150), path,
+      centroids = 8, pq = Some((4, 8)))
+    // the ADC plan finds ksub from its flat table, so serving the index
+    // builds a lazy frame and runs nothing (an aggregate for the
+    // largest codebook entry ran 2 jobs here)
+    val (_, serveJobs) = SparkJobs.jobsOf(spark)(Similarity.knnIvfPqIndexed(
+      spark, path, col("vec_id") < 5, 3))
+    assert(serveJobs == 0, s"knnIvfPqIndexed ran $serveJobs Spark jobs")
+    // the append encodes against the codebook rows pqEncode collects
+    // anyway, so m needs no aggregate of its own: 9 jobs (11 with the
+    // aggregate for the largest `mi`)
+    val (_, appendJobs) = SparkJobs.jobsOf(spark)(Similarity.annIndexAppend(
+      path, emb.where(col("vec_id") >= 150)))
+    assert(appendJobs <= 9, s"annIndexAppend ran $appendJobs Spark jobs")
+    rm(base.toFile)
+  }
+
   test("rebuild is deterministic; versions are manifest-committed") {
     val base = java.nio.file.Files.createTempDirectory("graft_ann_det")
     val path = base.resolve("idx").toString

@@ -100,7 +100,7 @@ class SimilaritySpec extends AnyFunSuite {
     val (assigned, cents) = Similarity.ivfAssign(e, 8, trainIters = 1)
     val cb = Similarity.trainPqCodebook(assigned, cents, m = 8, ksub = 16)
     assert(cb.count() == 8 * 16)
-    val codes = Similarity.pqEncode(assigned, cents, cb, m = 8).collect()
+    val codes = Similarity.pqEncode(assigned, cents, cb).collect()
     assert(codes.length == e.count())
     codes.foreach { r =>
       val code = r.getSeq[Int](2)

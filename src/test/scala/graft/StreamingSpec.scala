@@ -549,36 +549,28 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(asOf1 == after1, s"as-of(1) != recorded state: $asOf1")
     // retention: drop all but the last 2 versions; replay idempotence
-    // survives (batch id 2 passes the fence — its predecessor v1 was
-    // kept — and skips as committed)
-    val dropped = Streams.cdcRetain(spark, snap, keepLast = 2)
+    // survives (batch id 2 is committed and skips)
+    val dropped = graft.tables.VersionStore.retain(spark, snap, keepLast = 2)
     assert(dropped == Seq(0L), s"expected to drop v=0 only: $dropped")
     merge(batch2, 2)
     assert(state() == after2, "replay after retention changed the snapshot")
     assertThrows[IllegalArgumentException] {
       Streams.cdcSnapshotAsOf(spark, snap, 0L)
     }
-    // r9 (r8 advice, high): keepLast=1 would prune the head's replay
-    // base — the API refuses it outright
-    assertThrows[IllegalArgumentException] {
-      Streams.cdcRetain(spark, snap, keepLast = 1)
-    }
-    // r9 (r8-verdict nit #1): out-of-window replays are FENCED by the
-    // persisted watermark — batch 0 sits at/below it, and batch 1 has
-    // no committed predecessor left; both must refuse rather than
-    // fabricate a historical snapshot for cdcSnapshotAsOf
+    // r9 (r8-verdict nit #1): an out-of-window replay is FENCED — the
+    // lowest committed id is 1, so batch 0 sits below the fence and
+    // must refuse rather than fabricate a historical snapshot for
+    // cdcSnapshotAsOf; batch 1 is still committed and skips
     assertThrows[IllegalArgumentException] {
       merge(Seq((1L, 10L, 1L, 1.0, "I")), 0)
     }
-    assertThrows[IllegalArgumentException] {
-      merge(Seq((1L, 40L, 12L, 7.0, "U")), 1)
-    }
+    merge(Seq((1L, 40L, 12L, 7.0, "U")), 1)
     // a batch id past the head + 1 would leave a gap: refused
     val gap = intercept[IllegalArgumentException] {
       merge(Seq((1L, 40L, 12L, 7.0, "U")), 4)
     }
     assert(gap.getMessage.contains("gap"), gap.getMessage)
-    assert(state() == after2, "refused merges must not touch the chain")
+    assert(state() == after2, "refused and skipped merges must not touch the chain")
     // r9 (r8-verdict ask #4): MANIFEST COMMIT — an unmarked (torn)
     // version dir is invisible to every reader: never the head, never
     // a time-travel target
@@ -587,6 +579,45 @@ class StreamingSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException] {
       Streams.cdcSnapshotAsOf(spark, snap, 99L)
     }
+    // keeping the head alone still serves replays: the head batch is
+    // committed and skips, and the next batch merges onto the head
+    assert(graft.tables.VersionStore.retain(spark, snap, keepLast = 1) ==
+      Seq(1L))
+    merge(batch2, 2)
+    assert(state() == after2, "head replay after keepLast = 1 changed the snapshot")
+    merge(Seq((1L, 40L, 12L, 7.0, "U")), 3)
+    assert(state() == Seq((1L, 7.0), (2L, 5.0), (3L, 9.0), (4L, 4.5)),
+      s"the batch after the head did not merge onto it: ${state()}")
+    assert(graft.tables.VersionStore.committed(spark, snap).sorted ==
+      Seq(2L, 3L))
+  }
+
+  test("SQL VACUUM on a CDC chain fences replays below the kept versions") {
+    import spark.implicits._
+    val stage = java.nio.file.Files.createTempDirectory("graft_cdcv")
+    val snap = stage.resolve("snap").toString
+    def merge(rows: Seq[(Long, Long, Long, Double)], id: Long): Unit =
+      Streams.cdcMerge(snap, Seq("user_id"), Seq("tsec", "event_id"))(
+        rows.toDF("user_id", "tsec", "event_id", "value"), id)
+    (0L to 3L).foreach(b => merge(Seq((b, 10L * b, b, b.toDouble)), b))
+    val ms = graft.sql.GraftSql.mergeSession(spark)
+    assert(ms.sql(s"VACUUM graft.`$snap` RETAIN 1 VERSIONS").head()
+      .getLong(0) == 3L)
+    // batch 0 replayed after the VACUUM: its predecessor chain is gone,
+    // so merging it would fabricate a v=0 on an empty base
+    val e = intercept[IllegalArgumentException](
+      merge(Seq((0L, 0L, 0L, 0.0)), 0))
+    assert(e.getMessage.contains("watermark"), e.getMessage)
+    assert(graft.tables.VersionStore.committed(spark, snap) == Seq(3L))
+    assertThrows[IllegalArgumentException] {
+      Streams.cdcSnapshotAsOf(spark, snap, 0L)
+    }
+    def rm(f: java.io.File): Unit = {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(rm)
+      f.delete(): Unit
+    }
+    rm(stage.toFile)
   }
 
   test("foreachBatch idempotent sink: no loss, replayed batch = no dups (#79)") {
@@ -1162,21 +1193,103 @@ class StreamingSpec extends AnyFunSuite {
     val diffs = mfs.indices.tail.map(i => (mfs(i) -- mfs(i - 1)).size)
     assert(diffs.forall(_ == 1),
       s"each one-file batch must change exactly one manifest entry: $diffs")
-    // replay-skip: re-applying an already-applied batch id is a no-op
-    assert(VersionStore.appliedId(spark, tbl).contains(2L))
+    // replay-skip: the head's record holds the newest merged batch id
+    // (written by that MERGE's own commit), so re-applying any batch
+    // up to it is a no-op — the last one included, with no version
+    // and no side file
+    val head = VersionStore.snapshot(spark, tbl)
+    assert(head.batchId.contains(2L))
     Streams.cowMergeBatch(src, tbl, Seq("id"), Seq("ver"))(updA, 1L)
-    assert(VersionStore.head(spark, tbl).contains(2L),
-      "an applied batch id must be skipped on replay")
-    // crash window (publish committed, note lost): the re-merge is
-    // content-idempotent — one extra version, same table
-    VersionStore.fsOf(spark, tbl).delete(
-      new org.apache.hadoop.fs.Path(s"$tbl/_GRAFT_APPLIED"), false): Unit
     Streams.cowMergeBatch(src, tbl, Seq("id"), Seq("ver"))(insC, 2L)
-    assert(VersionStore.head(spark, tbl).contains(3L))
+    assert(VersionStore.snapshot(spark, tbl) == head,
+      "a merged batch id must be skipped on replay, head unchanged")
     val replayed = Scale.readTable(spark, tbl)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toMap
     assert(replayed == got,
-      "re-merging an applied batch must not change the table")
+      "replaying a merged batch must not change the table")
+    def rm(f: java.io.File): Unit = {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(rm)
+      f.delete(): Unit
+    }
+    rm(stage.toFile)
+  }
+
+  test("COW sink batch id: RESTORE keeps it, a CLONE starts without one") {
+    import spark.implicits._
+    import graft.ops.Scale
+    import graft.tables.VersionStore
+    val stage = java.nio.file.Files.createTempDirectory("graft_cowid")
+    val src = stage.resolve("base").toString
+    val tbl = stage.resolve("tbl").toString
+    val cln = stage.resolve("cln").toString
+    (1 to 40).map(i => (i.toLong, i.toLong % 4, i * 1.0, 0L))
+      .toDF("id", "k", "v", "ver").repartition(4, col("k")).write.parquet(src)
+    def batch(id: Long, v: Double) =
+      Seq((id, id % 4, v, 1L)).toDF("id", "k", "v", "ver")
+    def sink(dir: String) = Streams.cowMergeBatch(src, dir, Seq("id"),
+      Seq("ver")) _
+    (0L to 2L).foreach(b => sink(tbl)(batch(b + 1, -1.0), b))
+    assert(VersionStore.snapshot(spark, tbl).batchId.contains(2L))
+    // RESTORE rolls the data back to v=0, not the sink's progress: the
+    // restored head still holds batch 2, and a replay of batch 1 skips
+    Scale.restoreTable(spark, tbl, 0L)
+    val restored = VersionStore.snapshot(spark, tbl)
+    assert(restored.version == 3L && restored.op == "RESTORE" &&
+      restored.batchId.contains(2L), s"restored record: $restored")
+    sink(tbl)(batch(2, -5.0), 1L)
+    assert(VersionStore.snapshot(spark, tbl) == restored)
+    // a CLONE of the restored head starts without a batch id, so a sink
+    // feeding it from batch 0 merges
+    Scale.cloneTable(spark, tbl, cln)
+    assert(VersionStore.snapshot(spark, cln).batchId.isEmpty)
+    sink(cln)(batch(500, 7.0), 0L)
+    val fed = VersionStore.snapshot(spark, cln)
+    assert(fed.version == 1L && fed.batchId.contains(0L), s"clone record: $fed")
+    val got = Scale.readTable(spark, cln)
+      .collect().map(r => (r.getLong(0), r.getDouble(2))).toMap
+    assert(got.size == 41 && got(500L) == 7.0 && got(1L) == -1.0 &&
+      got(2L) == 2.0, s"clone after batch 0: $got")
+    def rm(f: java.io.File): Unit = {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(rm)
+      f.delete(): Unit
+    }
+    rm(stage.toFile)
+  }
+
+  test("chain roots and the spool hold no _GRAFT_ file: COW sink, CDC retention, spool") {
+    import spark.implicits._
+    import graft.ops.Scale
+    import graft.tables.VersionStore
+    val stage = java.nio.file.Files.createTempDirectory("graft_layout")
+    val src = stage.resolve("base").toString
+    val tbl = stage.resolve("tbl").toString
+    val snap = stage.resolve("snap").toString
+    val spool = stage.resolve("spool").toString
+    (1 to 40).map(i => (i.toLong, i.toLong % 4, i * 1.0, 0L))
+      .toDF("id", "k", "v", "ver").repartition(4, col("k")).write.parquet(src)
+    val sink = Streams.cowMergeBatch(src, tbl, Seq("id"), Seq("ver")) _
+    val b1 = Seq((2L, 2L, -2.0, 1L), (100L, 0L, 1.0, 1L))
+      .toDF("id", "k", "v", "ver")
+    sink(Seq((1L, 1L, -1.0, 1L)).toDF("id", "k", "v", "ver"), 0L)
+    sink(b1, 1L)
+    sink(b1, 1L) // a replay commits nothing
+    assert(VersionStore.committed(spark, tbl).sorted == Seq(0L, 1L))
+    def cdc(b: Long): Unit =
+      Streams.cdcMerge(snap, Seq("user_id"), Seq("tsec"))(
+        Seq((b, b, b.toDouble)).toDF("user_id", "tsec", "value"), b)
+    (0L to 2L).foreach(cdc)
+    assert(VersionStore.retain(spark, snap, keepLast = 1) == Seq(0L, 1L))
+    assert(Scale.spoolChanges(spark, tbl, spool) == Seq(1L))
+    def sideFiles(d: String) = new java.io.File(d).listFiles().toSeq
+      .map(_.getName).filter(_.contains("_GRAFT_"))
+    Seq(tbl, snap, spool).foreach(d =>
+      assert(sideFiles(d).isEmpty, s"side files under $d: ${sideFiles(d)}"))
+    // the listing alone still fences and marks: batch 0 is refused, and
+    // the spool's own file is its high-water mark
+    assertThrows[IllegalArgumentException](cdc(0L))
+    assert(Scale.spoolChanges(spark, tbl, spool).isEmpty)
     def rm(f: java.io.File): Unit = {
       val kids = f.listFiles()
       if (kids != null) kids.foreach(rm)

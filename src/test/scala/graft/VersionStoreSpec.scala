@@ -8,11 +8,13 @@ import graft.tables.{Part, Snapshot, Stats, VersionStore}
 
 /** The shared versioned-table layer (r9-verdict ask #5): ONE
   * implementation of marker-gated listing, the exclusive staged
-  * commit (every version carries its commit record), reference-counted
-  * retention and the replay watermark — the CDC chain, SCD2 history,
-  * edge artifact, ANN index and COW DML all commit through
+  * commit (every version carries its commit record) and
+  * reference-counted retention — the CDC chain, SCD2 history, edge
+  * artifact, ANN index and COW DML all commit through
   * `VersionStore.commit`, so the torn-dir / crash-debris / racing-
-  * writer edge cases are proven here once. */
+  * writer edge cases are proven here once. A chain is its `v=<n>`
+  * listing plus those records: the replay watermark is the lowest
+  * committed id, and no side file sits at the chain root. */
 class VersionStoreSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -190,8 +192,7 @@ class VersionStoreSpec extends AnyFunSuite {
     commitRows(dir, Some(v0), Seq(3), "c.parquet",
       keep = Seq(s"$dir/v=0/a.parquet"))
     assert(rows(dir) == Set(1, 3))
-    val dropped = VersionStore.retain(spark, dir, keepLast = 1,
-      watermark = true)
+    val dropped = VersionStore.retain(spark, dir, keepLast = 1)
     assert(dropped == Seq(0L))
     assert(fs.exists(hpath(s"$dir/v=0/a.parquet")),
       "file referenced by the kept record must survive")
@@ -205,10 +206,11 @@ class VersionStoreSpec extends AnyFunSuite {
     assert(VersionStore.committed(spark, dir) == Seq(1L))
     assert(rows(dir) == Set(1, 3),
       "the head still serves through the pointer")
-    // watermark raised and never lowers
-    assert(VersionStore.prunedWatermark(spark, dir).contains(0L))
-    VersionStore.raiseWatermark(spark, dir, -5L)
-    assert(VersionStore.prunedWatermark(spark, dir).contains(0L))
+    // the watermark is the listing's: the lowest committed id rose
+    // past the pruned one, and the chain root holds no side file
+    assert(VersionStore.committed(spark, dir).min == 1L)
+    assert(fs.listStatus(hpath(dir)).map(_.getPath.getName).toSet ==
+      Set("v=0", "v=1"))
     rm(base.toFile)
   }
 
@@ -375,10 +377,11 @@ class VersionStoreSpec extends AnyFunSuite {
         "assigned" -> Part(vecs, Seq(s"${stage.vdir}/assigned/p0.parquet",
           s"${stage.vdir}/assigned/p1.parquet")),
         "none" -> Part(empty, Nil))
-      Snapshot(dir, stage.version, Nil, parts = parts)
+      Snapshot(dir, stage.version, Nil, parts = parts, batchId = Some(7L))
     }
     val back = VersionStore.snapshot(spark, dir)
-    assert(back == committed && back.parts == parts)
+    assert(back == committed && back.parts == parts &&
+      back.batchId.contains(7L))
     assert(back.part("assigned").schema == vecs && back.files.isEmpty &&
       back.schema.isEmpty)
     // the empty part reads as no rows under its schema
@@ -387,7 +390,8 @@ class VersionStoreSpec extends AnyFunSuite {
     // a record with no parts: the absence is a fact, and asking for a
     // part names it
     val plain = commitRows(dir, Some(back), Seq(1))
-    assert(VersionStore.snapshot(spark, dir) == plain && plain.parts.isEmpty)
+    assert(VersionStore.snapshot(spark, dir) == plain && plain.parts.isEmpty &&
+      plain.batchId.isEmpty)
     val err = intercept[RuntimeException](plain.part("edges"))
     assert(err.getMessage.contains("'edges'"), err.getMessage)
     rm(base.toFile)
@@ -500,7 +504,9 @@ class VersionStoreSpec extends AnyFunSuite {
     // stage dir (`stage.path`), spells `$vdir/...`, or uses a committed
     // version's dir at all, except the two CLONE no-copy listings in
     // Queries; and the artifact writers in graft.sim and graft.dedup
-    // probe no path with `fs.exists`.
+    // probe no path with `fs.exists`. Inside graft.tables, the `_GRAFT_`
+    // names the code declares are exactly the marker, the commit record
+    // and the writer token: a chain keeps no other file of its own.
     import scala.jdk.CollectionConverters._
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root: $root")
@@ -521,12 +527,19 @@ class VersionStoreSpec extends AnyFunSuite {
       d.listFiles().toSeq.flatMap(f =>
         if (f.isDirectory) files(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    def codeLines(f: java.io.File) = java.nio.file.Files.readAllLines(
+      f.toPath, java.nio.charset.StandardCharsets.UTF_8).asScala.toVector
+    val declared = files(new java.io.File(root, "graft/tables"))
+      .flatMap(codeLines).filterNot(isDoc)
+      .flatMap(l => raw""""(_GRAFT_[A-Za-z0-9_]*)"""".r
+        .findAllMatchIn(l.split("//", 2).head).map(_.group(1))).toSet
+    assert(declared == Set("_GRAFT_COMMITTED", "_GRAFT_COMMIT",
+      "_GRAFT_WRITER"), s"chain file names in graft.tables: $declared")
     val offenders = files(root).flatMap { f =>
       val rel = root.toPath.relativize(f.toPath).toString
       if (rel.startsWith("graft/tables/")) Nil
       else {
-        val lines = java.nio.file.Files.readAllLines(f.toPath,
-          java.nio.charset.StandardCharsets.UTF_8).asScala.toVector
+        val lines = codeLines(f)
         def code(i: Int) =
           if (i >= lines.size || isDoc(lines(i))) ""
           else lines(i).split("//", 2).head
