@@ -2525,8 +2525,10 @@ object Queries {
     * MERGE rewrites for full row-level-operation connectors): the
     * canonical upsert statement — `MERGE INTO graft.`…` t USING s ON
     * t.k = s.k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
-    * INSERT *` — resolves through the injected rule into the
-    * file-granular COW [[Scale.mergeInto]]. The extension session
+    * INSERT *` — resolves through the injected rule into the one
+    * file-granular COW MERGE (`Scale.cowMerge`, the clause algebra of
+    * [[Relational.mergeInto]]; `SET *` writes every source value, NULLs
+    * included). The extension session
     * shares the SparkContext ([[graft.sql.GraftSql.mergeSession]]);
     * the post-MERGE rollup (read back on the ORIGINAL session — one
     * chain, any session) hash-gates against the q_merge_cow-shaped
@@ -2562,8 +2564,8 @@ object Queries {
   }
 
   /** #42v' MULTI-CLAUSE SQL MERGE ([[graft.sql.GraftMergeRule]]'s
-    * translateMulti + [[Scale.mergeIntoClauses]] — r11 verdict ask
-    * #4): conditional `WHEN MATCHED AND … THEN DELETE`, `WHEN MATCHED
+    * one clause-list translation onto `Scale.cowMerge` — r11 verdict
+    * ask #4): conditional `WHEN MATCHED AND … THEN DELETE`, `WHEN MATCHED
     * THEN UPDATE SET expr`, and conditional `WHEN NOT MATCHED AND …
     * THEN INSERT (cols) VALUES (exprs)` in ONE statement, lowered
     * onto the file-granular COW path (hit files rewrite 1:1 through

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -397,12 +397,13 @@ object Relational {
     * (other than the key) the change value wins when non-null — the
     * MERGE convention that a null change field means "no change", which
     * also gives insert rows their changed columns and keep rows their
-    * base columns with one `coalesce` per column.
+    * base columns.
     *
     * `action` ∈ insert (key only in `changes`), update (both), keep
     * (key only in `base`). Base-only columns ride through; change-only
     * columns are dropped (the output contract is the base table's
-    * shape — project the change beforehand to add columns).
+    * shape — project the change beforehand to add columns). Keys match
+    * under SQL `=`: a NULL key matches nothing.
     *
     * Contract: `changes` must be unique per `key` (dedupe upstream —
     * e.g. a row_number()==1 window over arrival order; doing it here
@@ -414,54 +415,51 @@ object Relational {
     * change row whose op equals `deleteOp` (case-insensitive;
     * default `"D"`, so Debezium's lowercase `'d'` matches while its
     * `'c'`/`'u'`/`'r'` upsert codes do not) REMOVES its key from the
-    * output
-    * (the `MERGE INTO … WHEN MATCHED AND op = 'D' THEN DELETE` arm of
-    * the production MERGE this operator mirrors; a delete for an
-    * absent key is a no-op, and the op column itself never lands in
-    * the output). Any other op value upserts as above. Default `None`
-    * keeps the r6 insert/update/keep-only behavior.
+    * output; a delete for an absent key is a no-op, and the op column
+    * itself never lands in the output. Any other op value, NULL
+    * included, upserts as above. Default `None` keeps the r6
+    * insert/update/keep-only behavior.
     *
-    * Scale: one full-outer hash equi-join on `key` — a single shuffle
-    * of both sides, partitioned for downstream writes keyed the same
-    * way (deletes ride the same join as a filter, not a second pass).
-    * A small changelog broadcast-joins automatically under AQE; this
-    * is the canonical incremental-snapshot maintenance shape (the
-    * nightly "apply the day's changes to the 100 TB snapshot" job,
-    * where the alternative CDC formats — MERGE INTO in Delta/Iceberg —
-    * lower to exactly this plan). */
+    * This is [[mergeInto]] with [[upsertClauses]]:
+    * {{{
+    *   WHEN MATCHED AND <op is deleteOp> THEN DELETE
+    *   WHEN MATCHED THEN UPDATE SET c = coalesce(s.c, t.c)
+    *   WHEN NOT MATCHED AND NOT coalesce(<op is deleteOp>, false)
+    *     THEN INSERT
+    * }}}
+    * so its plan is mergeInto's one full-outer hash equi-join on `key`
+    * (the nightly "apply the day's changes to the 100 TB snapshot" job,
+    * which MERGE INTO in Delta/Iceberg lowers to the same plan). */
   def upsert(base: DataFrame, changes: DataFrame, key: Seq[String],
              opCol: Option[String] = None,
              deleteOp: String = "D"): DataFrame = {
-    require(key.nonEmpty, "upsert needs at least one key column")
-    require(key.forall(base.columns.contains) &&
-      key.forall(changes.columns.contains),
-      s"both sides must contain key columns $key")
     require(opCol.forall(changes.columns.contains),
       s"changes must contain the op column $opCol")
     val common = base.columns.filterNot(key.contains)
       .filter(changes.columns.contains)
-      .filterNot(opCol.contains)
+      .filterNot(opCol.contains).toSeq
     // case-insensitive (r8 advice): real Debezium emits lowercase
     // 'd' (with 'c'/'u'/'r' for upserts); any feed with a different
     // marker passes it via deleteOp
-    val del = opCol.map(c =>
-      (upper(col(c)) === deleteOp.toUpperCase).as("__del")).toSeq
-    val c = changes.select(key.map(col) ++
-      common.map(n => col(n).as(s"__c_$n")) ++ del :+ lit(1).as("__c"): _*)
-    val merged = base.withColumn("__b", lit(1)).join(c, key, "full_outer")
-    val dropDeleted =
-      if (opCol.isDefined) merged.where(!coalesce(col("__del"), lit(false)))
-      else merged
-    dropDeleted
-      .select(key.map(col) ++
-        base.columns.filterNot(key.contains).toSeq.map { n =>
-          if (common.contains(n)) coalesce(col(s"__c_$n"), col(n)).as(n)
-          else col(n)
-        } :+
-        when(col("__b").isNull, lit("insert"))
-          .when(col("__c").isNull, lit("keep"))
-          .otherwise(lit("update")).as("action"): _*)
+    val (del, upd, ins) = upsertClauses(common,
+      opCol.map(c => upper(col(s"s.$c")) === deleteOp.toUpperCase))
+    mergeInto(base, changes, key, del, upd, ins)
   }
+
+  /** [[upsert]]'s clause list over the non-key `columns` it writes, for
+    * [[mergeInto]] (and the copy-on-write MERGE,
+    * [[graft.ops.Scale.mergeInto]]): DELETE where `delete` holds,
+    * UPDATE SET c = coalesce(s.c, t.c), INSERT c = s.c unless `delete`
+    * holds. */
+  private[graft] def upsertClauses(columns: Seq[String],
+                                   delete: Option[Column] = None)
+      : (Option[Column], Option[(Column, Map[String, Column])],
+         Option[(Column, Map[String, Column])]) =
+    (delete,
+      Some((lit(true), columns.map(c =>
+        c -> coalesce(col(s"s.$c"), col(s"t.$c"))).toMap)),
+      Some((!coalesce(delete.getOrElse(lit(false)), lit(false)),
+        columns.map(c => c -> col(s"s.$c")).toMap)))
 
   /** Multi-clause MERGE INTO — the general form [[upsert]] is the
     * latest-state special case of: standard SQL/lakehouse MERGE
@@ -475,7 +473,8 @@ object Relational {
     *     (`whenMatchedUpdate._2`: target column → expression)
     *   - WHEN MATCHED (neither fires) → target row unchanged
     *   - WHEN NOT MATCHED [by target] AND `whenNotMatchedInsert._1`
-    *     THEN INSERT (`._2` values; unlisted target columns → NULL)
+    *     THEN INSERT (`._2` values; unlisted target columns → NULL,
+    *     an unlisted key → the source's key)
     *   - target rows with no source match ride through unchanged
     *
     * Clause conditions and SET/VALUES expressions address the two
@@ -486,21 +485,21 @@ object Relational {
     *
     * Contract: `source` unique per `key` (SQL MERGE raises on
     * duplicate matches; dedupe upstream), `key` columns present under
-    * the same names on both sides.
+    * the same names on both sides. Keys match under SQL `=`: a NULL
+    * key matches nothing, so a NULL-key target row rides through and
+    * a NULL-key source row is a NOT MATCHED row.
     *
-    * Scale: ONE full-outer hash equi-join on `key` — identical plan
-    * shape to [[upsert]]: a single shuffle of both sides (broadcast
-    * under AQE when the changelog is small), every clause a column
-    * expression inside the join's projection, no second pass. This is
-    * the nightly lakehouse merge over a bucketed 100 TB snapshot. */
+    * Scale: ONE full-outer hash equi-join on `key` — a single shuffle
+    * of both sides, every clause a column expression inside the join's
+    * projection, no second pass. Every MERGE in graft lowers to it:
+    * [[upsert]], the copy-on-write chain's
+    * ([[graft.ops.Scale.mergeInto]]) and SQL `MERGE INTO`. */
   def mergeInto(target: DataFrame, source: DataFrame, key: Seq[String],
-                whenMatchedDelete: Option[org.apache.spark.sql.Column] = None,
+                whenMatchedDelete: Option[Column] = None,
                 whenMatchedUpdate:
-                  Option[(org.apache.spark.sql.Column,
-                          Map[String, org.apache.spark.sql.Column])] = None,
+                  Option[(Column, Map[String, Column])] = None,
                 whenNotMatchedInsert:
-                  Option[(org.apache.spark.sql.Column,
-                          Map[String, org.apache.spark.sql.Column])] = None)
+                  Option[(Column, Map[String, Column])] = None)
       : DataFrame = {
     require(key.nonEmpty, "mergeInto needs at least one key column")
     require(key.forall(target.columns.contains) &&
@@ -512,38 +511,43 @@ object Relational {
       require(target.columns.contains(c), s"INSERT of unknown column $c")
     val t = target.withColumn("__t", lit(1)).alias("t")
     val s = source.withColumn("__s", lit(1)).alias("s")
-    val joinCond = key.map(k => col(s"t.$k") <=> col(s"s.$k"))
+    val joinCond = key.map(k => col(s"t.$k") === col(s"s.$k"))
       .reduce(_ && _)
     val j = t.join(s, joinCond, "full_outer")
     val matched = col("t.__t").isNotNull && col("s.__s").isNotNull
-    val tOnly = col("s.__s").isNull
     val sOnly = col("t.__t").isNull
     val doDelete = whenMatchedDelete
       .map(c => matched && coalesce(c, lit(false)))
       .getOrElse(lit(false))
-    val doUpdate = whenMatchedUpdate
-      .map { case (c, _) => matched && !doDelete && coalesce(c, lit(false)) }
-      .getOrElse(lit(false))
     val doInsert = whenNotMatchedInsert
       .map { case (c, _) => sOnly && coalesce(c, lit(false)) }
+      .getOrElse(lit(false))
+    // past the filter a source-only row is an insert and a matched row
+    // no delete, so the projection tests neither condition again: each
+    // column's expression stays small to optimize and compile
+    val updated = whenMatchedUpdate
+      .map { case (c, _) => matched && coalesce(c, lit(false)) }
       .getOrElse(lit(false))
     val updSet = whenMatchedUpdate.map(_._2).getOrElse(Map.empty)
     val insSet = whenNotMatchedInsert.map(_._2).getOrElse(Map.empty)
     j.where(!doDelete && (!sOnly || doInsert))
-      .select(key.map(k => coalesce(col(s"t.$k"), col(s"s.$k")).as(k)) ++
+      .select(key.map(k => insSet.get(k)
+          .fold(coalesce(col(s"t.$k"), col(s"s.$k")))(e =>
+            when(sOnly, e.cast(target.schema(k).dataType))
+              .otherwise(col(s"t.$k"))).as(k)) ++
         target.columns.filterNot(key.contains).toSeq.map { n =>
           // explicit conditional chain, NOT coalesce: an UPDATE that
-          // SETs a column to NULL must stick, and inserted rows take
-          // their VALUES entry (or a typed NULL when unlisted)
+          // SETs a column to NULL must stick. An inserted row's target
+          // columns are NULL, so a column its VALUES leave out needs no
+          // arm of its own
           val dt = target.schema(n).dataType
-          val insVal = insSet.getOrElse(n, lit(null)).cast(dt)
-          val start = when(doInsert, insVal)
-          updSet.get(n).map(e => start.when(doUpdate, e.cast(dt)))
-            .getOrElse(start)
-            .otherwise(col(s"t.$n")).as(n)
+          val kept = updSet.get(n).fold(col(s"t.$n"))(e =>
+            when(updated, e.cast(dt)).otherwise(col(s"t.$n")))
+          insSet.get(n).fold(kept)(e =>
+            when(sOnly, e.cast(dt)).otherwise(kept)).as(n)
         } :+
         when(sOnly, lit("insert"))
-          .when(doUpdate, lit("update"))
+          .when(updated, lit("update"))
           .otherwise(lit("keep")).as("action"): _*)
   }
 

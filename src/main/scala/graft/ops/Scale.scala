@@ -590,95 +590,56 @@ object Scale {
   }
 
   /** A MERGE `body` over its source pinned once (changelog-sized by
-    * contract), which hit detection, the insert anti-join, the per-file
-    * semi-joins and the staged writes all read. A pinned source (a
-    * streaming batch) is used as-is. */
+    * contract), which hit detection and the clause join both read. A
+    * pinned source (a streaming batch) is used as-is. */
   private def withPinnedSource[A](source: DataFrame)(
       body: DataFrame => A): A =
     if (graft.core.Pin.isPinned(source)) body(source)
     else scala.util.Using.resource(graft.core.Pin(source))(p => body(p.df))
 
-  /** MERGE INTO on the COW chain — the upsert (SCD-1) MERGE as
-    * file-granular DML: `source` rows whose `key` matches an
-    * existing row UPDATE it in place (non-null source columns win,
-    * [[Relational.upsert]] semantics) inside a 1:1 rewrite of ONLY
-    * the files holding matched keys; source rows matching nothing
-    * APPEND as a new data file; every untouched file rides into the
-    * new version's record by pointer. This is `MERGE INTO t USING
-    * s ON t.k = s.k WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN
-    * INSERT` on the pointer-manifest table — at 100 TB a
-    * changelog-sized MERGE touches the files its keys live in plus
-    * one append, never the table. Contract (inherited from upsert):
-    * `source` unique per `key`. `batch` is a streaming sink's batch id
+  /** MERGE INTO on the COW chain, the upsert (SCD-1) spelling:
+    * [[cowMerge]] with [[Relational.upsert]]'s clauses over the
+    * source's non-key columns — `source` rows whose `key` matches an
+    * existing row UPDATE it (non-null source values win), source rows
+    * matching nothing INSERT (unlisted table columns NULL). This is
+    * `MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE WHEN
+    * NOT MATCHED THEN INSERT` on the pointer-manifest table. Contract:
+    * `source` unique per `key`, its columns table columns. `batch` is
+    * a streaming sink's batch id
     * ([[graft.streaming.Streams.cowMergeBatch]]): the commit records it,
     * and the MERGE commits nothing when the head already records an id
     * at or above it. */
   def mergeInto(spark: SparkSession, srcDir: String, tableDir: String,
                 source: DataFrame, key: Seq[String],
-                batch: Option[Long] = None): RewriteStats =
-    cowMerge(spark, srcDir, tableDir, source, key, "", batch)(
-      (base, changes) => Relational.upsert(base, changes, key)
-        .drop("action"),
-      (df, src) => src.join(df.select(key.map(col): _*), key, "left_anti")
-        .select(df.columns.map(col).toIndexedSeq: _*))
+                batch: Option[Long] = None): RewriteStats = {
+    val (del, upd, ins) =
+      Relational.upsertClauses(source.columns.filterNot(key.contains).toSeq)
+    cowMerge(spark, srcDir, tableDir, source, key, del, upd, ins, batch)
+  }
 
-  /** MULTI-CLAUSE MERGE on the COW chain (r11 verdict ask #4's
-    * engine half): the full clause algebra [[Relational.mergeInto]]
-    * grades standalone — conditional `WHEN MATCHED [AND c] THEN
-    * DELETE`, conditional `WHEN MATCHED [AND c] THEN UPDATE SET
-    * expr…`, conditional `WHEN NOT MATCHED [AND c] THEN INSERT
-    * (cols) VALUES (exprs)` — lowered onto the file-granular
-    * copy-on-write path of [[cowMerge]]. Matched-clause conditions and
-    * SET values see the join under aliases `t`/`s` (the SQL rule hands
-    * expressions qualified that way); insert values see the bare
-    * source frame. DELETE-beats-UPDATE on a both-true row is the
-    * algebra's law — the SQL layer composes statement clause ORDER
-    * into the conditions before calling. Contract: `source` unique
-    * per `key` (the SQL rule refuses duplicates up front). */
-  def mergeIntoClauses(spark: SparkSession, srcDir: String,
-                       tableDir: String, source: DataFrame,
-                       key: Seq[String],
-                       matchedDelete: Option[Column],
-                       matchedUpdate: Option[(Column, Seq[(String, Column)])],
-                       notMatchedInsert: Option[(Column, Seq[(String, Column)])])
-      : RewriteStats =
-    cowMerge(spark, srcDir, tableDir, source, key, "multi-clause", None)(
-      (base, changes) => Relational.mergeInto(base, changes, key,
-        whenMatchedDelete = matchedDelete,
-        whenMatchedUpdate =
-          matchedUpdate.map { case (c, s) => (c, s.toMap) })
-        .drop("action"),
-      (df, src) => notMatchedInsert match {
-        case None => df.limit(0)
-        case Some((c, values)) =>
-          val vmap = values.toMap
-          src.join(df.select(key.map(col): _*), key, "left_anti")
-            .where(coalesce(c, lit(false)))
-            .select(df.schema.fields.toIndexedSeq.map(f =>
-              vmap.get(f.name).map(_.cast(f.dataType))
-                .getOrElse(lit(null).cast(f.dataType)).as(f.name)): _*)
-      })
-
-  /** The shared COW MERGE: hit files (those holding any source key — a
+  /** The one COW MERGE: [[Relational.mergeInto]]'s clause list —
+    * `WHEN MATCHED [AND c] THEN DELETE`, `WHEN MATCHED [AND c] THEN
+    * UPDATE SET …`, `WHEN NOT MATCHED [AND c] THEN INSERT …`, every
+    * condition and value over the join's `t`/`s` aliases — as
+    * file-granular DML. Hit files (those holding any source key, a
     * sound superset of the rows any clause touches) rewrite 1:1 as
-    * `rewriteOf(hit rows, source rows with a hit file's key)` — every
-    * change key is present in the hit rows, so a key that appears in
-    * several base files updates ALL its copies while inserts land
-    * exactly once. `insertsOf(base, source)` gives the NOT MATCHED rows
-    * in the base's shape; they land as one appended file, written by
-    * the same single Spark write as the hit files ([[stageTargets]]).
-    * Everything else rides by pointer. Hit detection is one broadcast
+    * `mergeInto(hit rows, source)`: a key in several hit files updates
+    * ALL its copies, and the NOT MATCHED rows land once, as one
+    * appended file written by the same single Spark write
+    * ([[stageTargets]]). Everything else rides by pointer, so at 100 TB
+    * a changelog-sized MERGE touches the files its keys live in plus
+    * one append, never the table. Hit detection is one broadcast
     * semi-join of the base scan against the source keys, collecting
     * FILE NAMES (file-count-bounded). A `batch` the head's record
     * already covers commits nothing (checked per attempt, so a racing
-    * writer of the same batch makes the retry skip). */
-  private def cowMerge(spark: SparkSession, srcDir: String,
-                       tableDir: String, source: DataFrame,
-                       key: Seq[String], detail: String,
-                       batch: Option[Long])
-                      (rewriteOf: (DataFrame, DataFrame) => DataFrame,
-                       insertsOf: (DataFrame, DataFrame) => DataFrame)
-      : RewriteStats = withCommitRetry() {
+    * writer of the same batch makes the retry skip). Contract:
+    * `source` unique per `key`. */
+  private[graft] def cowMerge(spark: SparkSession, srcDir: String,
+      tableDir: String, source: DataFrame, key: Seq[String],
+      whenMatchedDelete: Option[Column],
+      whenMatchedUpdate: Option[(Column, Map[String, Column])],
+      whenNotMatchedInsert: Option[(Column, Map[String, Column])],
+      batch: Option[Long] = None): RewriteStats = withCommitRetry() {
     val (head, base) = baseOf(spark, srcDir, tableDir)
     if (batch.exists(b => base.batchId.exists(b <= _)))
       metadataOnly(spark, base)
@@ -691,32 +652,31 @@ object Scale {
     val hitFiles = hitFilesOf(spark, base, baseFiles, footers)(
       _.join(broadcast(src.select(key.map(col): _*)), key, "left_semi"))
     val untouched = baseFiles.filterNot(hitFiles.toSet)
-    lazy val hits = readTagged(spark, base, hitFiles.map(Seq(_)), footers)
-    // NOT MATCHED → INSERT: one appended file (changelog-sized here; at
-    // scale repartition to the target file size), target index after
-    // the hit files'; an update-only MERGE (the common streaming batch)
-    // appends nothing. A base row whose key is in the source sits in a
-    // hit file, so the inserts anti-join the hit rows alone; with no
-    // hit file, the table's empty frame (an EMPTY base, a just-CREATEd
+    // the hit rows tagged with their file and position; with no hit
+    // file, the table's empty frame (an EMPTY base, a just-CREATEd
     // table, serves its declared schema — r12 review: an unguarded
     // zero-path parquet read throws before any clause runs)
-    val inserts = insertsOf(
-      if (hitFiles.nonEmpty) hits.drop("__tag", "__pos")
-      else if (baseFiles.isEmpty) readSnapshot(spark, base)
-      else aligned(base, readMerged(spark, baseFiles, footers)).limit(0),
-      src)
-      .withColumn("__tag", lit(hitFiles.size)).withColumn("__pos", lit(0L))
-    val changed =
-      if (hitFiles.isEmpty) inserts
-      else rewriteOf(hits,
-        src.join(hits.select(key.map(col): _*), key, "left_semi"))
-        .unionByName(inserts)
+    val hits =
+      if (hitFiles.nonEmpty)
+        readTagged(spark, base, hitFiles.map(Seq(_)), footers)
+      else (if (baseFiles.isEmpty) readSnapshot(spark, base)
+            else aligned(base, readMerged(spark, baseFiles, footers)).limit(0))
+        .withColumns(Map("__tag" -> lit(null).cast("int"),
+          "__pos" -> lit(null).cast("long")))
+    // inserted rows (no tag) go to the append target after the hit
+    // files'; an update-only MERGE (the common streaming batch)
+    // appends nothing
+    val changed = Relational.mergeInto(hits, src, key, whenMatchedDelete,
+        whenMatchedUpdate, whenNotMatchedInsert)
+      .drop("action")
+      .withColumns(Map("__tag" -> coalesce(col("__tag"), lit(hitFiles.size)),
+        "__pos" -> coalesce(col("__pos"), lit(0L))))
     // validate what the MERGE makes visible: the post-merge state of
     // the hit files plus the inserts — changed data only
     if (base.constraints.nonEmpty) enforce(changed, base.constraints)
     val hitBefore = hitFiles.iterator.map(footers(_).rows).sum
     var stagedAfter = 0L
-    commitVersion(spark, tableDir, head, "MERGE", detail) { stage =>
+    commitVersion(spark, tableDir, head, "MERGE") { stage =>
       val names = rewriteNames(hitFiles, stage.version) :+
         s"merge-insert-${stage.version}.parquet"
       val staged = stageTargets(changed, fs, stage.path, names.size,

@@ -13,18 +13,23 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * full row-level-operation connector API, so graft takes the
   * Delta-style route instead — an injected RESOLUTION rule converts
   * the analyzed [[MergeIntoTable]] into a runnable command that
-  * drives the existing `Scale.mergeInto` COW path. Supported shape
-  * (the upsert MERGE, graft's `mergeInto` contract):
+  * drives the COW MERGE (`Scale.cowMerge`, the clause algebra of
+  * `Relational.mergeInto`). Supported shape, one clause list:
   *
   * {{{
   *   MERGE INTO graft.`/t` t USING src s
   *   ON t.k1 = s.k1 [AND t.k2 = s.k2 …]
-  *   WHEN MATCHED THEN UPDATE SET *
-  *   WHEN NOT MATCHED THEN INSERT *
+  *   [WHEN MATCHED [AND c] THEN DELETE]
+  *   [WHEN MATCHED [AND c] THEN UPDATE SET c1 = e1, … | UPDATE SET *]
+  *   [WHEN NOT MATCHED [AND c] THEN INSERT (…) VALUES (…) | INSERT *]
   * }}}
   *
-  * Other action shapes fall through untouched (Spark then reports
-  * them unsupported — never a silent wrong answer). */
+  * at most one DELETE and one UPDATE, in either order, and at least
+  * one clause. `UPDATE SET *` writes every source value, NULLs
+  * included (the SQL rule). Other shapes — NOT MATCHED BY SOURCE, a
+  * non-equi ON, a SET of an ON key to anything but itself — fall
+  * through untouched (Spark then reports them unsupported, never a
+  * silent wrong answer). */
 case class GraftMergeRule(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -33,7 +38,7 @@ case class GraftMergeRule(session: SparkSession)
       case m: MergeIntoTable
           if m.resolved && !m.withSchemaEvolution &&
             graftDir(m.targetTable).isDefined =>
-        translate(m).orElse(translateMulti(m)).getOrElse(m)
+        translateMerge(m).getOrElse(m)
       // UPDATE …: core Spark reserves it for row-level-operation
       // connectors entirely — route every graft UPDATE through the
       // COW updateWhere. Statement expressions re-resolve BY NAME
@@ -77,7 +82,7 @@ case class GraftMergeRule(session: SparkSession)
     * both, or the statement errors on a session that could serve it. */
   private def catalogServes(cond: Expression): Boolean =
     splitConjunctivePredicates(cond).forall(c =>
-      Bridge.translate(c).exists(f =>
+      Bridge.v1Filter(c).exists(f =>
         GraftFilters.filterSql(f).isDefined))
 
   /** Swap resolved attribute references for by-name unresolved ones,
@@ -98,62 +103,22 @@ case class GraftMergeRule(session: SparkSession)
     case _ => None
   }
 
-  private def translate(m: MergeIntoTable): Option[LogicalPlan] = {
+  /** A MERGE's clause list lowered onto the COW `Scale.cowMerge`.
+    * The ON condition must be a conjunction of same-named
+    * target = source column equalities (the keys). Statement ORDER of
+    * the matched clauses composes into their conditions, preserving
+    * SQL's first-match-wins; a SET of an ON key to its own source
+    * column is an identity under the match and is dropped, any other
+    * SET of a key refuses (the file-granular hit contract needs keys
+    * stable). Anything else falls through and core Spark reports it
+    * unsupported. */
+  private def translateMerge(m: MergeIntoTable): Option[LogicalPlan] = {
     val tgt = m.targetTable.outputSet
     val src = m.sourceTable.outputSet
     def keyOf(e: Expression): Option[String] = e match {
       case EqualTo(a: AttributeReference, b: AttributeReference)
-          if tgt.contains(a) && src.contains(b) && a.name == b.name =>
-        Some(a.name)
-      case EqualTo(b: AttributeReference, a: AttributeReference)
-          if tgt.contains(a) && src.contains(b) && a.name == b.name =>
-        Some(a.name)
-      case _ => None
-    }
-    val keys = splitConjunctivePredicates(m.mergeCondition).map(keyOf)
-    def identity(as: Seq[Assignment]): Boolean = as.forall { a =>
-      (a.key, a.value) match {
-        case (k: AttributeReference, v: AttributeReference) =>
-          k.name == v.name && tgt.contains(k) && src.contains(v)
-        case _ => false
-      }
-    }
-    val shapeOk = keys.nonEmpty && keys.forall(_.isDefined) &&
-      m.notMatchedBySourceActions.isEmpty &&
-      (m.matchedActions match {
-        case Seq(u: UpdateAction) =>
-          u.condition.isEmpty && identity(u.assignments)
-        case _ => false
-      }) &&
-      (m.notMatchedActions match {
-        case Seq(i: InsertAction) =>
-          i.condition.isEmpty && identity(i.assignments)
-        case _ => false
-      })
-    if (!shapeOk) None
-    else graftDir(m.targetTable).map(dir =>
-      GraftMergeCommand(dir, m.sourceTable, keys.flatten))
-  }
-
-  /** MULTI-CLAUSE MERGE (r11 verdict ask #4): conditional UPDATE /
-    * DELETE / INSERT clauses lowered onto the COW
-    * `Scale.mergeIntoClauses`. Accepted shape: at most one UPDATE
-    * and one DELETE among the matched clauses (any order — statement
-    * ORDER composes into the conditions below, preserving SQL's
-    * first-match-wins), at most one INSERT among the not-matched
-    * (whose condition and VALUES may reference only the source),
-    * no not-matched-BY-SOURCE clauses, no SET of an ON key (the
-    * file-granular hit contract needs keys stable). Anything else
-    * falls through and core Spark reports it unsupported. */
-  private def translateMulti(m: MergeIntoTable): Option[LogicalPlan] = {
-    val tgt = m.targetTable.outputSet
-    val src = m.sourceTable.outputSet
-    def keyOf(e: Expression): Option[String] = e match {
-      case EqualTo(a: AttributeReference, b: AttributeReference)
-          if tgt.contains(a) && src.contains(b) && a.name == b.name =>
-        Some(a.name)
-      case EqualTo(b: AttributeReference, a: AttributeReference)
-          if tgt.contains(a) && src.contains(b) && a.name == b.name =>
+          if a.name == b.name && (tgt.contains(a) && src.contains(b) ||
+            tgt.contains(b) && src.contains(a)) =>
         Some(a.name)
       case _ => None
     }
@@ -176,28 +141,20 @@ case class GraftMergeRule(session: SparkSession)
       }
       if (ok) Some(Bridge.column(out)) else None
     }
-    // insert-side expressions may reference only the source (bare
-    // names — the append path evaluates them over the source frame)
-    def srcOnly(e: Expression): Option[Column] = {
-      var ok = true
-      val out = e.transform {
-        case a: AttributeReference if src.contains(a) =>
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            .quoted(a.name)
-        case a: AttributeReference => ok = false; a
-      }
-      if (ok) Some(Bridge.column(out)) else None
-    }
-    def sets(as: Seq[Assignment]): Option[Seq[(String, Column)]] = {
-      val out = as.map { a =>
-        a.key match {
-          case k: AttributeReference
-              if tgt.contains(k) && !keyNames.contains(k.name) =>
-            qual(a.value).map(k.name -> _)
-          case _ => None
-        }
-      }
-      if (out.exists(_.isEmpty)) None else Some(out.flatten)
+    // an UPDATE's SET list; `k = s.k` on an ON key (what `SET *`
+    // expands to) is an identity under the match and is dropped
+    def sets(as: Seq[Assignment]): Option[Map[String, Column]] = {
+      val out = as.filterNot(a => (a.key, a.value) match {
+        case (k: AttributeReference, v: AttributeReference) =>
+          keyNames.contains(k.name) && src.contains(v) && v.name == k.name
+        case _ => false
+      }).map(a => a.key match {
+        case k: AttributeReference
+            if tgt.contains(k) && !keyNames.contains(k.name) =>
+          qual(a.value).map(k.name -> _)
+        case _ => None
+      })
+      if (out.exists(_.isEmpty)) None else Some(out.flatten.toMap)
     }
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     def cond(c: Option[Expression]): Option[Column] = c match {
@@ -205,7 +162,7 @@ case class GraftMergeRule(session: SparkSession)
       case Some(e) => qual(e)
     }
     val matched: Option[(Option[Column],
-                         Option[(Column, Seq[(String, Column)])])] =
+                         Option[(Column, Map[String, Column])])] =
       m.matchedActions match {
         case Seq() => Some((None, None))
         case Seq(u: UpdateAction) =>
@@ -227,23 +184,23 @@ case class GraftMergeRule(session: SparkSession)
               Some((cu, ss)))
         case _ => None
       }
-    val insert: Option[Option[(Column, Seq[(String, Column)])]] =
+    val insert: Option[Option[(Column, Map[String, Column])]] =
       m.notMatchedActions match {
         case Seq() => Some(None)
         case Seq(i: InsertAction) =>
           val vals = i.assignments.map { a =>
             a.key match {
               case k: AttributeReference if tgt.contains(k) =>
-                srcOnly(a.value).map(k.name -> _)
+                qual(a.value).map(k.name -> _)
               case _ => None
             }
           }
+          // an unlisted key inserts NULL, like any unlisted column
+          val unlisted = keyNames.filterNot(vals.flatten.toMap.contains)
+            .map(_ -> lit(null))
           if (vals.exists(_.isEmpty)) None
-          else (i.condition match {
-            case None => Some(Bridge.column(
-              org.apache.spark.sql.catalyst.expressions.Literal(true)))
-            case Some(e) => srcOnly(e)
-          }).map(ci => Some((ci, vals.flatten)))
+          else cond(i.condition).map(ci =>
+            Some((ci, (vals.flatten ++ unlisted).toMap)))
         case _ => None
       }
     for {
@@ -251,17 +208,22 @@ case class GraftMergeRule(session: SparkSession)
       ins <- insert
       if del.isDefined || upd.isDefined || ins.isDefined
       dir <- graftDir(m.targetTable)
-    } yield GraftMergeMultiCommand(dir, m.sourceTable, keyNames,
+    } yield GraftMergeCommand(dir, m.sourceTable, keyNames,
       del, upd, ins)
   }
 }
 
 /** The eagerly-executed MERGE: hands the analyzed source subtree back
-  * to the DataFrame world and runs the file-granular COW
-  * `Scale.mergeInto` (matched keys rewrite their files 1:1, inserts
-  * append, everything else rides by pointer). */
-case class GraftMergeCommand(tableDir: String, source: LogicalPlan,
-                             keys: Seq[String])
+  * to the DataFrame world, refuses a source with several rows per ON
+  * key, then runs the file-granular COW `Scale.cowMerge` (conditions
+  * and values ride as [[Column]]s qualified `t.`/`s.` for the clause
+  * algebra's join; hit files rewrite 1:1, inserts append, everything
+  * else rides by pointer). */
+case class GraftMergeCommand(
+    tableDir: String, source: LogicalPlan, keys: Seq[String],
+    matchedDelete: Option[Column],
+    matchedUpdate: Option[(Column, Map[String, Column])],
+    notMatchedInsert: Option[(Column, Map[String, Column])])
     extends LeafRunnableCommand {
   override def run(sparkSession: SparkSession)
       : Seq[org.apache.spark.sql.Row] = {
@@ -277,33 +239,7 @@ case class GraftMergeCommand(tableDir: String, source: LogicalPlan,
     if (dup > 0) throw new IllegalArgumentException(
       "MERGE source has multiple rows for the same ON key; " +
         "deduplicate the source first")
-    graft.ops.Scale.mergeInto(sparkSession, tableDir, tableDir,
-      src, keys)
-    Seq.empty
-  }
-}
-
-/** The eagerly-executed MULTI-CLAUSE MERGE: duplicate-key refusal,
-  * then the file-granular COW `Scale.mergeIntoClauses` (conditions
-  * and SET values ride as [[Column]]s qualified `t.`/`s.` for the
-  * clause algebra's join; insert values as bare source columns). */
-case class GraftMergeMultiCommand(
-    tableDir: String, source: LogicalPlan, keys: Seq[String],
-    matchedDelete: Option[Column],
-    matchedUpdate: Option[(Column, Seq[(String, Column)])],
-    notMatchedInsert: Option[(Column, Seq[(String, Column)])])
-    extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val src = Bridge.ofRows(sparkSession, source)
-    val dup = src.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n")).where(col("__n") > 1)
-      .limit(1).count()
-    if (dup > 0) throw new IllegalArgumentException(
-      "MERGE source has multiple rows for the same ON key; " +
-        "deduplicate the source first")
-    graft.ops.Scale.mergeIntoClauses(sparkSession, tableDir, tableDir,
+    graft.ops.Scale.cowMerge(sparkSession, tableDir, tableDir,
       src, keys, matchedDelete, matchedUpdate, notMatchedInsert)
     Seq.empty
   }

@@ -188,19 +188,25 @@ object Streams {
   def cdcMerge(snapDir: String, key: Seq[String], order: Seq[String],
                op: Option[String] = None)
               (batch: DataFrame, id: Long): Unit = {
-    import org.apache.spark.sql.expressions.Window
     // the snapshot never carries the op column — strip it from the
     // empty-base schema so batch 0's output shape equals every later
     // version's (Relational.upsert's contract is base's shape)
     val baseSchema = StructType(
       batch.schema.filterNot(f => op.contains(f.name)))
     commitBatch(batch, snapDir, id, "CDC MERGE", baseSchema) { base =>
-      val w = Window.partitionBy(key.map(col): _*)
-        .orderBy(order.map(col(_).desc): _*)
-      val latest = batch.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1).drop("__rn")
-      graft.ops.Relational.upsert(base, latest, key, op).drop("action")
+      graft.ops.Relational.upsert(base, latestPerKey(batch, key, order),
+        key, op).drop("action")
     }
+  }
+
+  /** `batch`'s newest row per `key` under `order` (descending): a
+    * changelog batch can carry several updates for one key. */
+  private def latestPerKey(batch: DataFrame, key: Seq[String],
+                           order: Seq[String]): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(key.map(col): _*).orderBy(order.map(col(_).desc): _*)
+    batch.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1).drop("__rn")
   }
 
   /** Streaming CDC sink (#81): every micro-batch of `changes` MERGED
@@ -240,14 +246,9 @@ object Streams {
   def cowMergeBatch(srcDir: String, tableDir: String, key: Seq[String],
                     order: Seq[String])
                    (batch: DataFrame, id: Long): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(key.map(col): _*)
-      .orderBy(order.map(col(_).desc): _*)
     // pin the deduped batch once: the emptiness gate reads its row
     // count, and mergeInto uses a pinned source as-is (no second pin)
-    val latest = graft.core.Pin(
-      batch.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1).drop("__rn"))
+    val latest = graft.core.Pin(latestPerKey(batch, key, order))
     try {
       if (latest.rows > 0L)
         graft.ops.Scale.mergeInto(batch.sparkSession, srcDir, tableDir,

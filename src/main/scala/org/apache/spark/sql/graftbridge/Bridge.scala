@@ -26,7 +26,7 @@ object Bridge {
     * the hook can serve the statement — translate-only gating skipped
     * predicates (LIKE, EqualNullSafe, nested fields) that the hook
     * then refused (r11 advice). */
-  def translate(
+  def v1Filter(
       e: org.apache.spark.sql.catalyst.expressions.Expression)
       : Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.execution.datasources.DataSourceStrategy

@@ -627,8 +627,11 @@ class CowDmlSpec extends AnyFunSuite {
     val whole = (lens.sum + 1024) / mb
     // with a 4 KB split nothing fits one task, and one target still
     // needs no exchange where several are repartitioned by target: one
-    // job more at most
-    def gate(split: Option[String], slack: Int): Unit = withSplit(split) {
+    // job more at most. A MERGE hitting one file runs `merge1` jobs at
+    // most: the source pin, hit detection's broadcast and collect, the
+    // clause join's two shuffles and the write
+    def gate(split: Option[String], slack: Int,
+             merge1: Int): Unit = withSplit(split) {
       val mode = split.fold("one task")(b => s"$b splits")
       val counts = Seq(
         "DELETE" -> (run(t => Scale.deleteWhere(spark, src, t, one)),
@@ -650,6 +653,9 @@ class CowDmlSpec extends AnyFunSuite {
         assert(j8 <= j1 + slack,
           s"$stmt, $mode: $j8 jobs for 8 hit files vs $j1 for 1")
       }
+      val ((_, mergeJobs), _) = counts.toMap.apply("MERGE")
+      assert(mergeJobs <= merge1,
+        s"MERGE, $mode: $mergeJobs jobs for 1 hit file, gate $merge1")
       val (o1, j1) = run(t => Scale.optimizeTable(spark, src, t, whole))
       val (o4, j4) = run(t => Scale.optimizeTable(spark, src, t, pairs))
       info(s"OPTIMIZE, $mode: $j1 jobs into 1 bin, $j4 into ${o4.filesAfter}")
@@ -657,8 +663,8 @@ class CowDmlSpec extends AnyFunSuite {
       assert(j4 <= j1 + slack,
         s"OPTIMIZE, $mode: $j4 jobs for 4 bins vs $j1 for 1")
     }
-    gate(None, 0)
-    gate(Some("4k"), 1)
+    gate(None, 0, merge1 = 6)
+    gate(Some("4k"), 1, merge1 = 7)
     rm(base.toFile)
   }
 

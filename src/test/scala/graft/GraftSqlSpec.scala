@@ -323,6 +323,49 @@ class GraftSqlSpec extends AnyFunSuite {
     rm(base.toFile)
   }
 
+  test("MERGE SET lists: SET * writes NULL like SET c = s.c; SET v = s.v writes only v") {
+    import spark.implicits._
+    val (baseA, star) = freshChain("graft_sql_ns")
+    val (baseB, spelled) = freshChain("graft_sql_nc")
+    val ms = GraftSql.mergeSession(spark)
+    import ms.implicits.{localSeqToDatasetHolder => msSeq}
+    // one matched key with a NULL v, one matched with a value, one new
+    msSeq(Seq((4L, 0L, None), (8L, 0L, Some(-8.0)), (5000L, 9L, None)))
+      .toDF("id", "k", "v").createOrReplaceTempView("ns_src")
+    ms.sql(
+      s"""MERGE INTO graft.`$star` t USING ns_src s
+         |ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    ms.sql(
+      s"""MERGE INTO graft.`$spelled` t USING ns_src s
+         |ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET k = s.k, v = s.v
+         |WHEN NOT MATCHED THEN
+         |  INSERT (id, k, v) VALUES (s.id, s.k, s.v)""".stripMargin)
+    def rows(tbl: String) = Scale.readTable(spark, tbl).collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).sorted.toSeq
+    val got = rows(star)
+    assert(got == rows(spelled), "SET * and SET c = s.c must agree")
+    // the SQL rule: the NULL lands, it does not keep the target value
+    val changed = got.filter(r => Set(4L, 8L, 5000L)(r._1))
+    assert(changed == Seq((4L, 0L, None), (8L, 0L, Some(-8.0)),
+      (5000L, 9L, None)) && got.size == 1001, s"$changed")
+    // an all-identity SET list that names v alone leaves k as it was,
+    // even from a source whose k differs
+    msSeq(Seq((12L, 3L, -12.0))).toDF("id", "k", "v")
+      .createOrReplaceTempView("ns_src_v")
+    ms.sql(
+      s"""MERGE INTO graft.`$spelled` t USING ns_src_v s
+         |ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET v = s.v
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(rows(spelled).find(_._1 == 12L).contains((12L, 0L, Some(-12.0))))
+    rm(baseA.toFile)
+    rm(baseB.toFile)
+  }
+
   test("REPLACE WHERE is one commit; INSERT OVERWRITE replaces the table") {
     import spark.implicits._
     val (base, tbl) = freshChain("graft_sql_rw")

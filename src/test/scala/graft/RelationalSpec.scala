@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -85,6 +85,104 @@ class RelationalSpec extends AnyFunSuite {
       .orderBy("k").collect()
     assert(none.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L, 4L) &&
       none.forall(_.getString(3) == "keep"))
+  }
+
+  test("NULL keys match nothing: mergeInto, upsert and the COW MERGE agree") {
+    val target = Seq((None, "t0", 1.0), (Some(1L), "t1", 1.0))
+      .toDF("k", "name", "bal")
+    val source = Seq((None, "s0", 2.0), (Some(1L), "s1", 2.0))
+      .toDF("k", "name", "bal")
+    def rows(df: DataFrame) = df.select("k", "name", "bal").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1),
+        r.getDouble(2))).sortBy(_.toString).toSeq
+    val all = Map("name" -> expr("s.name"), "bal" -> expr("s.bal"))
+    def merge(insert: Boolean) = Relational.mergeInto(target, source,
+      Seq("k"), whenMatchedUpdate = Some((lit(true), all)),
+      whenNotMatchedInsert = Option.when(insert)((lit(true), all)))
+    // the target's NULL-key row is kept; the source's is inserted when
+    // an insert clause admits it and dropped when none does
+    val admitted = Seq((None, "s0", 2.0), (None, "t0", 1.0),
+      (Some(1L), "s1", 2.0))
+    assert(rows(merge(insert = true)) == admitted)
+    assert(rows(merge(insert = false)) ==
+      Seq((None, "t0", 1.0), (Some(1L), "s1", 2.0)))
+    assert(rows(Relational.upsert(target, source, Seq("k"))) == admitted)
+    val dir = java.nio.file.Files.createTempDirectory("graft_rel_nullkey")
+    val src = dir.resolve("src").toString
+    val tbl = dir.resolve("tbl").toString
+    target.coalesce(1).write.parquet(src)
+    graft.ops.Scale.mergeInto(spark, src, tbl, source, Seq("k"))
+    assert(rows(graft.ops.Scale.readTable(spark, tbl)) == admitted)
+    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  /** [[Relational.upsert]] before it lowered onto mergeInto: its own
+    * full-outer join, kept here as the reference the clause form must
+    * reproduce. */
+  private def upsertReference(base: DataFrame, changes: DataFrame,
+                              key: Seq[String], opCol: Option[String],
+                              deleteOp: String = "D"): DataFrame = {
+    val common = base.columns.filterNot(key.contains)
+      .filter(changes.columns.contains)
+      .filterNot(opCol.contains)
+    val del = opCol.map(c =>
+      (upper(col(c)) === deleteOp.toUpperCase).as("__del")).toSeq
+    val c = changes.select(key.map(col) ++
+      common.map(n => col(n).as(s"__c_$n")) ++ del :+ lit(1).as("__c"): _*)
+    val merged = base.withColumn("__b", lit(1)).join(c, key, "full_outer")
+    val dropDeleted =
+      if (opCol.isDefined) merged.where(!coalesce(col("__del"), lit(false)))
+      else merged
+    dropDeleted
+      .select(key.map(col) ++
+        base.columns.filterNot(key.contains).toSeq.map { n =>
+          if (common.contains(n)) coalesce(col(s"__c_$n"), col(n)).as(n)
+          else col(n)
+        } :+
+        when(col("__b").isNull, lit("insert"))
+          .when(col("__c").isNull, lit("keep"))
+          .otherwise(lit("update")).as("action"): _*)
+  }
+
+  test("upsert lowered onto mergeInto == its own-join reference (seeded)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val baseSchema = StructType.fromDDL(
+      "k BIGINT, g INT, a STRING, b DOUBLE, only_base INT")
+    val changeSchema = StructType.fromDDL(
+      "k BIGINT, g INT, a STRING, b DOUBLE, only_change STRING, op STRING")
+    val ops = IndexedSeq("D", "d", "U", "u", "c", null)
+    (1 to 24).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def maybe[A](a: A): Any = if (rnd.nextDouble() < 0.25) null else a
+      // composite key on odd seeds; a NULL key now and then
+      val key = if (seed % 2 == 1) Seq("k", "g") else Seq("k")
+      val baseKeys = (0L until 12L).filter(_ => rnd.nextDouble() < 0.8)
+      val base = baseKeys.map(k => Row(if (k == 0L) null else k,
+        (k % 2).toInt, maybe(s"a$k"), maybe(k * 1.5), maybe(k.toInt)))
+      // changes hit present keys (updates, tombstones) and absent ones
+      // (inserts, deletes of absent keys); every fourth seed is empty
+      val changeKeys =
+        if (seed % 4 == 0) Seq.empty
+        else (0L until 18L).filter(_ => rnd.nextDouble() < 0.5)
+      val changes = changeKeys.map(k => Row(if (k == 0L) null else k,
+        (k % 2).toInt, maybe(s"c$k"), maybe(-k * 2.0), maybe("x"),
+        ops(rnd.nextInt(ops.size))))
+      val b = spark.createDataFrame(
+        spark.sparkContext.parallelize(base, 2), baseSchema)
+      val c = spark.createDataFrame(
+        spark.sparkContext.parallelize(changes, 2), changeSchema)
+      Seq(None, Some("op")).foreach { op =>
+        val ch = if (op.isEmpty) c.drop("op") else c
+        val got = Relational.upsert(b, ch, key, op)
+        val want = upsertReference(b, ch, key, op)
+        assert(got.schema == want.schema,
+          s"seed $seed, op $op: ${got.schema} vs ${want.schema}")
+        def sorted(df: DataFrame) = df.collect().map(_.toSeq)
+          .sortBy(_.mkString("|")).toSeq
+        assert(sorted(got) == sorted(want), s"seed $seed, op $op")
+      }
+    }
   }
 
   test("deltaJoin: delta algebra == full recompute; base-base never rejoined (#42h)") {
